@@ -686,7 +686,8 @@ _DT_QUERY = """
 
 
 def _q_sparql_dt_cmp(spark, sf):
-    # chronological dateTime FILTER comparisons (round 4, DtCmp):
+    # chronological dateTime FILTER comparisons (round 4; compiled by
+    # plans/expr.py as instant comparisons):
     # values compare as instants via a JVM timestamp cast of the
     # stored lexical — ARQ XSDFuncOp.compareDateTime parity. Reuses
     # the datetime gate's cached event store; DuckDB replays the
@@ -704,8 +705,8 @@ def _q_sparql_dt_cmp(spark, sf):
 
 
 def _q_sparql_expr_filter(spark, sf):
-    # round-4 general value expressions in FILTER (ExprCmp): var-var
-    # arithmetic the specialized pushdown grammar can't linearize —
+    # round-4 general value expressions in FILTER (one plans/expr.py
+    # Expr node): var-var arithmetic the lowering can't linearize —
     # ?v * ?u and ?v + ?u over two patterns' bindings. The reference
     # evaluates these through stock ARQ expression trees (SURVEY J12).
     # DuckDB replays the arithmetic on the raw events columns.
@@ -2102,7 +2103,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r1+r2+r3, relational pipeline untouched since r1)
         "dedup_substring_spans": _q_dedup_substring,
         # third mid-round-4 rotation: the three NEW expression-surface
-        # gates (exists-expr markers, ExprCmp var-var arithmetic, EBV
+        # gates (exists-expr markers, general var-var arithmetic, EBV
         # booleans — all planner code written this round) take window
         # seats; kg_pagerank / ann_lsh_topk / dedup_simhash (green r3,
         # ops/graph|similarity|dedup untouched in round 4) rotate to
@@ -2163,7 +2164,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # window seats; rel_top_orders_per_cust and rel_region_revenue
         # (each green r1+r2+r3, plain-DataFrame relational pipelines
         # untouched in round 4) rotate out here; kg_sparql_dt_cmp
-        # (chronological dateTime FILTER comparisons, DtCmp — NEW
+        # (chronological dateTime FILTER comparisons — NEW
         # planner code) seats in place of dedup_minhash_pairs (green
         # r3, minhash path untouched in round 4).
         "kg_pagerank": _q_pagerank,

@@ -856,9 +856,9 @@ def _conditional_left_join(
     BGP join at scale; the reference inherits the equivalent
     OpLeftJoin conditional evaluation from stock ARQ
     (HBaseTransformFilterPlacement.java:359-369)."""
-    tagged = result
-    for c in result.columns:
-        tagged = tagged.withColumn(f"__lj_{c}", F.col(c))
+    tagged = result.select(
+        "*", *[F.col(c).alias(f"__lj_{c}") for c in result.columns]
+    )
     if not shared:
         merged = tagged.join(step, F.lit(True), "inner")
     elif nullable:

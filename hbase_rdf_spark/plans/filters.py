@@ -1,14 +1,11 @@
-"""SPARQL FILTER expression AST — the J12 scalar-function surface.
+"""FILTER leaves and the label-space helpers the expression compiler
+uses.
 
-The reference evaluates FILTER expressions through stock ARQ/Sesame
-expression trees (reference: nl/vu/jena/sparql/engine/optimizer/
-HBaseOptimize.java:75-93 expands `||` disjunctions;
-reference: sail/HBaseQueryVisitor.java:289-313 stringifies the
-type-test / str() / lang() functions). Here every expression lowers to
-one Spark ``Column`` predicate, so Catalyst can push conjuncts into the
-scans.
-
-Two evaluation spaces:
+Every FILTER lowers to one Spark ``Column`` predicate over
+binding-struct columns (plans/expr.py: one grammar, one compiler);
+the leaves here — ``And``/``Or``/``Not``/``Bound``, plus
+``bgp.Filter``/``VarFilter`` — are the shapes Catalyst can push into
+the scans. Two evaluation spaces:
 
 - **id space** (cheap, the default): numeric comparisons read the
   ``num`` field of the binding struct; term (in)equality compares the
@@ -16,7 +13,7 @@ Two evaluation spaces:
   null-extends unbound vars); ``isLiteral/isNumeric`` read the ``kind``
   tag.
 - **label space** (one id2term join per variable): ``regex``, ``str()``
-  comparisons, ``langMatches(lang())`` and ``isIRI/isBlank`` (blank
+  comparisons, ``lang()``/``datatype()`` and ``isIRI/isBlank`` (blank
   nodes share kind 0 with IRIs and differ only in their ``_:`` label
   prefix — sources/ntriples.py:29). The executor attaches a
   ``__{var}_flbl`` column before applying such a filter and drops it
@@ -38,7 +35,6 @@ from pyspark.sql import Column, functions as F
 # stored lexical form of tagged/typed literals: '"lex"@lang' or
 # '"lex"^^<dt>' (see sources/ntriples.py quads())
 _TAGGED_RX = r'^"(.*)"(?:@[A-Za-z0-9-]+|\^\^<[^<>]*>)$'
-_LANG_RX = r'^".*"@([A-Za-z0-9-]+)$'
 
 
 def _flbl(name: str) -> Column:
@@ -111,24 +107,6 @@ class Not(FilterExpr):
 
 
 @dataclass
-class ErrorCond(FilterExpr):
-    """A statically-known SPARQL type error (§17.2): compiles to a NULL
-    boolean, so a bare FILTER drops the row while ``!``/``&&``/``||``
-    keep three-valued error propagation — ``NOT(error)`` stays error
-    (row dropped), which a static ``false`` leg would wrongly turn
-    into ``true``. ARQ raises ExprEvalException here; NULL is Spark's
-    equivalent channel."""
-
-    var: str  # '?v' — scope anchor so the filter schedules with its var
-
-    def vars(self):
-        return {self.var[1:]}
-
-    def cond(self):
-        return F.lit(None).cast("boolean")
-
-
-@dataclass
 class Bound(FilterExpr):
     """``bound(?v)`` — negation-as-failure building block (BSBM Q3)."""
 
@@ -139,125 +117,6 @@ class Bound(FilterExpr):
 
     def cond(self):
         return F.col(self.var[1:]).isNotNull()
-
-
-@dataclass
-class TypeTest(FilterExpr):
-    """isIRI/isURI, isBlank, isLiteral, isNumeric — kind-tag tests
-    (kinds: 0 entity/bnode, 1 string literal, 2 numeric;
-    functions/encoding.py:18). IRI-vs-blank needs the label prefix."""
-
-    var: str
-    test: str  # 'isiri' | 'isblank' | 'isliteral' | 'isnumeric'
-
-    def vars(self):
-        return {self.var[1:]}
-
-    def label_vars(self):
-        return {self.var[1:]} if self.test in ("isiri", "isblank") else set()
-
-    def cond(self):
-        name = self.var[1:]
-        kind = F.col(name).getField("kind")
-        if self.test == "isliteral":
-            return kind.isin(1, 2)
-        if self.test == "isnumeric":
-            return kind == 2
-        blank = _flbl(name).startswith("_:")
-        if self.test == "isblank":
-            return (kind == 0) & blank
-        return (kind == 0) & ~blank  # isiri / isuri
-
-
-@dataclass
-class Regex(FilterExpr):
-    """``regex(?v, "pat" [, "i"])`` over str(?v) — label space."""
-
-    var: str
-    pattern: str
-    flags: str = ""
-
-    def vars(self):
-        return {self.var[1:]}
-
-    def label_vars(self):
-        return {self.var[1:]}
-
-    def cond(self):
-        pat = self.pattern
-        if "i" in self.flags:
-            pat = "(?i)" + pat
-        return str_value(self.var[1:]).rlike(pat)
-
-
-@dataclass
-class StrCmp(FilterExpr):
-    """``str(?v) = "text"`` (or !=) — label space."""
-
-    var: str
-    op: str  # '=' | '!='
-    text: str
-
-    def vars(self):
-        return {self.var[1:]}
-
-    def label_vars(self):
-        return {self.var[1:]}
-
-    def cond(self):
-        eq = str_value(self.var[1:]) == self.text
-        return eq if self.op == "=" else ~eq
-
-
-@dataclass
-class StrPred(FilterExpr):
-    """``STRSTARTS/STRENDS/CONTAINS(?v, "text")`` over str(?v) — label
-    space (SPARQL 1.1 §17.4.3; the reference evaluates these through
-    stock ARQ expression trees)."""
-
-    var: str
-    pred: str  # 'strstarts' | 'strends' | 'contains'
-    text: str
-
-    def vars(self):
-        return {self.var[1:]}
-
-    def label_vars(self):
-        return {self.var[1:]}
-
-    def cond(self):
-        s = str_value(self.var[1:])
-        if self.pred == "strstarts":
-            return s.startswith(self.text)
-        if self.pred == "strends":
-            return s.endswith(self.text)
-        return s.contains(self.text)
-
-
-_NUM_CMP = {
-    "<": lambda c, n: c < n, "<=": lambda c, n: c <= n,
-    ">": lambda c, n: c > n, ">=": lambda c, n: c >= n,
-    "=": lambda c, n: c == n, "!=": lambda c, n: c != n,
-}
-
-
-@dataclass
-class StrLenCmp(FilterExpr):
-    """``STRLEN(?v) op n`` — label space, character count of str(?v)."""
-
-    var: str
-    op: str
-    value: float
-
-    def vars(self):
-        return {self.var[1:]}
-
-    def label_vars(self):
-        return {self.var[1:]}
-
-    def cond(self):
-        n = F.length(str_value(self.var[1:])).cast("double")
-        return _NUM_CMP[self.op](n, self.value)
 
 
 #: ISO-8601 component extraction from an xsd:dateTime/xsd:date lexical
@@ -314,83 +173,6 @@ def timezone_duration(lex: Column) -> Column:
     return F.when(tz == "Z", F.lit("PT0S")).when(tz != "", body)
 
 
-@dataclass
-class DtPartCmp(FilterExpr):
-    """``YEAR(?v) op n`` (and MONTH/DAY/HOURS/MINUTES/SECONDS) — label
-    space, ISO component of the stripped lexical form."""
-
-    var: str
-    part: str
-    op: str
-    value: float
-
-    def vars(self):
-        return {self.var[1:]}
-
-    def label_vars(self):
-        return {self.var[1:]}
-
-    def cond(self):
-        c = dt_part(str_value(self.var[1:]), self.part)
-        return _NUM_CMP[self.op](c, self.value)
-
-
-@dataclass
-class TzEq(FilterExpr):
-    """``TZ(?v) = "Z"`` (or !=) — exact timezone-string comparison."""
-
-    var: str
-    op: str  # '=' | '!='
-    tag: str
-
-    def vars(self):
-        return {self.var[1:]}
-
-    def label_vars(self):
-        return {self.var[1:]}
-
-    def cond(self):
-        c = tz_part(str_value(self.var[1:]))
-        return (c == self.tag) if self.op == "=" else (c != self.tag)
-
-
-@dataclass
-class LangEq(FilterExpr):
-    """``lang(?v) = "tag"`` (or !=) — exact tag comparison (use
-    langMatches for range semantics). Untagged literals have lang ""."""
-
-    var: str
-    op: str  # '=' | '!='
-    tag: str
-
-    def vars(self):
-        return {self.var[1:]}
-
-    def label_vars(self):
-        return {self.var[1:]}
-
-    def cond(self):
-        name = self.var[1:]
-        lbl = _flbl(name)
-        # lang() is only defined on literals (kind 1/2) — on an
-        # IRI/blank it is a type error → NULL → row dropped, matching
-        # the spec's error-is-false FILTER rule
-        kind = F.col(name).getField("kind")
-        lang = F.when(
-            kind.isin(1, 2),
-            F.when(
-                lbl.rlike(_LANG_RX), F.regexp_extract(lbl, _LANG_RX, 1)
-            ).otherwise(F.lit("")),
-        )
-        eq = F.lower(lang) == self.tag.lower()
-        return eq if self.op == "=" else ~eq
-
-
-_XSD = "http://www.w3.org/2001/XMLSchema#"
-_RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
-_DT_RX = r'^".*"\^\^<([^<>]*)>$'
-
-
 #: stored typed-literal suffix of the two chronological XSD types
 DT_TYPED_RX = (
     r"\^\^<http://www\.w3\.org/2001/XMLSchema#(?:dateTime|date)>$"
@@ -407,109 +189,3 @@ def dt_instant(lbl: Column) -> Column:
         lbl.rlike(DT_TYPED_RX), F.regexp_extract(lbl, _TAGGED_RX, 1)
     )
     return lex.try_cast("timestamp")
-
-
-@dataclass
-class DtCmp(FilterExpr):
-    """Chronological comparison of a date/dateTime var against a
-    date/dateTime literal constant — values compare as instants, not
-    lexical strings or term ids, so "…T00:00:00Z" = "…T02:00:00+02:00"
-    holds (ARQ XSDFuncOp.compareDateTime parity; the reference gets
-    this through stock ARQ filter evaluation, SURVEY J12)."""
-
-    var: str
-    op: str  # '<' '<=' '>' '>=' '=' '!='
-    lex: str  # full stored lexical '"…"^^<…dateTime|date>'
-
-    def vars(self):
-        return {self.var[1:]}
-
-    def label_vars(self):
-        return {self.var[1:]}
-
-    def cond(self):
-        import re as _re
-
-        v = dt_instant(_flbl(self.var[1:]))
-        m = _re.match(r'^"(.*)"', self.lex)
-        c = F.lit(m.group(1) if m else self.lex).try_cast("timestamp")
-        if self.op == "<":
-            return v < c
-        if self.op == "<=":
-            return v <= c
-        if self.op == ">":
-            return v > c
-        if self.op == ">=":
-            return v >= c
-        eq = v == c
-        return eq if self.op == "=" else ~eq
-
-
-@dataclass
-class DatatypeEq(FilterExpr):
-    """``datatype(?v) = <iri>`` (or !=) — label space.
-
-    String literals report their stored ``^^<dt>`` wrapper, else
-    ``rdf:langString`` (tagged) or ``xsd:string``. Inline numerics
-    (kind 2) erased their source datatype at encode time
-    (functions/encoding.py) — they report ``xsd:integer`` when the
-    value is integral, else ``xsd:double`` (documented approximation).
-    On an IRI/blank, datatype() is a type error → row dropped."""
-
-    var: str
-    op: str  # '=' | '!='
-    iri: str
-
-    def vars(self):
-        return {self.var[1:]}
-
-    def label_vars(self):
-        return {self.var[1:]}
-
-    def cond(self):
-        name = self.var[1:]
-        lbl = _flbl(name)
-        kind = F.col(name).getField("kind")
-        num = F.col(name).getField("num")
-        dt = (
-            F.when(
-                kind == 1,
-                F.when(lbl.rlike(_DT_RX), F.regexp_extract(lbl, _DT_RX, 1))
-                .when(lbl.rlike(_LANG_RX), F.lit(_RDF_LANGSTRING))
-                .otherwise(F.lit(_XSD + "string")),
-            )
-            .when(
-                kind == 2,
-                F.when(num == F.floor(num), F.lit(_XSD + "integer"))
-                .otherwise(F.lit(_XSD + "double")),
-            )
-        )
-        eq = dt == self.iri
-        return eq if self.op == "=" else ~eq
-
-
-@dataclass
-class LangMatch(FilterExpr):
-    """``langMatches(lang(?v), "range")`` — the stored '"lex"@lang' form
-    carries the tag; '*' matches any tagged literal."""
-
-    var: str
-    range: str
-
-    def vars(self):
-        return {self.var[1:]}
-
-    def label_vars(self):
-        return {self.var[1:]}
-
-    def cond(self):
-        name = self.var[1:]
-        lbl = _flbl(name)
-        lang = F.when(
-            lbl.rlike(_LANG_RX),
-            F.lower(F.regexp_extract(lbl, _LANG_RX, 1)),
-        ).otherwise(F.lit(""))
-        rng = self.range.lower()
-        if rng == "*":
-            return lang != ""
-        return (lang == rng) | lang.startswith(rng + "-")

@@ -30,7 +30,8 @@ broken on the materialized form; see ``_add_order_sidecars``.
 FILTER surface (J12): numeric/var-vs-var comparisons, term
 (in)equality, ``&&``/``||``/``!``, ``bound()``,
 ``isIRI/isURI/isBlank/isLiteral/isNumeric``, ``str()`` comparisons,
-``regex()`` and ``langMatches(lang())`` — see plans/filters.py
+``regex()`` and ``langMatches(lang())`` — one grammar and one
+compiler for every expression site, see plans/expr.py
 (reference: optimizer/HBaseOptimize.java:75-93 disjunction expansion,
 sail/HBaseQueryVisitor.java:289-313 function stringifiers).
 
@@ -125,42 +126,32 @@ from pyspark.sql import DataFrame, functions as F
 
 from hbase_rdf_spark.plans.bgp import (
     Bgp,
-    Filter,
     OptionalBlock,
     Path,
-    VarFilter,
     execute_bgp,
     materialize,
     pattern_vars,
     _apply_filter,
+    _binding_struct,
     _block_vars,
     _merge_join,
 )
-from hbase_rdf_spark.plans.filters import (
-    And,
-    Bound,
-    DatatypeEq,
-    DtCmp,
-    DtPartCmp,
-    ErrorCond,
-    FilterExpr,
-    LangEq,
-    LangMatch,
-    Not,
-    Or,
-    Regex,
-    StrCmp,
-    TzEq,
-    StrLenCmp,
-    StrPred,
-    TypeTest,
+from hbase_rdf_spark.plans.expr import (  # noqa: F401 — re-exported
+    AGG_FUNCS,
+    FNS,
+    Cx,
+    ExistsExpr,
+    ExprGrammar,
+    SparqlSyntaxError,
+    _kterm,
+    compile_expr,
+    etype,
+    exists_leaves,
+    expr_vars,
+    lower_filter,
+    walk,
 )
-
-# a whole signed numeric-literal token ('-1', '-.5', '-2e3'): the
-# tokenizer folds the sign in, so additive-expression loops must accept
-# it as a '-'-continuation (SPARQL grammar [116] AdditiveExpression
-# special-cases NumericLiteralNegative for exactly this)
-_NEGNUM_RX = re.compile(r"^-(?:[0-9]+(?:\.[0-9]+)?|\.[0-9]+)(?:[eE][+-]?[0-9]+)?$")
+from hbase_rdf_spark.plans.filters import And
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 RDF_FIRST = "http://www.w3.org/1999/02/22-rdf-syntax-ns#first"
@@ -197,11 +188,6 @@ _NUM_DT = re.compile(
     r"|unsignedInt|integer|decimal|double|float|short|long|byte|int)>$"
 )
 
-_AGG_FUNCS = {"COUNT", "SUM", "AVG", "MIN", "MAX", "GROUP_CONCAT", "SAMPLE"}
-
-_TYPE_TESTS = {"isiri", "isuri", "isblank", "isliteral", "isnumeric"}
-
-
 def tokenize(q: str) -> list[str]:
     # strip comments
     q = re.sub(r"(?m)^\s*#.*$", "", q)
@@ -218,10 +204,6 @@ def tokenize(q: str) -> list[str]:
     return out
 
 
-class SparqlSyntaxError(ValueError):
-    pass
-
-
 @dataclass
 class Aggregate:
     func: str  # COUNT | SUM | AVG | MIN | MAX
@@ -230,16 +212,6 @@ class Aggregate:
     distinct: bool = False
     # GROUP_CONCAT(?v; SEPARATOR="…") — SPARQL 1.1 §18.5.1.7
     separator: str = " "
-
-
-@dataclass
-class LangFilter:
-    """Legacy API form of FILTER langMatches(lang(?v), 'range') — the
-    parser now emits plans/filters.LangMatch; this stays for direct
-    Query-object users."""
-
-    var: str
-    range: str
 
 
 @dataclass
@@ -321,11 +293,8 @@ class ServiceBlock:
 
 @dataclass
 class BindAssign:
-    """``BIND(expr AS ?var)``: var (no '?') ← a value expression tree.
-
-    expr nodes: ``('var', '?x')`` | ``('num', 3.5)`` | ``('const',
-    term)`` | ``('arith', op, left, right)`` with op in ``+ - * /``.
-    """
+    """``BIND(expr AS ?var)``: var (no '?') ← an expression AST
+    (plans/expr.py)."""
 
     var: str
     expr: tuple
@@ -349,7 +318,6 @@ class Query:
     # of their branches
     union_blocks: list[list[GroupBlock]] = field(default_factory=list)
     filters: list = field(default_factory=list)
-    lang_filters: list[LangFilter] = field(default_factory=list)
     values: list[ValuesBlock] = field(default_factory=list)
     # trailing VALUES whose vars are aggregate aliases / BIND outputs /
     # non-group-key vars: joined POST-projection on rendered solutions
@@ -377,7 +345,7 @@ class Query:
     postagg_binds: list[BindAssign] = field(default_factory=list)
     describe_target: object = None  # '?var' or constant term
     construct_template: list[Bgp] = field(default_factory=list)
-    having: tuple | None = None  # (?aggAlias, op, number)
+    having: tuple | None = None  # expression AST over the aggregated frame
     order_by: list[tuple[str, bool]] = field(default_factory=list)  # (var, asc)
     # ORDER BY expression keys desugar to hidden binds named __ord_e{i}
     # (routed to binds / postagg_binds); listed here so execution can
@@ -393,66 +361,10 @@ class Query:
     dataset: tuple[tuple, tuple] | None = None
 
 
-#: value-expression function names _bind_atom recognizes (also used to
-#: spot builtin-call ORDER BY keys)
-_BIND_FN_NAMES = (
-    "str", "concat", "ucase", "lcase", "strlen",
-    "substr", "replace", "strbefore", "strafter",
-    "abs", "ceil", "floor", "round", "coalesce", "if",
-    "md5", "sha1", "sha256", "sha384", "sha512",
-    "encode_for_uri", "iri", "uri", "strdt", "strlang", "lang", "bnode",
-    "year", "month", "day", "hours", "minutes", "seconds", "tz",
-    "timezone", "now", "rand", "uuid", "struuid",
-)
-
 #: an IRI with a scheme is absolute — never BASE-resolved (RFC 3986 §3.1)
 _IRI_SCHEME_RX = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
 
-#: zero-argument builtins (SPARQL 1.1 §17.4.1.4/.5, §17.4.4.1/.2,
-#: §17.4.5.1). NOW() is captured once per query parse (every call in
-#: one execution sees the same instant, per spec); RAND/UUID/STRUUID
-#: are per-row nondeterministic by definition.
-_NOARG_FNS = ("now", "rand", "uuid", "struuid")
-
-#: XSD constructor-cast targets (SPARQL 1.1 §17.5 — XPath casting,
-#: inherited by the reference via ARQ). Numeric + boolean targets
-#: produce kind-2 numeric values (booleans inline as 1.0/0.0 exactly
-#: like sources/ntriples.py stores them); xsd:string rewrites to
-#: STR(); xsd:dateTime/date rewrite to STRDT() (the stored typed-
-#: literal form). Integer-family casts truncate numeric sources
-#: toward zero and ERROR (NULL → unbound) on non-integer lexicals,
-#: per XPath.
-_XSD_NS = "http://www.w3.org/2001/XMLSchema#"
-_CAST_INT_TYPES = frozenset(
-    "integer nonPositiveInteger negativeInteger long int short byte "
-    "nonNegativeInteger unsignedLong unsignedInt unsignedShort "
-    "unsignedByte positiveInteger".split()
-)
-_CAST_NUM_TYPES = _CAST_INT_TYPES | {"double", "float", "decimal"}
-_CAST_TYPES = _CAST_NUM_TYPES | {"boolean", "string", "dateTime", "date"}
-
-#: numeric dateTime component accessors (SPARQL 1.1 §17.4.5)
-_DT_NUM_FNS = ("year", "month", "day", "hours", "minutes", "seconds")
-
-
-def _expr_vars(expr) -> set[str]:
-    """Every ``('var', '?x')`` name (no '?') in a value-expression
-    tree, FilterExpr condition nodes included."""
-    out: set[str] = set()
-    if isinstance(expr, tuple):
-        if expr[0] == "var":
-            return {expr[1][1:]}
-        for a in expr[1:]:
-            out |= _expr_vars(a)
-    elif isinstance(expr, list):
-        for a in expr:
-            out |= _expr_vars(a)
-    elif isinstance(expr, FilterExpr):
-        out |= expr.vars()
-    return out
-
-
-class _Parser:
+class _Parser(ExprGrammar):
     def __init__(self, tokens: list[str]):
         self.t = tokens
         self.i = 0
@@ -467,9 +379,10 @@ class _Parser:
         # BNODE() value-function call counter (distinct from syntax
         # blank nodes): each no-arg call site gets its own salt
         self._bnfn_counter = 0
-        # when non-None, _bind_atom accepts aggregate calls and
-        # desugars each into a hidden aggregate of this query —
-        # active only while parsing SELECT projection expressions
+        # when non-None, the expression grammar accepts aggregate
+        # calls and desugars each into a hidden aggregate of this
+        # query — active while parsing SELECT / HAVING / ORDER BY
+        # expressions
         self._agg_ctx: Query | None = None
         # dataset clause: None until a FROM / FROM NAMED is parsed,
         # then (default_graphs, named_graphs) — consulted by
@@ -812,7 +725,7 @@ class _Parser:
             # CONSTRUCT WHERE: spec restricts the pattern to a plain
             # triples template — no FILTER/OPTIONAL/UNION/etc., and no
             # property paths (a path is not a triple)
-            if (q.filters or q.lang_filters or q.optional
+            if (q.filters or q.optional
                     or q.union_blocks or q.values or q.services
                     or q.minus or q.exists
                     or q.binds or q.subqueries):
@@ -840,8 +753,8 @@ class _Parser:
                 q.variables.append(self.next())
             elif tok == "(":
                 # unified '( expr AS ?v )': aggregates are ordinary
-                # atoms of the expression grammar here (the _bind_atom
-                # agg hook desugars each into a hidden aggregate and
+                # atoms of the expression grammar here (its aggregate
+                # hook desugars each into a hidden aggregate and
                 # returns a reference to its alias), so plain
                 # (SUM(?x) AS ?s), expression arguments SUM(?a*?b),
                 # and aggregate combinations (SUM(?a)/SUM(?b) AS ?r)
@@ -850,7 +763,7 @@ class _Parser:
                 n_aggs = len(q.aggregates)
                 self._agg_ctx = q
                 try:
-                    expr = self._bind_expr()
+                    expr = self._expr()
                 finally:
                     self._agg_ctx = None
                 self.expect("AS")
@@ -895,7 +808,7 @@ class _Parser:
             if (self.peek() or "").startswith("?") and after in (")", ";"):
                 v = self.next()  # plain-var fast path: SUM(?x)
             else:
-                expr = self._bind_expr()
+                expr = self._expr()
                 hidden = f"__aggarg{len(q.agg_prebinds)}"
                 q.agg_prebinds.append(BindAssign(hidden, expr))
                 v = "?" + hidden
@@ -936,7 +849,7 @@ class _Parser:
     def _group(self, q: Query, graph) -> None:
         # group-context stack: lets EXISTS{…} parse as an expression
         # leaf from value positions (BIND, IF conditions) anywhere
-        # inside this group's body — _bind_atom reads the top
+        # inside this group's body — ExprGrammar._primary reads the top
         stack = getattr(self, "_gctx", None)
         if stack is None:
             stack = self._gctx = []
@@ -966,7 +879,6 @@ class _Parser:
                 q.patterns.extend(sub.patterns)
                 q.optional.extend(sub.optional)
                 q.filters.extend(sub.filters)
-                q.lang_filters.extend(sub.lang_filters)
                 for b in sub.binds:  # BIND is graph-agnostic
                     if b.at is not None:
                         b.at += off
@@ -998,7 +910,7 @@ class _Parser:
                 self._subgroup(sub, graph)
                 self.expect("}")
                 if (len(sub.subqueries) == 1 and not sub.patterns
-                        and not sub.filters and not sub.lang_filters
+                        and not sub.filters
                         and not sub.optional and not sub.union_blocks
                         and not sub.binds and not sub.values
                         and not sub.minus and not sub.exists):
@@ -1068,7 +980,7 @@ class _Parser:
             elif up == "BIND":
                 self.next()
                 self.expect("(")
-                expr = self._bind_expr()
+                expr = self._expr()
                 self.expect("AS")
                 v = self.next()
                 if not v.startswith("?"):
@@ -1268,7 +1180,6 @@ class _Parser:
             len(sub.subqueries) == 1
             and not sub.patterns
             and not sub.filters
-            and not sub.lang_filters
             and not sub.optional
             and not sub.union_blocks
             and not sub.values
@@ -1286,7 +1197,6 @@ class _Parser:
             len(sub.union_blocks) == 1
             and not sub.patterns
             and not sub.filters
-            and not sub.lang_filters
             and not sub.optional
             and not sub.values
             and not sub.minus
@@ -1449,217 +1359,7 @@ class _Parser:
     def _subgroup(self, sub: "Query", graph) -> None:
         self._group(sub, graph)
 
-    # -- BIND value expressions -----------------------------------------
-    # additive := mult (('+'|'-') mult)* ; mult := atom (('*'|'/') atom)*
-    # atom := '(' additive ')' | ?var | number | constant term
-    def _bind_expr(self) -> tuple:
-        node = self._bind_mult()
-        while True:
-            nxt = self.peek()
-            if nxt in ("+", "-"):
-                op = self.next()
-                node = ("arith", op, node, self._bind_mult())
-            elif nxt is not None and _NEGNUM_RX.match(nxt):
-                # grammar [116]: a signed numeric literal continues the
-                # additive expression (`?a -1` ≡ `?a - 1`)
-                self.next()
-                node = ("arith", "-", node, ("num", float(nxt[1:])))
-            else:
-                return node
-
-    def _bind_mult(self) -> tuple:
-        node = self._bind_atom()
-        while self.peek() in ("*", "/"):
-            op = self.next()
-            node = ("arith", op, node, self._bind_atom())
-        return node
-
-    def _bind_atom(self) -> tuple:
-        # unary sign (SPARQL grammar [118] UnaryExpression): negative
-        # numeric literals tokenize whole, so only `-?v` / `-(…)` and
-        # redundant `+` reach here
-        if self.peek() == "-":
-            self.next()
-            return ("arith", "-", ("num", 0.0), self._bind_atom())
-        if self.peek() == "+":
-            self.next()
-            return self._bind_atom()
-        up = (self.peek() or "").upper()
-        gctx = getattr(self, "_gctx", None)
-        if up in ("EXISTS", "NOT") and gctx:
-            # §17.4.1.4: EXISTS{…} as a VALUE — xsd:boolean, inlined
-            # onto the numeric 1.0/0.0 space like every other boolean
-            got = self._parse_exists_leaf(gctx[-1])
-            if got is not None:
-                leaf, neg = got
-                return ("existsm", Not(leaf) if neg else leaf)
-        if (
-            self._agg_ctx is not None
-            and up in _AGG_FUNCS
-            and self.i + 1 < len(self.t)
-            and self.t[self.i + 1] == "("
-        ):
-            # aggregate call inside a SELECT expression
-            # (SUM(?a)/SUM(?b) AS ?r): desugar to a hidden aggregate
-            # and reference its alias — the enclosing expression then
-            # evaluates over the aggregated frame. The sink is cleared
-            # while the argument parses: nested aggregates are invalid
-            ctx, self._agg_ctx = self._agg_ctx, None
-            try:
-                agg = self._parse_aggregate(ctx)
-            finally:
-                self._agg_ctx = ctx
-            agg.alias = f"?__hagg{len(ctx.aggregates)}"
-            ctx.aggregates.append(agg)
-            return ("var", agg.alias)
-        if self.peek() == "(":
-            self.next()
-            e = self._bind_expr()
-            self.expect(")")
-            return e
-        low = (self.peek() or "").lower()
-        if (
-            low in _BIND_FN_NAMES
-            and self.i + 1 < len(self.t)
-            and self.t[self.i + 1] == "("
-        ):
-            self.next()
-            self.expect("(")
-            if low in _NOARG_FNS:
-                self.expect(")")
-                if low == "now":
-                    # one instant per query parse — every NOW() in
-                    # this execution returns the same value (§17.4.5.1)
-                    if getattr(self, "_now_lex", None) is None:
-                        from datetime import datetime, timezone
-
-                        self._now_lex = (
-                            datetime.now(timezone.utc)
-                            .strftime("%Y-%m-%dT%H:%M:%S.%f")
-                            + "Z"
-                        )
-                    return ("now", self._now_lex)
-                return (low,)
-            if low in ("concat", "coalesce"):
-                args = [self._bind_expr()]
-                while self.peek() == ",":
-                    self.next()
-                    args.append(self._bind_expr())
-                self.expect(")")
-                return (low, args)
-            if low == "substr":
-                s = self._bind_expr()
-                self.expect(",")
-                start = self._bind_expr()
-                length = None
-                if self.peek() == ",":
-                    self.next()
-                    length = self._bind_expr()
-                self.expect(")")
-                return ("substr", s, start, length)
-            if low == "replace":
-                s = self._bind_expr()
-                self.expect(",")
-                pat = self._string_arg()
-                self.expect(",")
-                repl = self._string_arg()
-                flags = ""
-                if self.peek() == ",":
-                    self.next()
-                    flags = self._string_arg()
-                self.expect(")")
-                return ("replace", s, pat, repl, flags)
-            if low in ("strbefore", "strafter"):
-                s = self._bind_expr()
-                self.expect(",")
-                t = self._string_arg()
-                self.expect(")")
-                return (low, s, t)
-            if low in ("abs", "ceil", "floor", "round"):
-                e = self._bind_expr()
-                self.expect(")")
-                return ("nfunc", low, e)
-            if low in ("iri", "uri"):
-                # SPARQL §17.4.2.8: IRI(str) constructs an IRI term.
-                # Relative-IRI resolution (no BASE support) is out of
-                # scope — the argument must be an absolute IRI string.
-                e = self._bind_expr()
-                self.expect(")")
-                return ("iri", e)
-            if low == "bnode":
-                # §17.4.2.9 BNODE([str]): the no-arg form mints a
-                # blank node distinct per call (parse-time salt) per
-                # solution; the 1-arg form unifies same-literal calls
-                # within a solution (salt excluded — see
-                # _bind_term_value)
-                salt = self._bnfn_counter
-                self._bnfn_counter += 1
-                if self.peek() == ")":
-                    self.next()
-                    return ("bnode", salt, None)
-                e = self._bind_expr()
-                self.expect(")")
-                return ("bnode", salt, e)
-            if low in ("strdt", "strlang"):
-                # §17.4.2.9/.10 — constant datatype IRI / language tag
-                s = self._bind_expr()
-                self.expect(",")
-                if low == "strlang":
-                    t = self._string_arg()
-                else:
-                    t = self.term()
-                    if not isinstance(t, str) or t.startswith("?"):
-                        raise SparqlSyntaxError(
-                            "STRDT needs a constant datatype IRI"
-                        )
-                self.expect(")")
-                return (low, s, t)
-            if low == "if":
-                gctx = getattr(self, "_gctx", None)
-                cond = self._or_expr(gctx[-1] if gctx else None)
-                self.expect(",")
-                then = self._bind_expr()
-                self.expect(",")
-                other = self._bind_expr()
-                self.expect(")")
-                return ("if", cond, then, other)
-            e = self._bind_expr()
-            self.expect(")")
-            return (low, e)
-        tok = self.peek()
-        if (
-            tok
-            and not tok.startswith(('"', "?", "_"))
-            and (":" in tok or tok.startswith("<"))
-            and self.t[self.i + 1 : self.i + 2] == ["("]
-        ):
-            # XSD constructor cast: xsd:integer(?x), <…#double>(?x), …
-            iri = tok[1:-1] if tok.startswith("<") else self._expand_pname(tok)
-            if iri.startswith(_XSD_NS) and iri[len(_XSD_NS):] in _CAST_TYPES:
-                local = iri[len(_XSD_NS):]
-                self.next()
-                self.expect("(")
-                e = self._bind_expr()
-                self.expect(")")
-                if local == "string":
-                    return ("str", e)
-                if local in ("dateTime", "date"):
-                    return ("strdt", e, iri)
-                return ("cast", local, e)
-            raise SparqlSyntaxError(
-                f"unsupported function call {tok!r} — only XSD "
-                "constructor casts are callable by IRI"
-            )
-        t = self.term()
-        if isinstance(t, str) and t.startswith("?"):
-            return ("var", t)
-        if isinstance(t, (int, float)) and not isinstance(t, bool):
-            return ("num", float(t))
-        return ("const", t)
-
-    # -- filters --------------------------------------------------------
-    # expr := and_expr ('||' and_expr)* ; and_expr := unary ('&&' unary)*
-    # unary := '!' unary | '(' expr ')' | builtin-call | comparison
+    # -- expressions: the grammar is ExprGrammar (plans/expr.py) -------
     def _filter(self, q: Query, graph=None) -> None:
         # FILTER [NOT] EXISTS { … } — correlated existence via
         # semi/anti join on the shared variables
@@ -1689,158 +1389,14 @@ class _Parser:
                 )
             q.exists.append((not neg, br))
             return
-        if self.peek() == "(":
-            self.next()
-            e = self._or_expr((q, graph))
-            self.expect(")")
-        else:
-            # bare builtin-call form: FILTER langMatches(...), FILTER !bound(...)
-            e = self._unary_expr((q, graph))
+        # FILTER(expr), or the bare builtin-call form: FILTER
+        # langMatches(...), FILTER !bound(...)
+        e = lower_filter(self._unary())
         # split a top-level conjunction so each conjunct pushes down
         # independently (the reference's filter-placement transform,
         # HBaseTransformFilterPlacement.java)
         for c in (e.children if isinstance(e, And) else [e]):
             q.filters.append(c)
-
-    # ctx = (enclosing Query, graph scope) — threaded so EXISTS{…} can
-    # parse as an expression leaf; None in contexts with no group scope
-    # (e.g. the IF() condition inside BIND), where EXISTS raises
-    def _or_expr(self, ctx=None):
-        parts = [self._and_expr(ctx)]
-        while self.peek() == "||":
-            self.next()
-            parts.append(self._and_expr(ctx))
-        return parts[0] if len(parts) == 1 else Or(parts)
-
-    def _and_expr(self, ctx=None):
-        parts = [self._unary_expr(ctx)]
-        while self.peek() == "&&":
-            self.next()
-            parts.append(self._unary_expr(ctx))
-        return parts[0] if len(parts) == 1 else And(parts)
-
-    def _unary_expr(self, ctx=None):
-        tok = self.peek()
-        if tok == "!":
-            self.next()
-            return Not(self._unary_expr(ctx))
-        up = tok.upper() if tok is not None else ""
-        if ctx is not None and up in ("EXISTS", "NOT"):
-            # §17.4.1.4: EXISTS{…} / NOT EXISTS{…} as an expression
-            # leaf inside a boolean combination — becomes a marker
-            # column computed by _attach_exists_marker
-            got = self._parse_exists_leaf(ctx)
-            if got is not None:
-                leaf, neg = got
-                return Not(leaf) if neg else leaf
-        low = tok.lower() if tok is not None else ""
-        if low == "bound":
-            self.next()
-            self.expect("(")
-            v = self.next()
-            if not v.startswith("?"):
-                raise SparqlSyntaxError("bound() takes a variable")
-            self.expect(")")
-            return Bound(v)
-        if low in _TYPE_TESTS:
-            self.next()
-            self.expect("(")
-            v = self.next()
-            if not v.startswith("?"):
-                raise SparqlSyntaxError(f"{tok}() takes a variable")
-            self.expect(")")
-            test = "isiri" if low == "isuri" else low
-            return TypeTest(v, test)
-        if low == "sameterm":
-            # §17.4.1.8 — for this engine identical to RDFterm-equal
-            # (kind-2 numerics carry only their value, so two lexical
-            # forms of one number were already conflated at encode)
-            self.next()
-            self.expect("(")
-            a = self.term()
-            self.expect(",")
-            b = self.term()
-            self.expect(")")
-            if not (isinstance(a, str) and a.startswith("?")):
-                a, b = b, a
-            if not (isinstance(a, str) and a.startswith("?")):
-                raise SparqlSyntaxError("sameTerm needs a variable operand")
-            if isinstance(b, str) and b.startswith("?"):
-                return VarFilter(a, "=", 0.0, other=b)
-            if isinstance(b, (int, float)) and not isinstance(b, bool):
-                return Filter(a, "=", float(b))
-            return _TermFilter(a, "=", b)
-        if low == "regex":
-            self.next()
-            self.expect("(")
-            v = self._str_or_var()
-            self.expect(",")
-            pat = self._string_arg()
-            flags = ""
-            if self.peek() == ",":
-                self.next()
-                flags = self._string_arg()
-            self.expect(")")
-            return Regex(v, pat, flags)
-        if low in ("strstarts", "strends", "contains"):
-            self.next()
-            self.expect("(")
-            v = self._str_or_var()
-            self.expect(",")
-            txt = self._string_arg()
-            self.expect(")")
-            return StrPred(v, low, txt)
-        if low == "langmatches":
-            self.next()
-            self.expect("(")
-            fn = self.next()
-            if fn.lower() != "lang":
-                raise SparqlSyntaxError("expected lang(?var) in langMatches")
-            self.expect("(")
-            v = self.next()
-            self.expect(")")
-            self.expect(",")
-            rng = self._string_arg()
-            self.expect(")")
-            return LangMatch(v, rng)
-        if tok == "(":
-            # either a parenthesized boolean expression or a
-            # parenthesized arithmetic operand — disambiguate by trying
-            # the boolean parse first and backtracking
-            save = self.i
-            try:
-                self.next()
-                e = self._or_expr(ctx)
-                self.expect(")")
-                # the general-expression fallback can "succeed" on a
-                # parenthesized arithmetic OPERAND (`(?p + 1) < 3` —
-                # EbvExpr(?p + 1)); only accept the boolean reading
-                # when what follows cannot continue a comparison
-                nxt = self.peek()
-                if (
-                    nxt in self._FLIP
-                    or nxt in ("*", "/", "+", "-")
-                    or (nxt or "").upper() in ("IN", "NOT")
-                    or (nxt is not None and _NEGNUM_RX.match(nxt))
-                ):
-                    # a signed numeric literal continues an additive
-                    # expression per grammar [116] — `(?a) -1 > 0`
-                    # tokenizes '-1' whole, so it must backtrack to
-                    # the arithmetic reading like a bare '-' would
-                    self.i = save
-                else:
-                    return e
-            except SparqlSyntaxError:
-                self.i = save
-        save = self.i
-        try:
-            return self._comparison()
-        except SparqlSyntaxError:
-            # operands beyond the pushdown-normalizable grammar
-            # (var-var arithmetic, IF/COALESCE values, bare EBV
-            # expressions): re-parse through the BIND value grammar
-            self.i = save
-            return self._general_cmp()
 
     def _parse_exists_leaf(self, ctx):
         """[NOT] EXISTS { … } at the cursor → (ExistsExpr, negated),
@@ -1875,349 +1431,6 @@ class _Parser:
         self._exm_n = getattr(self, "_exm_n", 0) + 1
         return ExistsExpr(marker=f"__exm{self._exm_n}", block=br), neg
 
-    def _general_cmp(self):
-        """General-expression comparison / EBV fallback (ExprCmp /
-        EbvExpr) — correct but not scan-pushable; the specialized
-        ``_comparison`` grammar stays the fast path."""
-        lhs = self._bind_expr()
-        nxt = self.peek()
-        if nxt in self._FLIP:
-            self.next()
-            return ExprCmp(lhs, nxt, self._bind_expr())
-        return EbvExpr(lhs)
-
-    def _str_or_var(self) -> str:
-        """A ?var, or str(?var) — both denote the same label column."""
-        tok = self.next()
-        if tok.lower() == "str":
-            self.expect("(")
-            v = self.next()
-            self.expect(")")
-        else:
-            v = tok
-        if not v.startswith("?"):
-            raise SparqlSyntaxError(f"expected a variable, got {v}")
-        return v
-
-    def _in_list(
-        self, var: str, off: float = 0.0, scl: float = 1.0,
-        as_str: bool = False,
-    ):
-        """``?x IN (c1, c2, …)`` → Or of equality filters (the
-        reference's OptimizeIn-style expansion). An arithmetic LHS
-        solves for the var (``?x + 1 IN (13)`` ⇔ ``?x = 12``); a
-        ``str(?x)`` LHS compares lexical forms."""
-        self.expect("(")
-        parts = []
-        while True:
-            t = self.term()
-            if isinstance(t, str) and t.startswith("?"):
-                raise SparqlSyntaxError("IN list must contain constants")
-            if as_str:
-                if isinstance(t, (int, float)):
-                    raise SparqlSyntaxError(
-                        "str() IN list must contain strings"
-                    )
-                lex = t[0] if isinstance(t, tuple) else t
-                parts.append(StrCmp(var, "=", lex))
-            elif isinstance(t, (int, float)):
-                # s·v + off = t ⇔ v = s·(t − off)  (s ∈ {1, −1})
-                parts.append(Filter(var, "=", scl * (float(t) - off)))
-            elif off or scl != 1.0:
-                # arithmetic vs non-numeric term: a type error LEG —
-                # keep it in the disjunction as an error (NULL)
-                # condition so negation propagates it (§17.2: NOT IN
-                # over an erroring member is error → row dropped, not
-                # true)
-                parts.append(ErrorCond(var))
-            else:
-                parts.append(_TermFilter(var, "=", t))
-            if self.peek() == ",":
-                self.next()
-                continue
-            break
-        self.expect(")")
-        return parts[0] if len(parts) == 1 else Or(parts)
-
-    def _string_arg(self) -> str:
-        tok = self.next()
-        if tok.startswith('"') or tok.startswith("'"):
-            body = tok[1:-1]
-            # strip any @lang/^^dt suffix a bare term-literal would carry
-            m = re.match(r'^"((?:[^"\\]|\\.)*)"', tok)
-            if m:
-                body = m.group(1)
-            return body.replace('\\"', '"').replace("\\\\", "\\")
-        raise SparqlSyntaxError(f"expected a string argument, got {tok}")
-
-    def _operand(self):
-        """var | number | constant term | str(?v), with optional unary
-        minus and ± constant.
-
-        Returns (base, offset, is_str, scale): is_str marks a str(?v)
-        wrapper; scale is -1.0 under a unary minus (``-?p``), else 1.0.
-        """
-        if self.peek() is not None and self.peek().lower() == "str":
-            save = self.i
-            self.next()
-            if self.peek() == "(":
-                self.expect("(")
-                v = self.next()
-                self.expect(")")
-                if not v.startswith("?"):
-                    raise SparqlSyntaxError("str() takes a variable")
-                return v, 0.0, True, 1.0
-            self.i = save
-        scale = 1.0
-        while self.peek() in ("-", "+"):  # unary sign(s) before the base
-            if self.next() == "-":
-                scale = -scale
-        paren = self.peek() == "("
-        if paren:
-            self.next()
-        base = self.term()
-        in_off = 0.0  # ± constants under the unary sign (inside parens);
-        # on an unparenthesized base, `-?p + 3` is `(-?p) + 3`, so the
-        # chained offset sits OUTSIDE the sign
-        out_off = 0.0
-        while (o := self._chain_off()) is not None:
-            if paren:
-                in_off += o
-            else:
-                out_off += o
-        if paren:
-            self.expect(")")
-            while (o := self._chain_off()) is not None:  # trailing `-(…) ± c`
-                out_off += o
-        offset = scale * in_off + out_off
-        if isinstance(base, (int, float)) and not isinstance(base, bool):
-            return scale * float(base) + offset, 0.0, False, 1.0
-        return base, offset, False, scale
-
-    def _chain_off(self):
-        """One additive continuation at the cursor: ``+``/``-`` followed
-        by a numeric term, or a whole signed numeric-literal token
-        (``-1`` — grammar [116]). Returns the signed offset, or None
-        when the cursor isn't at one (cursor untouched)."""
-        nxt = self.peek()
-        if nxt in ("+", "-"):
-            sign = 1.0 if self.next() == "+" else -1.0
-            off = self.term()
-            if not isinstance(off, (int, float)):
-                raise SparqlSyntaxError("arithmetic offset must be numeric")
-            return sign * float(off)
-        if nxt is not None and _NEGNUM_RX.match(nxt):
-            self.next()
-            return float(nxt)
-        return None
-
-    _FLIP = {"<": ">", ">": "<", "<=": ">=", ">=": "<=", "=": "=", "!=": "!="}
-
-    def _comparison(self):
-        # scalar-function LHS forms: STRLEN(?v) op n, lang(?v) = "tag",
-        # datatype(?v) = <iri> (SPARQL 1.1 §17.4; the reference gets
-        # these from stock ARQ — sail/HBaseQueryVisitor.java:289-313)
-        low = (self.peek() or "").lower()
-        if (
-            low in ("strlen", "lang", "datatype", "tz") or low in _DT_NUM_FNS
-        ) and self.i + 1 < len(self.t) and self.t[self.i + 1] == "(":
-            self.next()
-            self.expect("(")
-            v = self.next()
-            if not v.startswith("?"):
-                raise SparqlSyntaxError(f"{low}() takes a variable")
-            self.expect(")")
-            op = self.next()
-            if op not in self._FLIP:
-                raise SparqlSyntaxError(f"unsupported FILTER operator {op!r}")
-            if low == "strlen" or low in _DT_NUM_FNS:
-                rhs = self.term()
-                if not isinstance(rhs, (int, float)):
-                    raise SparqlSyntaxError(
-                        f"{low.upper()} comparison needs a number"
-                    )
-                if low == "strlen":
-                    return StrLenCmp(v, op, float(rhs))
-                return DtPartCmp(v, low, op, float(rhs))
-            if op not in ("=", "!="):
-                raise SparqlSyntaxError(f"{low}() supports = / != only")
-            if low == "lang":
-                return LangEq(v, op, self._string_arg())
-            if low == "tz":
-                return TzEq(v, op, self._string_arg())
-            rhs = self.term()
-            if not isinstance(rhs, str) or rhs.startswith("?"):
-                raise SparqlSyntaxError("datatype() comparison needs an IRI")
-            return DatatypeEq(v, op, rhs)
-        lhs, l_off, l_str, l_scl = self._operand()
-        nxt = self.peek()
-        nup = nxt.upper() if nxt is not None else ""
-        if (
-            nup in ("IN", "NOT")
-            and isinstance(lhs, str)
-            and lhs.startswith("?")
-        ):
-            neg = False
-            if nup == "NOT":
-                save = self.i
-                self.next()
-                if (self.peek() or "").upper() == "IN":
-                    neg = True
-                else:
-                    self.i = save
-            if neg or nup == "IN":
-                self.next()  # consume IN
-                e = self._in_list(lhs, l_off, l_scl, l_str)
-                return Not(e) if neg else e
-        op = self.next()
-        if op not in self._FLIP:
-            raise SparqlSyntaxError(f"unsupported FILTER operator {op!r}")
-        rhs, r_off, r_str, r_scl = self._operand()
-        if self.peek() in ("*", "/"):
-            # a multiplicative continuation on the RHS (?u < ?v * 4)
-            # is beyond the linearizable grammar — punt to the
-            # general-expression fallback instead of returning a
-            # truncated comparison with tokens left over
-            raise SparqlSyntaxError("multiplicative comparison RHS")
-        if r_str and not l_str:
-            # put the str() side on the left
-            lhs, rhs = rhs, lhs
-            l_off, r_off = r_off, l_off
-            l_str, r_str = r_str, l_str
-            l_scl, r_scl = r_scl, l_scl
-            op = self._FLIP[op]
-        if l_str:
-            if r_str or not isinstance(rhs, tuple):
-                raise SparqlSyntaxError(
-                    "str() comparisons support a string constant RHS only"
-                )
-            if op not in ("=", "!="):
-                raise SparqlSyntaxError("str() supports = / != only")
-            return StrCmp(lhs, op, rhs[0])
-        if not (isinstance(lhs, str) and lhs.startswith("?")):
-            # constant-on-the-left form (BSBM Q5): flip the comparison
-            lhs, rhs = rhs, lhs
-            l_off, r_off = r_off, l_off
-            l_scl, r_scl = r_scl, l_scl
-            op = self._FLIP[op]
-        if not (isinstance(lhs, str) and lhs.startswith("?")):
-            raise SparqlSyntaxError("FILTER needs a variable operand")
-        if isinstance(rhs, str) and rhs.startswith("?"):
-            if l_scl != r_scl:
-                # mixed signs make a sum of variables (?a op -?b + c) —
-                # not a two-sided comparison any rewrite can linearize
-                raise SparqlSyntaxError(
-                    "FILTER comparison of oppositely-signed variables "
-                    "is not supported"
-                )
-            # common scale s: s·a + l_off op s·b + r_off ⇔
-            # a op' b + s·(r_off − l_off), op' flipped when s = −1.
-            # (With s = −1 the operands are numeric by construction, so
-            # the =/!= term-equality fast path degrades to numeric
-            # equality — exactly the spec's unary-minus typing.)
-            eff = op if l_scl == 1.0 else self._FLIP[op]
-            return VarFilter(
-                lhs, eff, 0.0, other=rhs, offset=l_scl * (r_off - l_off)
-            )
-        if isinstance(rhs, (int, float)):
-            # s·v + l_off op c ⇔ v op' s·(c − l_off)
-            eff = op if l_scl == 1.0 else self._FLIP[op]
-            return Filter(lhs, eff, l_scl * (float(rhs) + r_off - l_off))
-        if l_scl != 1.0 or l_off:
-            # an arithmetic LHS against a non-numeric constant is a
-            # type error on every row — an error (NULL) condition, so
-            # a bare FILTER drops every row while !/&&/|| propagate
-            # the error per §17.2 (a static false would make
-            # FILTER(!(?p+1 = <iri>)) wrongly keep rows)
-            return ErrorCond(lhs)
-        if isinstance(rhs, tuple) and re.search(
-            r"\^\^<http://www\.w3\.org/2001/XMLSchema#(?:dateTime|date)>$",
-            rhs[0],
-        ):
-            # chronological comparison against a date/dateTime literal
-            # — value semantics (equal instants in different timezones
-            # compare equal), so it takes precedence over the id-space
-            # term-equality fast path below
-            return DtCmp(lhs, op, rhs[0])
-        if op in ("=", "!=") and isinstance(rhs, (str, tuple)):
-            # constant (in)equality: bind into the pattern set via an
-            # equality filter on the encoded id — J6's constant binding
-            return _TermFilter(lhs, op, rhs)
-        raise SparqlSyntaxError(f"unsupported FILTER on {rhs!r}")
-
-    # -- HAVING ----------------------------------------------------------
-    # having_expr := having_and ('||' having_and)*
-    # having_and  := having_unary ('&&' having_unary)*
-    # having_unary:= '!' having_unary | '(' having_expr ')' | having_cmp
-    # having_cmp  := (AGG '(' [DISTINCT] (?v | '*') ')' | ?aggAlias) op num
-    # Produces a tuple tree (("and"/"or", parts) | ("not", x) |
-    # ("cmp", alias, op, num)) that `_having_col` compiles to one Spark
-    # Column over the aggregated frame.
-    def _having_bracketed(self, q: Query) -> tuple:
-        self.expect("(")
-        e = self._having_or(q)
-        self.expect(")")
-        return e
-
-    def _having_or(self, q: Query) -> tuple:
-        parts = [self._having_and(q)]
-        while self.peek() == "||":
-            self.next()
-            parts.append(self._having_and(q))
-        return parts[0] if len(parts) == 1 else ("or", tuple(parts))
-
-    def _having_and(self, q: Query) -> tuple:
-        parts = [self._having_unary(q)]
-        while self.peek() == "&&":
-            self.next()
-            parts.append(self._having_unary(q))
-        return parts[0] if len(parts) == 1 else ("and", tuple(parts))
-
-    def _having_unary(self, q: Query) -> tuple:
-        if self.peek() == "!":
-            self.next()
-            return ("not", self._having_unary(q))
-        if self.peek() == "(":
-            # parenthesized sub-expression vs. a comparison whose LHS
-            # merely follows — the grammar above has no parenthesized
-            # operands, so '(' here always opens a boolean group
-            self.next()
-            e = self._having_or(q)
-            self.expect(")")
-            return e
-        return self._having_cmp(q)
-
-    def _having_cmp(self, q: Query) -> tuple:
-        if (self.peek() or "").upper() in _AGG_FUNCS:
-            # same grammar as a SELECT aggregate — including expression
-            # arguments (HAVING (SUM(?p * ?q) > 10)), which desugar to
-            # a hidden pre-grouping Extend via _parse_aggregate
-            agg = self._parse_aggregate(q)
-            v = next(
-                (
-                    a.alias
-                    for a in q.aggregates
-                    if (a.func, a.var, a.distinct)
-                    == (agg.func, agg.var, agg.distinct)
-                ),
-                None,
-            )
-            if v is None:
-                v = f"?__having_{len(q.aggregates)}"
-                agg.alias = v
-                q.aggregates.append(agg)
-        else:
-            v = self.next()
-            if not v.startswith("?"):
-                raise SparqlSyntaxError("HAVING operand must be a var")
-        op = self.next()
-        if op not in ("<", "<=", ">", ">=", "=", "!="):
-            raise SparqlSyntaxError(f"bad HAVING comparison operator {op!r}")
-        num = self.term()
-        if isinstance(num, bool) or not isinstance(num, (int, float)):
-            raise SparqlSyntaxError("HAVING comparison must be numeric")
-        return ("cmp", v, op, float(num))
-
     def _modifiers(self, q: Query) -> None:
         if self.kw("GROUP"):
             self.expect("BY")
@@ -2236,13 +1449,13 @@ class _Parser:
                     q.group_by.append(self.next())
                     continue
                 is_call = (
-                    tok.lower() in _BIND_FN_NAMES
+                    tok.lower() in FNS
                     and self.i + 1 < len(self.t)
                     and self.t[self.i + 1] == "("
                 )
                 if tok == "(":
                     self.next()
-                    expr = self._bind_expr()
+                    expr = self._expr()
                     if self.kw("AS"):
                         v = self.next()
                         if not v.startswith("?"):
@@ -2254,7 +1467,7 @@ class _Parser:
                         name = f"__gk{len(q.group_by)}"
                     self.expect(")")
                 elif is_call:
-                    expr = self._bind_atom()
+                    expr = self._primary()
                     name = f"__gk{len(q.group_by)}"
                 else:
                     break
@@ -2264,21 +1477,23 @@ class _Parser:
                 raise SparqlSyntaxError("GROUP BY needs at least one key")
             if self.kw("HAVING"):
                 # HAVING HavingCondition+ (SPARQL 1.1 grammar [21]):
-                # each condition is a bracketed boolean expression over
-                # aggregate calls / aggregate aliases — arbitrary
-                # `&&`/`||`/`!` combinations of numeric comparisons
-                # (the reference inherits full HAVING from Sesame/ARQ,
-                # SURVEY SE2). A direct aggregate reuses an identical
-                # SELECT aggregate when one exists; otherwise it
-                # aggregates under a hidden __having alias the final
-                # projection never emits. Multiple bracketed
-                # conditions conjoin.
-                conds = [self._having_bracketed(q)]
-                while self.peek() == "(":
-                    conds.append(self._having_bracketed(q))
-                q.having = (
-                    conds[0] if len(conds) == 1 else ("and", tuple(conds))
-                )
+                # each condition is any expression over the aggregated
+                # frame — the same one a post-aggregation SELECT
+                # expression may use (the reference inherits full
+                # HAVING from Sesame/ARQ, SURVEY SE2). An aggregate
+                # call reuses an identical SELECT aggregate or becomes
+                # a hidden one the projection never emits. Multiple
+                # bracketed conditions conjoin.
+                self._agg_ctx = q
+                try:
+                    self.expect("(")
+                    conds = [self._expr()]
+                    self.expect(")")
+                    while self.peek() == "(":
+                        conds.append(self._primary())
+                finally:
+                    self._agg_ctx = None
+                q.having = conds[0] if len(conds) == 1 else ("and", *conds)
         if self.kw("ORDER"):
             self.expect("BY")
             while True:
@@ -2295,7 +1510,7 @@ class _Parser:
                     q.order_by.append((self.next(), True))
                     continue
                 elif tok == "(" or (
-                    (up in _AGG_FUNCS or tok.lower() in _BIND_FN_NAMES)
+                    (up in AGG_FUNCS or tok.lower() in FNS)
                     and self.i + 1 < len(self.t)
                     and self.t[self.i + 1] == "("
                 ):
@@ -2311,7 +1526,7 @@ class _Parser:
                 save_ctx = self._agg_ctx
                 self._agg_ctx = q
                 try:
-                    e = self._bind_expr()
+                    e = self._expr() if asc is not None else self._additive()
                 finally:
                     self._agg_ctx = save_ctx
                 if asc is not None:
@@ -2326,7 +1541,7 @@ class _Parser:
                     proj = {
                         v[1:] for v in q.variables if v.startswith("?")
                     } | {a.alias[1:] for a in q.aggregates}
-                    bad = sorted(_expr_vars(e) - proj)
+                    bad = sorted(expr_vars(e) - proj)
                     if bad:
                         raise SparqlSyntaxError(
                             "ORDER BY expression under DISTINCT may "
@@ -2373,161 +1588,10 @@ class _Parser:
             (q.post_values if needs_post else q.values).append(vb)
 
 
-@dataclass
-class _TermFilter(Filter):
-    """(in)equality of a var against an entity/string constant."""
-
-    def apply(self, col):  # type: ignore[override]
-        from hbase_rdf_spark.plans.patterns import encode_term
-
-        term, kind = (
-            (self.value, 0) if isinstance(self.value, str) else self.value
-        )
-        eq = col.getField("id") == encode_term(term, kind)
-        return eq if self.op == "=" else ~eq
-
-
-@dataclass
-class ExistsExpr(FilterExpr):
-    """SPARQL 1.1 §17.4.1.4 ``EXISTS { … }`` as an *expression* — a
-    boolean leaf inside arbitrary FILTER combinations
-    (``FILTER(EXISTS { … } && ?p > 5)``).
-
-    The bare top-level ``FILTER [NOT] EXISTS`` keeps its semi/anti-join
-    fast path; this node instead materializes a boolean *marker*
-    column (one compatibility semi-join over the DISTINCT outer key
-    set, joined back null-safely — never a row-multiplying join) that
-    the enclosing expression reads like any other predicate. EBV of
-    EXISTS is always true/false, never an error, so the marker
-    coalesces NULL (no compatible solution) to false.
-
-    The reference evaluates E_Exists anywhere in an ARQ expression
-    tree (SURVEY J12; nl/vu/jena gets it from stock ARQ)."""
-
-    marker: str  # hidden column name, attached by _attach_exists_marker
-    block: object = None  # GroupBlock: patterns+filters, or full group
-
-    def vars(self) -> set[str]:
-        # correlation happens through the marker join, not the
-        # expression evaluator — no outer columns read by cond()
-        return set()
-
-    def label_vars(self) -> set[str]:
-        return set()
-
-    def cond(self):
-        return F.coalesce(F.col(self.marker), F.lit(False))
-
-
-def _exists_leaves(f) -> list:
-    """Every ExistsExpr leaf of a FILTER expression tree (incl. ones
-    buried in the value trees of the general-expression fallbacks)."""
-    if isinstance(f, ExistsExpr):
-        return [f]
-    if isinstance(f, Not):
-        return _exists_leaves(f.child)
-    if isinstance(f, (And, Or)):
-        out: list = []
-        for c in f.children:
-            out += _exists_leaves(c)
-        return out
-    if isinstance(f, EbvExpr):
-        return _bind_exists_leaves(f.expr)
-    if isinstance(f, ExprCmp):
-        return _bind_exists_leaves(f.lhs) + _bind_exists_leaves(f.rhs)
-    return []
-
-
-def _bind_exists_leaves(expr) -> list:
-    """Every ExistsExpr reachable from a BIND value tree — through
-    ``('existsm', node)`` value leaves or the FilterExpr condition of
-    an IF."""
-    if isinstance(expr, FilterExpr):
-        return _exists_leaves(expr)
-    if not isinstance(expr, tuple):
-        return []
-    if expr[0] == "existsm":
-        return _exists_leaves(expr[1])
-    out: list = []
-    for item in expr[1:]:
-        if isinstance(item, (tuple, FilterExpr)):
-            out += _bind_exists_leaves(item)
-        elif isinstance(item, list):
-            for a in item:
-                out += _bind_exists_leaves(a)
-    return out
-
-
 def _has_marker_filters(sub: "Query") -> bool:
-    return any(_exists_leaves(f) for f in sub.filters) or any(
-        _bind_exists_leaves(b.expr) for b in sub.binds
+    return any(exists_leaves(f) for f in sub.filters) or any(
+        exists_leaves(b.expr) for b in sub.binds
     )
-
-
-def _cmp_channel(e: tuple) -> str:
-    """Static value channel of a BIND-grammar tree: 'str', 'num', or
-    'var' (ambiguous — resolved against the other side)."""
-    tag = e[0]
-    if tag in _STR_FUNCS or tag == "const":
-        return "str"
-    if tag == "var":
-        return "var"
-    return "num"
-
-
-@dataclass
-class ExprCmp(FilterExpr):
-    """General comparison of two BIND-grammar value expressions —
-    ``FILTER(?price * ?qty > 100)``, ``FILTER(STRLEN(?a) < STRLEN(?b))``,
-    ``FILTER(CONCAT(?a, "x") = "yx")``. The fallback when the
-    specialized (pushdown-normalizable) comparison grammar can't
-    express the operands; the reference evaluates these through stock
-    ARQ expression trees (SURVEY J12). NULL (unbound/type error)
-    propagates through the compiled columns — error → row dropped."""
-
-    lhs: tuple
-    op: str
-    rhs: tuple
-
-    def _channels(self) -> tuple[str, str]:
-        lt, rt = _cmp_channel(self.lhs), _cmp_channel(self.rhs)
-        if lt == "var":
-            lt = "str" if rt == "str" else "num"
-        if rt == "var":
-            rt = "str" if lt == "str" else "num"
-        return lt, rt
-
-    def vars(self) -> set[str]:
-        return _bind_expr_vars(self.lhs) | _bind_expr_vars(self.rhs)
-
-    def label_vars(self) -> set[str]:
-        out = _bind_label_vars(self.lhs) | _bind_label_vars(self.rhs)
-        lt, rt = self._channels()
-        # a bare var compared in the string channel reads its label
-        if lt == "str" and self.lhs[0] == "var":
-            out.add(self.lhs[1][1:])
-        if rt == "str" and self.rhs[0] == "var":
-            out.add(self.rhs[1][1:])
-        return out
-
-    def _side(self, e: tuple, ch: str):
-        from hbase_rdf_spark.plans.filters import str_value
-
-        if ch == "str":
-            return str_value(e[1][1:]) if e[0] == "var" else _bind_str_col(e)
-        return _bind_num_col(e)
-
-    def cond(self):
-        lt, rt = self._channels()
-        if lt != rt:
-            # statically type-incompatible operands (e.g.
-            # STRLEN(?a) = CONCAT(?b, "x")): a type error on every
-            # row → NULL condition (error → row dropped in FILTER,
-            # error-propagating under !/&&/||), matching ARQ's
-            # ExprEvalException — not a raise at execution time
-            return F.lit(None).cast("boolean")
-        lc, rc = self._side(self.lhs, lt), self._side(self.rhs, rt)
-        return _CMP[self.op](lc, rc)
 
 
 # kind-1 lexical of a typed literal with a non-xsd:string datatype —
@@ -2538,57 +1602,6 @@ _EBV_NONSTR_RX = (
 )
 
 
-@dataclass
-class EbvExpr(FilterExpr):
-    """§17.2.2 effective boolean value of a bare value expression used
-    as a FILTER — ``FILTER(?flag)``, ``FILTER(IF(?p > 5, 1, 0))``.
-    Numerics (incl. the inlined xsd:booleans) are true iff non-zero
-    (NaN is false); plain/xsd:string literals iff non-empty;
-    IRIs/unbound/non-string typed literals are a type error → NULL →
-    row dropped."""
-
-    expr: tuple
-
-    def vars(self) -> set[str]:
-        return _bind_expr_vars(self.expr)
-
-    def label_vars(self) -> set[str]:
-        out = set(_bind_label_vars(self.expr))
-        if self.expr[0] == "var":
-            out.add(self.expr[1][1:])  # kind-1 strings read their lexical
-        return out
-
-    def cond(self):
-        from hbase_rdf_spark.plans.filters import str_value
-
-        e = self.expr
-        if e[0] == "var":
-            name = e[1][1:]
-            v = F.col(name)
-            num = v.getField("num")
-            lbl = F.col(f"__{name}_flbl")
-            return (
-                # §17.2.2 rule: EBV(NaN) is false, but Spark's
-                # NaN != 0 is true — guard explicitly
-                F.when(v.getField("kind") == 2, (num != 0) & ~F.isnan(num))
-                .when(
-                    # a typed literal whose datatype is neither
-                    # xsd:string nor boolean/numeric (those inline to
-                    # kind 2) has no EBV: type error → NULL → dropped
-                    (v.getField("kind") == 1) & lbl.rlike(_EBV_NONSTR_RX),
-                    F.lit(None).cast("boolean"),
-                )
-                .when(
-                    v.getField("kind") == 1,
-                    F.length(str_value(name)) > 0,
-                )
-            )
-        if _cmp_channel(e) == "str":
-            return F.length(_bind_str_col(e)) > 0
-        num = _bind_num_col(e)
-        return (num != 0) & ~F.isnan(num)
-
-
 def parse(query: str) -> Query:
     return _Parser(tokenize(query)).parse()
 
@@ -2596,9 +1609,6 @@ def parse(query: str) -> Query:
 # ---------------------------------------------------------------------------
 # execution
 # ---------------------------------------------------------------------------
-
-_LANG_RX = r'^".*"@([A-Za-z0-9-]+)$'
-
 
 def _add_order_sidecars(df: DataFrame, order_by) -> tuple[DataFrame, set[str]]:
     """Attach ``__ord_{v}_k`` / ``__ord_{v}_n`` sort-key columns for each
@@ -2648,31 +1658,6 @@ def _split_block_filters(blk: GroupBlock):
     local = [f for f in blk.filters if f.vars() <= bound]
     foreign = [f for f in blk.filters if not f.vars() <= bound]
     return local, foreign
-
-
-def _apply_lang_filters(result: DataFrame, store, lang_filters) -> DataFrame:
-    """Legacy LangFilter application (parser-built queries use the
-    LangMatch FilterExpr instead, evaluated inside execute_bgp)."""
-    for lf in lang_filters:
-        name = lf.var[1:]
-        d = store.id2term().select(
-            F.col("id").alias(f"__{name}_lid"),
-            F.col("label").alias(f"__{name}_llabel"),
-        )
-        result = result.join(
-            d, result[name].getField("id") == d[f"__{name}_lid"], "left"
-        )
-        lang = F.when(
-            F.col(f"__{name}_llabel").rlike(_LANG_RX),
-            F.lower(F.regexp_extract(F.col(f"__{name}_llabel"), _LANG_RX, 1)),
-        ).otherwise(F.lit(""))
-        rng = lf.range.lower()
-        if rng == "*":
-            cond = lang != ""
-        else:
-            cond = (lang == rng) | lang.startswith(rng + "-")
-        result = result.filter(cond).drop(f"__{name}_lid", f"__{name}_llabel")
-    return result
 
 
 def _agg_expr(a: Aggregate):
@@ -2901,7 +1886,6 @@ def _values_df(store, vb: ValuesBlock) -> DataFrame:
     Ids are computed with the SAME in-plan hash as pattern constants
     (xxhash64(kind, lex)), so the join keys line up with scan output.
     """
-    from hbase_rdf_spark.plans.bgp import _binding_struct
 
     flat_rows = []
     for row in vb.rows:
@@ -3022,323 +2006,6 @@ def _service_values_block(
     return ValuesBlock(vars=out_vars, rows=out_rows)
 
 
-_STR_FUNCS = (
-    "str", "concat", "ucase", "lcase",
-    "substr", "replace", "strbefore", "strafter",
-    "md5", "sha1", "sha256", "sha384", "sha512", "encode_for_uri",
-    "lang", "tz", "struuid",
-)
-
-#: expressions that construct a NON-plain-string term (IRI / typed or
-#: tagged literal) — term-valued like COALESCE/IF, not _STR_FUNCS.
-#: TIMEZONE() constructs an xsd:dayTimeDuration typed literal
-#: (§17.4.5.7), unlike plain-string TZ(); NOW() an xsd:dateTime,
-#: UUID() a urn:uuid IRI.
-_TERM_CTORS = ("iri", "strdt", "strlang", "timezone", "now", "uuid", "bnode")
-
-
-def _bind_num_col(expr: tuple):
-    """Numeric value column of a BIND arithmetic tree (NULL = error →
-    unbound, incl. division by zero under ANSI-off semantics)."""
-    tag = expr[0]
-    if tag == "var":
-        return F.col(expr[1][1:]).getField("num")
-    if tag == "num":
-        return F.lit(expr[1])
-    if tag == "rand":
-        # §17.4.4.1 — per-row xsd:double in [0, 1), JVM-side
-        return F.rand()
-    if tag == "cast":
-        return _cast_num_col(expr)
-    if tag == "strlen":
-        return F.length(_bind_str_col(expr[1])).cast("double")
-    if tag == "nfunc":
-        c = _bind_num_col(expr[2])
-        if expr[1] == "abs":
-            return F.abs(c)
-        if expr[1] == "ceil":
-            return F.ceil(c).cast("double")
-        if expr[1] == "floor":
-            return F.floor(c).cast("double")
-        # SPARQL/xpath ROUND: half rounds toward positive infinity
-        return F.floor(c + F.lit(0.5)).cast("double")
-    if tag == "coalesce":
-        return F.coalesce(*[_bind_num_col(a) for a in expr[1]])
-    if tag == "existsm":
-        # EXISTS-as-value: true/false, never an error → 1.0/0.0 (the
-        # inlined xsd:boolean space); marker attached pre-bind
-        return F.when(expr[1].cond(), F.lit(1.0)).otherwise(F.lit(0.0))
-    if tag == "if":
-        c = expr[1].cond()
-        return (
-            F.when(c, _bind_num_col(expr[2]))
-            .when(~c, _bind_num_col(expr[3]))
-        )
-    if tag in _DT_NUM_FNS:
-        from hbase_rdf_spark.plans.filters import dt_part
-
-        return dt_part(_bind_str_col(expr[1]), tag)
-    if tag == "const" or tag in _STR_FUNCS or tag in _TERM_CTORS:
-        raise SparqlSyntaxError(
-            "string-valued expression inside BIND arithmetic"
-        )
-    _, op, left, right = expr
-    lc, rc = _bind_num_col(left), _bind_num_col(right)
-    if op == "/":
-        # SPARQL division-by-zero is an error → unbound (Spark's int/
-        # float division already yields NULL with ANSI off, but be
-        # explicit so the semantics don't depend on session config)
-        return F.when(rc != 0, lc / rc)
-    return {"+": lc + rc, "-": lc - rc, "*": lc * rc}[op]
-
-
-def _cast_num_col(expr: tuple):
-    """``('cast', local, arg)`` — XSD numeric/boolean constructor cast
-    (XPath casting rules, SPARQL 1.1 §17.5). Two source channels: the
-    argument's NUMERIC value (a kind-2 term or arithmetic result) and
-    its LEXICAL form (a string literal / string expression); whichever
-    is populated drives the cast. NULL result = casting error →
-    unbound."""
-    _, target, arg = expr
-    if arg[0] == "var":
-        from hbase_rdf_spark.plans.filters import str_value
-
-        v = arg[1][1:]
-        from_num = F.col(v).getField("num")
-        # lexical channel only for NON-numeric terms — str_value's
-        # num-as-string fallback must not re-enter the numeric channel
-        lex = F.when(from_num.isNull(), str_value(v))
-    elif arg[0] == "const" or arg[0] in _STR_FUNCS:
-        from_num = F.lit(None).cast("double")
-        lex = _bind_str_col(arg)
-    else:
-        from_num = _bind_num_col(arg)
-        lex = F.lit(None).cast("string")
-    if target == "boolean":
-        # numbers: 0 → false, anything else → true; lexical space:
-        # true/false/1/0 (XPath §19.1.2.2) — stored as 1.0 / 0.0,
-        # matching how sources/ntriples.py inlines xsd:boolean
-        return F.coalesce(
-            F.when(
-                from_num.isNotNull(),
-                F.when(from_num != 0, F.lit(1.0)).otherwise(F.lit(0.0)),
-            ),
-            F.when(F.trim(lex).isin("true", "1"), F.lit(1.0)).when(
-                F.trim(lex).isin("false", "0"), F.lit(0.0)
-            ),
-        )
-    if target in _CAST_INT_TYPES:
-        # numeric source truncates toward zero; a non-integer lexical
-        # is a casting ERROR (try_cast → NULL), per XPath. Constrained
-        # derived types enforce their value ranges — out-of-range is
-        # an error, same rule the reference's TypedId encoders assert
-        # (id/TypedIdTestNumericals.java:91-104)
-        out = F.coalesce(
-            from_num.cast("long"), F.trim(lex).try_cast("long")
-        ).cast("double")
-        range_ok = {
-            "nonPositiveInteger": out <= 0,
-            "negativeInteger": out < 0,
-            "positiveInteger": out > 0,
-            **{
-                t: out >= 0
-                for t in (
-                    "nonNegativeInteger", "unsignedLong", "unsignedInt",
-                    "unsignedShort", "unsignedByte",
-                )
-            },
-        }
-        return F.when(range_ok[target], out) if target in range_ok else out
-    # double / float / decimal
-    return F.coalesce(from_num, F.trim(lex).try_cast("double"))
-
-
-def _bind_str_col(expr: tuple):
-    """String value column of a BIND string tree. Variables read their
-    attached ``__{v}_flbl`` label (tag/datatype wrappers stripped, per
-    SPARQL ``str()``) with the numeric fallback; see ``_apply_binds``
-    for the attach step."""
-    from hbase_rdf_spark.plans.filters import str_value
-
-    tag = expr[0]
-    if tag == "var":
-        return str_value(expr[1][1:])
-    if tag == "num":
-        return F.lit(expr[1]).cast("string")
-    if tag == "const":
-        t = expr[1]
-        lex, _kind = t if isinstance(t, tuple) else (t, 0)
-        return F.lit(lex)
-    if tag == "str":
-        return _bind_str_col(expr[1])
-    if tag == "concat":
-        return F.concat(*[_bind_str_col(a) for a in expr[1]])
-    if tag == "ucase":
-        return F.upper(_bind_str_col(expr[1]))
-    if tag == "lcase":
-        return F.lower(_bind_str_col(expr[1]))
-    if tag == "substr":
-        s = _bind_str_col(expr[1])
-        start = _bind_num_col(expr[2]).cast("int")
-        if expr[3] is None:
-            return F.substring(s, start, F.length(s))
-        return F.substring(s, start, _bind_num_col(expr[3]).cast("int"))
-    if tag == "replace":
-        _, s_e, pat, repl, flags = expr
-        if "i" in flags:
-            pat = "(?i)" + pat
-        return F.regexp_replace(_bind_str_col(s_e), F.lit(pat), F.lit(repl))
-    if tag in ("strbefore", "strafter"):
-        s = _bind_str_col(expr[1])
-        t = expr[2]
-        found = F.instr(s, F.lit(t))
-        if tag == "strbefore":
-            # STRBEFORE(s, "") = "" ; not found → "" (SPARQL §17.4.3.8)
-            if t == "":
-                return F.lit("")
-            return F.when(found > 0, F.substring(s, F.lit(1), found - 1)) \
-                .otherwise(F.lit(""))
-        # STRAFTER(s, "") = s ; not found → ""
-        if t == "":
-            return s
-        return F.when(
-            found > 0, F.substring(s, found + len(t), F.length(s))
-        ).otherwise(F.lit(""))
-    if tag == "lang":
-        # §17.4.4.3 — the tag of a language-tagged literal, "" for any
-        # other literal (numerics included: their raw label is NULL).
-        # The RAW label (wrapper intact) is read, not str()'s stripped
-        # form, so the variable must be a label-attached var.
-        if expr[1][0] != "var":
-            raise SparqlSyntaxError("LANG() takes a variable")
-        raw = F.col(f"__{expr[1][1][1:]}_flbl")
-        return F.when(
-            raw.rlike(_LANG_RX), F.regexp_extract(raw, _LANG_RX, 1)
-        ).otherwise(F.lit(""))
-    if tag == "tz":
-        from hbase_rdf_spark.plans.filters import tz_part
-
-        return tz_part(_bind_str_col(expr[1]))
-    if tag == "timezone":
-        # STR(TIMEZONE(?t)) — the duration lexical without the type
-        from hbase_rdf_spark.plans.filters import timezone_duration
-
-        return timezone_duration(_bind_str_col(expr[1]))
-    if tag == "struuid":
-        # §17.4.4.3 — one fresh UUID string per solution, JVM-side
-        return F.expr("uuid()")
-    if tag == "now":
-        return F.lit(expr[1])
-    if tag == "uuid":
-        return F.concat(F.lit("urn:uuid:"), F.expr("uuid()"))
-    if tag in ("md5", "sha1", "sha256", "sha384", "sha512"):
-        c = _bind_str_col(expr[1])
-        if tag == "md5":
-            return F.md5(c)
-        if tag == "sha1":
-            return F.sha1(c)
-        return F.sha2(c, int(tag[3:]))
-    if tag == "encode_for_uri":
-        # Java URLEncoder (F.url_encode) → RFC 3986 percent-encoding
-        # (SPARQL §17.4.3.18): '+' (an encoded space; a literal '+' is
-        # already %2B) → %20, %7E → unreserved '~', kept '*' → %2A
-        c = F.url_encode(_bind_str_col(expr[1]))
-        c = F.replace(c, F.lit("+"), F.lit("%20"))
-        c = F.replace(c, F.lit("%7E"), F.lit("~"))
-        return F.replace(c, F.lit("*"), F.lit("%2A"))
-    if tag == "bnode":
-        # STR() of a blank node is a type error (§17.4.2.5) → unbound
-        return F.lit(None).cast("string")
-    if tag in _TERM_CTORS:
-        # str() of a constructed term: the IRI string / plain lexical
-        return _bind_str_col(expr[1])
-    if tag == "coalesce":
-        return F.coalesce(*[_bind_str_col(a) for a in expr[1]])
-    if tag == "if":
-        c = expr[1].cond()
-        return (
-            F.when(c, _bind_str_col(expr[2]))
-            .when(~c, _bind_str_col(expr[3]))
-        )
-    # arith / strlen / nfunc in string position: render the number
-    return _bind_num_col(expr).cast("string")
-
-
-def _has_bnode(expr) -> bool:
-    """True when a value-expression tree contains a BNODE() call."""
-    if isinstance(expr, tuple):
-        if expr[0] == "bnode":
-            return True
-        return any(_has_bnode(a) for a in expr[1:])
-    if isinstance(expr, list):
-        return any(_has_bnode(a) for a in expr)
-    return False
-
-
-def _bind_label_vars(expr: tuple) -> set[str]:
-    """Vars (no '?') whose LABEL the expression reads — through a
-    string-context subtree or an IF condition's label-space filter."""
-    tag = expr[0]
-    if tag in ("num", "const", "existsm") or tag in _NOARG_FNS:
-        return set()
-    if tag == "var":
-        return set()  # only counts when reached through a string node
-    if tag == "arith":
-        return _bind_label_vars(expr[2]) | _bind_label_vars(expr[3])
-    if tag == "nfunc":
-        return _bind_label_vars(expr[2])
-    if tag == "concat":
-        out: set[str] = set()
-        for a in expr[1]:
-            out |= _str_ctx_vars(a)
-        return out
-    if tag == "coalesce":
-        # args are term-valued at the top level and string/num-valued in
-        # typed context; label needs surface only via string children
-        out = set()
-        for a in expr[1]:
-            out |= _bind_label_vars(a)
-        return out
-    if tag == "if":
-        return (
-            set(expr[1].label_vars())
-            | _bind_label_vars(expr[2])
-            | _bind_label_vars(expr[3])
-        )
-    if tag == "substr":
-        out = _str_ctx_vars(expr[1]) | _bind_label_vars(expr[2])
-        if expr[3] is not None:
-            out |= _bind_label_vars(expr[3])
-        return out
-    if tag in ("replace", "strbefore", "strafter"):
-        return _str_ctx_vars(expr[1])
-    if tag == "bnode":
-        return _str_ctx_vars(expr[2]) if expr[2] is not None else set()
-    if tag == "cast":
-        # a var source may fall back to its lexical form (non-numeric
-        # term cast to a number) — the label must be attached
-        return _str_ctx_vars(expr[2])
-    # str / ucase / lcase / strlen — child is in string context
-    return _str_ctx_vars(expr[1])
-
-
-def _str_ctx_vars(expr: tuple) -> set[str]:
-    if expr[0] == "var":
-        return {expr[1][1:]}
-    if expr[0] == "coalesce":
-        out: set[str] = set()
-        for a in expr[1]:
-            out |= _str_ctx_vars(a)
-        return out
-    if expr[0] == "if":
-        return (
-            set(expr[1].label_vars())
-            | _str_ctx_vars(expr[2])
-            | _str_ctx_vars(expr[3])
-        )
-    return _bind_label_vars(expr)
-
-
 def _attach_any_labels(result: DataFrame, store, names: list[str]):
     """Attach ``__{v}_flbl`` label columns for label-space filter
     evaluation, preferring a BIND/VALUES ``__{v}_vlex`` sidecar (the
@@ -3369,214 +2036,6 @@ def _apply_deferred_filter(result: DataFrame, store, f) -> DataFrame:
     return result.filter(f.cond()).drop(*attached)
 
 
-def _bind_term_value(expr: tuple, columns: list[str]):
-    """Evaluate an expression to an RDF *term* — (struct, vlex) column
-    pair — preserving the original term type where the expression is
-    type-transparent (COALESCE/IF pass their argument through unchanged,
-    per SPARQL 1.1 §17.4.1.3: the value, not its string form).
-
-    ``columns`` is the solution's current column list (for var
-    sidecar lookup)."""
-    from hbase_rdf_spark.plans.bgp import _binding_struct
-
-    tag = expr[0]
-    if tag == "var":
-        v = expr[1][1:]
-        vlex = (
-            F.col(f"__{v}_vlex")
-            if f"__{v}_vlex" in columns
-            else F.lit(None).cast("string")
-        )
-        return F.col(v), vlex
-    if tag == "num":
-        return (
-            _binding_struct(F.lit(2), F.lit(None), F.lit(expr[1])),
-            F.lit(None).cast("string"),
-        )
-    if tag == "const":
-        t = expr[1]
-        lex, kind = t if isinstance(t, tuple) else (t, 0)
-        return (
-            _binding_struct(
-                F.lit(kind),
-                F.xxhash64(F.lit(kind).cast("int"), F.lit(lex)),
-                F.lit(None),
-            ),
-            F.lit(lex),
-        )
-    if tag == "coalesce":
-        pairs = [_bind_term_value(a, columns) for a in expr[1]]
-        struct = F.coalesce(*[s for s, _ in pairs])
-        vlex = F.lit(None).cast("string")
-        for s, v in reversed(pairs):
-            vlex = F.when(s.isNotNull(), v).otherwise(vlex)
-        return struct, vlex
-    if tag == "if":
-        c = expr[1].cond()
-        ts, tv = _bind_term_value(expr[2], columns)
-        es, ev = _bind_term_value(expr[3], columns)
-        # SPARQL: an error-valued condition is an error → unbound
-        return (
-            F.when(c, ts).when(~c, es),
-            F.when(c, tv).when(~c, ev),
-        )
-    if tag in _STR_FUNCS:
-        lex = _bind_str_col(expr)
-        return (
-            F.when(
-                lex.isNotNull(),
-                _binding_struct(
-                    F.lit(1),
-                    F.xxhash64(F.lit(1).cast("int"), lex),
-                    F.lit(None),
-                ),
-            ),
-            lex,
-        )
-    if tag == "iri":
-        lex = _bind_str_col(expr[1])
-        return (
-            F.when(
-                lex.isNotNull(),
-                _binding_struct(
-                    F.lit(0),
-                    F.xxhash64(F.lit(0).cast("int"), lex),
-                    F.lit(None),
-                ),
-            ),
-            lex,
-        )
-    if tag == "bnode":
-        # §17.4.2.9 — a blank node guaranteed fresh vs the dataset
-        # (labels carry a reserved "_:bf"/"_:ba" prefix plus a hash no
-        # parsed label collides with at these lengths). The label
-        # derives from a hash of the WHOLE solution (the same idiom as
-        # CONSTRUCT template bnodes — identical duplicate solutions
-        # share a label, the accepted compromise): no-arg calls mix in
-        # their per-call-site salt so distinct BNODE() calls mint
-        # distinct nodes; BNODE(str) mixes the argument INSTEAD so
-        # same-literal calls within one solution unify, per spec.
-        sol = (
-            [F.col("__bnsol")]
-            if "__bnsol" in columns
-            # fallback for call sites outside _apply_binds (no batch
-            # snapshot): the visible solution columns as-is
-            else [F.col(c) for c in columns if not c.startswith("__")]
-        )
-        if expr[2] is None:
-            lex = F.concat(
-                F.lit("_:bf"),
-                F.lower(F.hex(F.xxhash64(F.lit(f"bn{expr[1]}"), *sol))),
-            )
-        else:
-            arg = _bind_str_col(expr[2])
-            lex = F.when(
-                arg.isNotNull(),
-                F.concat(
-                    F.lit("_:ba"),
-                    F.lower(F.hex(F.xxhash64(F.lit("bna"), arg, *sol))),
-                ),
-            )
-        # blank nodes share kind 0 with IRIs, distinguished by label
-        return (
-            F.when(
-                lex.isNotNull(),
-                _binding_struct(
-                    F.lit(0),
-                    F.xxhash64(F.lit(0).cast("int"), lex),
-                    F.lit(None),
-                ),
-            ),
-            lex,
-        )
-    if tag == "now":
-        # §17.4.5.1 — xsd:dateTime of the query execution instant
-        # (lexical captured once at parse time, shared by every NOW()
-        # in the query)
-        full = (
-            '"' + expr[1]
-            + '"^^<http://www.w3.org/2001/XMLSchema#dateTime>'
-        )
-        return (
-            _binding_struct(
-                F.lit(1),
-                F.xxhash64(F.lit(1).cast("int"), F.lit(full)),
-                F.lit(None),
-            ),
-            F.lit(full),
-        )
-    if tag == "uuid":
-        # §17.4.4.2 — a fresh urn:uuid IRI per solution
-        lex = F.concat(F.lit("urn:uuid:"), F.expr("uuid()"))
-        return (
-            _binding_struct(
-                F.lit(0), F.xxhash64(F.lit(0).cast("int"), lex), F.lit(None)
-            ),
-            lex,
-        )
-    if tag == "timezone":
-        # §17.4.5.7 — an xsd:dayTimeDuration typed literal (NULL =
-        # no timezone / not a dateTime → type error → unbound)
-        from hbase_rdf_spark.plans.filters import timezone_duration
-
-        dur = timezone_duration(_bind_str_col(expr[1]))
-        full = F.concat(
-            F.lit('"'), dur,
-            F.lit('"^^<http://www.w3.org/2001/XMLSchema#dayTimeDuration>'),
-        )
-        return (
-            F.when(
-                full.isNotNull(),
-                _binding_struct(
-                    F.lit(1),
-                    F.xxhash64(F.lit(1).cast("int"), full),
-                    F.lit(None),
-                ),
-            ),
-            full,
-        )
-    if tag in ("strdt", "strlang"):
-        from hbase_rdf_spark.sources.ntriples import NUMERIC_DATATYPES
-
-        plain = _bind_str_col(expr[1])
-        if tag == "strdt" and expr[2] in NUMERIC_DATATYPES:
-            # a numeric XSD datatype constructs a kind-2 numeric term
-            # (sources/ntriples.py inlines the same 16 types); a
-            # non-numeric lexical form is a type error → unbound
-            # (try_cast: NULL instead of an ANSI cast failure)
-            num = plain.try_cast("double")
-            return (
-                F.when(
-                    num.isNotNull(),
-                    _binding_struct(F.lit(2), F.lit(None), num),
-                ),
-                F.lit(None).cast("string"),
-            )
-        # full N-Triples lexical form — identical to how the store
-        # keeps tagged/typed literals, so ids line up with scans
-        suffix = (
-            '"@' + expr[2] if tag == "strlang" else '"^^<' + expr[2] + ">"
-        )
-        full = F.concat(F.lit('"'), plain, F.lit(suffix))
-        return (
-            F.when(
-                full.isNotNull(),
-                _binding_struct(
-                    F.lit(1),
-                    F.xxhash64(F.lit(1).cast("int"), full),
-                    F.lit(None),
-                ),
-            ),
-            full,
-        )
-    # arith / strlen / nfunc → numeric term
-    num = _bind_num_col(expr)
-    return (
-        F.when(num.isNotNull(), _binding_struct(F.lit(2), F.lit(None), num)),
-        F.lit(None).cast("string"),
-    )
-
-
 def _apply_binds(
     result: DataFrame, store, binds: list[BindAssign]
 ) -> DataFrame:
@@ -3584,20 +2043,17 @@ def _apply_binds(
     group's patterns — parse-time guards ensure no pattern consumes a
     BIND var, so this is equivalent to in-place evaluation).
 
-    Representation matches ``_values_df``: constants get the same
-    in-plan xxhash64 id as pattern constants; terms possibly absent
-    from the dictionary carry a ``__{v}_vlex`` sidecar so
+    Each expression compiles to a term (plans/expr.py): constants get
+    the same in-plan xxhash64 id as pattern constants; terms possibly
+    absent from the dictionary carry a ``__{v}_vlex`` sidecar so
     ``materialize`` can render them; computed numbers are kind-2
-    structs with a NULL id. A NULL arithmetic result nulls the whole
-    struct (unbound), matching OPTIONAL's null-extension."""
-    from hbase_rdf_spark.plans.bgp import _binding_struct
-
+    structs with a NULL id. An error nulls the whole struct (unbound),
+    matching OPTIONAL's null-extension."""
     # label columns attached for ANY bind in this batch are dropped
     # once at the end: two BINDs reading the same var's label (e.g.
-    # DAY(?t) and HOURS(?t)) share one id2term join instead of
-    # re-joining the dictionary per BIND
+    # DAY(?t) and HOURS(?t)) share one id2term join
     all_attached: list[str] = []
-    if any(_has_bnode(b.expr) for b in binds):
+    if any(n[0] == "bnode" for b in binds for n in walk(b.expr)):
         # one SOLUTION-identity hash for the whole batch, captured
         # BEFORE any of its BINDs extend the row: two BNODE("k") calls
         # in the batch must agree no matter how many binds sit between
@@ -3611,177 +2067,114 @@ def _apply_binds(
         )
         all_attached.append("__bnsol")
     for b in binds:
-        expr = b.expr
-        lvars = sorted(_bind_label_vars(expr))
+        cx = Cx(result.columns)
+        struct, vlex = compile_expr(b.expr, "term", cx)
         # a VALUES/BIND-produced var may be dictionary-absent: its vlex
         # sidecar IS the label (_attach_any_labels prefers it)
-        result, attached = _attach_any_labels(result, store, lvars)
+        result, attached = _attach_any_labels(result, store, sorted(cx.labels))
         all_attached += attached
-        if expr[0] in _STR_FUNCS:
-            lex = _bind_str_col(expr)
-            result = result.withColumn(
-                b.var,
-                F.when(
-                    lex.isNotNull(),
-                    _binding_struct(
-                        F.lit(1),
-                        F.xxhash64(F.lit(1).cast("int"), lex),
-                        F.lit(None),
-                    ),
-                ),
-            ).withColumn(f"__{b.var}_vlex", lex)
-            continue
-        if expr[0] in ("coalesce", "if") or expr[0] in _TERM_CTORS:
-            # term-valued: COALESCE/IF return their argument's VALUE
-            # (type-preserving), not its string form; IRI/STRDT/STRLANG
-            # construct a non-plain-string term
-            struct, vlex = _bind_term_value(expr, result.columns)
-            result = result.withColumn(b.var, struct).withColumn(
-                f"__{b.var}_vlex", vlex
-            )
-        elif expr[0] == "var":
-            src = expr[1][1:]
-            result = result.withColumn(b.var, F.col(src))
-            if f"__{src}_vlex" in result.columns:
-                result = result.withColumn(
-                    f"__{b.var}_vlex", F.col(f"__{src}_vlex")
-                )
-        elif expr[0] == "num":
-            result = result.withColumn(
-                b.var,
-                _binding_struct(F.lit(2), F.lit(None), F.lit(expr[1])),
-            )
-        elif expr[0] == "const":
-            t = expr[1]
-            lex, kind = t if isinstance(t, tuple) else (t, 0)
-            result = result.withColumn(
-                b.var,
-                _binding_struct(
-                    F.lit(kind),
-                    F.xxhash64(F.lit(kind).cast("int"), F.lit(lex)),
-                    F.lit(None),
-                ),
-            ).withColumn(f"__{b.var}_vlex", F.lit(lex))
-        else:
-            num = _bind_num_col(expr)
-            result = result.withColumn(
-                b.var,
-                F.when(
-                    num.isNotNull(),
-                    _binding_struct(F.lit(2), F.lit(None), num),
-                ),
-            )
-    if all_attached:  # strlen-in-arithmetic labels, no longer needed
+        result = result.withColumn(b.var, struct)
+        if vlex is not None:
+            result = result.withColumn(f"__{b.var}_vlex", vlex)
+    if all_attached:
         result = result.drop(*all_attached)
     return result
 
 
-_CMP = {
-    "<": lambda c, n: c < n, "<=": lambda c, n: c <= n,
-    ">": lambda c, n: c > n, ">=": lambda c, n: c >= n,
-    "=": lambda c, n: c == n, "!=": lambda c, n: c != n,
-}
+def _agg_scope(aggregates: list, gvars: list) -> Cx:
+    """Compile scope over the aggregated frame: aggregate aliases are
+    scalars (GROUP_CONCAT/SAMPLE strings, the rest numbers), group keys
+    stay binding structs."""
+    return Cx(
+        scalars={
+            a.alias[1:]: "str" if a.func in ("GROUP_CONCAT", "SAMPLE")
+            else "num"
+            for a in aggregates
+        },
+        gvars=gvars,
+    )
 
 
-def _having_col(h: tuple):
-    """Compile a HAVING expression tree to one boolean Column over the
-    aggregated frame (aggregate aliases are plain scalar columns here).
-    NULL comparisons evaluate to NULL and the filter drops the group —
-    SPARQL's expression-error-eliminates-solution semantics."""
-    kind = h[0]
-    if kind == "cmp":
-        _, v, op, num = h
-        return _CMP[op](F.col(v[1:]), num)
-    if kind == "and":
-        return _reduce(lambda a, b: a & b, (_having_col(c) for c in h[1]))
-    if kind == "or":
-        return _reduce(lambda a, b: a | b, (_having_col(c) for c in h[1]))
-    if kind == "not":
-        return ~_having_col(h[1])
-    raise ValueError(f"unknown HAVING node {h!r}")
-
-
-def _postagg_num_col(expr: tuple, scalars: set, gvars: set):
-    """Numeric column of a SELECT expression over the AGGREGATED frame
-    (SPARQL 1.1 §18.2.4.4): aggregate aliases and earlier SELECT-
-    expression targets are plain scalar columns; group-key vars are
-    binding structs and contribute their numeric value. NULL = error →
-    unbound, same as BIND arithmetic."""
-    tag = expr[0]
-    if tag == "var":
-        n = expr[1][1:]
-        if n in scalars:
-            return F.col(n).cast("double")
-        if n in gvars:
-            return F.col(n).getField("num")
-        raise SparqlSyntaxError(
-            f"SELECT expression over a grouped query may only use "
-            f"GROUP BY variables and aggregates, not {expr[1]}"
-        )
-    if tag == "num":
-        return F.lit(expr[1])
-    if tag == "nfunc":
-        c = _postagg_num_col(expr[2], scalars, gvars)
-        if expr[1] == "abs":
-            return F.abs(c)
-        if expr[1] == "ceil":
-            return F.ceil(c).cast("double")
-        if expr[1] == "floor":
-            return F.floor(c).cast("double")
-        return F.floor(c + F.lit(0.5)).cast("double")
-    if tag == "coalesce":
-        return F.coalesce(
-            *[_postagg_num_col(a, scalars, gvars) for a in expr[1]]
-        )
-    if tag == "if":
-        c = expr[1].cond()
-        return (
-            F.when(c, _postagg_num_col(expr[2], scalars, gvars))
-            .when(~c, _postagg_num_col(expr[3], scalars, gvars))
-        )
-    if tag != "arith":
-        raise SparqlSyntaxError(
-            "only numeric SELECT expressions are supported over a "
-            "grouped query"
-        )
-    _, op, left, right = expr
-    lc = _postagg_num_col(left, scalars, gvars)
-    rc = _postagg_num_col(right, scalars, gvars)
-    if op == "/":
-        return F.when(rc != 0, lc / rc)
-    return {"+": lc + rc, "-": lc - rc, "*": lc * rc}[op]
+def _having_filter(df: DataFrame, store, having, aggregates, gvars):
+    """HAVING: one compiled condition over the aggregated frame; an
+    error (NULL) eliminates the group."""
+    cx = _agg_scope(aggregates, gvars)
+    cond = compile_expr(having, "bool", cx)
+    df, attached = _attach_any_labels(df, store, sorted(cx.labels))
+    return df.filter(cond).drop(*attached)
 
 
 def _apply_postagg(
-    df: DataFrame, binds: list, agg_aliases: list, gvars: list
+    df: DataFrame, store, binds: list, aggregates: list, gvars: list
 ) -> tuple[DataFrame, list, list]:
-    """Extend the aggregated frame with the query's SELECT expressions.
-    Returns ``(df, scalar_aliases, term_aliases)``: scalar targets pass
-    through materialization verbatim like aggregate aliases; a bare
-    copy of a group var stays a binding struct (term) and materializes
-    with the group keys. Pure projection — no shuffle."""
+    """Extend the aggregated frame with the query's SELECT expressions
+    (SPARQL 1.1 §18.2.4.4). Returns ``(df, scalar_aliases,
+    term_aliases)``: scalar targets pass through materialization
+    verbatim like aggregate aliases; a bare copy of a group var stays a
+    binding struct (term) and materializes with the group keys. Pure
+    projection — no shuffle."""
     term_aliases: list = []
     scalar_aliases: list = []
-    scalars = set(agg_aliases)
-    gset = set(gvars)
+    attached: list = []
+    cx = _agg_scope(aggregates, gvars)
     for b in binds:
-        if b.expr[0] == "var" and b.expr[1][1:] in gset:
-            src = b.expr[1][1:]
+        e = b.expr
+        src = e[1][1:] if e[0] == "var" else None
+        if src in cx.gvars and src not in cx.scalars:
             df = df.withColumn(b.var, F.col(src))
             if f"__{src}_vlex" in df.columns:
                 df = df.withColumn(f"__{b.var}_vlex", F.col(f"__{src}_vlex"))
             term_aliases.append(b.var)
-        elif b.expr[0] == "var" and b.expr[1][1:] in scalars:
-            df = df.withColumn(b.var, F.col(b.expr[1][1:]))
-            scalar_aliases.append(b.var)
-            scalars.add(b.var)
-        else:
-            df = df.withColumn(
-                b.var, _postagg_num_col(b.expr, scalars, gset)
-            )
-            scalar_aliases.append(b.var)
-            scalars.add(b.var)
-    return df, scalar_aliases, term_aliases
+            continue
+        t = "str" if etype(e, cx) == "str" else "num"  # bool/term → num
+        # a bare scalar copy keeps its column type (COUNT stays integral)
+        col = F.col(cx.var(e)) if src else compile_expr(e, t, cx)
+        df, att = _attach_any_labels(df, store, sorted(cx.labels))
+        attached += att
+        df = df.withColumn(b.var, col)
+        scalar_aliases.append(b.var)
+        cx.scalars[b.var] = cx.scalars.get(src, t)
+    return df.drop(*attached), scalar_aliases, term_aliases
+
+
+def _aggregate(result: DataFrame, store, q: Query):
+    """Group + aggregate + HAVING + SELECT expressions over the
+    aggregated frame — one path for the top level and subqueries.
+    Returns ``(grouped, scalar_aliases, term_aliases)`` of the SELECT
+    expressions (``_apply_postagg``)."""
+    if q.agg_prebinds:
+        # aggregate expression arguments (SUM(?a * ?b)): one
+        # per-solution Extend just before grouping, §18.4
+        result = _apply_binds(result, store, q.agg_prebinds)
+    gvars = [v[1:] for v in q.group_by]
+    label_vars = sorted({
+        a.var[1:] for a in q.aggregates
+        if a.func in ("GROUP_CONCAT", "SAMPLE") and a.var
+    })
+    if label_vars:
+        result = _attach_labels(result, store, label_vars)
+    aggs = [_agg_expr(a) for a in q.aggregates]
+    # dictionary-absent group keys (BIND/VALUES-produced terms) render
+    # from their vlex sidecar — carry it through the groupBy (the
+    # struct id is the hash OF the lexical, so first() is exact)
+    aggs += [
+        F.first(F.col(f"__{gv}_vlex")).alias(f"__{gv}_vlex")
+        for gv in gvars
+        if f"__{gv}_vlex" in result.columns
+    ]
+    # aggregate-free GROUP BY (still a Group+Project per §18.2.4, one
+    # row per key): groupBy().agg() needs one expression — a throwaway
+    # cardinality dropped right after
+    card = not aggs
+    aggs = aggs or [F.count(F.lit(1)).alias("__gb_card")]
+    grouped = result.groupBy(*gvars).agg(*aggs) if gvars else result.agg(*aggs)
+    if card:
+        grouped = grouped.drop("__gb_card")
+    if q.having:
+        grouped = _having_filter(grouped, store, q.having, q.aggregates, gvars)
+    if not q.postagg_binds:
+        return grouped, [], []
+    return _apply_postagg(grouped, store, q.postagg_binds, q.aggregates, gvars)
 
 
 def _query_scope_vars(sub: Query) -> set[str]:
@@ -3860,7 +2253,6 @@ def _execute_subquery(store, sub: Query) -> DataFrame:
         raise SparqlSyntaxError(
             "ORDER BY inside a subquery requires LIMIT/OFFSET"
         )
-    from hbase_rdf_spark.plans.bgp import _binding_struct
 
     if (sub.union_blocks or sub.values or sub.services
             or sub.minus or sub.exists
@@ -3877,47 +2269,9 @@ def _execute_subquery(store, sub: Query) -> DataFrame:
             optional=list(sub.optional),
             dedup=sub.distinct and not sub.aggregates,
         )
-    label_aggs: list[str] = []
     pa_scalars: list = []
     if sub.aggregates or sub.group_by:
-        if sub.agg_prebinds:
-            # aggregate expression arguments: per-solution Extend
-            # before grouping (§18.4) — same as the top-level site
-            res = _apply_binds(res, store, sub.agg_prebinds)
-        label_vars = sorted({
-            a.var[1:] for a in sub.aggregates
-            if a.func in ("GROUP_CONCAT", "SAMPLE") and a.var
-        })
-        if label_vars:
-            res = _attach_labels(res, store, label_vars)
-        label_aggs = [
-            a.alias[1:] for a in sub.aggregates
-            if a.func in ("GROUP_CONCAT", "SAMPLE")
-        ]
-        gvars = [v[1:] for v in sub.group_by]
-        aggs = [_agg_expr(a) for a in sub.aggregates]
-        # a grouped BIND/VALUES string var carries its lexical sidecar
-        # through the groupBy (the struct id is the hash OF the
-        # lexical, so first() is exact per group)
-        aggs += [
-            F.first(F.col(f"__{gv}_vlex")).alias(f"__{gv}_vlex")
-            for gv in gvars
-            if f"__{gv}_vlex" in res.columns
-        ]
-        if not aggs:
-            # aggregate-free GROUP BY (same synth as the top-level
-            # site): dropped right after the groupBy
-            aggs = [F.count(F.lit(1)).alias("__gb_card")]
-        res = res.groupBy(*gvars).agg(*aggs) if gvars else res.agg(*aggs)
-        if "__gb_card" in res.columns:
-            res = res.drop("__gb_card")
-        if sub.having:
-            res = res.filter(_having_col(sub.having))
-        if sub.postagg_binds:
-            res, pa_scalars, _pa_terms = _apply_postagg(
-                res, sub.postagg_binds,
-                [a.alias[1:] for a in sub.aggregates], gvars,
-            )
+        res, pa_scalars, _ = _aggregate(res, store, sub)
     if sub.order_by:
         agg_aliases = {a.alias[1:] for a in sub.aggregates} | set(pa_scalars)
         lbl_vars = sorted({
@@ -3961,40 +2315,27 @@ def _execute_subquery(store, sub: Query) -> DataFrame:
     # postagg SELECT-expression targets are scalars too — id-space
     # conversion below treats a string one (a GROUP_CONCAT copy) as a
     # label, a numeric one exactly like a numeric aggregate
-    scalar_names = [a.alias[1:] for a in sub.aggregates] + list(pa_scalars)
+    # aggregate / SELECT-expression scalars become terms again: a
+    # string → kind-1 plain literal with the in-plan hash id + lexical
+    # sidecar (the shape of BIND strings), a number → kind-2
+    scalar_names = {a.alias[1:] for a in sub.aggregates} | set(pa_scalars)
     str_cols = {
         f.name for f in res.schema.fields
         if f.dataType.typeName() == "string"
     }
-    for name in scalar_names:
-        if name in label_aggs or (name in pa_scalars and name in str_cols):
-            # string scalar → kind-1 plain literal with the in-plan
-            # hash id + lexical sidecar (same shape as BIND strings)
-            res = res.withColumn(
-                f"__{name}_vlex", F.col(name)
-            ).withColumn(
-                name,
-                F.when(
-                    F.col(f"__{name}_vlex").isNotNull(),
-                    _binding_struct(
-                        F.lit(1),
-                        F.xxhash64(
-                            F.lit(1).cast("int"), F.col(f"__{name}_vlex")
-                        ),
-                        F.lit(None),
-                    ),
-                ),
-            )
+    cols, side = [], []
+    for n in _subquery_out_names(sub):
+        if n not in scalar_names:
+            cols.append(F.col(n))
+            if f"__{n}_vlex" in res.columns:
+                side.append(F.col(f"__{n}_vlex"))
+        elif n in str_cols:
+            cols.append(_kterm(1, F.col(n)).alias(n))
+            side.append(F.col(n).alias(f"__{n}_vlex"))
         else:
-            res = res.withColumn(
-                name,
-                _binding_struct(
-                    F.lit(2), F.lit(None), F.col(name).cast("double")
-                ),
-            )
-    out = _subquery_out_names(sub)
-    side = [f"__{n}_vlex" for n in out if f"__{n}_vlex" in res.columns]
-    res = res.select(*out, *side)
+            cols.append(_binding_struct(
+                F.lit(2), F.lit(None), F.col(n).cast("double")).alias(n))
+    res = res.select(*cols, *side)
     if sub.distinct and not sub.aggregates:
         res = res.dropDuplicates()
     return res
@@ -4074,7 +2415,7 @@ def _bind_scope_check(q: Query) -> None:
                     "scope (only graph patterns AFTER the BIND may "
                     "consume its variable)"
                 )
-        used = _bind_expr_vars(b.expr)
+        used = expr_vars(b.expr)
         if not used <= scope:
             missing = ", ".join(f"?{v}" for v in sorted(used - scope))
             raise SparqlSyntaxError(
@@ -4134,15 +2475,15 @@ def _post_bind_split(q: Query) -> tuple[Query, list, list]:
     post = {i for i, vs in enumerate(pv) if vs & bind_vars}
     if not post:
         return q, [], []
-    expr_vars = set().union(
-        *[_bind_expr_vars(b.expr) for b in q.binds]
+    input_vars = set().union(
+        *[expr_vars(b.expr) for b in q.binds]
     )
     changed = True
     while changed:
         changed = False
         post_vars = set().union(*[pv[i] for i in post])
         for j, vs in enumerate(pv):
-            if j in post or not (vs & post_vars) or (vs & expr_vars):
+            if j in post or not (vs & post_vars) or (vs & input_vars):
                 continue
             post.add(j)
             changed = True
@@ -4152,7 +2493,7 @@ def _post_bind_split(q: Query) -> tuple[Query, list, list]:
     post_vars = set().union(*[pv[i] for i in post])
     only_post = post_vars - pre_vars - bind_vars
     for b in q.binds:
-        circular = _bind_expr_vars(b.expr) & only_post
+        circular = expr_vars(b.expr) & only_post
         if circular:
             missing = ", ".join(f"?{v}" for v in sorted(circular))
             raise SparqlSyntaxError(
@@ -4175,37 +2516,6 @@ def _post_bind_split(q: Query) -> tuple[Query, list, list]:
         filters=[f for f in q.filters if f not in post_filts],
     )
     return q, post_pats, post_filts
-
-
-def _bind_expr_vars(expr: tuple) -> set[str]:
-    tag = expr[0]
-    if tag == "var":
-        return {expr[1][1:]}
-    if tag == "arith":
-        return _bind_expr_vars(expr[2]) | _bind_expr_vars(expr[3])
-    if tag in ("concat", "coalesce"):
-        out: set[str] = set()
-        for a in expr[1]:
-            out |= _bind_expr_vars(a)
-        return out
-    if tag == "substr":
-        out = _bind_expr_vars(expr[1]) | _bind_expr_vars(expr[2])
-        if expr[3] is not None:
-            out |= _bind_expr_vars(expr[3])
-        return out
-    if tag == "nfunc":
-        return _bind_expr_vars(expr[2])
-    if tag == "if":
-        # FilterExpr.vars() yields bare names (no '?') already
-        return (
-            set(expr[1].vars())
-            | _bind_expr_vars(expr[2])
-            | _bind_expr_vars(expr[3])
-        )
-    if tag in ("str", "ucase", "lcase", "strlen",
-               "replace", "strbefore", "strafter"):
-        return _bind_expr_vars(expr[1])
-    return set()
 
 
 def _combo_result(store, q: Query, combo, dedup: bool) -> DataFrame:
@@ -4446,7 +2756,7 @@ def _group_bindings(store, q: Query, dedup: bool) -> DataFrame:
     # filters whose expression tree contains an EXISTS{…} leaf need
     # marker columns that exist only after every other stage — pull
     # them out before anything (incl. execute_bgp pushdown) sees them
-    marker_filts = [f for f in q.filters if _exists_leaves(f)]
+    marker_filts = [f for f in q.filters if exists_leaves(f)]
     if marker_filts:
         mset = {id(f) for f in marker_filts}
         q = _dc_replace(
@@ -4503,7 +2813,7 @@ def _group_bindings(store, q: Query, dedup: bool) -> DataFrame:
     elif not q.patterns and not q.optional and q.subqueries:
         # outer group is ONLY subqueries: seed from the first, join the
         # rest; any non-deferred filter has nothing to bind against
-        if q.filters or q.lang_filters:
+        if q.filters:
             raise SparqlSyntaxError(
                 "FILTER over variables not bound by any pattern"
             )
@@ -4607,7 +2917,7 @@ def _group_bindings(store, q: Query, dedup: bool) -> DataFrame:
     # exist
     # EXISTS leaves inside BIND values / IF conditions need their
     # marker columns BEFORE the binds evaluate
-    bind_exm = [l for b in q.binds for l in _bind_exists_leaves(b.expr)]
+    bind_exm = [l for b in q.binds for l in exists_leaves(b.expr)]
     if bind_exm:
         # markers attach BEFORE the bind stage, so a block correlated
         # through a var that this group's own BINDs produce would see
@@ -4787,7 +3097,7 @@ def _group_bindings(store, q: Query, dedup: bool) -> DataFrame:
     # deferred filter (filters commute over the group algebra, so
     # last-position evaluation is exact)
     for f in marker_filts:
-        leaves = _exists_leaves(f)
+        leaves = exists_leaves(f)
         for ex in leaves:
             result = _attach_exists_marker(store, result, ex, may_unbound)
         result = _apply_deferred_filter(result, store, f)
@@ -4890,7 +3200,10 @@ def _apply_post_values(out: DataFrame, vb: ValuesBlock) -> DataFrame:
     and rendered numeric lexicals all coerce), everything else under
     string equality on the rendered form. UNDEF and solution-side
     NULLs match anything (§8.3 compatibility). New vars extend every
-    compatible solution with the cell's rendered lexical."""
+    compatible solution with the cell's rendered lexical, and an unbound
+    solution var adopts the cell's binding (§8.3: the merge keeps the
+    bound side). Integral numeric cells render as integer lexicals
+    (``5``), the way the VALUES clause wrote them."""
     spark = out.sparkSession
     rows = []
     for r in vb.rows:
@@ -4925,14 +3238,24 @@ def _apply_post_values(out: DataFrame, vb: ValuesBlock) -> DataFrame:
         )
         cond = cond & (c.isNull() | cmp_)
     out = out.join(F.broadcast(vdf), cond, "inner")
-    for v in new:
-        out = out.withColumn(
-            v,
-            F.coalesce(
-                F.col(f"__pv_{v}_num").cast("string"),
-                F.col(f"__pv_{v}_str"),
-            ),
+    types = dict(out.dtypes)
+
+    def cell(v):
+        num, s = F.col(f"__pv_{v}_num"), F.col(f"__pv_{v}_str")
+        if types.get(v, "string") != "string":  # a numeric scalar column
+            return num.cast(types[v])
+        integral = (num == F.floor(num)) & (F.abs(num) < 1e15)
+        return F.coalesce(
+            F.when(integral, num.cast("long").cast("string"))
+            .otherwise(num.cast("string")),
+            s,
         )
+
+    out = out.select(
+        *[F.coalesce(F.col(c), cell(c)).alias(c) if c in shared else c
+          for c in out.columns],
+        *[cell(v).alias(v) for v in new],
+    )
     return out.drop(
         *[f"__pv_{v}_{s}" for v in vb.vars for s in ("num", "str")]
     )
@@ -4958,9 +3281,6 @@ def execute(
     dedup = (q.distinct or q.form == "ask") and not q.aggregates
     result = _group_bindings(store, q, dedup)
 
-    if q.lang_filters:  # legacy Query-object API
-        result = _apply_lang_filters(result, store, q.lang_filters)
-
     if q.form == "ask":
         n = result.limit(1).count()
         return store.spark.createDataFrame([(n > 0,)], "ask boolean")
@@ -4975,47 +3295,8 @@ def execute(
         return [c for c in cols if not c.startswith("__")]
 
     if q.aggregates or q.group_by:
-        # group_by without aggregates is still a Group+Project per
-        # §18.2.4: one row per key (e.g. GROUP BY expression keys
-        # used purely to collapse solutions)
-        if q.agg_prebinds:
-            # aggregate expression arguments (SUM(?a * ?b)): one
-            # per-solution Extend just before grouping, §18.4
-            result = _apply_binds(result, store, q.agg_prebinds)
         gvars = [v[1:] for v in q.group_by]
-        label_vars = sorted({
-            a.var[1:] for a in q.aggregates
-            if a.func in ("GROUP_CONCAT", "SAMPLE") and a.var
-        })
-        if label_vars:
-            result = _attach_labels(result, store, label_vars)
-        aggs = [_agg_expr(a) for a in q.aggregates]
-        # dictionary-absent group keys (BIND/VALUES-produced terms)
-        # render from their vlex sidecar — carry it through the groupBy
-        # (the struct id is the hash OF the lexical, so first() is
-        # exact per group; same pattern as the subquery path)
-        aggs += [
-            F.first(F.col(f"__{gv}_vlex")).alias(f"__{gv}_vlex")
-            for gv in gvars
-            if f"__{gv}_vlex" in result.columns
-        ]
-        if not aggs:
-            # aggregate-free GROUP BY: groupBy().agg() needs at least
-            # one expression — a throwaway cardinality the keep= list
-            # below never carries into the output
-            aggs = [F.count(F.lit(1)).alias("__gb_card")]
-        grouped = (
-            result.groupBy(*gvars).agg(*aggs) if gvars else result.agg(*aggs)
-        )
-        if q.having:
-            grouped = grouped.filter(_having_col(q.having))
-        pa_scalars: list = []
-        pa_terms: list = []
-        if q.postagg_binds:
-            grouped, pa_scalars, pa_terms = _apply_postagg(
-                grouped, q.postagg_binds,
-                [a.alias[1:] for a in q.aggregates], gvars,
-            )
+        grouped, pa_scalars, pa_terms = _aggregate(result, store, q)
         grouped, ordered_vars = _add_order_sidecars(grouped, q.order_by)
         # materialize group vars; aggregate columns pass through verbatim
         out = materialize(

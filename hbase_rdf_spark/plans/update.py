@@ -145,7 +145,7 @@ class ClearOp:
 # ---------------------------------------------------------------------------
 
 _ALGEBRA_FIELDS = (
-    "optional", "union_blocks", "filters", "lang_filters", "values",
+    "optional", "union_blocks", "filters", "values",
     "services", "binds", "subqueries", "minus", "exists", "aggregates",
 )
 

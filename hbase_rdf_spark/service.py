@@ -268,7 +268,7 @@ def fetch_bindings(
             _time.sleep(0.2 * (2 ** i))
     if body is None:
         raise RuntimeError(
-            f"SERVICE <{endpoint}> failed after {retries + 1} "
+            f"SERVICE <{endpoint}> failed after {i + 1} "
             f"attempt(s): {last_ex}"
         ) from last_ex
     try:

@@ -588,9 +588,9 @@ def main() -> None:
     )
     sections.append((
         "General value-expression FILTER — codegen column predicate",
-        "Var-var arithmetic the pushdown grammar can't linearize "
-        "(round 4, ExprCmp) compiles to one Column over the joined "
-        "binding structs' num fields: a plain Filter inside "
+        "Var-var arithmetic the FILTER lowering can't linearize "
+        "(one plans/expr.py Expr node) compiles to one Column over the "
+        "joined binding structs' num fields: a plain Filter inside "
         "WholeStageCodegen after the hash join, no UDF, no extra "
         "stage. Single-var comparisons still normalize onto the "
         "pushdown classes and reach the scans as PushedFilters.",

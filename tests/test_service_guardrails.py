@@ -118,7 +118,8 @@ def test_5xx_exhausts_retries(stub):
 def test_4xx_fails_fast_no_retry(stub):
     url, h = stub
     h.behavior = ("status", 400)
-    with pytest.raises(RuntimeError):
+    # the error names the attempts actually made, not the retry budget
+    with pytest.raises(RuntimeError, match=r"failed after 1 attempt\(s\)"):
         fetch_bindings(url, "q", retries=3)
     assert h.calls == 1  # client errors don't heal on retry
 

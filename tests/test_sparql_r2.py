@@ -706,9 +706,21 @@ def test_bind_rebind_raises(store):
 
 
 def test_bind_out_of_scope_var_raises(store):
-    with pytest.raises(SparqlSyntaxError, match="out-of-scope"):
+    # every builtin's arguments count as reads, not just arithmetic
+    for expr in ("?nope + 1", "MD5(?nope)", "IRI(?nope)", "YEAR(?nope)",
+                 "xsd:integer(?nope)"):
+        with pytest.raises(SparqlSyntaxError, match="out-of-scope"):
+            execute(store, f"""
+            PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
+            SELECT ?i WHERE {{ ?i <http://ex/price> ?p . BIND({expr} AS ?x) }}
+            """)
+
+
+def test_filter_out_of_scope_builtin_var_raises(store):
+    with pytest.raises(ValueError, match="never bound"):
         execute(store, """
-        SELECT ?i WHERE { ?i <http://ex/price> ?p . BIND(?nope + 1 AS ?x) }
+        SELECT ?i WHERE { ?i <http://ex/name> ?n .
+          FILTER(MD5(?nope) = MD5(?n)) }
         """)
 
 
