@@ -47,6 +47,18 @@ INDEXES: dict[str, tuple[list[str], list[str]]] = {
 QUAD_COLS = ["s", "p", "o", "o_kind", "o_num", "c"]
 PROV_COLS = QUAD_COLS + ["conv_id", "turn_idx"]
 
+# Declared layout of every store table, in the column order the writers
+# produce — the parquet stand-in for an Iceberg catalog schema. Reads
+# open tables against these instead of inferring a schema from a file
+# footer, which would cost a Spark job per table handle.
+_QUAD_DDL = "s bigint, p bigint, o bigint, o_kind tinyint, o_num double, c bigint"
+SCHEMAS: dict[str, str] = {
+    **{f"triples_{name}": _QUAD_DDL for name in INDEXES},
+    "term2id": "term string, kind tinyint, id bigint",
+    "id2term": "id bigint, kind tinyint, label string",
+    "provenance": _QUAD_DDL + ", conv_id string, turn_idx int",
+}
+
 
 ROWS_PER_PARTITION = 2_000_000  # ≈100-150 MB parquet per sorted file
 
@@ -180,6 +192,12 @@ class TripleStore:
                 ("id2term", id2term, ["id"]),
             )))
 
+    def append_rows(self, table: str, rows: DataFrame) -> None:
+        """Append ``rows`` to ``table`` in its declared column order (a
+        USING join moves its key column first)."""
+        cols = [f.split()[0] for f in SCHEMAS[table].split(",")]
+        rows.select(*cols).write.mode("append").parquet(self.path(table))
+
     def compact(self, name: str, input_sig: str = "compact") -> dict:
         """Rewrite one index table into freshly range-partitioned, sorted
         files — the Iceberg ``rewrite_data_files`` analog.
@@ -193,7 +211,7 @@ class TripleStore:
         """
         range_keys, sort_keys = INDEXES[name]
         tdir = self.path(f"triples_{name}")
-        cur = self.spark.read.parquet(tdir).localCheckpoint(eager=True)
+        cur = self._read(f"triples_{name}").localCheckpoint(eager=True)
         n_rows = cur.count()
         arranged = cur.repartitionByRange(
             self._parts_for(n_rows), *range_keys
@@ -211,14 +229,19 @@ class TripleStore:
                 for name in INDEXES}
 
     # -- read -----------------------------------------------------------
+    def _read(self, table: str) -> DataFrame:
+        """The one store read: ``table`` opened against its declared
+        schema, so building the handle starts no Spark job."""
+        return self.spark.read.schema(SCHEMAS[table]).parquet(self.path(table))
+
     def index(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(f"triples_{name}"))
+        return self._read(f"triples_{name}")
 
     def term2id(self) -> DataFrame:
-        return self.spark.read.parquet(self.path("term2id"))
+        return self._read("term2id")
 
     def id2term(self) -> DataFrame:
-        return self.spark.read.parquet(self.path("id2term"))
+        return self._read("id2term")
 
     def provenance(self) -> DataFrame:
-        return self.spark.read.parquet(self.path("provenance"))
+        return self._read("provenance")

@@ -1152,33 +1152,29 @@ def materialize(
         c for c in result.columns
         if c not in (keep or []) and not c.startswith("__")
     ]
+    names = [v[1:] if v.startswith("?") else v for v in variables]
+    # one dictionary join per DISTINCT variable (a repeated projection
+    # reuses its label), then every column rendered in ONE select —
+    # each DataFrame step re-analyses the whole growing plan
     out = result
-    for v in variables:
-        name = v[1:] if v.startswith("?") else v
+    for name in dict.fromkeys(names):
         d = id2term.select(
             F.col("id").alias(f"__{name}_id"), F.col("label").alias(f"__{name}_label")
         )
+        out = out.join(
+            d, F.col(name).getField("id") == F.col(f"__{name}_id"), "left"
+        )
+
+    def term(name: str):
         # fallback chain: dictionary label → sidecar lexical (a VALUES
         # constant absent from the store dictionary) → numeric rendering
         fallbacks = [F.col(f"__{name}_label")]
         if f"__{name}_vlex" in result.columns:
             fallbacks.append(F.col(f"__{name}_vlex"))
         fallbacks.append(F.col(name).getField("num").cast("string"))
-        out = out.join(
-            d, out[name].getField("id") == d[f"__{name}_id"], "left"
-        ).withColumn(
-            name + "_term", F.coalesce(*fallbacks)
-        ).drop(f"__{name}_id", f"__{name}_label")
-    cols = [
-        F.col((v[1:] if v.startswith("?") else v) + "_term").alias(
-            v[1:] if v.startswith("?") else v
-        )
-        for v in variables
-    ] + [F.col(k) for k in (keep or [])]
+        return F.coalesce(*fallbacks).alias(name)
+
+    cols = [term(n) for n in names] + [F.col(k) for k in (keep or [])]
     if with_kinds:
-        cols += [
-            F.col(v[1:] if v.startswith("?") else v)
-            .getField("kind").alias(f"__k_{v[1:] if v.startswith('?') else v}")
-            for v in variables
-        ]
+        cols += [F.col(n).getField("kind").alias(f"__k_{n}") for n in names]
     return out.select(*cols)

@@ -535,10 +535,10 @@ def _ensure_graph_term(store, label: str) -> None:
     )
     new = row.join(store.id2term().select("id"), "id", "left_anti")
     if new.count():
-        new.write.mode("append").parquet(store.path("term2id"))
-        new.select(
-            "id", "kind", F.col("term").alias("label")
-        ).write.mode("append").parquet(store.path("id2term"))
+        store.append_rows("term2id", new)
+        store.append_rows(
+            "id2term", new.select("id", "kind", F.col("term").alias("label"))
+        )
 
 
 def _graph_manage(store, op: GraphOp, input_sig: str) -> tuple[int, int]:

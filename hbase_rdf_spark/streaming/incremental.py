@@ -59,8 +59,8 @@ def append_resolved(store: TripleStore, resolved: DataFrame) -> dict:
     n_new = new_quads.count()
     n_terms = new_id2term.count()
     if n_terms:
-        new_term2id.write.mode("append").parquet(store.path("term2id"))
-        new_id2term.write.mode("append").parquet(store.path("id2term"))
+        store.append_rows("term2id", new_term2id)
+        store.append_rows("id2term", new_id2term)
     if n_new:
         append_quads(store, new_quads)
     return {"appended_quads": n_new, "appended_terms": n_terms}
@@ -77,9 +77,9 @@ def append_quads(store: TripleStore, new_quads: DataFrame) -> None:
 
     def _append_one(item) -> None:
         name, (_, sort_keys) = item
-        new_quads.sortWithinPartitions(*sort_keys).write.mode(
-            "append"
-        ).parquet(store.path(f"triples_{name}"))
+        store.append_rows(
+            f"triples_{name}", new_quads.sortWithinPartitions(*sort_keys)
+        )
 
     with ThreadPoolExecutor(max_workers=len(INDEXES)) as ex:
         list(ex.map(_append_one, INDEXES.items()))

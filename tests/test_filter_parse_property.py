@@ -1,9 +1,9 @@
 """Property tests for FILTER operand normalization — parser only, no
 SparkSession.
 
-The round-4 operand grammar normalizes unary minus, ± constant
-offsets, and arithmetic IN lists algebraically onto the pushdown
-filter classes (plans/sparql.py _operand/_comparison/_in_list). These
+FILTER lowering normalizes unary minus, ± constant offsets, and
+arithmetic IN lists algebraically onto the pushdown filter classes
+(plans/expr.py lower_filter). These
 properties check the algebra symbolically: for every sampled variable
 value, the normalized (var, op, value) predicate must agree with a
 direct evaluation of the original expression.

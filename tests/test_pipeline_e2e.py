@@ -123,11 +123,36 @@ def test_engine_cache_pins_indexes(spark, built):
         eng.cache()
         assert all(df.storageLevel.useMemory for df in eng._cached)
         # scans still answer correctly through the cached relations
-        n = eng.scan(TriplePattern(p="rel:works_at")).count()
-        assert n > 0
+        df = eng.scan(TriplePattern(p="rel:works_at"))
+        assert df.count() > 0
+        # ... and actually read them: the scan's relation must match the
+        # cached one, or the cache is pinned but never used
+        assert "InMemoryTableScan" in (
+            df._jdf.queryExecution().executedPlan().toString()
+        )
     finally:
         eng.uncache()
         assert eng._cached == []
+
+
+def test_repeated_projected_variable(spark, built):
+    from hbase_rdf_spark.engine import KgEngine
+    from hbase_rdf_spark.service import results_json
+
+    store, _, _ = built
+    eng = KgEngine(spark, store.root)
+    once = results_json(eng.sql(
+        "SELECT ?x WHERE { ?x <rel:knows> ?y }", with_kinds=True
+    ))
+    twice = results_json(eng.sql(
+        "SELECT ?x ?x WHERE { ?x <rel:knows> ?y }", with_kinds=True
+    ))
+    assert twice["head"]["vars"] == ["x", "x"]
+    key = lambda b: b["x"]["value"]  # noqa: E731
+    assert once["results"]["bindings"]
+    assert sorted(twice["results"]["bindings"], key=key) == sorted(
+        once["results"]["bindings"], key=key
+    )
 
 
 def test_partial_resume_rebuilds_only_missing_stage(spark, tmp_path):
