@@ -16,11 +16,11 @@ greedy BGP pre-planner.
 Subpackages
 -----------
 operators/   KG dataflow stages: extraction, linking, connected components
-sources/     synthetic transcript corpus generator + readers
+sources/     synthetic transcript corpus, N-Triples parser, word-trigram
+             triples over document/event tables (wordkg)
 functions/   column-level helpers: term encoding, ids, numeric inlining
-plans/       triple-pattern routing (16 masks) + BGP join planner
+plans/       triple-pattern routing (16 masks), BGP planner, SPARQL
 streaming/   incremental append loader (S7 analog)
-ops/         training-data-pipeline operators: dedup, similarity, text
 """
 
 __version__ = "0.1.0"

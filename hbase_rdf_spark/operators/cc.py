@@ -78,7 +78,7 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return (row["c"], row["h"])
 
 
-def connected_components(edges: DataFrame, max_iter: int = MAX_ITERATIONS) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src: long, dst: long) → DataFrame(node: long, component: long).
 
     ``component`` is the minimum node id in each connected component.
@@ -87,7 +87,7 @@ def connected_components(edges: DataFrame, max_iter: int = MAX_ITERATIONS) -> Da
     """
     cur = _canonical_undirected(edges).localCheckpoint(eager=True)
     prev_sig = None
-    for _ in range(max_iter):
+    for _ in range(MAX_ITERATIONS):
         ls = _large_star(cur)
         ss = _small_star(ls.select(F.col("u"), F.col("v")))
         ss = ss.localCheckpoint(eager=True)
@@ -98,7 +98,9 @@ def connected_components(edges: DataFrame, max_iter: int = MAX_ITERATIONS) -> Da
         prev_sig = sig
         cur = ss
     else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+        raise RuntimeError(
+            f"connected_components did not converge in {MAX_ITERATIONS} rounds"
+        )
     # After convergence every edge is (node → component minimum).
     members = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = cur.select(F.col("v").alias("node")).distinct().withColumn(

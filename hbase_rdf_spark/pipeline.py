@@ -126,7 +126,6 @@ def build_kg(
     root: str,
     num_partitions: int | None = None,
     verify_invariant: bool = False,
-    check_collisions: bool = True,
     input_sig: str | None = None,
 ) -> dict:
     """Run the full construction: transcripts → tripartite triple store.
@@ -186,8 +185,7 @@ def build_kg(
         # writes + the stats count
         term2id = term2id.localCheckpoint(eager=True)
         id2term = term2id.select("id", "kind", F.col("term").alias("label"))
-        if check_collisions:
-            assert_no_id_collisions(term2id)
+        assert_no_id_collisions(term2id)
         _mark("dictionaries", t0)
         t0 = _time.time()
         store.write_dictionaries(term2id, id2term, input_sig)

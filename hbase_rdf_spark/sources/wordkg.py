@@ -65,21 +65,6 @@ def doc_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def doc_triples_sql(tbl: str = "documents") -> str:
-    """DuckDB oracle for :func:`doc_triples`."""
-    preds = ", ".join(f"'{p}'" for p in PRED_VOCAB)
-    return f"""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM {tbl}
-), idx AS (
-  SELECT doc_id, t, unnest(range(1, greatest(len(t) - 1, 1))) AS i FROM toks
-)
-SELECT doc_id, t[i] AS s, t[i + 1] AS p, t[i + 2] AS o
-FROM idx
-WHERE t[i + 1] IN ({preds})
-"""
-
-
 def event_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → numeric-object quads (s, p, o_num, c).
 

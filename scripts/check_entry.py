@@ -18,10 +18,7 @@ sys.path.insert(0, ".")
 import __spark_entry__ as entrymod  # noqa: E402
 from hbase_rdf_spark.session import get_spark  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["events", "documents"]
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -77,14 +74,15 @@ def main() -> int:
         qs = {k: v for k, v in qs.items() if k in only}
     failures = 0
     for name, fn in qs.items():
+        if name not in oracles:
+            print(f"FAIL {name}: no oracle_sql() entry")
+            failures += 1
+            continue
         try:
             got = fn(spark, sf).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
             failures += 1
-            continue
-        if name not in oracles:
-            print(f"ok*  {name}: rows-only ({len(got)} rows)")
             continue
         try:
             want = con.sql(oracles[name]).df()

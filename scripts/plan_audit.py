@@ -8,7 +8,8 @@ Writes BENCH/PLANS.md with `.explain("formatted")` excerpts showing:
 2. numeric-range scans push BOTH bounds;
 3. BGP join chains use broadcast/hash joins, never nested-loop
    per-binding scans (the cliff the rebuild removes, SURVEY.md §7.5);
-4. the flagship entry query's full plan.
+4. SPARQL operators (OPTIONAL, EXISTS, MINUS, property paths, dataset
+   clauses, …) compile to hash joins and pushed-down scans.
 
 Usage: python scripts/plan_audit.py  (builds a small store in /tmp)
 """
@@ -109,17 +110,6 @@ def main() -> None:
         "(HBaseTransformFilterPlacement) plus TypedId range encoding for "
         "the same effect.",
         trim(plan_of(p4), ("PushedFilters", "Scan parquet", "Join")),
-    ))
-
-    import __spark_entry__ as entrymod
-
-    p5 = entrymod.queries()["rel_region_revenue"](spark, "/root/testdata/sf0.001")
-    sections.append((
-        "Relational star join (TPC-H Q5 shape)",
-        "Dimension sides broadcast; the only exchanges are the fact-side "
-        "aggregation shuffles.",
-        trim(plan_of(p5), ("BroadcastHashJoin", "SortMergeJoin", "Exchange",
-                           "HashAggregate", "Scan parquet")),
     ))
 
     # --- round-2 surfaces -------------------------------------------------
@@ -282,128 +272,6 @@ def main() -> None:
         "broadcasts when small.",
         trim(plan_of(p15), ("Join", "StartsWith", "Filter",
                             "PushedFilters", "Scan parquet")),
-    ))
-
-    p16 = entrymod.queries()["sample_stratified"](
-        spark, "/root/testdata/sf0.001"
-    )
-    sections.append((
-        "Stratified sample — map-side WindowGroupLimit",
-        "rank<=k over row_number lowers to the WindowGroupLimit "
-        "physical rule: every map task pre-prunes to its LOCAL top-k "
-        "per stratum before the single strata-key exchange, so a "
-        "mega-stratum never funnels through one task's sort. The "
-        "keyed-hash ordering expression is pure codegen (md5/xxhash64 "
-        "intrinsics).",
-        trim(plan_of(p16), ("WindowGroupLimit", "Window", "Exchange",
-                            "Filter", "Scan parquet")),
-    ))
-
-    p17 = entrymod.queries()["sample_fraction"](
-        spark, "/root/testdata/sf0.001"
-    )
-    sections.append((
-        "Fraction sample — zero-shuffle keyed-hash filter",
-        "The keep decision is a per-row hash threshold: one codegen "
-        "Filter directly over the scan, NO Exchange anywhere — "
-        "partitioning-independent and retry-stable where df.sample() "
-        "is neither.",
-        trim(plan_of(p17), ("Filter", "Exchange", "Scan parquet",
-                            "WholeStageCodegen")),
-    ))
-
-    from hbase_rdf_spark.ops.dedup import dedup_keep_list
-
-    docs_audit = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    pairs_audit = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-    )
-    p18 = dedup_keep_list(docs_audit, pairs_audit)
-    sections.append((
-        "Dedup survivor selection — combinable agg, no per-cluster window",
-        "The survivor per near-dup cluster is min((-len, id)) — a "
-        "partial_min HashAggregate that combines map-side, then ONE "
-        "join back on cluster_id (AQE splits a viral cluster's key). "
-        "A row_number window over cluster_id would instead sort every "
-        "cluster inside single tasks. (CC rounds for the cluster label "
-        "are iterative and audited via operators/cc.py tests; this "
-        "plan shows the post-CC decision stage.)",
-        trim(plan_of(p18), ("HashAggregate", "partial_min", "Exchange",
-                            "Join", "Window")),
-    ))
-
-    p19 = entrymod.queries()["pack_context_windows"](
-        spark, "/root/testdata/sf0.001"
-    )
-    sections.append((
-        "Context-window packing — distributed prefix sum, no global Window",
-        "The exclusive prefix sum runs as range-repartition + in-partition "
-        "sort + Arrow-batched MapInPandas cumsum with broadcast partition "
-        "offsets. The plan contains NO Window operator: the naive "
-        "sum().over(orderBy(..)) alternative would funnel the whole table "
-        "through one task.",
-        trim(plan_of(p19), ("MapInPandas", "Exchange", "Sort",
-                            "Window", "Scan parquet")),
-    ))
-
-    p20 = entrymod.queries()["text_pii_redact"](
-        spark, "/root/testdata/sf0.001"
-    )
-    sections.append((
-        "PII redaction — pure projection, zero shuffles",
-        "Sequential regexp_extract_all/regexp_replace over the text "
-        "column compiles to ONE whole-stage-codegen Project directly "
-        "over the parquet scan: no Exchange anywhere, so the scrub runs "
-        "at scan speed over a 100 TB corpus.",
-        trim(plan_of(p20), ("Project", "Exchange", "Scan parquet",
-                            "WholeStageCodegen")),
-    ))
-
-    p21 = entrymod.queries()["text_contamination"](
-        spark, "/root/testdata/sf0.001"
-    )
-    sections.append((
-        "Benchmark decontamination — broadcast gram set, combinable count",
-        "The benchmark n-gram set (small by definition) broadcasts "
-        "(BroadcastHashJoin, LEFT OUTER), so the corpus side is never "
-        "shuffled for the membership probe; the only Exchange feeds the "
-        "map-side-combinable per-doc count HashAggregate keyed on the "
-        "uniformly-distributed doc id.",
-        trim(plan_of(p21), ("BroadcastHashJoin", "BroadcastExchange",
-                            "HashAggregate", "Exchange", "Generate",
-                            "Scan parquet")),
-    ))
-
-    p22 = entrymod.queries()["text_chunks"](spark, "/root/testdata/sf0.001")
-    sections.append((
-        "Document chunking — projection + explode, zero shuffles",
-        "Overlapping token-window chunks compile to Project + Generate "
-        "(explode) directly over the scan — no Exchange: output is "
-        "streamed, never buffered per document.",
-        trim(plan_of(p22), ("Generate", "Project", "Exchange",
-                            "Scan parquet")),
-    ))
-
-    from pyspark.sql import functions as Fx
-
-    from hbase_rdf_spark.ops.similarity import ivf_topk, kmeans_fit
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    emb = emb.withColumn("embedding", Fx.col("embedding").cast("array<double>"))
-    cents = kmeans_fit(emb, n_cells=8, iterations=2)
-    qdf = emb.filter("vec_id < 2").selectExpr(
-        "vec_id as query_id", "embedding"
-    )
-    p23 = ivf_topk(emb, qdf, cents, k=5, nprobe=2, dim=64)
-    sections.append((
-        "IVF ANN — one GEMM assignment pass, probe-join, windowed top-k",
-        "The corpus side is cell-assigned in a single MapInPandas GEMM "
-        "pass (no shuffle), then joined on `cell` against the broadcast "
-        "(query, probe-cell) list — candidates are nprobe/n_cells of "
-        "the table; the only Exchange feeds the per-query top-k window.",
-        trim(plan_of(p23), ("MapInPandas", "BroadcastHashJoin",
-                            "BroadcastExchange", "Exchange", "Window",
-                            "Scan parquet")),
     ))
 
     # --- round-3 surfaces -------------------------------------------------
@@ -597,26 +465,6 @@ def main() -> None:
         trim(plan_of(p34), ("Join", "Filter", "Project",
                             "Scan parquet", "PushedFilters",
                             "WholeStageCodegen")),
-    ))
-
-    p35 = entrymod.queries()["dedup_substring_spans"](
-        spark, "/root/testdata/sf0.001"
-    )
-    sections.append((
-        "Exact-substring dedup — anchored fingerprints, islands merge",
-        "duplicated_substring_spans (round 4): the word-start anchor "
-        "filter and md5 fingerprinting run inside the scan's codegen "
-        "stage (explode of a filtered sequence — unanchored positions "
-        "never leave the map task and the text column never "
-        "shuffles); the fingerprint count is a partial_count → "
-        "Exchange(fp) → count HashAggregate; the join back is an "
-        "equi-join AQE can broadcast when few fingerprints are "
-        "duplicated; the per-document gaps-and-islands merge is ONE "
-        "window over Exchange(doc_id). Nothing all-pairs, nothing "
-        "driver-side.",
-        trim(plan_of(p35), ("Generate", "HashAggregate", "Exchange",
-                            "Join", "Window", "Project",
-                            "Scan parquet", "WholeStageCodegen")),
     ))
 
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)

@@ -1,4 +1,7 @@
-"""Incremental append (S7 analog): batch-equivalence + idempotence."""
+"""Incremental append (S7 analog): batch-equivalence, idempotence and
+compaction of the appended layers."""
+
+import glob
 
 import pytest
 from pyspark.sql import functions as F
@@ -82,3 +85,24 @@ def test_append_idempotent(spark, gaz, tmp_path_factory):
     r = append_batch(store, transcripts_df(spark, 20, seed=5), gaz)
     assert r["appended_quads"] == 0 and r["appended_terms"] == 0
     assert store.index("spo").count() == before
+
+
+def test_compaction_preserves_content_and_restores_layout(spark, gaz, tmp_path):
+    root = str(tmp_path / "kg")
+    build_kg(spark, transcripts_df(spark, 20, seed=13), gaz, root)
+    store = TripleStore(spark, root)
+    for off in (20, 30, 40):
+        append_batch(store, transcripts_df(spark, 10, seed=13, conv_offset=off), gaz)
+
+    before = store.index("spo")
+    rows_before = before.count()
+    files_before = len(glob.glob(root + "/triples_spo/part-*.parquet"))
+    content = before.orderBy("s", "p", "o_kind", "o", "o_num", "c").collect()
+
+    stats = store.compact_all()
+    assert stats["spo"] == rows_before
+
+    after = store.index("spo")
+    files_after = len(glob.glob(root + "/triples_spo/part-*.parquet"))
+    assert files_after < files_before  # 4 append layers collapsed
+    assert after.orderBy("s", "p", "o_kind", "o", "o_num", "c").collect() == content

@@ -2,10 +2,9 @@
 
 Covers: (1) path-closure convergence when the closure reaches a
 numeric-literal endpoint at depth >= 2 (NULL b id, needs a null-safe
-anti-join key), (2) the SPARQL 1.1 section 13.2 default-graph RDF merge
-— a ground triple asserted in two FROM graphs yields ONE solution, for
-plain scans and for property-path atoms, and (3) demux_avi raising on
-structural truncation instead of clipping a partial JPEG frame.
+anti-join key) and (2) the SPARQL 1.1 section 13.2 default-graph RDF
+merge — a ground triple asserted in two FROM graphs yields ONE
+solution, for plain scans and for property-path atoms.
 """
 
 import pytest
@@ -298,15 +297,3 @@ def test_having_nested_parens(store):
         "http://ex/h1", "http://ex/h3",
     ]
 
-
-def test_demux_avi_truncated_frame_raises():
-    """ADVICE r3 (low): a frame chunk whose declared size extends past
-    the file bound is structural truncation — ValueError, not a clipped
-    partial JPEG flowing into the decoder."""
-    from hbase_rdf_spark.ops.video import demux_avi, synthesize_avi
-
-    payload = synthesize_avi(asset_id=3, n_frames=4, width=16, height=16, fps=2)
-    # full payload demuxes fine; cutting mid-final-frame must raise
-    demux_avi(payload)
-    with pytest.raises(ValueError, match="truncated"):
-        demux_avi(payload[:-40])

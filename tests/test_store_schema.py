@@ -145,8 +145,8 @@ def test_open_starts_no_spark_job(spark, root):
 # -- lint: parquet reads of the store go through TripleStore._read ----------
 
 # (file relative to the package, enclosing function) allowed to read
-# parquet; ops/wordkg.py reads sf input tables, not the store
-_ALLOWED = {("operators/materialize.py", "_read"), ("ops/wordkg.py", None)}
+# parquet; sources/wordkg.py reads sf input tables, not the store
+_ALLOWED = {("operators/materialize.py", "_read"), ("sources/wordkg.py", None)}
 
 
 def _reader_chain(node: ast.AST) -> bool:
@@ -210,4 +210,4 @@ def test_store_read_lint_catches_violation():
     assert parquet_reads(seeded, "operators/materialize.py") == [
         "operators/materialize.py:5"
     ]
-    assert parquet_reads(seeded, "ops/wordkg.py") == []
+    assert parquet_reads(seeded, "sources/wordkg.py") == []
