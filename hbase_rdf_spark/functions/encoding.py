@@ -24,8 +24,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 KIND_ENTITY, KIND_STRING, KIND_NUMERIC = 0, 1, 2
 
-QUAD_COLUMNS = ["s", "p", "o", "o_kind", "o_num", "c"]
-
 
 def term_id(kind: Column | int, term: Column) -> Column:
     """Deterministic 64-bit term id (the BaseId analog)."""

@@ -29,24 +29,42 @@ MANIFEST_NAME = "_lineage.json"
 
 def partition_manifest(df: DataFrame) -> list[dict[str, int]]:
     """Compute per-partition (rows, content hash) in one narrow agg."""
-    cols = df.columns
-    rows = (
+    return partition_manifests([df])[0]
+
+
+def partition_manifests(dfs: list[DataFrame]) -> list[list[dict[str, int]]]:
+    """:func:`partition_manifest` of every frame in ``dfs``, in ONE
+    Spark job. Each frame's partition id and row hash are taken below
+    the union, so the ids are the frame's own, not the union's; a
+    literal tag keeps the frames apart in the shared aggregation."""
+    tagged = [
         df.select(
+            F.lit(i).alias("t"),
             F.spark_partition_id().alias("pid"),
-            F.xxhash64(*cols).alias("h"),
+            F.xxhash64(*df.columns).alias("h"),
         )
-        .groupBy("pid")
+        for i, df in enumerate(dfs)
+    ]
+    union = tagged[0]
+    for t in tagged[1:]:
+        union = union.union(t)
+    rows = (
+        union.groupBy("t", "pid")
         .agg(
             F.count(F.lit(1)).alias("rows"),
             F.expr("bit_xor(h)").alias("content_hash"),
         )
-        .orderBy("pid")
         .collect()
     )
-    return [
-        {"partition_id": r["pid"], "rows": r["rows"], "content_hash": r["content_hash"]}
-        for r in rows
-    ]
+    # a few rows per partition: ordered here, not by a Spark sort (whose
+    # range sampling would be a job of its own)
+    out: list[list[dict[str, int]]] = [[] for _ in dfs]
+    for r in sorted(rows, key=lambda r: (r["t"], r["pid"])):
+        out[r["t"]].append(
+            {"partition_id": r["pid"], "rows": r["rows"],
+             "content_hash": r["content_hash"]}
+        )
+    return out
 
 
 def table_signature(df: DataFrame) -> dict[str, int]:

@@ -108,89 +108,98 @@ class TripleStore:
         by_cores = min(2 * cores, max(1, rows // self.MIN_ROWS_PER_PARTITION))
         return max(1, min(100_000, max(by_size, by_cores)))
 
-    # -- write ----------------------------------------------------------
+    # -- write ------------------------------------------------------------
+    def _write_arranged(self, writes: list[tuple], input_sig: str) -> dict:
+        """Write each ``(table, stage, frame, extra)`` whose stage has not
+        finished on ``input_sig``, then record all their manifests.
+
+        The writes are submitted CONCURRENTLY from driver threads: they
+        share a cached upstream, so overlapping them hides each write's
+        fixed job latencies and keeps the cluster busy — the reference
+        achieved the same overlap only via server-side coprocessor
+        fan-out (reference: coprocessor/CoprocessorBulkLoad.java:98-114).
+        The manifests come from the cached write-side frames (identical
+        partitioning to the written files, no disk re-read), all of them
+        in one Spark job. Returns ``{table: total_rows}``, a resumed
+        table's from its manifest."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        totals: dict[str, int] = {}
+        todo = []
+        for table, stage, frame, extra in writes:
+            if lineage.stage_complete(self.path(table), input_sig):
+                totals[table] = lineage.read_manifest(self.path(table))["total_rows"]
+            else:
+                todo.append((table, stage, frame, extra))
+        arranged: list[DataFrame | None] = [None] * len(todo)
+
+        def _write_one(i: int) -> None:
+            table, _, frame, _ = todo[i]
+            arranged[i] = frame().persist()
+            arranged[i].write.mode("overwrite").parquet(self.path(table))
+
+        try:
+            if todo:
+                with ThreadPoolExecutor(max_workers=len(todo)) as ex:
+                    list(ex.map(_write_one, range(len(todo))))
+                manifests = lineage.partition_manifests(arranged)
+                for (table, stage, _, extra), parts in zip(todo, manifests):
+                    m = lineage.write_manifest(
+                        self.path(table), stage, input_sig, parts, extra
+                    )
+                    totals[table] = m["total_rows"]
+        finally:
+            for df in arranged:
+                if df is not None:
+                    df.unpersist()
+        return totals
+
     def write_indexes(self, quads: DataFrame, input_sig: str = "") -> dict:
         """Write the three permutation-sorted index tables from one pass.
 
-        ``quads`` must carry QUAD_COLS (+ optional provenance columns).
-        The upstream is persisted once; each index write is a range
-        shuffle + local sort + parquet write. The three writes are
-        submitted CONCURRENTLY from driver threads: they share the
-        cached body, so overlapping them hides each write's fixed job
-        latencies (range-sampling pass, manifest pass) and keeps the
-        cluster busy — the reference achieved the same overlap only via
-        server-side coprocessor fan-out
-        (reference: coprocessor/CoprocessorBulkLoad.java:98-114).
+        ``quads`` must carry QUAD_COLS (+ optional provenance columns,
+        which also write the ``provenance`` table). The upstream is
+        persisted once; each index write is a range shuffle + local
+        sort + parquet write, all three concurrent (``_write_arranged``).
+        Returns ``{index: total_rows}``; every index holds every row.
         """
-        from concurrent.futures import ThreadPoolExecutor
-
         body = quads.select(*QUAD_COLS).persist()
-        stats = {}
         try:
-            n_rows = body.count()  # materializes the cache; sizes partitions
-            n_parts = self._parts_for(n_rows)
+            n_parts = self._parts_for(body.count())  # materializes the cache
 
-            def _write_one(item):
-                name, (range_keys, sort_keys) = item
-                tdir = self.path(f"triples_{name}")
-                if lineage.stage_complete(tdir, input_sig):
-                    return name, lineage.read_manifest(tdir)["total_rows"]
-                arranged = body.repartitionByRange(
+            def _arranged(range_keys, sort_keys):
+                return lambda: body.repartitionByRange(
                     n_parts, *range_keys
-                ).sortWithinPartitions(*sort_keys).persist()
-                arranged.write.mode("overwrite").parquet(tdir)
-                # manifest from the cached write-side frame: identical
-                # partitioning to the written files, no disk re-read
-                parts = lineage.partition_manifest(arranged)
-                arranged.unpersist()
-                m = lineage.write_manifest(
-                    tdir, f"materialize_{name}", input_sig, parts,
-                    extra={"sort_order": sort_keys},
-                )
-                return name, m["total_rows"]
+                ).sortWithinPartitions(*sort_keys)
 
-            with ThreadPoolExecutor(max_workers=len(INDEXES)) as ex:
-                for name, total in ex.map(_write_one, INDEXES.items()):
-                    stats[name] = total
+            writes = [
+                (f"triples_{name}", f"materialize_{name}",
+                 _arranged(range_keys, sort_keys), {"sort_order": sort_keys})
+                for name, (range_keys, sort_keys) in INDEXES.items()
+            ]
+            if "conv_id" in quads.columns:
+                writes.append((
+                    "provenance", "provenance",
+                    lambda: quads.select(*PROV_COLS), None,
+                ))
+            totals = self._write_arranged(writes, input_sig)
         finally:
             body.unpersist()
-        if "conv_id" in quads.columns:
-            pdir = self.path("provenance")
-            if not lineage.stage_complete(pdir, input_sig):
-                prov = quads.select(*PROV_COLS).persist()
-                prov.write.mode("overwrite").parquet(pdir)
-                lineage.write_manifest(
-                    pdir, "provenance", input_sig, lineage.partition_manifest(prov)
-                )
-                prov.unpersist()
-        return stats
+        return {name: totals[f"triples_{name}"] for name in INDEXES}
 
     def write_dictionaries(
         self, term2id: DataFrame, id2term: DataFrame, input_sig: str = ""
     ) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write_one(item) -> None:
-            name, df, keys = item
-            tdir = self.path(name)
-            if lineage.stage_complete(tdir, input_sig):
-                return
-            arranged = df.repartitionByRange(
+        def _arranged(df, keys):
+            return lambda: df.repartitionByRange(
                 self._parts_for(df.count() if self.n is None else 0), *keys
-            ).sortWithinPartitions(*keys).persist()
-            arranged.write.mode("overwrite").parquet(tdir)
-            lineage.write_manifest(
-                tdir, name, input_sig, lineage.partition_manifest(arranged)
-            )
-            arranged.unpersist()
+            ).sortWithinPartitions(*keys)
 
-        # both dictionaries derive from one cached upstream — overlap
-        # their fixed job latencies (sampling, manifest) in threads
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            list(ex.map(_write_one, (
-                ("term2id", term2id, ["term"]),
-                ("id2term", id2term, ["id"]),
-            )))
+        # both dictionaries derive from one cached upstream
+        self._write_arranged([
+            ("term2id", "term2id", _arranged(term2id, ["term"]), None),
+            ("id2term", "id2term", _arranged(id2term, ["id"]), None),
+        ], input_sig)
 
     def append_rows(self, table: str, rows: DataFrame) -> None:
         """Append ``rows`` to ``table`` in its declared column order (a

@@ -204,7 +204,9 @@ def build_kg(
                 r["method"]: r["n"]
                 for r in links.groupBy("method").agg(F.count("*").alias("n")).collect()
             },
-            "resolved_triples": resolved.count(),
+            # encode_quads keeps every resolved row and every index holds
+            # every quad: the writer's row count, not a recount
+            "resolved_triples": idx_stats["spo"],
             "distinct_terms": term2id.count(),
             "index_rows": idx_stats,
             "timings": timings,

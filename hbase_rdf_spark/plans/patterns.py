@@ -29,6 +29,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, functions as F
 
 from hbase_rdf_spark.functions.encoding import KIND_ENTITY, KIND_NUMERIC
+from hbase_rdf_spark.operators.materialize import QUAD_COLS
 
 Term = tuple[str, int]  # (lexical form, kind) — kind 0 entity/URI, 1 string
 
@@ -128,4 +129,4 @@ def scan(store, pattern: TriplePattern) -> DataFrame:
             df = df.filter(cond)
         else:
             df = df.filter(F.col("c") == encode_term(f"conv:{pattern.c}"))
-    return df.select("s", "p", "o", "o_kind", "o_num", "c")
+    return df.select(*QUAD_COLS)

@@ -10,6 +10,12 @@ Centralizes the configs that matter at 100 TB scale so every entry point
   input contract: no per-row Python UDFs).
 - shuffle.partitions sized to cores locally; on a real cluster this is
   overridden by spark-submit conf (2-3x total executor cores).
+- DataFrame origin capture off. PySpark wraps every DataFrame/Column
+  call in ``_with_origin``; with the flag on, each call pays a conf
+  read, an origin set/clear on the JVM and a Python stack walk. Errors
+  keep their class and message, only the Python call-site context goes.
+  PySpark caches the flag for the whole process on first read, so it
+  must be set when the session is built.
 """
 
 from __future__ import annotations
@@ -57,6 +63,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
     if extra_conf:

@@ -67,11 +67,6 @@ NUMERIC_DATATYPES = [
     ).split()
 ]
 
-PARSED_COLUMNS = [
-    "s", "s_kind", "p", "o_lex", "o_kind", "o_num", "o_lang", "o_datatype", "c",
-    "_corrupt",
-]
-
 _ECHARS = [
     ("t", "\t"), ("b", "\b"), ("n", "\n"), ("r", "\r"), ("f", "\f"),
     ('"', '"'), ("'", "'"),
@@ -92,12 +87,22 @@ def _cp_to_char(cp):
     ).otherwise(F.decode(F.unhex(hex4), "UTF-16BE"))
 
 
+def _echars(col):
+    """ECHAR replaces — plain (non-regex) and order-free on text whose
+    every backslash starts a true escape."""
+    for esc, ch in _ECHARS:
+        col = F.replace(col, F.lit("\\" + esc), F.lit(ch))
+    return col
+
+
 def _unescape_segment(seg):
     """Unescape one ``\\\\``-free segment: every remaining backslash
     starts a TRUE escape (the caller split on double backslashes), so
-    per-kind replacement is order-independent. UCHARs are handled
-    first via a zero-width split that keeps each escape at a piece
-    head; ECHARs are plain (non-regex) replaces after."""
+    per-kind replacement is order-independent. A zero-width split keeps
+    each UCHAR at a piece head; the ECHARs are replaced in each piece's
+    tail BEFORE the decoded UCHAR is prepended, so a UCHAR-written
+    backslash (``\\u005C``) never joins the text after it into a fake
+    escape."""
     pieces = F.split(seg, r"(?=\\[uU])", -1)
 
     def _piece(p):
@@ -106,15 +111,14 @@ def _unescape_segment(seg):
         cp4 = F.conv(F.substring(p, 3, 4), 16, 10).cast("long")
         cp8 = F.conv(F.substring(p, 3, 8), 16, 10).cast("long")
         return (
-            F.when(is8, F.concat(_cp_to_char(cp8), F.substring(p, 11, 1 << 30)))
-            .when(is4, F.concat(_cp_to_char(cp4), F.substring(p, 7, 1 << 30)))
-            .otherwise(p)
+            F.when(is8, F.concat(
+                _cp_to_char(cp8), _echars(F.substring(p, 11, 1 << 30))))
+            .when(is4, F.concat(
+                _cp_to_char(cp4), _echars(F.substring(p, 7, 1 << 30))))
+            .otherwise(_echars(p))
         )
 
-    out = F.array_join(F.transform(pieces, _piece), "")
-    for esc, ch in _ECHARS:
-        out = F.replace(out, F.lit("\\" + esc), F.lit(ch))
-    return out
+    return F.array_join(F.transform(pieces, _piece), "")
 
 
 def unescape_nt(col):

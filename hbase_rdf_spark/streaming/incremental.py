@@ -23,7 +23,9 @@ until a compaction pass — same trade-off Iceberg manages natively).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import DataFrame
 
 from hbase_rdf_spark.functions.encoding import (
     build_dictionaries,
@@ -39,13 +41,16 @@ def append_resolved(store: TripleStore, resolved: DataFrame) -> dict:
     obj, obj_kind) to an existing store. Idempotent: anti-joins against
     the current dictionary and SPO index so only NEW terms and NEW
     quads hit disk — also the write primitive of SPARQL Update inserts
-    (plans/update.py)."""
-    term2id, id2term = build_dictionaries(resolved)
-    existing_ids = store.id2term().select("id")
-    new_id2term = id2term.join(existing_ids, "id", "left_anti")
-    new_term2id = term2id.join(
-        new_id2term.select("id"), "id", "left_semi"
-    )
+    (plans/update.py).
+
+    Each delta is checkpointed once, before any append touches the
+    files it was computed against, and counted from its checkpoint. The
+    dictionary and index appends all read those checkpoints, not the
+    (re-parsed) input, and all five run concurrently."""
+    _, id2term = build_dictionaries(resolved)
+    new_id2term = id2term.join(
+        store.id2term().select("id"), "id", "left_anti"
+    ).localCheckpoint(eager=True)
 
     quads = encode_quads(resolved).select(*QUAD_COLS)
     existing = store.index("spo").select(*QUAD_COLS)
@@ -58,31 +63,37 @@ def append_resolved(store: TripleStore, resolved: DataFrame) -> dict:
 
     n_new = new_quads.count()
     n_terms = new_id2term.count()
+    writes = []
     if n_terms:
-        store.append_rows("term2id", new_term2id)
-        store.append_rows("id2term", new_id2term)
+        writes += [("term2id", new_id2term.withColumnRenamed("label", "term")),
+                   ("id2term", new_id2term)]
     if n_new:
-        append_quads(store, new_quads)
+        writes += _index_rows(new_quads)
+    _append_all(store, writes)
     return {"appended_quads": n_new, "appended_terms": n_terms}
+
+
+def _index_rows(new_quads: DataFrame) -> list[tuple[str, DataFrame]]:
+    """(index table, rows) appends of an id-space quad delta."""
+    return [(f"triples_{name}", new_quads.sortWithinPartitions(*sort_keys))
+            for name, (_, sort_keys) in INDEXES.items()]
+
+
+def _append_all(store: TripleStore, writes: list[tuple[str, DataFrame]]) -> None:
+    """Run ``store.append_rows`` for every (table, rows), concurrently:
+    the rows share checkpointed upstreams, so overlapping the appends
+    hides each one's fixed job latency (same overlap as
+    TripleStore.write_indexes)."""
+    if writes:
+        with ThreadPoolExecutor(max_workers=len(writes)) as ex:
+            list(ex.map(lambda w: store.append_rows(*w), writes))
 
 
 def append_quads(store: TripleStore, new_quads: DataFrame) -> None:
     """Append an id-space quad delta (already deduped against the
-    store and checkpointed) to all three index tables. The three
-    per-index appends share the delta — submitted concurrently to hide
-    each write's fixed job latency (same overlap as
-    TripleStore.write_indexes). Also the write primitive of SPARQL
-    Update ADD (plans/update.py)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _append_one(item) -> None:
-        name, (_, sort_keys) = item
-        store.append_rows(
-            f"triples_{name}", new_quads.sortWithinPartitions(*sort_keys)
-        )
-
-    with ThreadPoolExecutor(max_workers=len(INDEXES)) as ex:
-        list(ex.map(_append_one, INDEXES.items()))
+    store and checkpointed) to all three index tables, concurrently.
+    Also the write primitive of SPARQL Update ADD (plans/update.py)."""
+    _append_all(store, _index_rows(new_quads))
 
 
 def append_batch(
