@@ -78,9 +78,8 @@ class KgEngine:
         return scan(self.store, pattern)
 
     def bgp(self, patterns: list[Bgp], filters: list[Filter] | None = None,
-            optional: list[Bgp] | None = None,
             project: list[str] | None = None) -> DataFrame:
-        result = execute_bgp(self.store, patterns, filters=filters, optional=optional)
+        result = execute_bgp(self.store, patterns, filters=filters)
         return materialize(result, self.store, project)
 
     def sql(self, query, with_kinds: bool = False) -> DataFrame:

@@ -24,11 +24,12 @@ What carries over semantically:
 - **Late materialization** (reference: binding/BindingMaterializer.java:25-116):
   ids become lexical terms only after all joins, via one id2term join
   per projected variable.
-- **OPTIONAL as a unit** (SPARQL LeftJoin / ARQ OpConditional): the
-  whole optional group is inner-joined first — patterns + its own
-  FILTERs — then left-joined onto the required bindings, so a partial
-  match inside the group binds nothing (the round-1 per-pattern left
-  join was wrong).
+- **Join primitives for the group algebra**: ``_merge_join`` (SPARQL
+  compatibility join for vars that may be unbound) and
+  ``_conditional_left_join`` (OPTIONAL with a FILTER over outer vars).
+  The group evaluator in plans/sparql.py (``_group_bindings``) drives
+  them; OPTIONAL evaluates the whole optional group as a unit, so a
+  partial match inside the group binds nothing.
 - **Property paths** (reference flattens via ARQ,
   optimizer/HBaseOptimize.java:111): an algebra over (a, b) pair sets —
   atom scans, inverse (swap), sequence (pair join), alternative
@@ -41,8 +42,7 @@ entity and numeric-literal bindings join and compare with one code path
 
 from __future__ import annotations
 
-import itertools
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import reduce as _reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -80,8 +80,7 @@ class Bgp:
     ``g`` is the named-graph/context slot (GRAPH clause): None = any
     graph, '?var' = bind it, constant = filter on it — the quad-pattern
     C position of the reference's SPOC masks. ``p`` may be a ``Path``
-    tree; ``path_mod`` is the legacy single-modifier shorthand
-    (equivalent to ``Path('mod', (Path('atom', iri=p),), mod=...)``).
+    tree (a property path).
     """
 
     s: Elem
@@ -89,51 +88,11 @@ class Bgp:
     o: Elem
     g: Elem | None = None
     filtered: bool = False  # an attached FILTER bonus, per ReorderHeuristics
-    path_mod: str | None = None  # property-path modifier: '+' | '*' | '?'
     # dataset-clause graph-set restriction (SPARQL 1.1 §13.2), applied
     # when ``g`` is None (FROM default-graph merge of ≥2 graphs) or a
     # '?var' (FROM NAMED restriction on GRAPH ?var). The empty tuple
     # is the empty graph — the pattern matches nothing.
     g_in: tuple | None = None
-
-
-@dataclass
-class OptionalBlock:
-    """One OPTIONAL { … } group: evaluated as a unit (inner joins +
-    group-local filters), then left-joined onto the required bindings."""
-
-    patterns: list = field(default_factory=list)
-    filters: list = field(default_factory=list)
-    optional: list = field(default_factory=list)  # nested OptionalBlocks
-    # UNION chains inside the group: list of branch lists (GroupBlock-
-    # shaped objects with .patterns/.filters/.optional); the group's
-    # solutions are the union over branch combinations
-    union: list = field(default_factory=list)
-    # BIND assignments inside the group, applied to the group's
-    # solutions before the left join; evaluation is delegated to the
-    # SPARQL layer via ``bind_fn`` (df -> df) because bind expressions
-    # need the store's term dictionary — bgp.py stays layer-clean
-    binds: list = field(default_factory=list)
-    bind_fn: object = None
-    # a subquery-only OPTIONAL block: the SPARQL layer stores the parsed
-    # subquery + its output names and attaches a closure
-    # (() -> DataFrame) producing the block's solutions — bgp.py
-    # left-joins them like any other block step
-    subquery: object = None
-    out_names: tuple = ()
-    step_fn: object = None
-    # a full-algebra OPTIONAL group (carries VALUES / MINUS / FILTER
-    # EXISTS / subqueries mixed with patterns): the SPARQL layer stores
-    # the parsed sub-Query here and attaches a ``step_fn`` that runs
-    # the complete GroupGraphPattern evaluator over it — bgp.py
-    # left-joins the resulting solutions like any other block step
-    group: object = None
-    # set by the SPARQL layer: the step's vars that can come back
-    # UNBOUND (from OPTIONAL / VALUES UNDEF / UNION asymmetry / BIND
-    # inside the subquery/group) — when one of these is a join key,
-    # the left join must use compatibility semantics (``_merge_join``)
-    # instead of plain column equality
-    step_nullable: tuple = ()
 
 
 @dataclass
@@ -254,19 +213,6 @@ def pattern_vars(patterns: list[Bgp]) -> set[str]:
             if is_var(e):
                 out.add(e[1:])
     return out
-
-
-def _block_vars(blk: OptionalBlock) -> set[str]:
-    vs = pattern_vars(blk.patterns) | set(getattr(blk, "out_names", ()))
-    for sub in blk.optional:
-        vs |= _block_vars(sub)
-    for chain in getattr(blk, "union", ()) or ():
-        for br in chain:
-            vs |= pattern_vars(br.patterns)
-            for sub in br.optional:
-                vs |= _block_vars(sub)
-    vs |= {b.var for b in getattr(blk, "binds", ()) or ()}
-    return vs
 
 
 # ---------------------------------------------------------------------------
@@ -613,20 +559,12 @@ def _path_step(store, p: Bgp) -> DataFrame:
     gets this for free from ARQ's per-graph dataset iteration
     (optimizer/HBaseOptimize.java:28-124 path flattening)."""
     per_graph = is_var(p.g)
-    if isinstance(p.p, Path):
-        path = p.p
-    elif p.path_mod:
-        if is_var(p.p):
-            raise ValueError("a path modifier on a variable predicate is not valid SPARQL")
-        path = Path("mod", (Path("atom", iri=p.p),), mod=p.path_mod)
-    else:
-        raise ValueError("not a path pattern")
     if per_graph:
         # p.g_in = FROM NAMED restriction on the iterated graph set
         # (None = all named graphs; () = empty set — matches nothing)
-        df = _pairs(store, path, p.g_in, per_graph=True)
+        df = _pairs(store, p.p, p.g_in, per_graph=True)
     else:
-        df = _pairs(store, path, p.g if p.g is not None else p.g_in)
+        df = _pairs(store, p.p, p.g if p.g is not None else p.g_in)
     if not is_var(p.s):
         df = _endpoint_filter(df, "a", p.s)
     if not is_var(p.o):
@@ -661,7 +599,7 @@ def _path_step(store, p: Bgp) -> DataFrame:
 
 def _scan_pattern(store, p: Bgp) -> DataFrame:
     """Scan one pattern; project var columns as binding structs."""
-    if p.path_mod or isinstance(p.p, Path):
+    if isinstance(p.p, Path):
         return _path_step(store, p)
     tp = TriplePattern(
         s=None if is_var(p.s) else p.s,
@@ -720,11 +658,16 @@ def _scan_pattern(store, p: Bgp) -> DataFrame:
 
 
 def _attach_filter_labels(store, df: DataFrame, names: list[str]) -> DataFrame:
-    """Attach ``__{name}_flbl`` lexical-label columns (one id2term join
-    per variable) for label-space filters — regex/str()/langMatches/
-    isIRI/isBlank (see plans/filters.py)."""
+    """Attach ``__{name}_flbl`` lexical-label columns for label-space
+    filters — regex/str()/langMatches/isIRI/isBlank (see
+    plans/filters.py). A var carrying a ``__{name}_vlex`` sidecar (a
+    BIND/VALUES term that may be absent from the dictionary) reads
+    it; any other takes one id2term join."""
     for n in names:
         if f"__{n}_flbl" in df.columns:
+            continue
+        if f"__{n}_vlex" in df.columns:
+            df = df.withColumn(f"__{n}_flbl", F.col(f"__{n}_vlex"))
             continue
         d = store.id2term().select(
             F.col("id").alias(f"__{n}_fid"),
@@ -904,79 +847,22 @@ def _apply_filters(store, df: DataFrame, fs: list) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _block_result(store, blk: OptionalBlock, dedup: bool) -> DataFrame:
-    """Solutions of one OPTIONAL group: patterns + group-local filters,
-    UNION chains expanded over branch combinations, BINDs applied last
-    (via the SPARQL layer's ``bind_fn`` callback)."""
-    bindvars = {b.var for b in getattr(blk, "binds", ()) or ()}
-    # filters over the block's own BIND outputs run after the binds
-    pre = [f for f in blk.filters if not (f.vars() & bindvars)]
-    post = [f for f in blk.filters if f.vars() & bindvars]
-    union = getattr(blk, "union", None) or []
-    if union:
-        steps = []
-        for combo in itertools.product(*union):
-            pats = list(blk.patterns)
-            filts = list(pre)
-            opts = list(blk.optional)
-            for b in combo:
-                pats += b.patterns
-                filts += b.filters
-                opts += b.optional
-            scope = pattern_vars(pats)
-            for sub in opts:
-                scope |= _block_vars(sub)
-            applicable = [f for f in filts if f.vars() <= scope]
-            branch = execute_bgp(
-                store, pats, filters=applicable, optional=opts, dedup=dedup
-            )
-            if len(applicable) != len(filts):
-                # a filter var unbound in this branch: type error → every
-                # solution of the branch is dropped; keep the schema
-                branch = branch.limit(0)
-            steps.append(branch)
-        step = _reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), steps
-        )
-    else:
-        step = execute_bgp(
-            store, blk.patterns, filters=pre,
-            optional=blk.optional, dedup=dedup,
-        )
-    bind_fn = getattr(blk, "bind_fn", None)
-    if bind_fn is not None:
-        step = bind_fn(step)
-    elif getattr(blk, "binds", None):
-        raise ValueError(
-            "OPTIONAL block has BINDs but no bind_fn was attached — "
-            "execute it through plans.sparql.execute()"
-        )
-    step = _apply_filters(store, step, list(post))
-    return step
-
-
 def execute_bgp(
     store,
     patterns: list[Bgp],
     filters=None,
-    optional=None,
     dedup: bool = False,
 ) -> DataFrame:
     """Evaluate a BGP to a DataFrame of binding structs (one col per var).
 
     ``filters`` — FilterExpr-protocol objects (plans/filters.py, plus
-    the Filter/VarFilter comparisons here): applied as soon as their
-    variables are in scope; id-space filters eagerly inside the join
-    loop (Catalyst pushes them into the scans), label-space ones after
-    the required joins. A filter whose variables never come into scope
-    raises instead of being silently dropped.
-
-    ``optional`` — OptionalBlocks (bare Bgp accepted for compat as a
-    single-pattern block). SPARQL LeftJoin semantics: each block is
-    inner-joined as a unit (its own filters included), then left-joined
-    onto the required bindings; with no shared variables the left join
-    keeps unmatched left rows (a crossJoin would drop them when the
-    block is empty).
+    the Filter/VarFilter comparisons here): id-space filters apply
+    eagerly inside the join loop as soon as their variables are in
+    scope (Catalyst pushes them into the scans); label-space ones run
+    in one batch after the joins. A filter whose variables the
+    patterns never bind raises instead of being silently dropped.
+    OPTIONAL, UNION and the rest of the group algebra live in the
+    group evaluator (``plans/sparql.py _group_bindings``).
 
     ``dedup=True`` — set-semantics evaluation: each pattern step
     dedupes before joining. ONLY valid when the caller needs the
@@ -989,10 +875,6 @@ def execute_bgp(
     from dataclasses import replace
 
     filters = list(filters or [])
-    blocks = [
-        ob if isinstance(ob, OptionalBlock) else OptionalBlock(patterns=[ob])
-        for ob in (optional or [])
-    ]
     # J8 fidelity: a pattern whose object var carries a single-var filter
     # ranks above its unfiltered twin (ReorderHeuristics' filtered flag,
     # reference: optimizer/reorder/StatsMatcher.java:291-400)
@@ -1007,14 +889,6 @@ def execute_bgp(
         for p in patterns
     ]
     pending = list(filters)
-
-    def _ready(df: DataFrame, label_space: bool):
-        return [
-            f for f in pending
-            if f.vars() <= set(df.columns)
-            and (label_space or not f.label_vars())
-        ]
-
     result: DataFrame | None = None
     for p in reorder(patterns):
         step = _scan_pattern(store, p)
@@ -1028,95 +902,21 @@ def execute_bgp(
                 result = result.join(step, on=shared, how="inner")
             else:
                 result = result.crossJoin(step)
-        for f in _ready(result, label_space=False):
+        for f in [
+            f for f in pending
+            if f.vars() <= set(result.columns) and not f.label_vars()
+        ]:
             result = _apply_filter(store, result, f)
             pending.remove(f)
     assert result is not None, "empty BGP"
-    # label-space filters once the required bindings are complete —
-    # batched so conjuncts over the same var share one dictionary join
-    ready = _ready(result, label_space=True)
+    # label-space filters once the bindings are complete — batched so
+    # conjuncts over the same var share one dictionary join
+    ready = [f for f in pending if f.vars() <= set(result.columns)]
     result = _apply_filters(store, result, ready)
-    for f in ready:
-        pending.remove(f)
-    # vars that can be NULL on the result side after an earlier
-    # optional block (its extension is all-NULL on unmatched rows) —
-    # a later block sharing one needs the compatibility left join
-    opt_nullable: set[str] = set()
-    for blk in blocks:
-        bvars = _block_vars(blk)
-        # §8.2 LeftJoin(Ω1, Ω2, expr): a FILTER inside OPTIONAL that
-        # reads outer-bound vars is part of the left-join CONDITION,
-        # evaluated on the merged solution — not a pre- or post-join
-        # filter (the reference gets this from stock ARQ's OpLeftJoin
-        # expression; HBaseTransformFilterPlacement.java:359-369 keeps
-        # such conditionals with the join). Block-local filters stay
-        # inside the block evaluation.
-        correlated = [f for f in blk.filters if not f.vars() <= bvars]
-        if correlated:
-            blk = replace(
-                blk, filters=[f for f in blk.filters if f.vars() <= bvars]
-            )
-        step = (
-            blk.step_fn()
-            if getattr(blk, "step_fn", None) is not None
-            else _block_result(store, blk, dedup)
+    if len(ready) != len(pending):
+        missing = sorted(
+            set().union(*(f.vars() for f in pending)) - set(result.columns)
         )
-        shared = [c for c in step.columns if c in result.columns and c != "__exists"]
-        # the block side can leave a shared var unbound when that var
-        # comes from its own OPTIONAL / UNION asymmetry / BIND, or
-        # from a subquery/group step (per-var set supplied by the
-        # SPARQL layer); the result side when a previous optional
-        # introduced the var. When a JOIN KEY is in either set, plain
-        # equality treats NULL as incompatible — SPARQL compatibility
-        # (§8.3) says it matches, and the merge takes the bound side.
-        step_null = set(getattr(blk, "step_nullable", ()) or ())
-        for ob in blk.optional:
-            step_null |= _block_vars(ob)
-        step_null |= {b.var for b in (getattr(blk, "binds", None) or ())}
-        for chain in getattr(blk, "union", None) or ():
-            sets_ = []
-            for br in chain:
-                bv = pattern_vars(br.patterns) | {
-                    b.var for b in (getattr(br, "binds", None) or ())
-                }
-                for ob in br.optional:
-                    step_null |= _block_vars(ob)
-                sets_.append(bv)
-            if len(sets_) > 1:
-                step_null |= set().union(*sets_) - set.intersection(*sets_)
-        if correlated:
-            missing = sorted(
-                set().union(*(f.vars() for f in correlated))
-                - set(result.columns) - set(step.columns)
-            )
-            if missing:
-                raise ValueError(
-                    "FILTER inside OPTIONAL references variables bound "
-                    f"nowhere: {missing}"
-                )
-            result = _conditional_left_join(
-                store, result, step, shared, correlated,
-                nullable=bool(set(shared) & (step_null | opt_nullable)),
-            )
-        elif shared:
-            if set(shared) & (step_null | opt_nullable):
-                result = _merge_join(result, step, shared, "left")
-            else:
-                result = result.join(step, on=shared, how="left")
-        else:
-            result = result.join(step, F.lit(True), "left")
-        opt_nullable |= {
-            c for c in step.columns if not c.startswith("__")
-        }
-    # filters whose vars only bind via optional blocks: SPARQL evaluates
-    # them on the merged solution (unbound → type error → row dropped,
-    # which SQL NULL comparison semantics reproduce exactly)
-    ready = _ready(result, label_space=True)
-    result = _apply_filters(store, result, ready)
-    for f in ready:
-        pending.remove(f)
-    if pending:
-        missing = sorted(set().union(*(f.vars() for f in pending)) - set(result.columns))
         raise ValueError(
             f"FILTER references variables never bound by the pattern: {missing}"
         )

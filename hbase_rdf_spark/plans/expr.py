@@ -29,8 +29,9 @@ This module is the same shape here:
   (and label column) before aggregation, or the scalar column after.
 - **Lowering** (``lower_filter``): maps the linearisable FILTER shapes
   onto the scan-pushable leaves (``Filter``/``VarFilter``/
-  ``_TermFilter``/``Bound``/``Not``/``And``/``Or``), so pushdown and
-  ``execute_bgp``'s id-space/label-space split see exactly the leaves
+  ``_TermFilter``/``Bound``/``Not``/``And``/``Or``), so scan pushdown
+  and ``execute_bgp``'s split (id-space filters inside the join loop,
+  label-space ones batched after the joins) see exactly the leaves
   they always did. Everything else becomes one ``Expr`` node with the
   same ``vars()/label_vars()/cond()`` protocol.
 """
@@ -864,7 +865,7 @@ class ExistsExpr(FilterExpr):
     compatible solution) to false."""
 
     marker: str  # hidden column name, attached by _attach_exists_marker
-    block: object = None  # GroupBlock: patterns+filters, or full group
+    block: object = None  # the braced group: a parsed sparql.Query
 
     def vars(self) -> set[str]:
         # correlation happens through the marker join, not the

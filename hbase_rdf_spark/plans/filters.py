@@ -17,7 +17,8 @@ the scans. Two evaluation spaces:
   nodes share kind 0 with IRIs and differ only in their ``_:`` label
   prefix — sources/ntriples.py:29). The executor attaches a
   ``__{var}_flbl`` column before applying such a filter and drops it
-  after; see ``plans/bgp.py execute_bgp``.
+  after (``plans/bgp.py _apply_filters``): ``execute_bgp`` batches a
+  BGP's label-space filters after its joins, before any OPTIONAL.
 
 SPARQL error semantics fall out of SQL three-valued logic: an unbound
 variable makes the comparison NULL, ``NULL OR true`` is true,

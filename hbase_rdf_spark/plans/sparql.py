@@ -97,11 +97,10 @@ context id rides the closure as an extra join key, plans/bgp.py
 the FULL group algebra — VALUES, MINUS, FILTER [NOT] EXISTS,
 subqueries mixed with patterns, and nested UNION chains mixed with
 other content ({ {A} UNION {B} . C } — joins distribute over the
-union): an OPTIONAL block, a UNION branch, a MINUS block, an EXISTS
-block, or a bare braced group carrying any of these becomes a
-``group``-backed block evaluated through the same GroupGraphPattern
-evaluator as a top-level WHERE clause (``_group_bindings``) and
-combined (left-/anti-/semi-joined) as a unit.
+union): every OPTIONAL body, UNION branch, MINUS body and EXISTS body
+is the ``Query`` parsed inside its braces, evaluated by the one
+GroupGraphPattern evaluator (``_group_bindings``) and combined
+(left-/anti-/semi-joined) as a unit.
 
 Dataset semantics: with no dataset clause, patterns scan the
 STATEMENT-LEVEL quad view — one solution per containing named graph,
@@ -126,14 +125,14 @@ from pyspark.sql import DataFrame, functions as F
 
 from hbase_rdf_spark.plans.bgp import (
     Bgp,
-    OptionalBlock,
     Path,
     execute_bgp,
     materialize,
     pattern_vars,
-    _apply_filter,
+    _apply_filters,
+    _attach_filter_labels,
     _binding_struct,
-    _block_vars,
+    _conditional_left_join,
     _merge_join,
 )
 from hbase_rdf_spark.plans.expr import (  # noqa: F401 — re-exported
@@ -214,27 +213,6 @@ class Aggregate:
     separator: str = " "
 
 
-@dataclass
-class GroupBlock:
-    """One branch of a UNION chain: patterns + branch-local filters,
-    OPTIONAL blocks, and BIND assignments (the common branch-tagging
-    idiom ``{ … BIND("a" AS ?t) } UNION { … BIND("b" AS ?t) }``)."""
-
-    patterns: list[Bgp] = field(default_factory=list)
-    filters: list = field(default_factory=list)
-    optional: list[OptionalBlock] = field(default_factory=list)
-    binds: list = field(default_factory=list)
-    # a subquery-only branch ({ SELECT … } UNION …): its solutions
-    # join the rest of the combo on shared vars
-    subquery: object = None
-    out_names: tuple = ()
-    # a full-algebra branch (nested UNION mixed with other content,
-    # VALUES/MINUS/EXISTS/subqueries inside the branch): the parsed
-    # sub-Query, evaluated through _group_bindings and joined to the
-    # rest of the combo on shared vars
-    group: object = None
-
-
 class _Undef:
     """Sentinel for an ``UNDEF`` cell in a VALUES row (singleton)."""
 
@@ -312,11 +290,14 @@ class Query:
     form: str = "select"  # select | ask | describe
     distinct: bool = False
     patterns: list[Bgp] = field(default_factory=list)
-    optional: list[OptionalBlock] = field(default_factory=list)
-    # UNION chains: each chain is a list of GroupBlock branches; joins
+    # nested groups are Queries too: each OPTIONAL body, UNION branch,
+    # MINUS body and [NOT] EXISTS body is the group parsed inside its
+    # braces, evaluated by the one group evaluator (_group_bindings)
+    optional: list["Query"] = field(default_factory=list)
+    # UNION chains: each chain is a list of branch groups; joins
     # distribute over unions, so N chains execute as the cross product
     # of their branches
-    union_blocks: list[list[GroupBlock]] = field(default_factory=list)
+    union_blocks: list[list["Query"]] = field(default_factory=list)
     filters: list = field(default_factory=list)
     values: list[ValuesBlock] = field(default_factory=list)
     # trailing VALUES whose vars are aggregate aliases / BIND outputs /
@@ -328,9 +309,9 @@ class Query:
     # nested { SELECT … } blocks: evaluated bottom-up in id space and
     # joined to the enclosing group on shared variables
     subqueries: list["Query"] = field(default_factory=list)
-    minus: list[GroupBlock] = field(default_factory=list)
-    # FILTER [NOT] EXISTS { … }: (positive, block) pairs
-    exists: list[tuple[bool, GroupBlock]] = field(default_factory=list)
+    minus: list["Query"] = field(default_factory=list)
+    # FILTER [NOT] EXISTS { … }: (positive, group) pairs
+    exists: list[tuple[bool, "Query"]] = field(default_factory=list)
     aggregates: list[Aggregate] = field(default_factory=list)
     group_by: list[str] = field(default_factory=list)
     # SELECT '(expr AS ?v)' expressions, parked here until the whole
@@ -892,78 +873,14 @@ class _Parser(ExprGrammar):
                 # carried on each Bgp — nothing graph-specific remains
                 q.subqueries.extend(sub.subqueries)
             elif up == "OPTIONAL":
+                # the whole group left-joins as a unit (SPARQL LeftJoin);
+                # a bare SubSelect body parses as the group's subquery
                 self.next()
                 self.expect("{")
-                if (self.peek() or "").upper() == "SELECT":
-                    # bare SubSelect directly inside the braces
-                    # (GroupGraphPattern ::= '{' (SubSelect | …) '}')
-                    sq = self._parse_subselect(graph)
-                    self.expect("}")
-                    q.optional.append(
-                        OptionalBlock(
-                            subquery=sq,
-                            out_names=tuple(_subquery_out_names(sq)),
-                        )
-                    )
-                    continue
                 sub = Query(variables=[])
                 self._subgroup(sub, graph)
                 self.expect("}")
-                if (len(sub.subqueries) == 1 and not sub.patterns
-                        and not sub.filters
-                        and not sub.optional and not sub.union_blocks
-                        and not sub.binds and not sub.values
-                        and not sub.minus and not sub.exists):
-                    # subquery as the block's sole content: its
-                    # solutions left-join directly on shared vars
-                    sq = sub.subqueries[0]
-                    q.optional.append(
-                        OptionalBlock(
-                            subquery=sq,
-                            out_names=tuple(_subquery_out_names(sq)),
-                        )
-                    )
-                    continue
-                complex_branch = any(
-                    getattr(br, "group", None) is not None
-                    or getattr(br, "subquery", None) is not None
-                    for chain in sub.union_blocks
-                    for br in chain
-                )
-                bind_consumed = any(
-                    b.var in pattern_vars(sub.patterns) for b in sub.binds
-                )
-                if (sub.values or sub.services or sub.minus or sub.exists
-                        or sub.subqueries or complex_branch
-                        or bind_consumed or _has_marker_filters(sub)):
-                    # full-algebra group: VALUES / MINUS / FILTER
-                    # EXISTS / a subquery mixed with other content, a
-                    # UNION chain whose branch needs the full
-                    # evaluator, or a block pattern consuming a
-                    # block-local BIND var (in-group evaluation order
-                    # via _post_bind_split) — run through the complete
-                    # GroupGraphPattern evaluator (_group_bindings)
-                    # via step_fn
-                    q.optional.append(
-                        OptionalBlock(
-                            group=sub,
-                            out_names=tuple(sorted(_query_scope_vars(sub))),
-                        )
-                    )
-                    continue
-                # the whole group left-joins as a unit, its FILTERs
-                # applied inside the block (SPARQL LeftJoin semantics);
-                # UNION chains expand per branch combination, BINDs
-                # extend the group's solutions before the left join
-                q.optional.append(
-                    OptionalBlock(
-                        patterns=sub.patterns,
-                        filters=sub.filters,
-                        optional=sub.optional,
-                        union=sub.union_blocks,
-                        binds=sub.binds,
-                    )
-                )
+                q.optional.append(sub)
             elif up == "SELECT":
                 # bare SubSelect as the group's content
                 # (GroupGraphPattern ::= '{' (SubSelect | …) '}')
@@ -986,6 +903,13 @@ class _Parser(ExprGrammar):
                 if not v.startswith("?"):
                     raise SparqlSyntaxError("BIND alias must be a variable")
                 self.expect(")")
+                if v[1:] in pattern_vars(q.patterns):
+                    # §18.2.1: the BIND var must be unused in the group
+                    # up to the BIND
+                    raise SparqlSyntaxError(
+                        f"BIND {v} would rebind a variable already used "
+                        "by a graph pattern of the group"
+                    )
                 q.binds.append(
                     BindAssign(v[1:], expr, at=len(q.patterns))
                 )
@@ -995,17 +919,7 @@ class _Parser(ExprGrammar):
                 sub = Query(variables=[])
                 self._subgroup(sub, graph)
                 self.expect("}")
-                br = self._as_branch(sub)
-                if getattr(br, "binds", None):
-                    # a BIND inside MINUS extends the block's solutions
-                    # BEFORE the compatibility anti-join; only the full
-                    # group evaluator applies block-local binds here
-                    # (the plain-branch path would silently drop them)
-                    br = GroupBlock(
-                        group=sub,
-                        out_names=tuple(sorted(_query_scope_vars(sub))),
-                    )
-                q.minus.append(br)
+                q.minus.append(sub)
             elif tok == "{":
                 # braced block: a subquery, or a group / UNION chain
                 self.next()
@@ -1015,12 +929,7 @@ class _Parser(ExprGrammar):
                     if (self.peek() or "").upper() == "UNION":
                         # { SELECT … } UNION { … }: the subquery is the
                         # first branch of a UNION chain
-                        branches = [
-                            GroupBlock(
-                                subquery=sq,
-                                out_names=tuple(_subquery_out_names(sq)),
-                            )
-                        ]
+                        branches = [Query(variables=[], subqueries=[sq])]
                         while (self.peek() or "").upper() == "UNION":
                             self.next()
                             self.expect("{")
@@ -1044,9 +953,7 @@ class _Parser(ExprGrammar):
                     self.expect("}")
                     branches.extend(self._branchify(alt))
                 b = branches[0]
-                if (len(branches) == 1
-                        and getattr(b, "group", None) is None
-                        and getattr(b, "subquery", None) is None):
+                if len(branches) == 1 and _splices(b):
                     # plain group: splice into the enclosing group
                     # (bind positions shift by the patterns already
                     # parsed)
@@ -1055,14 +962,13 @@ class _Parser(ExprGrammar):
                     q.filters.extend(b.filters)
                     q.optional.extend(b.optional)
                     for bd in b.binds:
-                        if getattr(bd, "at", None) is not None:
+                        if bd.at is not None:
                             bd.at += off
                     q.binds.extend(b.binds)
                 else:
-                    # a full-algebra single branch ({ {A} UNION {B} . C }
-                    # or a braced group carrying VALUES/MINUS/EXISTS/
-                    # subqueries) evaluates as a unit through the union
-                    # combo machinery — a 1-branch chain
+                    # any other braced group ({ {A} UNION {B} . C }, or
+                    # one carrying VALUES/MINUS/EXISTS/subqueries)
+                    # evaluates as a unit — a 1-branch chain
                     q.union_blocks.append(branches)
             elif tok == ".":
                 self.next()
@@ -1104,17 +1010,7 @@ class _Parser(ExprGrammar):
 
     def _emit_triple(self, q: Query, graph, s, p, o) -> None:
         g, g_in = self._graph_slot(graph)
-        if isinstance(p, Path):
-            if p.op == "mod" and p.children[0].op == "atom":
-                # single-modifier shorthand — legacy Bgp form
-                q.patterns.append(
-                    Bgp(s, p.children[0].iri, o, g=g, g_in=g_in,
-                        path_mod=p.mod)
-                )
-            else:
-                q.patterns.append(Bgp(s, p, o, g=g, g_in=g_in))
-        else:
-            q.patterns.append(Bgp(s, p, o, g=g, g_in=g_in))
+        q.patterns.append(Bgp(s, p, o, g=g, g_in=g_in))
 
     def _pred_obj_list(self, q: Query, graph, s) -> None:
         """Turtle-style predicateObjectList: ``p1 o1, o2 ; p2 o3``."""
@@ -1170,81 +1066,18 @@ class _Parser(ExprGrammar):
             return cells[0]
         return self.term()
 
-    def _branchify(self, sub: "Query") -> list[GroupBlock]:
-        """One UNION branch → its GroupBlocks. A branch that is ITSELF a
-        single bare UNION chain splices into the enclosing chain —
-        UNION is associative, so '{ {A} UNION {B} } UNION {C}'
-        flattens to the 3-branch chain A|B|C. A subquery-only branch
-        becomes a subquery GroupBlock."""
-        if (
-            len(sub.subqueries) == 1
-            and not sub.patterns
-            and not sub.filters
-            and not sub.optional
-            and not sub.union_blocks
-            and not sub.values
-            and not sub.minus
-            and not sub.exists
-            and not sub.binds
-        ):
-            sq = sub.subqueries[0]
-            return [
-                GroupBlock(
-                    subquery=sq, out_names=tuple(_subquery_out_names(sq))
-                )
-            ]
-        if (
-            len(sub.union_blocks) == 1
-            and not sub.patterns
-            and not sub.filters
-            and not sub.optional
-            and not sub.values
-            and not sub.minus
-            and not sub.exists
-            and not sub.binds
-            and not sub.subqueries
+    def _branchify(self, sub: "Query") -> list["Query"]:
+        """One UNION branch → its branch groups. A branch that is ITSELF
+        a single bare UNION chain splices into the enclosing chain —
+        UNION is associative, so '{ {A} UNION {B} } UNION {C}' flattens
+        to the 3-branch chain A|B|C."""
+        if len(sub.union_blocks) == 1 and not (
+            sub.patterns or sub.filters or sub.optional or sub.values
+            or sub.services or sub.minus or sub.exists or sub.binds
+            or sub.subqueries
         ):
             return list(sub.union_blocks[0])
-        return [self._as_branch(sub)]
-
-    def _as_branch(self, sub: "Query") -> GroupBlock:
-        if (sub.union_blocks or sub.values or sub.services
-                or sub.minus or sub.exists
-                or sub.subqueries or _has_marker_filters(sub)):
-            # full-algebra branch: a nested UNION mixed with other
-            # content ({ {A} UNION {B} . C } — joins distribute over
-            # unions, evaluated as a unit), or VALUES/MINUS/EXISTS/
-            # subqueries inside the branch; _group_bindings evaluates
-            # the whole sub-group
-            return GroupBlock(
-                group=sub, out_names=tuple(sorted(_query_scope_vars(sub)))
-            )
-        for b in sub.binds:
-            if b.var in pattern_vars(sub.patterns):
-                if getattr(b, "at", None) is None or any(
-                    i < b.at
-                    for i, p in enumerate(sub.patterns)
-                    if b.var in pattern_vars([p])
-                ):
-                    # used BEFORE the BIND: a genuine rebinding
-                    raise SparqlSyntaxError(
-                        f"BIND var ?{b.var} is reused by a pattern in "
-                        "the same branch"
-                    )
-                # a LATER pattern CONSUMES the branch-local BIND var:
-                # route the branch through the full group evaluator,
-                # whose _post_bind_split implements the in-group
-                # evaluation order (circular inputs raise there)
-                return GroupBlock(
-                    group=sub,
-                    out_names=tuple(sorted(_query_scope_vars(sub))),
-                )
-        return GroupBlock(
-            patterns=sub.patterns,
-            filters=sub.filters,
-            optional=sub.optional,
-            binds=sub.binds,
-        )
+        return [sub]
 
     def _agg_separator(self, func: str) -> str:
         """Optional ``; SEPARATOR="…"`` tail inside the aggregate's
@@ -1379,15 +1212,7 @@ class _Parser(ExprGrammar):
             sub = Query(variables=[])
             self._subgroup(sub, graph)
             self.expect("}")
-            br = self._as_branch(sub)
-            if getattr(br, "binds", None):
-                # same as MINUS: block-local BINDs need the full group
-                # evaluator — the plain semi/anti path ignores them
-                br = GroupBlock(
-                    group=sub,
-                    out_names=tuple(sorted(_query_scope_vars(sub))),
-                )
-            q.exists.append((not neg, br))
+            q.exists.append((not neg, sub))
             return
         # FILTER(expr), or the bare builtin-call form: FILTER
         # langMatches(...), FILTER !bound(...)
@@ -1422,14 +1247,8 @@ class _Parser(ExprGrammar):
         sub = Query(variables=[])
         self._subgroup(sub, graph)
         self.expect("}")
-        br = self._as_branch(sub)
-        if getattr(br, "binds", None):
-            br = GroupBlock(
-                group=sub,
-                out_names=tuple(sorted(_query_scope_vars(sub))),
-            )
         self._exm_n = getattr(self, "_exm_n", 0) + 1
-        return ExistsExpr(marker=f"__exm{self._exm_n}", block=br), neg
+        return ExistsExpr(marker=f"__exm{self._exm_n}", block=sub), neg
 
     def _modifiers(self, q: Query) -> None:
         if self.kw("GROUP"):
@@ -1588,9 +1407,19 @@ class _Parser(ExprGrammar):
             (q.post_values if needs_post else q.values).append(vb)
 
 
-def _has_marker_filters(sub: "Query") -> bool:
-    return any(exists_leaves(f) for f in sub.filters) or any(
-        exists_leaves(b.expr) for b in sub.binds
+def _splices(sub: Query) -> bool:
+    """Whether a nested group joins its enclosing group's BGP: one that
+    holds only patterns, FILTERs, OPTIONALs and BINDs no pattern of it
+    consumes. A braced group like that splices into its parent at parse
+    time, and a UNION branch like that distributes over the group's
+    patterns (one BGP per branch combination). Any other group is
+    evaluated on its own and joined as a unit."""
+    return not (
+        sub.union_blocks or sub.values or sub.services or sub.minus
+        or sub.exists or sub.subqueries
+        or any(exists_leaves(f) for f in sub.filters)
+        or any(exists_leaves(b.expr) for b in sub.binds)
+        or any(b.var in pattern_vars(sub.patterns) for b in sub.binds)
     )
 
 
@@ -1644,20 +1473,6 @@ def _add_order_sidecars(df: DataFrame, order_by) -> tuple[DataFrame, set[str]]:
         ).withColumn(f"__ord_{name}_n", b.getField("num"))
         added.add(name)
     return df, added
-
-
-def _split_block_filters(blk: GroupBlock):
-    """Partition a MINUS/EXISTS block's filters into (local, foreign):
-    local filters reference only vars the block's own patterns bind
-    (they evaluate inside ``execute_bgp``); foreign ones also touch
-    vars from the enclosing scope and need block-specific handling —
-    substitution (EXISTS) or unbound-NULL evaluation (MINUS)."""
-    bound = pattern_vars(blk.patterns)
-    for ob in blk.optional:
-        bound |= _block_vars(ob)
-    local = [f for f in blk.filters if f.vars() <= bound]
-    foreign = [f for f in blk.filters if not f.vars() <= bound]
-    return local, foreign
 
 
 def _agg_expr(a: Aggregate):
@@ -2007,33 +1822,12 @@ def _service_values_block(
 
 
 def _attach_any_labels(result: DataFrame, store, names: list[str]):
-    """Attach ``__{v}_flbl`` label columns for label-space filter
-    evaluation, preferring a BIND/VALUES ``__{v}_vlex`` sidecar (the
-    term may be dictionary-absent) over the id2term join. Returns
-    (df, attached-column-names)."""
-    from hbase_rdf_spark.plans.bgp import _attach_filter_labels
-
-    attached = []
-    for v in names:
-        if f"__{v}_flbl" in result.columns:
-            continue
-        if f"__{v}_vlex" in result.columns:
-            result = result.withColumn(f"__{v}_flbl", F.col(f"__{v}_vlex"))
-        else:
-            result = _attach_filter_labels(store, result, [v])
-        attached.append(f"__{v}_flbl")
-    return result, attached
-
-
-def _apply_deferred_filter(result: DataFrame, store, f) -> DataFrame:
-    """Apply a FILTER deferred past BIND/subquery var creation —
-    label-space expressions need their ``__{v}_flbl`` columns attached
-    first (a BIND var's lexical lives in its vlex sidecar)."""
-    lv = sorted(f.label_vars())
-    if not lv:
-        return result.filter(f.cond())
-    result, attached = _attach_any_labels(result, store, lv)
-    return result.filter(f.cond()).drop(*attached)
+    """Attach ``__{v}_flbl`` label columns for label-space evaluation
+    (``bgp._attach_filter_labels``: a vlex sidecar, else one id2term
+    join). Returns (df, attached-column-names)."""
+    attach = [v for v in names if f"__{v}_flbl" not in result.columns]
+    result = _attach_filter_labels(store, result, attach)
+    return result, [f"__{v}_flbl" for v in attach]
 
 
 def _apply_binds(
@@ -2177,31 +1971,21 @@ def _aggregate(result: DataFrame, store, q: Query):
     return _apply_postagg(grouped, store, q.postagg_binds, q.aggregates, gvars)
 
 
-def _query_scope_vars(sub: Query) -> set[str]:
-    """Every variable a group can bind: pattern vars, UNION branch
-    vars, OPTIONAL-nested vars, BIND targets, VALUES vars, subquery
-    projections. Used as the visible-var set (``out_names``) of a
-    full-algebra OPTIONAL group."""
-    names = pattern_vars(sub.patterns)
-    for blk in sub.optional:
-        names |= _block_vars(blk)
-    for chain in sub.union_blocks:
-        for br in chain:
-            names |= pattern_vars(br.patterns)
-            names |= set(getattr(br, "out_names", ()) or ())
-            names |= {b.var for b in getattr(br, "binds", ()) or ()}
-            for blk in br.optional:
-                names |= _block_vars(blk)
-    names |= {b.var for b in sub.binds}
-    for vb in sub.values:
+def _query_scope_vars(q: Query) -> set[str]:
+    """Every variable a group can bind: its patterns and BIND targets,
+    its OPTIONAL bodies and UNION branches (recursively), VALUES and
+    SERVICE vars, and subquery projections. MINUS and EXISTS bodies
+    bind nothing outside themselves."""
+    names = pattern_vars(q.patterns) | {b.var for b in q.binds}
+    for sub in q.optional + [br for chain in q.union_blocks for br in chain]:
+        names |= _query_scope_vars(sub)
+    for vb in q.values:
         names |= set(vb.vars)
-    for sb in sub.services:
+    for sb in q.services:
         names |= set(sb.vars_hint)
-    for sq in sub.subqueries:
+    for sq in q.subqueries:
         names |= set(_subquery_out_names(sq))
-    # __bn_* blank-node vars are non-projectable (§4.1.4); __ord_e*
-    # hidden ORDER BY expression binds are internal
-    return {n for n in names if not n.startswith("__")}
+    return names
 
 
 def _subquery_out_names(sub: Query) -> list[str]:
@@ -2216,11 +2000,10 @@ def _subquery_out_names(sub: Query) -> list[str]:
             a.alias[1:] for a in sub.aggregates
             if not a.alias.startswith("?__")
         ]
-    # SELECT *: every visible variable of the group (patterns,
-    # OPTIONAL blocks, UNION branches, BIND/VALUES vars, nested
-    # subquery projections), in sorted order for determinism;
-    # blank-node vars are non-projectable (SPARQL 1.1 §4.1.4)
-    names = _query_scope_vars(sub)
+    # SELECT *: every visible variable of the group, in sorted order
+    # for determinism; __bn_* blank-node vars are non-projectable
+    # (SPARQL 1.1 §4.1.4), __ord_e* hidden ORDER BY binds internal
+    names = {n for n in _query_scope_vars(sub) if not n.startswith("__")}
     if not names:
         raise SparqlSyntaxError("SELECT * subquery binds no variables")
     return sorted(names)
@@ -2233,10 +2016,8 @@ def _execute_subquery(store, sub: Query) -> DataFrame:
     outputs become kind-2 numeric structs (they render via the numeric
     fallback, e.g. COUNT → \"3.0\").
 
-    Surface: the full GroupGraphPattern algebra in the WHERE body —
-    BGP + FILTER + OPTIONAL, plus UNION / VALUES / BIND / MINUS /
-    FILTER [NOT] EXISTS / nested subqueries via ``_group_bindings``
-    (round 4) —, [DISTINCT], aggregates (incl.
+    Surface: the full GroupGraphPattern algebra in the WHERE body
+    (``_group_bindings``), [DISTINCT], aggregates (incl.
     label-space GROUP_CONCAT/SAMPLE → kind-1 structs with a lexical
     sidecar) with GROUP BY/HAVING, and ORDER BY … LIMIT/OFFSET top-k
     slices. Sort keys are type-aware (round 4): an aggregate alias
@@ -2254,21 +2035,7 @@ def _execute_subquery(store, sub: Query) -> DataFrame:
             "ORDER BY inside a subquery requires LIMIT/OFFSET"
         )
 
-    if (sub.union_blocks or sub.values or sub.services
-            or sub.minus or sub.exists
-            or sub.binds or sub.subqueries):
-        # full-algebra WHERE body (UNION / VALUES / BIND / MINUS /
-        # FILTER EXISTS / nested subqueries): the complete
-        # GroupGraphPattern evaluator; bag semantics inside — DISTINCT
-        # applies to the projection below, per spec
-        res = _group_bindings(store, sub, False)
-    else:
-        _attach_bind_fns(store, sub.optional)
-        res = execute_bgp(
-            store, sub.patterns, filters=list(sub.filters),
-            optional=list(sub.optional),
-            dedup=sub.distinct and not sub.aggregates,
-        )
+    res = _group_bindings(store, sub, sub.distinct and not sub.aggregates)
     pa_scalars: list = []
     if sub.aggregates or sub.group_by:
         res, pa_scalars, _ = _aggregate(res, store, sub)
@@ -2343,48 +2110,44 @@ def _execute_subquery(store, sub: Query) -> DataFrame:
 
 def _reject_template_paths(patterns: list) -> None:
     """A CONSTRUCT template is a set of TRIPLES: a property-path
-    predicate (Path node or +/*/? modifier) would otherwise render as
-    its repr or silently drop the modifier — fabricated triples."""
+    predicate would otherwise render as its repr — fabricated
+    triples."""
     for p in patterns:
-        if isinstance(p.p, Path) or getattr(p, "path_mod", None):
+        if isinstance(p.p, Path):
             raise SparqlSyntaxError(
                 "property paths are not allowed in a CONSTRUCT template"
             )
 
 
 def _bind_scope_check(q: Query) -> None:
-    """Parse-level guards that make post-hoc BIND evaluation exact."""
+    """Guards that make post-hoc BIND evaluation exact. A spliced UNION
+    branch's BINDs extend the branch combination like the group's own
+    (``_combo_frame``), so they are checked here too."""
     pat_scope = pattern_vars(q.patterns)
-    scope = set(pat_scope)
-    for blk in q.optional:
-        scope |= _block_vars(blk)
-    branch_binds: list[tuple[object, set[str]]] = []  # (bind, branch vars)
+    # vars bound by anything other than the group's own patterns and
+    # BINDs
+    other = _query_scope_vars(
+        _dc_replace(q, patterns=[], binds=[], union_blocks=[])
+    )
+    branch_binds: list = []
     for chain in q.union_blocks:
         for br in chain:
-            bvars = pattern_vars(br.patterns) | set(
-                getattr(br, "out_names", ())
-            )
-            for blk in br.optional:
-                bvars |= _block_vars(blk)
-            scope |= bvars
-            for b in getattr(br, "binds", []):
-                branch_binds.append((b, bvars))
-    for vb in q.values:
-        scope |= set(vb.vars)
-    for sub in q.subqueries:
-        scope |= set(_subquery_out_names(sub))
-    # branch-local BINDs: a collision with any PATTERN-bound var (own
-    # branch, sibling branch, or the enclosing group) would silently
-    # overwrite the column in _combo_result — forbid; two branches
+            if _splices(br):
+                branch_binds += br.binds
+                br = _dc_replace(br, binds=[])
+            other |= _query_scope_vars(br)
+    scope = pat_scope | other
+    # a branch BIND colliding with a var bound by a pattern of the
+    # group or of any branch would overwrite that column; two branches
     # binding the SAME fresh var is legal (the branch-tagging idiom)
-    for b, bvars in branch_binds:
+    for b in branch_binds:
         if b.var in scope:
             raise SparqlSyntaxError(
                 f"BIND ?{b.var} inside a UNION branch would rebind a "
                 "variable already bound by a graph pattern"
             )
     q_bind_vars = {b.var for b in q.binds}
-    for b, _ in branch_binds:
+    for b in branch_binds:
         if b.var in q_bind_vars:
             raise SparqlSyntaxError(
                 f"BIND ?{b.var} is assigned both inside a UNION branch "
@@ -2398,13 +2161,12 @@ def _bind_scope_check(q: Query) -> None:
             # Anything else (a pattern before the BIND, an OPTIONAL /
             # UNION / VALUES / subquery var, even one that ALSO
             # appears in a later pattern) is a rebinding error.
-            at = getattr(b, "at", None)
             forward_ok = (
-                at is not None
+                b.at is not None
                 and b.var in pat_scope
-                and b.var not in _nonpattern_scope(q)
+                and b.var not in other
                 and all(
-                    i >= at
+                    i >= b.at
                     for i, p in enumerate(q.patterns)
                     if b.var in pattern_vars([p])
                 )
@@ -2422,29 +2184,6 @@ def _bind_scope_check(q: Query) -> None:
                 f"BIND expression uses out-of-scope variable(s) {missing}"
             )
         scope.add(b.var)  # later BINDs may chain on earlier ones
-
-
-def _nonpattern_scope(q: Query) -> set[str]:
-    """Vars a group binds through anything OTHER than its own required
-    patterns: OPTIONAL blocks, UNION branches, VALUES, subqueries.
-    A BIND var colliding with one of these cannot take the
-    post-Extend-join path (those stages evaluate around the BIND in
-    ways a pattern split can't reorder)."""
-    out: set[str] = set()
-    for blk in q.optional:
-        out |= _block_vars(blk)
-    for chain in q.union_blocks:
-        for br in chain:
-            out |= pattern_vars(br.patterns) | set(
-                getattr(br, "out_names", ()) or ()
-            )
-            for blk in br.optional:
-                out |= _block_vars(blk)
-    for vb in q.values:
-        out |= set(vb.vars)
-    for sub in q.subqueries:
-        out |= set(_subquery_out_names(sub))
-    return out
 
 
 def _post_bind_split(q: Query) -> tuple[Query, list, list]:
@@ -2466,9 +2205,7 @@ def _post_bind_split(q: Query) -> tuple[Query, list, list]:
     move with it, keeping the pre-BGP free of induced cross joins;
     patterns that bind a BIND input var always stay pre (the Extend
     must see them)."""
-    bind_vars = {
-        b.var for b in q.binds if getattr(b, "at", None) is not None
-    }
+    bind_vars = {b.var for b in q.binds if b.at is not None}
     if not bind_vars or not q.patterns:
         return q, [], []
     pv = [pattern_vars([p]) for p in q.patterns]
@@ -2518,155 +2255,223 @@ def _post_bind_split(q: Query) -> tuple[Query, list, list]:
     return q, post_pats, post_filts
 
 
-def _combo_result(store, q: Query, combo, dedup: bool) -> DataFrame:
-    """Evaluate one branch combination of the query's UNION chains.
-
-    Branch-local BINDs extend the branch's solutions after its patterns
-    (the branch-tagging idiom); filters over BIND vars are deferred
-    until the assignment exists."""
-    pats = list(q.patterns)
-    filts = list(q.filters)
-    opts = list(q.optional)
-    binds = []
-    subs = []
-    grps = []
-    for b in combo:
-        pats += b.patterns
-        filts += b.filters
-        opts += b.optional
-        binds += getattr(b, "binds", [])
-        if getattr(b, "subquery", None) is not None:
-            subs.append(b)
-        if getattr(b, "group", None) is not None:
-            grps.append(b)
-    bind_vars = {bd.var for bd in binds}
-    sub_vars = {n for b in subs + grps for n in b.out_names}
-    scope = pattern_vars(pats) | bind_vars | sub_vars
-    for blk in opts:
-        scope |= _block_vars(blk)
-    out_of_scope = [f for f in filts if not f.vars() <= scope]
-    deferred = [
-        f
-        for f in filts
-        if f.vars() & (bind_vars | sub_vars) and f.vars() <= scope
-    ]
-    applicable = [
-        f for f in filts if f not in out_of_scope and f not in deferred
-    ]
-    result = None
-    if pats or opts:
-        result = execute_bgp(
-            store, pats, filters=applicable, optional=opts, dedup=dedup
-        )
-    elif not subs and not grps:
-        # pattern-free branch (pure BIND tagging): the unit solution —
-        # one row, no columns — which the BINDs below then extend
-        result = store.spark.range(1).drop("id")
-    # vars an OPTIONAL block in this combo can leave NULL on the
-    # result side — a subquery/group join over one needs SPARQL
-    # compatibility semantics, as does a step that can itself emit
-    # unbound shared vars
-    nullable = set()
-    for blk in opts:
-        nullable |= _block_vars(blk)
-    for b in subs + grps:
-        sub_q = b.subquery if getattr(b, "subquery", None) is not None else b.group
-        sdf = (
-            _execute_subquery(store, b.subquery)
-            if getattr(b, "subquery", None) is not None
-            else _group_bindings(store, b.group, dedup)
-        )
-        if result is None:
-            result = sdf
-            continue
-        shared = [c for c in sdf.columns if c in result.columns]
-        step_null = _nullable_vars(sub_q) & set(sdf.columns)
-        if not shared:
-            result = result.crossJoin(sdf)
-        elif set(shared) & (step_null | nullable):
-            result = _merge_join(result, sdf, shared, "inner")
-        else:
-            result = result.join(sdf, on=shared, how="inner")
-        nullable |= step_null
-    if binds:
-        result = _apply_binds(result, store, binds)
-    for f in deferred:
-        result = _apply_deferred_filter(result, store, f)
-    if out_of_scope:
-        # SPARQL: a filter var unbound in this branch is a type error →
-        # every solution of the branch is dropped; keep the schema
-        return result.limit(0)
-    return result
-
-
 def _nullable_vars(q: Query) -> set:
     """Which of the group's vars can come back UNBOUND: OPTIONAL
-    misses, VALUES UNDEF cells, union branches of differing scope,
-    BIND's error→unbound rule, or a nested subquery projecting such a
-    var. Joins keyed on one of these need SPARQL compatibility
-    semantics (``_merge_join``) instead of plain column equality. Lets joins keep the hash fast
-    path when the potentially-unbound vars are not among the join
-    keys (e.g. an OPTIONAL block whose BIND var is new — only the
-    always-bound pattern var is shared)."""
-    out: set = set()
+    misses, VALUES UNDEF cells, SERVICE cells, union branches of
+    differing scope, BIND's error→unbound rule, or a nested group or
+    subquery projecting such a var. Joins keyed on one of these need
+    SPARQL compatibility semantics (``_merge_join``) instead of plain
+    column equality; the rest keep the hash fast path."""
+    out = {b.var for b in q.binds}
     for blk in q.optional:
-        out |= _block_vars(blk)
+        out |= _query_scope_vars(blk)
     for vb in q.values:
         out |= set(vb.vars)
     for sb in q.services:
         out |= set(sb.vars_hint)
-    out |= {b.var for b in q.binds}
     for chain in q.union_blocks:
-        sets = []
+        scopes = [_query_scope_vars(br) for br in chain]
+        # a var missing from some branch is NULL in its rows
+        out |= set().union(*scopes) - set.intersection(*scopes)
         for br in chain:
-            bv = pattern_vars(br.patterns) | set(
-                getattr(br, "out_names", ()) or ()
-            ) | {b.var for b in getattr(br, "binds", ()) or ()}
-            for blk in br.optional:
-                out |= _block_vars(blk)
-            if getattr(br, "group", None) is not None:
-                out |= _nullable_vars(br.group)
-            sets.append(bv)
-        if len(sets) > 1:
-            # a var missing from some branch is NULL in its rows
-            out |= set().union(*sets) - set.intersection(*sets)
-    for s in q.subqueries:
-        out |= _nullable_vars(s) & set(_subquery_out_names(s))
+            out |= _nullable_vars(br)
+    for sq in q.subqueries:
+        out |= _nullable_vars(sq) & set(_subquery_out_names(sq))
     return out
 
 
-def _attach_bind_fns(store, blocks) -> None:
-    """Give every OPTIONAL block carrying BINDs a closure that applies
-    them (bgp.py cannot import this layer); recurses into nested blocks
-    and the optional lists of UNION branches."""
+#: the binding-struct type of an unbound variable
+_UNBOUND = "struct<kind:tinyint,id:bigint,num:double>"
+
+
+def _apply_scoped(store, df: DataFrame, filters: list, scope) -> DataFrame:
+    """Apply FILTERs over a frame that may lack some of their vars. A
+    missing var in ``scope`` (None: any var) is unbound — a NULL
+    binding struct while the filters run, so SQL three-valued logic
+    gives SPARQL's error semantics (a comparison drops the row,
+    ``!BOUND`` holds). A missing var outside ``scope`` raises."""
+    if not filters:
+        return df
+    missing = sorted(set().union(*(f.vars() for f in filters)) - set(df.columns))
+    stray = [v for v in missing if scope is not None and v not in scope]
+    if stray:
+        raise ValueError(
+            f"FILTER references variables never bound by the pattern: {stray}"
+        )
+    if missing:
+        df = df.select("*", *[F.lit(None).cast(_UNBOUND).alias(v) for v in missing])
+    return _apply_filters(store, df, filters).drop(*missing)
+
+
+def _shared(result: DataFrame, step: DataFrame) -> list:
+    """The vars two solution frames share (lexical sidecars excluded)."""
+    return [
+        c for c in step.columns
+        if c in result.columns and not (c.startswith("__") and c.endswith("_vlex"))
+    ]
+
+
+def _join(result: DataFrame, step: DataFrame, how: str, nullable: set) -> DataFrame:
+    """Join a step's solutions onto the result ("inner" or "left"): a
+    cross join with no shared var, the compatibility merge join when a
+    shared var may be unbound on either side (or both carry its
+    lexical sidecar), otherwise an equi join."""
+    shared = _shared(result, step)
+    if not shared:
+        if how == "inner":
+            return result.crossJoin(step)
+        return result.join(step, F.lit(True), how)
+    if set(shared) & nullable or any(
+        f"__{v}_vlex" in result.columns and f"__{v}_vlex" in step.columns
+        for v in shared
+    ):
+        return _merge_join(result, step, shared, how)
+    return result.join(step, on=shared, how=how)
+
+
+def _nested_step(store, blk: Query, dedup: bool) -> tuple[DataFrame, list]:
+    """Solutions of a nested OPTIONAL / MINUS / EXISTS group, with its
+    top-level FILTERs that read variables the group cannot bind split
+    off first. Returns ``(solutions, split filters)``: OPTIONAL and
+    EXISTS evaluate those filters as part of the join condition, MINUS
+    with the outer variables unbound (no substitution)."""
+    inner = _query_scope_vars(blk)
+    outer = [f for f in blk.filters if not f.vars() <= inner]
+    if outer:
+        blk = _dc_replace(blk, filters=[f for f in blk.filters if f.vars() <= inner])
+    return _group_bindings(store, blk, dedup), outer
+
+
+def _bound_somewhere(filters: list, result: DataFrame, step: DataFrame) -> None:
+    """A split-off filter of a nested group must read only vars the
+    outer solutions or the group bind."""
+    missing = set().union(*(f.vars() for f in filters)) - set(
+        result.columns) - set(step.columns)
+    if missing:
+        raise SparqlSyntaxError(
+            f"FILTER references variables bound nowhere: {sorted(missing)}"
+        )
+
+
+def _optional_joins(
+    store, result: DataFrame, blocks: list, nullable: set, dedup: bool
+) -> tuple[DataFrame, set]:
+    """SPARQL LeftJoin of each OPTIONAL group in turn: the whole group
+    is evaluated as a unit (so a partial match binds nothing), then
+    left-joined onto the solutions. §8.2 LeftJoin(Ω1, Ω2, expr): a
+    FILTER inside OPTIONAL that reads outer-bound vars is part of the
+    left-join CONDITION, evaluated on the merged solution (the
+    reference gets this from stock ARQ's OpLeftJoin expression;
+    HBaseTransformFilterPlacement.java:359-369). Returns the solutions
+    and the vars now possibly unbound on them."""
     for blk in blocks:
-        if (getattr(blk, "subquery", None) is not None
-                and getattr(blk, "step_fn", None) is None):
-            blk.step_fn = (
-                lambda sq: lambda: _execute_subquery(store, sq)
-            )(blk.subquery)
-            blk.step_nullable = tuple(
-                _nullable_vars(blk.subquery)
-                & set(_subquery_out_names(blk.subquery))
+        step, outer = _nested_step(store, blk, dedup)
+        step_null = nullable | _nullable_vars(blk)
+        if outer:
+            _bound_somewhere(outer, result, step)
+            shared = _shared(result, step)
+            result = _conditional_left_join(
+                store, result, step, shared, outer,
+                nullable=bool(set(shared) & step_null),
             )
-        if (getattr(blk, "group", None) is not None
-                and getattr(blk, "step_fn", None) is None):
-            blk.step_nullable = tuple(_nullable_vars(blk.group))
-            # full-algebra OPTIONAL group (VALUES/MINUS/EXISTS/mixed
-            # subqueries): the block's solutions come from the complete
-            # GroupGraphPattern evaluator; bag semantics inside the
-            # block (dedup=False) — LeftJoin preserves multiplicities
-            blk.step_fn = (
-                lambda g: lambda: _group_bindings(store, g, False)
-            )(blk.group)
-        if getattr(blk, "binds", None) and getattr(blk, "bind_fn", None) is None:
-            blk.bind_fn = (
-                lambda b: lambda df: _apply_binds(df, store, b.binds)
-            )(blk)
-        _attach_bind_fns(store, blk.optional)
-        for chain in getattr(blk, "union", ()) or ():
-            for br in chain:
-                _attach_bind_fns(store, br.optional)
+        else:
+            result = _join(result, step, "left", step_null)
+        nullable = nullable | _query_scope_vars(blk)
+    return result, nullable
+
+
+def _values_join(result: DataFrame, store, vb: ValuesBlock) -> DataFrame:
+    """VALUES: inline solution table joined on its shared vars (new vars
+    extend the bindings; no shared vars = cartesian, per spec). The
+    join is SPARQL compatibility, not equality: a shared var matches
+    when EITHER side is unbound (UNDEF cell / OPTIONAL null) or both
+    agree, and the merged solution takes the bound side. The VALUES
+    table is a handful of inline rows, so the non-equi condition costs
+    one broadcast nested-loop pass — no scale concern. SERVICE results
+    join the same way: the remote solution sequence IS a values table
+    (capped by the endpoint, fetched once on the driver)."""
+    vdf = _values_df(store, vb)
+    shared = [v for v in vb.vars if v in result.columns]
+    if not shared:
+        return result.crossJoin(F.broadcast(vdf))
+    for v in shared:
+        vdf = vdf.withColumnRenamed(v, f"__{v}_vv").withColumnRenamed(
+            f"__{v}_vlex", f"__{v}_vvlex"
+        )
+    cond = F.lit(True)
+    for v in shared:
+        vv = F.col(f"__{v}_vv")
+        cond = cond & (vv.isNull() | F.col(v).isNull() | (F.col(v) == vv))
+    result = result.join(F.broadcast(vdf), cond, "inner")
+    for v in shared:
+        result = result.withColumn(
+            v, F.coalesce(F.col(v), F.col(f"__{v}_vv"))
+        ).drop(f"__{v}_vv")
+        # merge the lexical sidecars: after the compatibility filter,
+        # bound sides agree, so a plain coalesce always carries the
+        # winner's lexical form
+        if f"__{v}_vlex" in result.columns:
+            result = result.withColumn(
+                f"__{v}_vlex",
+                F.coalesce(F.col(f"__{v}_vlex"), F.col(f"__{v}_vvlex")),
+            ).drop(f"__{v}_vvlex")
+        else:
+            result = result.withColumnRenamed(f"__{v}_vvlex", f"__{v}_vlex")
+    return result
+
+
+def _combo_frame(
+    store, q: Query, combo: tuple, tables: list, scope: set, dedup: bool
+) -> DataFrame:
+    """One UNION branch combination of a group (the whole group when it
+    has no UNION), before the group's own BINDs: the group's patterns
+    and every spliced branch's in one BGP (UNION distributes over the
+    group's patterns); its OPTIONALs; the other branches' groups, the
+    subqueries and the VALUES/SERVICE tables joined on; the spliced
+    branches' BINDs; the FILTERs the BGP could not answer.
+
+    OPTIONAL left-joins onto the BGP before the other joins, whatever
+    their textual order; a group with no pattern has nothing else to
+    left-join onto, so there the OPTIONALs come last. A FILTER var the
+    combination does not bind is unbound in it (``_apply_scoped``)."""
+    spliced = [br for br in combo if _splices(br)]
+    pats = q.patterns + [p for br in spliced for p in br.patterns]
+    filts = q.filters + [f for br in spliced for f in br.filters]
+    opts = q.optional + [o for br in spliced for o in br.optional]
+    pv = pattern_vars(pats)
+    now = [f for f in filts if pats and f.vars() <= pv]
+    later = [f for f in filts if not (pats and f.vars() <= pv)]
+    result = None
+    nullable: set = set()
+    if pats:
+        result = execute_bgp(store, pats, now, dedup)
+        result, nullable = _optional_joins(store, result, opts, nullable, dedup)
+        opts = []
+    steps = [
+        (_group_bindings(store, br, dedup), _nullable_vars(br))
+        for br in combo if not _splices(br)
+    ] + [
+        (_execute_subquery(store, sq), _nullable_vars(sq) & set(_subquery_out_names(sq)))
+        for sq in q.subqueries
+    ]
+    for step, step_null in steps:
+        result = (
+            step if result is None
+            else _join(result, step, "inner", nullable | step_null)
+        )
+        nullable |= step_null
+    if result is None:
+        # the unit solution — one row, no columns — which the VALUES
+        # tables, OPTIONALs and BINDs below extend
+        result = store.spark.range(1).drop("id")
+    for vb in tables:
+        result = _values_join(result, store, vb)
+        nullable |= set(vb.vars)
+    result, _ = _optional_joins(store, result, opts, nullable, dedup)
+    binds = [b for br in spliced for b in br.binds]
+    if binds:
+        result = _apply_binds(result, store, binds)
+    return _apply_scoped(store, result, later, scope)
 
 
 def _compat_join(
@@ -2740,357 +2545,136 @@ def _nl_compat(
 
 
 def _group_bindings(store, q: Query, dedup: bool) -> DataFrame:
-    """Id-space solutions of one GroupGraphPattern: patterns, OPTIONAL
-    blocks, UNION chains, subqueries, VALUES, BIND, MINUS and FILTER
-    [NOT] EXISTS — the full group algebra before the solution
-    modifiers (aggregation / DISTINCT / ORDER / LIMIT) and before
-    materialization. ``execute`` runs it on the WHERE clause; a
-    full-algebra OPTIONAL group (``OptionalBlock.group``) closes over
-    it as the block's ``step_fn``, which is what lets VALUES / MINUS /
-    EXISTS / mixed subqueries appear inside OPTIONAL."""
-    _attach_bind_fns(store, q.optional)
-    for chain in q.union_blocks:
-        for br in chain:
-            _attach_bind_fns(store, br.optional)
-
+    """Id-space solutions of one GroupGraphPattern — the one group
+    evaluator, for the WHERE clause and every nested group (OPTIONAL
+    body, UNION branch, MINUS and EXISTS body, subquery body). Stages:
+    each UNION branch combination's frame (``_combo_frame``: BGP,
+    nested groups, subqueries, VALUES/SERVICE, OPTIONAL), unioned; the
+    group's BINDs and the patterns that consume them; the FILTERs over
+    those; MINUS; FILTER [NOT] EXISTS. Solution modifiers and
+    materialization come after, in ``execute`` /
+    ``_execute_subquery``."""
+    # a spliced branch's FILTER over a var nothing binds is unbound
+    # there (it drops that branch's rows) rather than an error
+    scope = _query_scope_vars(q) | {
+        v for chain in q.union_blocks for br in chain if _splices(br)
+        for f in br.filters for v in f.vars()
+    }
+    nullable = _nullable_vars(q)
     # filters whose expression tree contains an EXISTS{…} leaf need
-    # marker columns that exist only after every other stage — pull
-    # them out before anything (incl. execute_bgp pushdown) sees them
+    # marker columns that exist only after every other stage
     marker_filts = [f for f in q.filters if exists_leaves(f)]
     if marker_filts:
-        mset = {id(f) for f in marker_filts}
         q = _dc_replace(
-            q, filters=[f for f in q.filters if id(f) not in mset]
+            q, filters=[f for f in q.filters if not exists_leaves(f)]
         )
-
-    # filters over vars produced AFTER the pattern joins (BIND targets,
-    # subquery projections) are deferred until those vars exist
-    deferred: list = []
-    post_vars: set = set()
-    for sub in q.subqueries:
-        post_vars |= set(_subquery_out_names(sub))
-    # VALUES / SERVICE vars bind only once their solution tables join
-    # in — any filter over them defers to after that join (previously
-    # such a filter raised "never bound by the pattern"; SERVICE's
-    # vars_hint is a superset of head.vars, so no such filter reaches
-    # execute_bgp)
-    for vb in q.values:
-        post_vars |= set(vb.vars)
-    for sb in q.services:
-        post_vars |= set(sb.vars_hint)
-    has_branch_binds = any(
-        getattr(br, "binds", None)
-        for chain in q.union_blocks
-        for br in chain
-    )
     post_pats: list = []
     post_filts: list = []
-    if q.binds or has_branch_binds:
+    if q.binds or any(
+        br.binds for chain in q.union_blocks for br in chain if _splices(br)
+    ):
         _bind_scope_check(q)
+    if q.binds:
         # patterns consuming a BIND var evaluate after the Extend —
         # pull them (and their filters) out; they join back after
         # _apply_binds below
         q, post_pats, post_filts = _post_bind_split(q)
-        post_vars |= {b.var for b in q.binds}
-        if post_pats:
-            post_vars |= pattern_vars(post_pats)
-    if post_vars:
-        # label-space deferred filters read the BIND var's vlex sidecar
-        # (or an id2term join for id-space subquery vars) — see
-        # _apply_deferred_filter
-        deferred = [f for f in q.filters if f.vars() & post_vars]
-        if deferred:
-            q = _dc_replace(
-                q, filters=[f for f in q.filters if f not in deferred]
-            )
+    # filters over BIND targets and the consuming patterns' vars wait
+    # until those exist
+    late = {b.var for b in q.binds} | pattern_vars(post_pats)
+    deferred = [f for f in q.filters if f.vars() & late]
+    if deferred:
+        q = _dc_replace(q, filters=[f for f in q.filters if not f.vars() & late])
 
-    if q.union_blocks:
-        combos = list(itertools.product(*q.union_blocks))
-        results = [_combo_result(store, q, combo, dedup) for combo in combos]
-        result = _reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), results
-        )
-    elif not q.patterns and not q.optional and q.subqueries:
-        # outer group is ONLY subqueries: seed from the first, join the
-        # rest; any non-deferred filter has nothing to bind against
-        if q.filters:
-            raise SparqlSyntaxError(
-                "FILTER over variables not bound by any pattern"
-            )
-        result = None
-    elif not q.patterns and not q.optional and (
-        q.values or q.services or q.binds or q.minus or q.exists
-        or marker_filts
-    ):
-        # pattern-free group (e.g. `SELECT ?x WHERE { VALUES ?x {…} }`
-        # or a group whose only content is MINUS / FILTER EXISTS —
-        # both valid SPARQL): seed the unit solution — one row, no
-        # columns — which the VALUES join / BINDs below extend and the
-        # MINUS/EXISTS stages prune (ADVICE r2; round 4 for the
-        # MINUS/EXISTS-only shape, reachable through full-algebra
-        # groups). Any plain filter here references vars the
-        # VALUES/BIND stages bind, so defer them all.
-        if q.filters:
-            # identity dedup — filter objects are unhashable dataclasses
-            have = {id(f) for f in deferred}
-            deferred = list(deferred) + [
-                f for f in q.filters if id(f) not in have
-            ]
-        result = store.spark.range(1).drop("id")
-    else:
-        result = execute_bgp(
-            store, q.patterns, filters=list(q.filters),
-            optional=list(q.optional), dedup=dedup,
-        )
-
-    # subqueries: bottom-up id-space evaluation, joined on shared vars
-    # (none shared = cartesian, per SPARQL join semantics; a side that
-    # can leave shared vars unbound — OPTIONAL/UNION on the group
-    # side, OPTIONAL/UNION/VALUES/BIND inside the subquery — takes
-    # the compatibility merge join)
-    group_nullable = _nullable_vars(q)
-    for sub in q.subqueries:
-        sdf = _execute_subquery(store, sub)
-        if result is None:
-            result = sdf
-            continue
-        shared = [c for c in sdf.columns if c in result.columns]
-        step_null = _nullable_vars(sub) & set(sdf.columns)
-        if not shared:
-            result = result.crossJoin(sdf)
-        elif set(shared) & (step_null | group_nullable):
-            result = _merge_join(result, sdf, shared, "inner")
-        else:
-            result = result.join(sdf, on=shared, how="inner")
-
-    # VALUES: inline solution table joined on its shared vars (new vars
-    # extend the bindings; no shared vars = cartesian, per spec). The
-    # join is SPARQL compatibility, not equality: a shared var matches
-    # when EITHER side is unbound (UNDEF cell / OPTIONAL null) or both
-    # agree, and the merged solution takes the bound side. The VALUES
-    # table is a handful of inline rows, so the non-equi condition
-    # costs one broadcast nested-loop pass — no scale concern.
-    # SERVICE blocks join identically: the remote solution sequence IS
-    # a values table (capped by the endpoint, fetched once on the
-    # driver); SILENT failures collapse to the unit solution (None).
-    service_tables = [
+    # SILENT SERVICE failures collapse to the unit solution (None)
+    tables = list(q.values) + [
         vb
         for vb in (_service_values_block(sb, q.values) for sb in q.services)
         if vb is not None
     ]
-    for vb in itertools.chain(q.values, service_tables):
-        vdf = _values_df(store, vb)
-        shared = [v for v in vb.vars if v in result.columns]
-        if not shared:
-            result = result.crossJoin(F.broadcast(vdf))
-            continue
-        for v in shared:
-            vdf = vdf.withColumnRenamed(v, f"__{v}_vv").withColumnRenamed(
-                f"__{v}_vlex", f"__{v}_vvlex"
-            )
-        cond = F.lit(True)
-        for v in shared:
-            vv = F.col(f"__{v}_vv")
-            cond = cond & (vv.isNull() | F.col(v).isNull() | (F.col(v) == vv))
-        result = result.join(F.broadcast(vdf), cond, "inner")
-        for v in shared:
-            result = result.withColumn(
-                v, F.coalesce(F.col(v), F.col(f"__{v}_vv"))
-            ).drop(f"__{v}_vv")
-            # merge the lexical sidecars: after the compatibility
-            # filter, bound sides agree, so a plain coalesce always
-            # carries the winner's lexical form
-            if f"__{v}_vlex" in result.columns:
-                result = result.withColumn(
-                    f"__{v}_vlex",
-                    F.coalesce(F.col(f"__{v}_vlex"), F.col(f"__{v}_vvlex")),
-                ).drop(f"__{v}_vvlex")
-            else:
-                result = result.withColumnRenamed(f"__{v}_vvlex", f"__{v}_vlex")
+    result = _reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [
+            _combo_frame(store, q, combo, tables, scope, dedup)
+            for combo in itertools.product(*q.union_blocks)
+        ],
+    )
 
-    # BIND: extend each solution (post-hoc evaluation is exact —
-    # _bind_scope_check / _post_bind_split guarantee every pattern
-    # still in q.patterns predates the BINDs); patterns that CONSUME a
-    # BIND var join back here, compatibility semantics because an
-    # error→unbound BIND value matches every post solution (§8.3);
-    # deferred filters apply once BIND / subquery / post-pattern vars
-    # exist
     # EXISTS leaves inside BIND values / IF conditions need their
     # marker columns BEFORE the binds evaluate
     bind_exm = [l for b in q.binds for l in exists_leaves(b.expr)]
-    if bind_exm:
+    targets = {b.var for b in q.binds}
+    for ex in bind_exm:
         # markers attach BEFORE the bind stage, so a block correlated
         # through a var that this group's own BINDs produce would see
         # it unbound — reject rather than mis-evaluate
-        targets = {b.var for b in q.binds}
-        for ex in bind_exm:
-            blk = ex.block
-            scope = (
-                set(blk.out_names or ())
-                if getattr(blk, "group", None) is not None
-                else set(pattern_vars(blk.patterns))
+        clash = sorted(_query_scope_vars(ex.block) & targets)
+        if clash:
+            raise SparqlSyntaxError(
+                "EXISTS inside BIND may not reference variables "
+                f"bound in the same group: {clash}"
             )
-            if scope & targets:
-                raise SparqlSyntaxError(
-                    "EXISTS inside BIND may not reference variables "
-                    f"bound in the same group: {sorted(scope & targets)}"
-                )
-    for ex in bind_exm:
-        result = _attach_exists_marker(
-            store, result, ex,
-            bool(q.optional or q.union_blocks or q.values
-                 or q.services or q.subqueries),
-        )
+        result = _attach_exists_marker(store, result, ex, nullable)
     if q.binds:
         result = _apply_binds(result, store, q.binds)
     if bind_exm:
         result = result.drop(*[ex.marker for ex in bind_exm])
     if post_pats:
         pdf = execute_bgp(store, post_pats, filters=post_filts, dedup=dedup)
-        shared = [c for c in pdf.columns if c in result.columns]
         # compatibility because an error→unbound BIND value matches
         # every post solution; _merge_join's quadrant decomposition
         # keeps the all-bound bulk on the hash path
-        result = _merge_join(result, pdf, shared, "inner")
-    for f in deferred:
-        result = _apply_deferred_filter(result, store, f)
-
-    # MINUS / EXISTS compatibility is defined over commonly BOUND vars
-    # (SPARQL 1.1 §8.3): an unbound (NULL) shared var never disqualifies
-    # a match. Plain column-equality joins get that wrong as soon as the
-    # outer group can produce unbound vars — NULL == x is NULL, so a
-    # solution the spec says to remove survives (ADVICE r2). The
-    # null-tolerant condition costs a nested-loop join, so it is used
-    # only when unbound shared vars are actually possible; the common
-    # all-bound case keeps the hash anti/semi join.
-    may_unbound = bool(
-        q.optional or q.union_blocks or q.values or q.services
-        or q.subqueries or q.binds
-    )
+        result = _merge_join(result, pdf, _shared(result, pdf), "inner")
+    result = _apply_scoped(store, result, deferred, scope)
 
     # MINUS: remove solutions compatible with the block on shared vars
     # (disjoint domains remove nothing, per spec); removal additionally
-    # requires a non-empty bound overlap — dom(μ)∩dom(μ′) ≠ ∅.
+    # requires a non-empty bound overlap — dom(μ)∩dom(μ′) ≠ ∅. MINUS
+    # evaluates its group WITHOUT substitution, so a block filter var
+    # bound only outside the block is simply UNBOUND inside it. MINUS /
+    # EXISTS compatibility is defined over commonly BOUND vars (SPARQL
+    # 1.1 §8.3): a plain equality join gets that wrong when a shared
+    # var can be unbound, so those take the null-tolerant join, and
+    # the all-bound case keeps the hash anti/semi join.
     for blk in q.minus:
-        if getattr(blk, "group", None) is not None:
-            # full-algebra MINUS block (UNION chain, VALUES, nested
-            # MINUS/EXISTS, subqueries): the complete group evaluator;
-            # a filter over vars bound only outside the block raises
-            # inside it (correlated full-algebra MINUS is out of scope)
-            step, foreign = _group_bindings(store, blk.group, True), []
-        else:
-            local, foreign = _split_block_filters(blk)
-            _attach_bind_fns(store, blk.optional)
-            step = execute_bgp(
-                store, blk.patterns, filters=local,
-                optional=blk.optional, dedup=True,
+        step, outer = _nested_step(store, blk, True)
+        step = _apply_scoped(store, step, outer, None)
+        shared = _shared(result, step)
+        if not shared:
+            continue
+        if set(shared) & (nullable | _nullable_vars(blk)):
+            result = _compat_join(
+                result, step, shared, "left_anti", require_overlap=True
             )
-        # spec: MINUS evaluates its pattern WITHOUT substitution, so a
-        # filter var bound only outside the block is simply UNBOUND
-        # inside it. Materializing those vars as NULL struct columns
-        # makes SQL three-valued logic reproduce the spec exactly:
-        # comparisons → NULL → row dropped (type error → false), while
-        # !bound(?outer) is genuinely true.
-        if foreign:
-            nulled: list[str] = []
-            for f in foreign:
-                for v in sorted(f.vars() - set(step.columns)):
-                    step = step.withColumn(
-                        v, F.lit(None).cast(
-                            "struct<kind:tinyint,id:bigint,num:double>"
-                        )
-                    )
-                    nulled.append(v)
-                step = _apply_filter(store, step, f)
-            step = step.drop(*nulled)
-        shared = [c for c in step.columns if c in result.columns]
-        if shared:
-            if may_unbound or blk.optional:
-                result = _compat_join(
-                    result, step, shared, "left_anti", require_overlap=True
-                )
-            else:
-                result = result.join(step, on=shared, how="left_anti")
+        else:
+            result = result.join(step, on=shared, how="left_anti")
 
     # FILTER [NOT] EXISTS: correlated existence via semi/anti join;
     # uncorrelated blocks collapse to a global emptiness test. EXISTS
-    # uses SUBSTITUTION semantics (unlike MINUS): a block filter may
-    # reference outer vars, and it then becomes part of the join
-    # condition — shared-var equality plus the filter predicates, with
-    # the block's copies of shared vars renamed out of the way so each
-    # unqualified column name resolves to exactly one side.
+    # uses SUBSTITUTION semantics (unlike MINUS): a block filter that
+    # reads outer vars becomes part of the join condition.
     for positive, blk in q.exists:
-        if getattr(blk, "group", None) is not None:
-            # full-algebra EXISTS block: complete group evaluator;
-            # correlation happens only through shared-var compatibility
-            # (a filter over outer-only vars raises inside)
-            step, correlated = _group_bindings(store, blk.group, True), []
-        else:
-            local, correlated = _split_block_filters(blk)
-            _attach_bind_fns(store, blk.optional)
-            step = execute_bgp(
-                store, blk.patterns, filters=local,
-                optional=blk.optional, dedup=True,
-            )
-        shared = [c for c in step.columns if c in result.columns]
+        step, outer = _nested_step(store, blk, True)
+        shared = _shared(result, step)
         how = "left_semi" if positive else "left_anti"
-        if correlated:
-            for f in correlated:
-                missing = f.vars() - set(step.columns) - set(result.columns)
-                if missing:
-                    raise SparqlSyntaxError(
-                        "EXISTS filter references variables bound "
-                        f"nowhere: {sorted(missing)}"
-                    )
-            # label-space correlated filters (regex/str()/langMatches/
-            # isIRI…): attach each referenced var's lexical label to
-            # the side that carries it through the join — the OUTER
-            # side for outer and shared vars (EXISTS substitutes the
-            # outer binding, SPARQL 1.1 §8.1.1), the block side for
-            # block-only vars. _attach_any_labels prefers a
-            # BIND/VALUES vlex sidecar (dictionary-absent term) over
-            # the id2term join — one join per var either way.
-            lbl_outer: list[str] = []
-            lvs = sorted(
-                set().union(set(), *(f.label_vars() for f in correlated))
+        tolerant = bool(set(shared) & (nullable | _nullable_vars(blk)))
+        if outer:
+            _bound_somewhere(outer, result, step)
+            result, step, cond, lbls = _exists_condition(
+                store, result, step, shared, outer, tolerant
             )
-            for v in lvs:
-                if v in result.columns:
-                    result, att = _attach_any_labels(result, store, [v])
-                    lbl_outer.extend(att)
-                else:
-                    step, _ = _attach_any_labels(step, store, [v])
-            for v in shared:
-                step = step.withColumnRenamed(v, f"__ex_{v}")
-            cond = F.lit(True)
-            for v in shared:
-                eqv = F.col(v) == F.col(f"__ex_{v}")
-                if may_unbound or blk.optional:
-                    eqv = (
-                        F.col(v).isNull()
-                        | F.col(f"__ex_{v}").isNull()
-                        | eqv
-                    )
-                cond = cond & eqv
-            for f in correlated:
-                cond = cond & f.cond()
             # non-equi conjuncts force a nested-loop strategy; the
             # equality conjuncts still hash-partition both sides when
             # shared vars exist, and the block side is dedup'd — the
             # same shape Catalyst gives a correlated SQL EXISTS
-            result = result.join(step, cond, how)
-            if lbl_outer:
-                result = result.drop(*lbl_outer)
-        elif shared:
-            if may_unbound or blk.optional:
-                result = _compat_join(
-                    result, step, shared, how, require_overlap=False
-                )
-            else:
-                result = result.join(step, on=shared, how=how)
-        else:
+            result = result.join(step, cond, how).drop(*lbls)
+        elif not shared:
             if positive != (not step.isEmpty()):
                 result = result.limit(0)
+        elif tolerant:
+            result = _compat_join(result, step, shared, how, require_overlap=False)
+        else:
+            result = result.join(step, on=shared, how=how)
 
     # EXISTS{…} leaves inside boolean FILTER trees: attach each leaf's
     # marker column, then evaluate the whole expression like any other
@@ -3099,15 +2683,49 @@ def _group_bindings(store, q: Query, dedup: bool) -> DataFrame:
     for f in marker_filts:
         leaves = exists_leaves(f)
         for ex in leaves:
-            result = _attach_exists_marker(store, result, ex, may_unbound)
-        result = _apply_deferred_filter(result, store, f)
+            result = _attach_exists_marker(store, result, ex, nullable)
+        result = _apply_scoped(store, result, [f], scope)
         result = result.drop(*[ex.marker for ex in leaves])
 
     return result
 
 
+def _exists_condition(
+    store, outer: DataFrame, step: DataFrame, shared: list,
+    correlated: list, tolerant: bool,
+):
+    """The join condition of a correlated EXISTS: shared-var equality
+    (null-tolerant when a shared var may be unbound) plus the block
+    filters that read outer vars, evaluated under substitution
+    (SPARQL 1.1 §8.1.1). The block's copies of shared vars are renamed
+    out of the way so each column name resolves to one side.
+    Label-space filters (regex/str()/langMatches/isIRI…) get each
+    referenced var's label on the side that carries it through the
+    join: the outer side for outer and shared vars, the block side for
+    block-only vars. Returns ``(outer, step, cond, outer label
+    columns to drop after the join)``."""
+    lbls: list[str] = []
+    for v in sorted(set().union(*(f.label_vars() for f in correlated))):
+        if v in outer.columns:
+            outer, att = _attach_any_labels(outer, store, [v])
+            lbls += att
+        else:
+            step, _ = _attach_any_labels(step, store, [v])
+    for v in shared:
+        step = step.withColumnRenamed(v, f"__ex_{v}")
+    cond = F.lit(True)
+    for v in shared:
+        eqv = F.col(v) == F.col(f"__ex_{v}")
+        if tolerant:
+            eqv = F.col(v).isNull() | F.col(f"__ex_{v}").isNull() | eqv
+        cond = cond & eqv
+    for f in correlated:
+        cond = cond & f.cond()
+    return outer, step, cond, lbls
+
+
 def _attach_exists_marker(
-    store, result: DataFrame, ex: ExistsExpr, may_unbound: bool
+    store, result: DataFrame, ex: ExistsExpr, nullable: set
 ) -> DataFrame:
     """Extend ``result`` with ``ex.marker``: true where a solution of
     the EXISTS block is compatible with the row, else NULL.
@@ -3118,64 +2736,19 @@ def _attach_exists_marker(
     the surviving keys back null-safely. The back-join is key-unique
     by construction, so the marker never multiplies rows — the same
     guarantee the top-level FILTER EXISTS semi-join gives."""
-    blk = ex.block
-    if getattr(blk, "group", None) is not None:
-        step, correlated = _group_bindings(store, blk.group, True), []
-    else:
-        local, correlated = _split_block_filters(blk)
-        _attach_bind_fns(store, blk.optional)
-        step = execute_bgp(
-            store, blk.patterns, filters=local,
-            optional=blk.optional, dedup=True,
-        )
-    shared = [c for c in step.columns if c in result.columns]
-    outer_corr = sorted(
-        set().union(set(), *(f.vars() for f in correlated))
-        & set(result.columns)
-    )
-    for f in correlated:
-        missing = f.vars() - set(step.columns) - set(result.columns)
-        if missing:
-            raise SparqlSyntaxError(
-                "EXISTS filter references variables bound nowhere: "
-                f"{sorted(missing)}"
-            )
-    need = sorted(set(shared) | set(outer_corr))
+    step, correlated = _nested_step(store, ex.block, True)
+    _bound_somewhere(correlated, result, step)
+    shared = _shared(result, step)
+    outer_corr = set().union(*(f.vars() for f in correlated)) & set(result.columns)
+    need = sorted(set(shared) | outer_corr)
     if not need:  # uncorrelated: global emptiness test
         return result.withColumn(ex.marker, F.lit(not step.isEmpty()))
     keys = result.select(*need).dropDuplicates(need)
-    # label columns for correlated label-space filters: outer vars
-    # attach to the key side (EXISTS substitutes the outer binding,
-    # §8.1.1), block-only vars to the block side
-    key_lbls: list[str] = []
-    lvs = sorted(set().union(set(), *(f.label_vars() for f in correlated)))
-    for v in lvs:
-        if v in keys.columns:
-            keys, att = _attach_any_labels(keys, store, [v])
-            key_lbls += att
-        else:
-            step, _ = _attach_any_labels(step, store, [v])
-    for v in shared:
-        step = step.withColumnRenamed(v, f"__ex_{v}")
-    cond = F.lit(True)
-    # null-tolerant key equality whenever EITHER side can produce
-    # unbound shared vars: the outer group (may_unbound), an OPTIONAL
-    # inside the block, or a full-algebra block group (UNION/OPTIONAL/
-    # VALUES UNDEF inside EXISTS { { A } UNION { B } } can null-extend
-    # block-side vars, which §8.3 compatibility matches to anything)
-    tol = (
-        may_unbound
-        or getattr(blk, "optional", None)
-        or getattr(blk, "group", None) is not None
+    tolerant = bool(set(shared) & (nullable | _nullable_vars(ex.block)))
+    keys, step, cond, lbls = _exists_condition(
+        store, keys, step, shared, correlated, tolerant
     )
-    for v in shared:
-        eqv = F.col(v) == F.col(f"__ex_{v}")
-        if tol:
-            eqv = F.col(v).isNull() | F.col(f"__ex_{v}").isNull() | eqv
-        cond = cond & eqv
-    for f in correlated:
-        cond = cond & f.cond()
-    matched = keys.join(step, cond, "left_semi").drop(*key_lbls)
+    matched = keys.join(step, cond, "left_semi").drop(*lbls)
     matched = matched.withColumn(ex.marker, F.lit(True))
     for v in need:
         matched = matched.withColumnRenamed(v, f"__exk_{v}")

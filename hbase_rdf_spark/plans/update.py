@@ -313,7 +313,7 @@ class _UpdateParser(_Parser):
                     "update templates allow only triples and GRAPH blocks"
                 )
         for p in tmp.patterns:
-            if isinstance(p.p, Path) or p.path_mod:
+            if isinstance(p.p, Path):
                 raise SparqlSyntaxError(
                     "property paths are not valid in update templates"
                 )

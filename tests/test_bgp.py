@@ -5,6 +5,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from hbase_rdf_spark.engine import KgEngine
 from hbase_rdf_spark.functions.encoding import (
     build_dictionaries,
     encode_quads,
@@ -100,12 +101,10 @@ def test_three_pattern_join_with_filter(spark, store):
 
 
 def test_optional_left_join(spark, store):
-    res = execute_bgp(
-        store,
-        [Bgp("?person", "rel:works_at", "?org")],
-        optional=[Bgp("?person", "rel:nickname", "?nick")],
-    )
-    out = materialize(res, store, ["?person", "?nick"]).toPandas()
+    out = KgEngine(spark, store.root).sql(
+        "SELECT ?person ?nick WHERE { ?person <rel:works_at> ?org "
+        "OPTIONAL { ?person <rel:nickname> ?nick } }"
+    ).toPandas()
     assert len(out) == 3
     nicks = dict(zip(out["person"], out["nick"]))
     assert nicks["ent:p/a"] == "Ace"

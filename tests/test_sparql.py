@@ -363,9 +363,10 @@ def test_property_path_plus_multihop(spark, tmp_path_factory):
     }
 
     # zero-or-one via the Bgp API ('?' clashes with var syntax in text)
-    from hbase_rdf_spark.plans.bgp import Bgp, execute_bgp, materialize
+    from hbase_rdf_spark.plans.bgp import Bgp, Path, execute_bgp, materialize
 
-    res = execute_bgp(st, [Bgp("http://x/a", "http://x/next", "?y", path_mod="?")])
+    zero_or_one = Path("mod", (Path("atom", iri="http://x/next"),), mod="?")
+    res = execute_bgp(st, [Bgp("http://x/a", zero_or_one, "?y")])
     got_opt = {r["y"] for r in materialize(res, st, ["?y"]).collect()}
     assert got_opt == {"http://x/a", "http://x/b"}
 

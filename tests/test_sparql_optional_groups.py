@@ -1,14 +1,19 @@
-"""Full-algebra OPTIONAL groups: VALUES / MINUS / FILTER [NOT] EXISTS
-/ subqueries mixed with patterns inside OPTIONAL { … }.
+"""Nested groups with the full algebra: VALUES / MINUS / FILTER [NOT]
+EXISTS / subqueries / UNION mixed with patterns inside OPTIONAL { … },
+and FILTERs over variables a nested group cannot bind.
 
 The reference inherits these for free from ARQ's algebra (every
 GroupGraphPattern position accepts every operator —
-sparql/HBaseFuseki.java routes the full parse tree); our parser
-previously raised. An OPTIONAL block carrying any of these is now a
-``group``-backed OptionalBlock whose step_fn runs the complete
-GroupGraphPattern evaluator (plans/sparql.py ``_group_bindings``), so
-the block's solutions — VALUES-joined, MINUS-pruned, EXISTS-filtered —
-left-join onto the required bindings as a unit (SPARQL 1.1 LeftJoin).
+sparql/HBaseFuseki.java routes the full parse tree). Every nested
+group is a parsed ``Query`` evaluated by the one group evaluator
+(plans/sparql.py ``_group_bindings``), so an OPTIONAL body's solutions
+— VALUES-joined, MINUS-pruned, EXISTS-filtered — left-join onto the
+required bindings as a unit (SPARQL 1.1 LeftJoin). A FILTER of an
+OPTIONAL / EXISTS / MINUS group that reads outer variables is split
+off first: the join condition for OPTIONAL and EXISTS, evaluated with
+those variables unbound for MINUS. Any other variable a group does
+not bind is unbound (NULL), so SQL three-valued logic gives SPARQL's
+error semantics.
 """
 
 import pytest
@@ -416,3 +421,107 @@ def test_exists_label_filter_over_bind_var(store):
     assert sorted(r[0] for r in out.collect()) == [
         "http://ex/a1", "http://ex/a2",
     ]
+
+
+# -- FILTERs over variables a nested group cannot bind ----------------------
+
+
+def _nq_store(spark, root, nq):
+    lines = spark.createDataFrame([(l,) for l in nq], "value string")
+    resolved = quads(parse_lines(lines))
+    st = TripleStore(spark, root, num_partitions=2)
+    t2i, i2t = build_dictionaries(resolved)
+    st.write_dictionaries(t2i, i2t, "nq")
+    st.write_indexes(encode_quads(resolved), "nq")
+    return st
+
+
+@pytest.fixture(scope="module")
+def union_store(spark, tmp_path_factory):
+    return _nq_store(spark, str(tmp_path_factory.mktemp("unionfilter")), [
+        "<http://ex/a1> <http://ex/knows> <http://ex/b1> .",
+        "<http://ex/a2> <http://ex/likes> <http://ex/b2> .",
+        f'<http://ex/a2> <http://ex/lim> "9"^^<{XSD_INT}> .',
+    ])
+
+
+@pytest.fixture(scope="module")
+def corr_store(spark, tmp_path_factory):
+    return _nq_store(spark, str(tmp_path_factory.mktemp("corrfilter")), [
+        "<http://ex/a1> <http://ex/knows> <http://ex/b1> .",
+        "<http://ex/a2> <http://ex/knows> <http://ex/b2> .",
+        f'<http://ex/a1> <http://ex/lim> "4"^^<{XSD_INT}> .',
+        f'<http://ex/a2> <http://ex/lim> "9"^^<{XSD_INT}> .',
+        f'<http://ex/b1> <http://ex/score> "5"^^<{XSD_INT}> .',
+        f'<http://ex/b2> <http://ex/rank> "7"^^<{XSD_INT}> .',
+    ])
+
+
+def _col(out):
+    return sorted(r[0] for r in out.collect())
+
+
+def test_union_filter_over_branch_unbound_var(union_store):
+    """?c is unbound in the knows branch, so !BOUND(?c) holds there."""
+    out = execute(union_store, """SELECT ?a WHERE {
+        { ?a <http://ex/knows> ?b } UNION { ?a <http://ex/likes> ?c }
+        FILTER(!BOUND(?c)) }""")
+    assert _col(out) == ["http://ex/a1"]
+
+
+def test_optional_union_filter_over_branch_unbound_var(union_store):
+    out = execute(union_store, """SELECT ?a ?b WHERE {
+        ?a ?p ?o
+        OPTIONAL {
+          { ?a <http://ex/knows> ?b } UNION { ?a <http://ex/likes> ?c }
+          FILTER(!BOUND(?c)) } }""")
+    assert sorted(((r[0], r[1]) for r in out.collect()), key=str) == [
+        ("http://ex/a1", "http://ex/b1"),
+        ("http://ex/a2", None),
+        ("http://ex/a2", None),
+    ]
+
+
+_OUTER = "?a <http://ex/knows> ?b . ?a <http://ex/lim> ?l ."
+
+
+def test_exists_union_filter_reads_outer_var(corr_store):
+    """The block filter reads the outer ?l: it is the EXISTS join
+    condition, under substitution."""
+    out = execute(corr_store, f"""SELECT ?a WHERE {{ {_OUTER}
+        FILTER EXISTS {{
+          {{ ?b <http://ex/score> ?s }} UNION {{ ?b <http://ex/rank> ?s }}
+          FILTER(?s > ?l) }} }}""")
+    assert _col(out) == ["http://ex/a1"]
+
+
+def test_minus_union_filter_over_outer_var(corr_store):
+    """MINUS does not substitute: the outer ?l is unbound inside the
+    block, so !BOUND(?l) holds and both solutions are removed."""
+    out = execute(corr_store, f"""SELECT ?a WHERE {{ {_OUTER}
+        MINUS {{
+          {{ ?b <http://ex/score> ?s }} UNION {{ ?b <http://ex/rank> ?s }}
+          FILTER(!BOUND(?l)) }} }}""")
+    assert _col(out) == []
+
+
+def test_plain_exists_and_minus_filters_over_outer_var(corr_store):
+    exists = execute(corr_store, f"""SELECT ?a WHERE {{ {_OUTER}
+        FILTER EXISTS {{ ?b <http://ex/score> ?s FILTER(?s > ?l) }} }}""")
+    assert _col(exists) == ["http://ex/a1"]
+    minus = execute(corr_store, f"""SELECT ?a WHERE {{ {_OUTER}
+        MINUS {{ ?b <http://ex/score> ?s FILTER(!BOUND(?l)) }} }}""")
+    assert _col(minus) == ["http://ex/a2"]
+
+
+def test_optional_in_a_group_without_patterns(corr_store):
+    """With no pattern to left-join onto, OPTIONAL extends the group's
+    VALUES table or subquery."""
+    opt = "OPTIONAL { ?a <http://ex/knows> ?b . ?b <http://ex/score> ?s }"
+    want = [("http://ex/a1", "http://ex/b1"), ("http://ex/a2", None)]
+    for head in (
+        "VALUES ?a { <http://ex/a1> <http://ex/a2> }",
+        "{ SELECT ?a WHERE { ?a <http://ex/lim> ?l } }",
+    ):
+        out = execute(corr_store, f"SELECT ?a ?b WHERE {{ {head} {opt} }}")
+        assert sorted(((r[0], r[1]) for r in out.collect()), key=str) == want

@@ -900,7 +900,7 @@ def test_subquery_inside_optional_executes(store):
     """).collect()
     # since r4: a subquery MIXED with patterns in one OPTIONAL is a
     # full-algebra group — the subquery inner-joins the block's
-    # patterns before the left join (tests/test_sparql_r4b.py covers
+    # patterns before the left join (tests/test_sparql_optional_groups.py covers
     # the semantics; here just assert it plans and runs)
     execute(store, """
     SELECT ?i WHERE {

@@ -417,7 +417,7 @@ def test_subquery_inside_optional(store):
 
 def test_subquery_in_optional_with_patterns_accepted(store):
     # since r4 a subquery mixed with patterns inside OPTIONAL is a
-    # full-algebra group (semantics in tests/test_sparql_r4b.py);
+    # full-algebra group (semantics in tests/test_sparql_optional_groups.py);
     # here just assert it parses
     parse("""
         SELECT ?s WHERE {

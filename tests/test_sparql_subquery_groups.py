@@ -4,9 +4,9 @@ BIND / MINUS / FILTER EXISTS / nested subqueries inside
 
 The reference inherits these for free from ARQ/Sesame (a SubSelect's
 WHERE is an ordinary GroupGraphPattern — sail/HBaseSailConnection.java
-evaluates the full parse tree); our ``_execute_subquery`` previously
-raised. The body now routes through ``_group_bindings`` (the same
-evaluator as a top-level WHERE), then the subquery's own modifiers
+evaluates the full parse tree). ``_execute_subquery`` evaluates the
+body with ``_group_bindings`` (the same evaluator as a top-level
+WHERE and every nested group), then the subquery's own modifiers
 (aggregates / DISTINCT / ORDER+LIMIT) apply on top.
 """
 
