@@ -21,7 +21,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     from hbase_rdf_spark.engine import KgEngine
-    from hbase_rdf_spark.plans.bgp import Bgp, Filter
     from hbase_rdf_spark.plans.patterns import TriplePattern
     from hbase_rdf_spark.session import get_spark
     from hbase_rdf_spark.sources.synthetic import build_gazetteer, transcripts_df
@@ -44,9 +43,9 @@ def main() -> None:
         eng.scan(TriplePattern(p="rel:works_at")).show(3, truncate=False)
 
         print("== BGP join + numeric filter: who works somewhere and is over 60")
-        eng.bgp(
-            [Bgp("?x", "rel:works_at", "?y"), Bgp("?x", "rel:age", "?a")],
-            filters=[Filter("?a", ">", 60.0)],
+        eng.sql(
+            "SELECT ?x ?y ?a WHERE { ?x <rel:works_at> ?y . "
+            "?x <rel:age> ?a FILTER(?a > 60) }"
         ).show(3, truncate=False)
 
         print("== SPARQL: aggregate employer sizes")

@@ -21,7 +21,7 @@ from hbase_rdf_spark.functions.encoding import build_dictionaries, encode_quads
 from hbase_rdf_spark.operators.materialize import TripleStore
 from hbase_rdf_spark.pipeline import build_kg
 from hbase_rdf_spark.plans import sparql as _sparql
-from hbase_rdf_spark.plans.bgp import Bgp, Filter, execute_bgp, materialize
+from hbase_rdf_spark.plans.bgp import Bgp, execute_bgp, materialize
 from hbase_rdf_spark.plans.patterns import TriplePattern, scan
 from hbase_rdf_spark.sources.ntriples import parse_lines, quads as nt_quads
 from hbase_rdf_spark.streaming.incremental import append_batch, stream_transcripts
@@ -77,9 +77,8 @@ class KgEngine:
     def scan(self, pattern: TriplePattern) -> DataFrame:
         return scan(self.store, pattern)
 
-    def bgp(self, patterns: list[Bgp], filters: list[Filter] | None = None,
-            project: list[str] | None = None) -> DataFrame:
-        result = execute_bgp(self.store, patterns, filters=filters)
+    def bgp(self, patterns: list[Bgp], project: list[str] | None = None) -> DataFrame:
+        result = execute_bgp(self.store, patterns)
         return materialize(result, self.store, project)
 
     def sql(self, query, with_kinds: bool = False) -> DataFrame:

@@ -95,72 +95,6 @@ class Bgp:
     g_in: tuple | None = None
 
 
-@dataclass
-class Filter:
-    """Numeric filter on an object variable: (var, op, value)."""
-
-    var: str
-    op: str  # '<', '<=', '>', '>=', '=', '!='
-    value: float
-
-    def apply(self, col: Column) -> Column:
-        n = col.getField("num")
-        return {
-            "<": n < self.value,
-            "<=": n <= self.value,
-            ">": n > self.value,
-            ">=": n >= self.value,
-            "=": n == self.value,
-            "!=": n != self.value,
-        }[self.op]
-
-    # -- FilterExpr protocol (plans/filters.py) --------------------------
-    def vars(self) -> set[str]:
-        return {self.var[1:]}
-
-    def label_vars(self) -> set[str]:
-        return set()
-
-    def cond(self) -> Column:
-        return self.apply(F.col(self.var[1:]))
-
-
-@dataclass
-class VarFilter(Filter):
-    """Var-vs-var numeric comparison with an optional constant offset:
-    ``?a < ?b + 120`` (BSBM Q5 shape) → ``a.num < b.num + offset``.
-
-    ``value`` (inherited) is unused; ``other`` names the RHS variable.
-    """
-
-    other: str = ""
-    offset: float = 0.0
-
-    def vars(self) -> set[str]:
-        return {self.var[1:], self.other[1:]}
-
-    def cond(self) -> Column:
-        if self.op in ("=", "!=") and not self.offset:
-            # RDFterm-equal (SPARQL 1.1 §17.4.1.1): plain ``?a = ?b``
-            # compares TERMS, not numeric values — struct equality
-            # covers IRIs and literals alike (numeric terms carry the
-            # value in .num with a NULL id, so value-equal numbers of
-            # different lexical forms still compare equal). An unbound
-            # side is a type error → NULL → row dropped, per spec.
-            eq = F.col(self.var[1:]) == F.col(self.other[1:])
-            return eq if self.op == "=" else ~eq
-        lhs = F.col(self.var[1:]).getField("num")
-        rhs = F.col(self.other[1:]).getField("num") + self.offset
-        return {
-            "<": lhs < rhs,
-            "<=": lhs <= rhs,
-            ">": lhs > rhs,
-            ">=": lhs >= rhs,
-            "=": lhs == rhs,
-            "!=": lhs != rhs,
-        }[self.op]
-
-
 # Static weight table — parity with ReorderHeuristics.java:41-74.
 _WEIGHTS = {
     "spo": 1.0, "sp?": 2.0, "s?o": 3.0, "?po": 4.0,
@@ -847,6 +781,18 @@ def _apply_filters(store, df: DataFrame, fs: list) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _const_cmp_var(f) -> str | None:
+    """'?v' when FILTER conjunct ``f`` compares one variable with a
+    constant in id space (``?v > 3``, ``<iri> = ?v``), else None."""
+    e = f.ast
+    if e[0] not in ("cmp", "sameterm") or f.label_vars():
+        return None
+    a, b = e[-2:]
+    if a[0] != "var":
+        a, b = b, a
+    return a[1] if a[0] == "var" and b[0] in ("num", "const") else None
+
+
 def execute_bgp(
     store,
     patterns: list[Bgp],
@@ -855,12 +801,12 @@ def execute_bgp(
 ) -> DataFrame:
     """Evaluate a BGP to a DataFrame of binding structs (one col per var).
 
-    ``filters`` — FilterExpr-protocol objects (plans/filters.py, plus
-    the Filter/VarFilter comparisons here): id-space filters apply
-    eagerly inside the join loop as soon as their variables are in
-    scope (Catalyst pushes them into the scans); label-space ones run
-    in one batch after the joins. A filter whose variables the
-    patterns never bind raises instead of being silently dropped.
+    ``filters`` — FILTER conjuncts (``plans/expr.py`` ``Expr``):
+    id-space filters apply eagerly inside the join loop as soon as
+    their variables are in scope (Catalyst pushes them into the
+    scans); label-space ones run in one batch after the joins. A
+    filter whose variables the patterns never bind raises instead of
+    being silently dropped.
     OPTIONAL, UNION and the rest of the group algebra live in the
     group evaluator (``plans/sparql.py _group_bindings``).
 
@@ -875,13 +821,10 @@ def execute_bgp(
     from dataclasses import replace
 
     filters = list(filters or [])
-    # J8 fidelity: a pattern whose object var carries a single-var filter
-    # ranks above its unfiltered twin (ReorderHeuristics' filtered flag,
-    # reference: optimizer/reorder/StatsMatcher.java:291-400)
-    fvars = {
-        f.var for f in filters
-        if isinstance(f, Filter) and not isinstance(f, VarFilter)
-    }
+    # J8 fidelity: a pattern whose object var a filter compares against
+    # a constant ranks above its unfiltered twin (ReorderHeuristics'
+    # filtered flag, reference: optimizer/reorder/StatsMatcher.java:291-400)
+    fvars = {v for f in filters if (v := _const_cmp_var(f))}
     patterns = [
         replace(p, filtered=True)
         if (is_var(p.o) and p.o in fvars and not p.filtered)

@@ -27,13 +27,9 @@ This module is the same shape here:
   a NULL FILTER drops the row, a NULL BIND leaves the var unbound. A
   ``Cx`` scope decides what a variable leaf reads: its binding struct
   (and label column) before aggregation, or the scalar column after.
-- **Lowering** (``lower_filter``): maps the linearisable FILTER shapes
-  onto the scan-pushable leaves (``Filter``/``VarFilter``/
-  ``_TermFilter``/``Bound``/``Not``/``And``/``Or``), so scan pushdown
-  and ``execute_bgp``'s split (id-space filters inside the join loop,
-  label-space ones batched after the joins) see exactly the leaves
-  they always did. Everything else becomes one ``Expr`` node with the
-  same ``vars()/label_vars()/cond()`` protocol.
+- **FILTER** (``Expr``): one node per top-level ``&&`` conjunct, with
+  the ``vars()/label_vars()/cond()`` protocol ``execute_bgp`` places
+  filters by.
 """
 
 from __future__ import annotations
@@ -44,14 +40,9 @@ from functools import reduce
 
 from pyspark.sql import Column, functions as F
 
-from hbase_rdf_spark.plans.bgp import Filter, VarFilter, _binding_struct
+from hbase_rdf_spark.plans.bgp import _binding_struct
 from hbase_rdf_spark.plans.filters import (
     DT_TYPED_RX,
-    And,
-    Bound,
-    FilterExpr,
-    Not,
-    Or,
     dt_instant,
     dt_part,
     str_value,
@@ -834,31 +825,18 @@ def _cmp(op: str, a, b, cx: Cx) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# FILTER nodes + lowering
+# FILTER nodes
 # ---------------------------------------------------------------------------
 
 
 @dataclass
-class _TermFilter(Filter):
-    """(in)equality of a var against an entity/string constant."""
-
-    def apply(self, col):  # type: ignore[override]
-        from hbase_rdf_spark.plans.patterns import encode_term
-
-        term, kind = (
-            (self.value, 0) if isinstance(self.value, str) else self.value
-        )
-        eq = col.getField("id") == encode_term(term, kind)
-        return eq if self.op == "=" else ~eq
-
-
-@dataclass
-class ExistsExpr(FilterExpr):
-    """SPARQL 1.1 §17.4.1.4 ``EXISTS { … }`` as an *expression* — a
-    boolean leaf inside arbitrary FILTER / BIND / IF expressions.
+class ExistsExpr:
+    """SPARQL 1.1 §17.4.1.4 ``EXISTS { … }`` as an *expression* — the
+    payload of an ``('exists', ExistsExpr)`` leaf inside arbitrary
+    FILTER / BIND / IF expressions.
 
     The bare top-level ``FILTER [NOT] EXISTS`` keeps its semi/anti-join
-    fast path; this node instead reads a boolean *marker* column (one
+    fast path; this leaf instead reads a boolean *marker* column (one
     compatibility semi-join over the DISTINCT outer key set, joined
     back null-safely — never a row-multiplying join). EBV of EXISTS is
     always true/false, never an error, so the marker coalesces NULL (no
@@ -867,20 +845,17 @@ class ExistsExpr(FilterExpr):
     marker: str  # hidden column name, attached by _attach_exists_marker
     block: object = None  # the braced group: a parsed sparql.Query
 
-    def vars(self) -> set[str]:
-        # correlation happens through the marker join, not the
-        # expression evaluator — no outer columns read by cond()
-        return set()
-
     def cond(self):
         return F.coalesce(F.col(self.marker), F.lit(False))
 
 
 @dataclass
-class Expr(FilterExpr):
-    """A FILTER the lowering can't map onto a pushable leaf: its AST,
-    compiled once to the effective boolean value. Label-space when the
-    compiled predicate reads a label column."""
+class Expr:
+    """One FILTER conjunct: its AST, compiled once to the effective
+    boolean value. Catalyst pushes the id-space comparisons it yields
+    (``num`` field against a literal, ``id`` against a hashed constant)
+    into the scans. Label-space when the compiled predicate reads a
+    label column."""
 
     ast: tuple
     _compiled: tuple | None = field(default=None, compare=False, repr=False)
@@ -902,83 +877,6 @@ class Expr(FilterExpr):
         return self._compile()[0]
 
 
-def _linear(e):
-    """``±?v ± c`` → (var | None, scale, offset), else None."""
-    tag = e[0]
-    if tag == "var":
-        return e[1], 1.0, 0.0
-    if tag == "num":
-        return None, 0.0, e[1]
-    if tag == "arith" and e[1] in "+-":
-        lt, rt = _linear(e[2]), _linear(e[3])
-        if lt is None or rt is None or (lt[0] and rt[0]):
-            return None
-        k = 1.0 if e[1] == "+" else -1.0
-        return lt[0] or rt[0], lt[1] + k * rt[1], lt[2] + k * rt[2]
-    return None
-
-
-def _lower_cmp(op: str, a, b):
-    la, lb = _linear(a), _linear(b)
-    if la is not None and lb is not None:
-        if la[0] is None:  # constant-on-the-left form (BSBM Q5)
-            la, lb, op = lb, la, FLIP[op]
-        v, s, off = la
-        if v is None:
-            return None
-        w, t, off2 = lb
-        # s·v + off op t·w + off2 ⇔ v op' w + s·(off2 − off), op'
-        # flipped when s = −1 (mixed signs are a sum of vars: general)
-        eff = op if s == 1.0 else FLIP[op]
-        if w is None:
-            return Filter(v, eff, s * (off2 - off))
-        if t != s:
-            return None
-        return VarFilter(v, eff, 0.0, other=w, offset=s * (off2 - off))
-    for x, y, o in ((a, b, op), (b, a, FLIP[op])):
-        # constant (in)equality: an equality filter on the encoded id —
-        # J6's constant binding, pushed into the scan
-        if (x[0] == "var" and y[0] == "const" and o in ("=", "!=")
-                and not _is_dt_lit(y)):
-            return _TermFilter(x[1], o, y[1])
-    return None
-
-
-def lower_filter(e) -> FilterExpr:
-    """Boolean AST → FilterExpr tree: the linearisable shapes become the
-    scan-pushable leaves, everything else one ``Expr`` node."""
-    tag = e[0]
-    if tag in ("and", "or"):
-        return (And if tag == "and" else Or)([lower_filter(c) for c in e[1:]])
-    if tag == "not":
-        return Not(lower_filter(e[1]))
-    if tag == "exists":
-        return e[1]
-    if tag == "bound":
-        return Bound(e[1][1])
-    if tag in ("cmp", "sameterm"):
-        op, a, b = e[1:] if tag == "cmp" else ("=", *e[1:])
-        leaf = _lower_cmp(op, a, b)
-        if leaf is not None:
-            return leaf
-    if tag in ("in", "notin") and len(e) > 2:
-        # the reference's OptimizeIn-style expansion: an Or of equalities
-        legs = [lower_filter(("cmp", "=", e[1], it)) for it in e[2:]]
-        f = legs[0] if len(legs) == 1 else Or(legs)
-        return f if tag == "in" else Not(f)
-    return Expr(e)
-
-
-def exists_leaves(f) -> list:
-    """Every ExistsExpr of a FILTER tree or an expression AST."""
-    if isinstance(f, ExistsExpr):
-        return [f]
-    if isinstance(f, Not):
-        return exists_leaves(f.child)
-    if isinstance(f, (And, Or)):
-        return [x for c in f.children for x in exists_leaves(c)]
-    if isinstance(f, Expr):
-        f = f.ast
-    if isinstance(f, tuple):
-        return [n[1] for n in walk(f) if n[0] == "exists"]
-    return []
+def exists_leaves(e) -> list:
+    """Every ExistsExpr of an expression AST."""
+    return [n[1] for n in walk(e) if n[0] == "exists"]

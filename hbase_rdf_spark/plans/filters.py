@@ -1,35 +1,16 @@
-"""FILTER leaves and the label-space helpers the expression compiler
-uses.
+"""Label-space helpers of the expression compiler (plans/expr.py).
 
-Every FILTER lowers to one Spark ``Column`` predicate over
-binding-struct columns (plans/expr.py: one grammar, one compiler);
-the leaves here — ``And``/``Or``/``Not``/``Bound``, plus
-``bgp.Filter``/``VarFilter`` — are the shapes Catalyst can push into
-the scans. Two evaluation spaces:
-
-- **id space** (cheap, the default): numeric comparisons read the
-  ``num`` field of the binding struct; term (in)equality compares the
-  hash id; ``bound()`` is a null test (an OPTIONAL left join
-  null-extends unbound vars); ``isLiteral/isNumeric`` read the ``kind``
-  tag.
-- **label space** (one id2term join per variable): ``regex``, ``str()``
-  comparisons, ``lang()``/``datatype()`` and ``isIRI/isBlank`` (blank
-  nodes share kind 0 with IRIs and differ only in their ``_:`` label
-  prefix — sources/ntriples.py:29). The executor attaches a
-  ``__{var}_flbl`` column before applying such a filter and drops it
-  after (``plans/bgp.py _apply_filters``): ``execute_bgp`` batches a
-  BGP's label-space filters after its joins, before any OPTIONAL.
-
-SPARQL error semantics fall out of SQL three-valued logic: an unbound
-variable makes the comparison NULL, ``NULL OR true`` is true,
-``NOT NULL`` is NULL, and a NULL predicate drops the row — exactly the
-type-error → false rule of the spec.
+Label-space predicates — ``regex``, ``str()`` comparisons,
+``lang()``/``datatype()``, dateTime values, ``isIRI/isBlank`` (blank
+nodes share kind 0 with IRIs and differ only in their ``_:`` label
+prefix — sources/ntriples.py:29) — read a variable's stored label from
+a ``__{var}_flbl`` column. The executor attaches it before applying
+such a filter and drops it after (``plans/bgp.py _apply_filters``).
+The helpers here build values over that column: ``str_value``, the
+dateTime component and timezone extractors, and ``dt_instant``.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass, field
-from functools import reduce
 
 from pyspark.sql import Column, functions as F
 
@@ -50,74 +31,6 @@ def str_value(name: str) -> Column:
         lbl.rlike(_TAGGED_RX), F.regexp_extract(lbl, _TAGGED_RX, 1)
     ).otherwise(lbl)
     return F.coalesce(lex, F.col(name).getField("num").cast("string"))
-
-
-class FilterExpr:
-    """Base: a boolean SPARQL expression over binding-struct columns."""
-
-    def vars(self) -> set[str]:  # var names (no '?') that must be in scope
-        raise NotImplementedError
-
-    def label_vars(self) -> set[str]:  # vars needing a __{v}_flbl column
-        return set()
-
-    def cond(self) -> Column:
-        raise NotImplementedError
-
-
-@dataclass
-class And(FilterExpr):
-    children: list = field(default_factory=list)
-
-    def vars(self):
-        return set().union(*(c.vars() for c in self.children))
-
-    def label_vars(self):
-        return set().union(*(c.label_vars() for c in self.children))
-
-    def cond(self):
-        return reduce(lambda a, b: a & b, (c.cond() for c in self.children))
-
-
-@dataclass
-class Or(FilterExpr):
-    children: list = field(default_factory=list)
-
-    def vars(self):
-        return set().union(*(c.vars() for c in self.children))
-
-    def label_vars(self):
-        return set().union(*(c.label_vars() for c in self.children))
-
-    def cond(self):
-        return reduce(lambda a, b: a | b, (c.cond() for c in self.children))
-
-
-@dataclass
-class Not(FilterExpr):
-    child: FilterExpr = None  # type: ignore[assignment]
-
-    def vars(self):
-        return self.child.vars()
-
-    def label_vars(self):
-        return self.child.label_vars()
-
-    def cond(self):
-        return ~self.child.cond()
-
-
-@dataclass
-class Bound(FilterExpr):
-    """``bound(?v)`` — negation-as-failure building block (BSBM Q3)."""
-
-    var: str  # '?v'
-
-    def vars(self):
-        return {self.var[1:]}
-
-    def cond(self):
-        return F.col(self.var[1:]).isNotNull()
 
 
 #: ISO-8601 component extraction from an xsd:dateTime/xsd:date lexical

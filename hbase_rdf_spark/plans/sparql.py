@@ -140,6 +140,7 @@ from hbase_rdf_spark.plans.expr import (  # noqa: F401 — re-exported
     FNS,
     Cx,
     ExistsExpr,
+    Expr,
     ExprGrammar,
     SparqlSyntaxError,
     _kterm,
@@ -147,10 +148,8 @@ from hbase_rdf_spark.plans.expr import (  # noqa: F401 — re-exported
     etype,
     exists_leaves,
     expr_vars,
-    lower_filter,
     walk,
 )
-from hbase_rdf_spark.plans.filters import And
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 RDF_FIRST = "http://www.w3.org/1999/02/22-rdf-syntax-ns#first"
@@ -1216,12 +1215,11 @@ class _Parser(ExprGrammar):
             return
         # FILTER(expr), or the bare builtin-call form: FILTER
         # langMatches(...), FILTER !bound(...)
-        e = lower_filter(self._unary())
+        e = self._unary()
         # split a top-level conjunction so each conjunct pushes down
         # independently (the reference's filter-placement transform,
         # HBaseTransformFilterPlacement.java)
-        for c in (e.children if isinstance(e, And) else [e]):
-            q.filters.append(c)
+        q.filters += [Expr(c) for c in (e[1:] if e[0] == "and" else [e])]
 
     def _parse_exists_leaf(self, ctx):
         """[NOT] EXISTS { … } at the cursor → (ExistsExpr, negated),
@@ -1417,7 +1415,7 @@ def _splices(sub: Query) -> bool:
     return not (
         sub.union_blocks or sub.values or sub.services or sub.minus
         or sub.exists or sub.subqueries
-        or any(exists_leaves(f) for f in sub.filters)
+        or any(exists_leaves(f.ast) for f in sub.filters)
         or any(exists_leaves(b.expr) for b in sub.binds)
         or any(b.var in pattern_vars(sub.patterns) for b in sub.binds)
     )
@@ -2563,10 +2561,10 @@ def _group_bindings(store, q: Query, dedup: bool) -> DataFrame:
     nullable = _nullable_vars(q)
     # filters whose expression tree contains an EXISTS{…} leaf need
     # marker columns that exist only after every other stage
-    marker_filts = [f for f in q.filters if exists_leaves(f)]
+    marker_filts = [f for f in q.filters if exists_leaves(f.ast)]
     if marker_filts:
         q = _dc_replace(
-            q, filters=[f for f in q.filters if not exists_leaves(f)]
+            q, filters=[f for f in q.filters if not exists_leaves(f.ast)]
         )
     post_pats: list = []
     post_filts: list = []
@@ -2681,7 +2679,7 @@ def _group_bindings(store, q: Query, dedup: bool) -> DataFrame:
     # deferred filter (filters commute over the group algebra, so
     # last-position evaluation is exact)
     for f in marker_filts:
-        leaves = exists_leaves(f)
+        leaves = exists_leaves(f.ast)
         for ex in leaves:
             result = _attach_exists_marker(store, result, ex, nullable)
         result = _apply_scoped(store, result, [f], scope)

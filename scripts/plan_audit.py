@@ -95,11 +95,9 @@ def main() -> None:
                            "PushedFilters", "Scan parquet", "Exchange")),
     ))
 
-    from hbase_rdf_spark.plans.bgp import Filter
-
-    p4 = eng.bgp(
-        [Bgp("?x", "rel:works_at", "?y"), Bgp("?x", "rel:age", "?a")],
-        filters=[Filter("?a", ">", 30.0)],
+    p4 = eng.sql(
+        "SELECT ?x ?y ?a WHERE { ?x <rel:works_at> ?y . "
+        "?x <rel:age> ?a FILTER(?a > 30) }"
     )
     sections.append((
         "BGP numeric FILTER — pushdown through binding structs",
@@ -456,12 +454,12 @@ def main() -> None:
     )
     sections.append((
         "General value-expression FILTER — codegen column predicate",
-        "Var-var arithmetic the FILTER lowering can't linearize "
-        "(one plans/expr.py Expr node) compiles to one Column over the "
-        "joined binding structs' num fields: a plain Filter inside "
+        "Var-var arithmetic (one plans/expr.py Expr node, like every "
+        "FILTER conjunct) compiles to one Column over the joined "
+        "binding structs' num fields: a plain Filter inside "
         "WholeStageCodegen after the hash join, no UDF, no extra "
-        "stage. Single-var comparisons still normalize onto the "
-        "pushdown classes and reach the scans as PushedFilters.",
+        "stage. Single-var comparisons against constants reach the "
+        "scans as PushedFilters.",
         trim(plan_of(p34), ("Join", "Filter", "Project",
                             "Scan parquet", "PushedFilters",
                             "WholeStageCodegen")),

@@ -13,7 +13,6 @@ from hbase_rdf_spark.functions.encoding import (
 from hbase_rdf_spark.operators.materialize import TripleStore
 from hbase_rdf_spark.plans.bgp import (
     Bgp,
-    Filter,
     execute_bgp,
     materialize,
     reorder,
@@ -87,15 +86,10 @@ def test_two_pattern_join(spark, store):
 
 
 def test_three_pattern_join_with_filter(spark, store):
-    res = execute_bgp(
-        store,
-        [
-            Bgp("?person", "rel:works_at", "?org"),
-            Bgp("?person", "rel:age", "?age"),
-        ],
-        filters=[Filter("?age", ">", 30)],
-    )
-    out = materialize(res, store, ["?person", "?age"]).toPandas()
+    out = KgEngine(spark, store.root).sql(
+        "SELECT ?person ?age WHERE { ?person <rel:works_at> ?org . "
+        "?person <rel:age> ?age FILTER(?age > 30) }"
+    ).toPandas()
     got = set(map(tuple, out.itertuples(index=False)))
     assert got == {("ent:p/a", "41.0"), ("ent:p/c", "35.0")}
 

@@ -1,10 +1,10 @@
-"""Round-4 general value expressions in FILTER.
+"""General value expressions in FILTER.
 
-The specialized comparison grammar normalizes onto scan-pushable
-filter classes; operands it cannot express — var-var arithmetic,
-IF/COALESCE values, bare effective-boolean-value expressions — now
-fall back to the BIND value grammar (ExprCmp / EbvExpr), matching
-ARQ's uniform expression evaluation in the reference (SURVEY J12;
+Every FILTER compiles through the one expression grammar and compiler
+that BIND uses (plans/expr.py), so operands beyond a variable against
+a constant — var-var arithmetic, IF/COALESCE values, bare
+effective-boolean-value expressions — evaluate like ARQ's uniform
+expression evaluation in the reference (SURVEY J12;
 sail/HBaseQueryVisitor.java:289-313). §17.2.2 EBV: numerics (incl.
 inlined xsd:booleans) are true iff non-zero, strings iff non-empty,
 IRIs/unbound are a type error → row dropped.

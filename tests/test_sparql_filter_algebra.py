@@ -1,14 +1,16 @@
-"""Round-4 FILTER operand algebra: unary minus, arithmetic IN lists,
-str() IN lists.
+"""FILTER operand algebra: unary minus, arithmetic IN lists, str() IN
+lists, and arithmetic on either side of a comparison.
 
 The reference gets all of these from stock ARQ expression evaluation
 (SURVEY J12 — sail/HBaseQueryVisitor.java:289-313 walks the parsed
 expression tree; the ARQ side evaluates grammar [118] UnaryExpression
-and [116] RelationalExpression's IN/NOT IN natively). Here each form
-normalizes algebraically onto the existing pushdown filter classes:
-``-?p < c`` flips into ``?p > -c``, ``?p + 1 IN (13)`` solves for the
-var, ``str(?x) IN (…)`` expands to an Or of lexical comparisons — so
-every one of them still reaches the parquet scan as a plain predicate.
+and [116] RelationalExpression's IN/NOT IN natively). Here every FILTER
+conjunct compiles through the one expression compiler (plans/expr.py
+``compile_expr``): ``-?p < c`` compares the negated ``num`` field,
+``?p + 1 IN (13)`` is an Or of numeric equalities, ``str(?x) IN (…)``
+an Or of lexical comparisons. Arithmetic on an IRI is a type error, so
+``?a = ?b + 0`` never matches IRI bindings, while plain ``?a = ?b`` is
+RDF-term equality and does.
 """
 
 import pytest
@@ -28,6 +30,13 @@ NQ = [
     '<http://ex/i2> <http://ex/name> "beta" .',
     '<http://ex/i1> <http://ex/knows> <http://ex/i2> .',
     '<http://ex/i2> <http://ex/knows> <http://ex/i3> .',
+    # a1's ?p/?q values are IRIs, a2's equal numbers, a3's different ones
+    "<http://ex/a1> <http://ex/p> <http://ex/o1> .",
+    "<http://ex/a1> <http://ex/q> <http://ex/o1> .",
+    f'<http://ex/a2> <http://ex/p> "5"^^<{XSD_I}> .',
+    f'<http://ex/a2> <http://ex/q> "5"^^<{XSD_I}> .',
+    f'<http://ex/a3> <http://ex/p> "5"^^<{XSD_I}> .',
+    f'<http://ex/a3> <http://ex/q> "6"^^<{XSD_I}> .',
 ]
 
 
@@ -138,3 +147,22 @@ def test_in_pushes_to_scan(store):
           ?s <http://ex/price> ?p . FILTER(?p + 1 IN (13, 18)) }""")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
+
+
+def _pair_subjects(store, cond):
+    return [r[0] for r in rows(store, f"""
+        SELECT ?s WHERE {{ ?s <http://ex/p> ?a . ?s <http://ex/q> ?b .
+          FILTER({cond}) }}""")]
+
+
+@pytest.mark.parametrize(
+    "cond", ["?a = ?b + 0", "?a + 1 = ?b + 1", "?a - 0 = ?b", "?a + 0 = ?b"]
+)
+def test_arithmetic_on_iri_is_a_type_error(store, cond):
+    # numeric comparison: a1's IRIs have no numeric value, so only the
+    # equal numbers of a2 match
+    assert _pair_subjects(store, cond) == ["http://ex/a2"]
+
+
+def test_plain_var_equality_is_term_equality(store):
+    assert _pair_subjects(store, "?a = ?b") == ["http://ex/a1", "http://ex/a2"]
