@@ -47,6 +47,11 @@ class KgEngine:
         return {"index_rows": stats}
 
     def append(self, transcripts: DataFrame, gazetteer: DataFrame) -> dict:
+        """Append one transcript slice (idempotent). ``gazetteer`` is
+        indexed once per DataFrame object and the index stays cached
+        while the object lives, so appends that reuse the object of an
+        earlier build or append skip re-reading it; pass a new DataFrame
+        when the alias source changes."""
         return append_batch(self.store, transcripts, gazetteer)
 
     def stream(self, stream_df: DataFrame, gazetteer: DataFrame,

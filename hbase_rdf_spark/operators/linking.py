@@ -4,25 +4,43 @@ Generalizes the reference's exact-string dictionary matching
 (reference: bulkload/QuadBreakDown.java:200-217 — one id per distinct
 term) to fuzzy entity resolution:
 
-1. **Exact/broadcast**: normalized surface → gazetteer alias, broadcast
-   hash join (analog of the String2Id point-Get,
-   reference: operations/HBPrefixMatchOperationManager.java:474-489).
-2. **MinHash-LSH blocking** for the residue: char-3-gram shingles →
-   k=32 minhashes → b=8 bands of r=4 → band-hash equijoin against the
-   (small, broadcast) gazetteer signature table.
-3. **Vectorized scoring**: exact Jaccard over shingle sets via
-   ``array_intersect`` on the *candidate pairs only*; best match per
-   surface above a threshold wins (deterministic tie-break on entity id).
+1. **Per-row sketches** (:func:`_sketch`): each surface is normalized
+   (case, punctuation, whitespace), cut into char-2-gram shingles, and
+   summarized in its own row — the distinct shingle-hash set, all k=16
+   minhashes in one ``aggregate`` fold over that set, and b=8 band
+   hashes of r=2 minhashes each. No explode + group-by-surface.
+2. **Gazetteer index** (:func:`gazetteer_index`): the band rows of every
+   distinct normalized alias, carrying its shingle set and its entity
+   (the min entity id of the aliases that normalize to it); band 0's
+   rows double as the exact-match map. Built from one read of the
+   gazetteer and persisted, once per gazetteer DataFrame *object*: the
+   entry lives while that object lives and is unpersisted when it is
+   garbage-collected. A gazetteer DataFrame is treated as immutable —
+   a caller whose alias source changes passes a new DataFrame, which
+   gets a new index, never stale rows.
+3. **Two broadcast joins, one aggregation** (:func:`link_mentions`):
+   normalized surface → exact-match map (the analog of the String2Id
+   point-Get, reference:
+   operations/HBPrefixMatchOperationManager.java:474-489); only the
+   residue is sketched, and its band rows left-join the index; one
+   group-by-surface keeps the exact match or else the best candidate
+   scoring ≥ the threshold (score desc, entity id asc). Nothing is
+   persisted per call.
 
-Everything runs JVM-side (built-in functions, whole-stage codegen) — no
-Python UDFs at all in this stage. The LSH input is the set of *distinct
-unmatched surfaces*, orders of magnitude smaller than the triple stream,
-so the groupBy-surface aggregations are cheap and skew-free at any scale.
+The score is shingle Jaccard or normalized Levenshtein similarity,
+whichever is higher — Jaccard discriminates long surfaces, edit
+distance rescues short ones where a single typo destroys most
+shingles. Everything is SQL expressions over JVM built-ins (no Python
+UDFs, few Py4J calls per call), and every SQL lambda reads only its
+own parameters.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+import threading
+import weakref
+
+from pyspark.sql import DataFrame, functions as F
 
 SHINGLE_N = 2  # 2-grams keep short-surface typos reachable by banding
 NUM_HASHES = 16
@@ -38,71 +56,95 @@ _DOMAIN = (1 << 31) - 1  # Mersenne prime 2^31-1
 _HASH_A = [(0x9E3779B9 * (2 * i + 1)) % _DOMAIN or 1 for i in range(NUM_HASHES)]
 _HASH_B = [(0xBF58476D ^ (i * 0x94D049BB)) % _DOMAIN for i in range(NUM_HASHES)]
 
-
-def normalize_surface(col: Column) -> Column:
-    """Case/whitespace/punctuation normalization applied to both sides."""
-    c = F.lower(F.trim(col))
-    c = F.regexp_replace(c, r"[^\w\s]", "")  # strip punctuation ('.', ',')
-    return F.regexp_replace(c, r"\s+", " ")
-
-
-def _shingles(df: DataFrame, surface_col: str) -> DataFrame:
-    """(surface) → (surface, sh: long) char-n-gram hashes (with dups —
-    every consumer is dedup-insensitive: min / collect_set).
-
-    JVM-only: sequence+explode+substring+xxhash64. Short surfaces are
-    padded so every surface has at least one shingle.
-    """
-    base = normalize_surface(F.col(surface_col))
-    # pad only strings shorter than one shingle (rpad would otherwise
-    # TRUNCATE longer strings to SHINGLE_N chars)
-    norm = F.when(F.length(base) >= SHINGLE_N, base).otherwise(
-        F.rpad(base, SHINGLE_N, "_")
+# case/whitespace/punctuation normalization, applied to both sides
+_NORM = r"regexp_replace(regexp_replace(lower(trim({})), '[^\\w\\s]', ''), '\\s+', ' ')"
+# distinct shingle hashes; strings shorter than one shingle are padded
+# (rpad would TRUNCATE longer ones). The lookahead yields every
+# overlapping n-gram; normalized text has no line terminators.
+_SHINGLES = (
+    "array_distinct(transform(regexp_extract_all("
+    f"if(length(_norm) >= {SHINGLE_N}, _norm, rpad(_norm, {SHINGLE_N}, '_')), "
+    f"'(?=({'.' * SHINGLE_N}))', 1), g -> xxhash64(g)))"
+)
+# minhash k = min over the set of (a_k * (h mod D) + b_k) mod D, all k
+# in one fold
+_MINHASHES = (
+    f"aggregate(transform(shs, h -> pmod(h, {_DOMAIN})), "
+    f"array_repeat(CAST({_DOMAIN} AS BIGINT), {NUM_HASHES}), "
+    f"(acc, x) -> transform(acc, (m, k) -> least(m, pmod("
+    f"x * array({', '.join(map(str, _HASH_A))})[k] "
+    f"+ array({', '.join(map(str, _HASH_B))})[k], {_DOMAIN}))))"
+)
+_BANDS = "CASE WHEN _mh IS NOT NULL THEN array({}) END".format(", ".join(
+    "xxhash64({}, {})".format(
+        ", ".join(f"_mh[{band * ROWS_PER_BAND + r}]" for r in range(ROWS_PER_BAND)), band
     )
+    for band in range(BANDS)
+))
+
+
+def _sketch(df: DataFrame, norm: str, *keep: str) -> DataFrame:
+    """Per row of ``df``: the ``keep`` columns, then ``_norm`` (the SQL
+    expression ``norm``, a normalized surface), ``shs`` (its distinct
+    shingle hashes) and ``bands`` (one hash per LSH band); all null
+    where ``_norm`` is."""
     return (
-        df.select(F.col(surface_col).alias("surface"), norm.alias("_norm"))
-        .select(
-            "surface",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, length(_norm) - {SHINGLE_N - 1}), "
-                    f"i -> substring(_norm, i, {SHINGLE_N}))"
-                )
-            ).alias("shingle"),
-        )
-        .select("surface", F.xxhash64("shingle").alias("sh"))
+        df.selectExpr(*keep, f"{norm} AS _norm")
+        .selectExpr(*keep, "_norm", f"{_SHINGLES} AS shs")
+        .selectExpr(*keep, "_norm", "shs", f"{_MINHASHES} AS _mh")
+        .selectExpr(*keep, "_norm", "shs", f"{_BANDS} AS bands")
     )
 
 
-def _sketches(shingles: DataFrame) -> DataFrame:
-    """ONE groupBy per surface → minhash signature AND exact shingle set.
-
-    (surface, shs: array<long>, mh0..mhK) — the signature feeds banding,
-    the set feeds exact Jaccard verification; fusing them halves the
-    shuffle/plan count of the LSH stage.
-    """
-    reduced = shingles.withColumn("sh31", F.pmod(F.col("sh"), F.lit(_DOMAIN)))
-    aggs = [F.collect_set("sh").alias("shs")] + [
-        F.min(F.pmod(F.col("sh31") * F.lit(a) + F.lit(b), F.lit(_DOMAIN))).alias(f"mh{i}")
-        for i, (a, b) in enumerate(zip(_HASH_A, _HASH_B))
-    ]
-    return reduced.groupBy("surface").agg(*aggs)
+def _band_rows(df: DataFrame, norm: str, prefix: str, *keep: str) -> DataFrame:
+    """(band, band_hash) rows of each row's sketch, with its ``keep``
+    columns and its sketch as ``{prefix}_norm`` and ``{prefix}_shs``; a
+    row without a sketch keeps one row, its band null."""
+    return _sketch(df, norm, *keep).selectExpr(
+        *keep, f"_norm AS {prefix}_norm", f"shs AS {prefix}_shs",
+        "posexplode_outer(bands) AS (band, band_hash)",
+    )
 
 
-def _band_rows(sketches: DataFrame) -> DataFrame:
-    """sketch rows → exploded (surface, band, band_hash)."""
-    bands = F.array(
-        *[
-            F.xxhash64(
-                *[F.col(f"mh{band * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
-                F.lit(band),
+def _score(a: str, b: str) -> str:
+    """Hybrid verification score of the sketches prefixed ``a`` and ``b``."""
+    inter = f"size(array_intersect({a}_shs, {b}_shs))"
+    return (
+        f"greatest({inter} / (size({a}_shs) + size({b}_shs) - {inter}), "
+        f"1D - levenshtein({a}_norm, {b}_norm) "
+        f"/ nullif(greatest(length({a}_norm), length({b}_norm)), 0))"
+    )
+
+
+_INDEXES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_INDEXES_LOCK = threading.Lock()
+
+
+def gazetteer_index(gazetteer: DataFrame) -> DataFrame:
+    """(g_entity, g_norm, g_shs, band, band_hash): the band rows of every
+    distinct normalized alias ``g_norm``, ``g_entity`` the min entity id
+    of its aliases. Band 0's rows are the exact-match map.
+
+    Persisted on first use and kept, per DataFrame object, until
+    ``gazetteer`` is garbage-collected."""
+    with _INDEXES_LOCK:
+        idx = _INDEXES.get(gazetteer)
+        if idx is None:
+            # aliases with one normalized text share their sketch, so
+            # each one's best match is the group's min entity id
+            aliases = (
+                gazetteer.selectExpr(f"{_NORM.format('alias')} AS g_norm", "entity_id")
+                .groupBy("g_norm").agg(F.expr("min(entity_id) AS g_entity"))
             )
-            for band in range(BANDS)
-        ]
-    )
-    return sketches.select(
-        "surface", F.posexplode(bands).alias("band", "band_hash")
-    )
+            idx = _band_rows(aliases, "g_norm", "g", "g_entity").persist()
+            _INDEXES[gazetteer] = idx
+            weakref.finalize(gazetteer, idx.unpersist).atexit = False
+        return idx
+
+
+def _threshold(threshold: float) -> str:
+    """``threshold`` as a SQL double."""
+    return f"CAST({float(threshold)!r} AS DOUBLE)"
 
 
 def link_mentions(
@@ -116,7 +158,8 @@ def link_mentions(
     ----------
     mentions : DataFrame(surface: string) — distinct mention surfaces.
     gazetteer : DataFrame(alias: string, entity_id: string) — small
-        (broadcastable) alias dictionary.
+        (broadcastable) alias dictionary, indexed once per object
+        (:func:`gazetteer_index`).
 
     Returns
     -------
@@ -124,142 +167,48 @@ def link_mentions(
     null for surfaces no strategy could resolve (handled by stage 4
     canonicalization) and method ∈ {exact, lsh, none}.
     """
-    gaz_norm = (
-        gazetteer.select(
-            normalize_surface(F.col("alias")).alias("_gnorm"),
-            F.col("entity_id"),
-        )
-        # one winner per normalized alias, deterministic
-        .groupBy("_gnorm").agg(F.min("entity_id").alias("entity_id"))
+    idx = gazetteer_index(gazetteer)
+    exact = idx.where("band = 0").selectExpr("g_norm AS _norm", "g_entity AS _exact_id")
+    m = mentions.selectExpr("surface", f"{_NORM.format('surface')} AS _norm").join(
+        F.broadcast(exact), "_norm", "left"
     )
-    m = mentions.select(
-        "surface", normalize_surface(F.col("surface")).alias("_mnorm")
-    )
-    exact = (
-        m.join(F.broadcast(gaz_norm), m["_mnorm"] == gaz_norm["_gnorm"], "left")
-        .select("surface", "entity_id")
-        .persist()  # reused by the matched + residue branches
-    )
-    matched = exact.filter(F.col("entity_id").isNotNull()).select(
-        "surface", "entity_id", F.lit("exact").alias("method"), F.lit(1.0).alias("score")
-    )
-    residue = exact.filter(F.col("entity_id").isNull()).select("surface")
-
-    # --- LSH path over the residue -------------------------------------
-    gaz_surf = gazetteer.select(F.col("alias").alias("surface")).distinct()
-    g_sk = _sketches(_shingles(gaz_surf, "surface")).persist()
-    m_sk = _sketches(_shingles(residue, "surface")).persist()
-
-    cand = (
-        _band_rows(m_sk)
-        .join(
-            F.broadcast(
-                _band_rows(g_sk).withColumnRenamed("surface", "g_surface")
-            ),
-            ["band", "band_hash"],
-        )
-        .select("surface", "g_surface")
-        .distinct()
-    )
-    # Hybrid verification score: shingle Jaccard OR normalized Levenshtein
-    # similarity, whichever is higher — Jaccard discriminates long
-    # surfaces, edit distance rescues short ones where a single typo
-    # destroys most shingles. Both are JVM built-ins on the (small)
-    # candidate-pair set only.
-    lev_sim = 1.0 - F.levenshtein(
-        normalize_surface(F.col("m_surface")), normalize_surface(F.col("g_surface"))
-    ) / F.greatest(
-        F.length(normalize_surface(F.col("m_surface"))),
-        F.length(normalize_surface(F.col("g_surface"))),
-    )
-    scored = (
-        cand.withColumnRenamed("surface", "m_surface")
-        .join(
-            m_sk.select(F.col("surface").alias("m_surface"), F.col("shs").alias("m_shs")),
-            "m_surface",
-        )
-        .join(
-            F.broadcast(
-                g_sk.select(F.col("surface").alias("g_surface"), F.col("shs").alias("g_shs"))
-            ),
-            "g_surface",
-        )
-        .withColumn("_inter", F.size(F.array_intersect("m_shs", "g_shs")))
-        .withColumn(
-            "_jacc",
-            F.col("_inter")
-            / (F.size("m_shs") + F.size("g_shs") - F.col("_inter")),
-        )
-        .withColumn("score", F.greatest(F.col("_jacc"), lev_sim))
-        .filter(F.col("score") >= threshold)
-    )
-    # map gazetteer surface → entity id (small), pick best per mention
-    gaz_best = gazetteer.select(
-        F.col("alias").alias("g_surface"), "entity_id"
-    ).groupBy("g_surface").agg(F.min("entity_id").alias("entity_id"))
-    w = Window.partitionBy("m_surface").orderBy(
-        F.desc("score"), F.asc("entity_id")
-    )
-    lsh = (
-        scored.join(F.broadcast(gaz_best), "g_surface")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("m_surface").alias("surface"),
-            "entity_id",
-            F.lit("lsh").alias("method"),
-            "score",
-        )
-        .persist()  # consumed by the result union AND the left_anti below
-    )
-    unresolved = (
-        residue.join(lsh.select("surface"), "surface", "left_anti")
-        .select(
+    # only the residue is sketched, banded and scored
+    return (
+        _band_rows(m, "if(_exact_id IS NULL, _norm, NULL)", "m", "surface", "_exact_id")
+        .join(F.broadcast(idx), ["band", "band_hash"], "left")
+        .selectExpr("surface", "_exact_id", "g_entity", f"{_score('m', 'g')} AS _score")
+        .groupBy("surface")
+        .agg(F.expr("min(_exact_id) AS _exact_id"),
+             F.expr(f"min(if(_score >= {_threshold(threshold)}, "
+                    "named_struct('neg', -_score, 'id', g_entity), NULL)) AS _best"))
+        .selectExpr(
             "surface",
-            F.lit(None).cast("string").alias("entity_id"),
-            F.lit("none").alias("method"),
-            F.lit(0.0).alias("score"),
+            "coalesce(_exact_id, _best.id) AS entity_id",
+            "CASE WHEN _exact_id IS NOT NULL THEN 'exact' "
+            "WHEN _best IS NOT NULL THEN 'lsh' ELSE 'none' END AS method",
+            "CASE WHEN _exact_id IS NOT NULL THEN 1D "
+            "ELSE coalesce(-_best.neg, 0D) END AS score",
         )
     )
-    return matched.unionByName(lsh).unionByName(unresolved)
 
 
 def self_candidate_pairs(
     surfaces: DataFrame, threshold: float = DEFAULT_THRESHOLD
 ) -> DataFrame:
-    """LSH candidate pairs *within* one surface set, Jaccard-scored.
+    """LSH candidate pairs *within* one surface set, scored like
+    :func:`link_mentions` candidates.
 
     Feeds stage-4 canonicalization: surfaces no gazetteer entry could
     resolve are clustered among themselves (connected components over
     these edges). Returns (a, b, score) with a < b.
     """
-    sk = _sketches(_shingles(surfaces, "surface")).persist()
-    sig = _band_rows(sk)
-    left = sig.withColumnRenamed("surface", "a")
-    right = sig.withColumnRenamed("surface", "b")
-    cand = (
-        left.join(right, ["band", "band_hash"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    a_sets = sk.select(F.col("surface").alias("a"), F.col("shs").alias("m_shs"))
-    b_sets = sk.select(F.col("surface").alias("b"), F.col("shs").alias("g_shs"))
-    lev_sim = 1.0 - F.levenshtein(
-        normalize_surface(F.col("a")), normalize_surface(F.col("b"))
-    ) / F.greatest(
-        F.length(normalize_surface(F.col("a"))),
-        F.length(normalize_surface(F.col("b"))),
-    )
+    rows = _band_rows(surfaces, _NORM.format("surface"), "s", "surface")
+    a = rows.selectExpr("band", "band_hash", "surface AS a", "s_norm AS a_norm", "s_shs AS a_shs")
+    b = rows.selectExpr("band", "band_hash", "surface AS b", "s_norm AS b_norm", "s_shs AS b_shs")
     return (
-        cand.join(a_sets, "a")
-        .join(b_sets, "b")
-        .withColumn("_inter", F.size(F.array_intersect("m_shs", "g_shs")))
-        .withColumn(
-            "_jacc",
-            F.col("_inter") / (F.size("m_shs") + F.size("g_shs") - F.col("_inter")),
-        )
-        .withColumn("score", F.greatest(F.col("_jacc"), lev_sim))
-        .filter(F.col("score") >= threshold)
-        .select("a", "b", "score")
+        a.join(b, ["band", "band_hash"])
+        .where("a < b")
+        .dropDuplicates(["a", "b"])
+        .selectExpr("a", "b", f"{_score('a', 'b')} AS score")
+        .where(f"score >= {_threshold(threshold)}")
     )

@@ -73,22 +73,33 @@ def resolve_surfaces(extracted: DataFrame, links: DataFrame) -> DataFrame:
     return out.filter(F.col("subj").isNotNull() & F.col("obj").isNotNull())
 
 
-def build_links(mention_df: DataFrame, gazetteer: DataFrame) -> DataFrame:
+def _method_counts(links: DataFrame) -> dict[str, int]:
+    """{method: rows} of a link table."""
+    return {r["method"]: r["n"]
+            for r in links.groupBy("method").agg(F.count("*").alias("n")).collect()}
+
+
+def build_links(mention_df: DataFrame, gazetteer: DataFrame) -> tuple[DataFrame, dict]:
     """Stages 3+4: gazetteer/LSH linking, then CC canonicalization of the
-    residue. Returns (surface, entity_id, method) with no nulls."""
+    residue.
+
+    Returns the link table (surface, entity_id, method) with no nulls,
+    checkpointed, and its row count per method."""
     # localCheckpoint: materialize once and CUT the lineage — the CC loop
     # and the multi-branch consumers below must not re-derive the whole
-    # linking DAG per action.
-    raw = link_mentions(mention_df, gazetteer).localCheckpoint(eager=True)
+    # linking DAG per action. Lazy: the per-method count is the job
+    # that materializes it.
+    raw = link_mentions(mention_df, gazetteer).localCheckpoint(eager=False)
+    counts = _method_counts(raw)
+    if not counts.pop("none", 0):
+        # common case: gazetteer+LSH resolved everything — skip the
+        # CC machinery entirely (it would still cost ~20 Spark stages
+        # on empty inputs)
+        return raw.select("surface", "entity_id", "method"), counts
     resolved = raw.filter(F.col("entity_id").isNotNull()).select(
         "surface", "entity_id", "method"
     )
     unresolved = raw.filter(F.col("entity_id").isNull()).select("surface")
-    if unresolved.isEmpty():
-        # common case: gazetteer+LSH resolved everything — skip the
-        # CC machinery entirely (it would still cost ~20 Spark stages
-        # on empty inputs)
-        return resolved
     pairs = (
         self_candidate_pairs(unresolved).select("a", "b").localCheckpoint(eager=True)
     )
@@ -104,7 +115,10 @@ def build_links(mention_df: DataFrame, gazetteer: DataFrame) -> DataFrame:
             F.lit("unk").alias("method"),
         )
     )
-    return resolved.unionByName(clustered).unionByName(singletons)
+    links = resolved.unionByName(clustered).unionByName(singletons).localCheckpoint(
+        eager=False
+    )
+    return links, _method_counts(links)
 
 
 def check_turn_invariant(transcripts: DataFrame, reshuffled: DataFrame) -> None:
@@ -137,6 +151,13 @@ def build_kg(
     ``input_sig``: resume key. If None it is computed by hashing the
     input (one extra pass); callers that already know a stable identity
     for the input (a snapshot id, a generator seed) pass it directly.
+
+    ``gazetteer`` is indexed on first use and the index stays cached
+    while the DataFrame object lives (``operators.linking.
+    gazetteer_index``): builds and appends that pass the same object
+    share it. Treat it as immutable — pass a new DataFrame when the
+    alias source changes. ``stats["links"]`` is the link table's row
+    count per method, counted once from its checkpoint.
     """
     store = TripleStore(spark, root, num_partitions)
     if input_sig is None:
@@ -165,11 +186,11 @@ def build_kg(
     _mark("extract", t0)
     try:
         t0 = _time.time()
-        links = build_links(mentions(extracted), gazetteer).localCheckpoint(eager=True)
+        links, link_counts = build_links(mentions(extracted), gazetteer)
         _mark("link", t0)
         t0 = _time.time()
         # resolve stays LAZY: it is two map-side broadcast joins over
-        # the persisted `extracted` (links itself is checkpointed), so
+        # the persisted `extracted` (build_links checkpointed links), so
         # each downstream consumer fuses them into its own scan for
         # ~free. An eager localCheckpoint here wrote the full resolved
         # triple set to executor-local disk — at N executors per host
@@ -200,10 +221,7 @@ def build_kg(
             "input_sig": input_sig,
             "transcript_rows": n_rows,
             "extracted": n_extracted,
-            "links": {
-                r["method"]: r["n"]
-                for r in links.groupBy("method").agg(F.count("*").alias("n")).collect()
-            },
+            "links": link_counts,
             # encode_quads keeps every resolved row and every index holds
             # every quad: the writer's row count, not a recount
             "resolved_triples": idx_stats["spo"],

@@ -105,7 +105,7 @@ def append_batch(
     ordered = stable_conversations(transcripts)
     extracted = extract_triples(ordered).persist()
     try:
-        links = build_links(mentions(extracted), gazetteer).localCheckpoint(eager=True)
+        links, _ = build_links(mentions(extracted), gazetteer)
         resolved = resolve_surfaces(extracted, links).localCheckpoint(eager=True)
         return append_resolved(store, resolved)
     finally:

@@ -29,7 +29,7 @@ BASE_CONVS, APPEND_CONVS = 20, 4
 GRAPH = "http://example.org/doc/g"
 
 # exact Spark jobs per write on this module's store (see the docstring)
-JOBS = {"append": 37, "load": 16, "delete": 26}
+JOBS = {"append": 24, "load": 16, "delete": 26}
 
 
 def _nquads_doc() -> str:
