@@ -464,8 +464,9 @@ def _delete_ids(store, dels: DataFrame, input_sig: str) -> int:
     from SPO — two null-safe left_anti hash-join legs (never a
     broadcast-nested-loop OR condition), lineage broken before any
     overwrite (the compact() safety pattern) — then fanned out as three
-    sorted writes."""
-    dels = dels.localCheckpoint(eager=True)
+    sorted writes. ``dels`` is read only into that checkpoint, so it
+    needs none of its own (its rows are driver-local or checkpointed by
+    the caller)."""
     d_ctx = dels.filter(F.col("c").isNotNull())
     d_any = dels.filter(F.col("c").isNull()).drop("c")
     cur = store.index("spo").select(*QUAD_COLS)

@@ -38,15 +38,10 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    # master/conf come from spark-submit; only engine-level SQL conf here
-    spark = (
-        SparkSession.builder.appName("kg-build")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    from hbase_rdf_spark.session import ENGINE_CONF
+
+    # master/conf come from spark-submit; only the engine confs here
+    spark = SparkSession.builder.appName("kg-build").config(map=ENGINE_CONF).getOrCreate()
     transcripts = spark.read.parquet(args.transcripts)
     gazetteer = spark.read.parquet(args.gazetteer).select("alias", "entity_id")
 

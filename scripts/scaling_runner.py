@@ -30,10 +30,11 @@ def _gen_main() -> None:
     n_convs, out, n_files = int(sys.argv[2]), sys.argv[3], int(sys.argv[4])
     from pyspark.sql import SparkSession
 
+    from hbase_rdf_spark.session import ENGINE_CONF
+
     spark = (
         SparkSession.builder.appName("kg-scaling-gen")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=ENGINE_CONF)
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -57,8 +58,10 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    # spark-submit provides the master; only shape the SQL confs here
-    # Cluster-proportional knobs — exactly what a real N-executor
+    from hbase_rdf_spark.session import ENGINE_CONF
+
+    # spark-submit provides the master; the engine confs, then the
+    # cluster-proportional knobs — exactly what a real N-executor
     # deployment scales with N: shuffle partitions at ~4x cores (2+
     # waves absorb stragglers; 1 task/core makes the slowest task the
     # stage wall time), AQE coalescing that respects parallelism
@@ -67,13 +70,11 @@ def main() -> None:
     # enough that the input scan fans out to every core.
     spark = (
         SparkSession.builder.appName(f"kg-scaling-{cores}")
+        .config(map=ENGINE_CONF)
         .config("spark.sql.shuffle.partitions", str(max(4 * cores, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.files.maxPartitionBytes", "32m")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -83,21 +83,33 @@ def test_self_candidate_pairs_scores_within_one_set(spark):
     assert 0.5 <= got[("Acme Robotics", "Acme Robtics")] < 1.0
 
 
+def _cache_entries(spark) -> set:
+    """The session's cache entries (JVM ``CachedData`` objects). Entries
+    that other tests' garbage releases meanwhile only leave this set, so
+    the difference of two reads is what ran in between added."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    field = cache.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = field.get(cache)
+    return {entries.apply(i) for i in range(entries.size())}
+
+
 def test_link_caches_only_the_gazetteer_index(spark, tmp_path):
     """A build and an append leave one cache entry, the gazetteer index,
     and dropping the gazetteer DataFrame releases it."""
     cache = spark._jsparkSession.sharedState().cacheManager()
     gc.collect()
-    before = cache.numCachedEntries()
+    before = _cache_entries(spark)
     gaz = _gazetteer(spark, build_gazetteer())
     eng = KgEngine(spark, str(tmp_path / "kg"))
     eng.build(transcripts_df(spark, 10, seed=21), gaz, input_sig="cache:21")
-    assert cache.numCachedEntries() == before + 1
+    index = cache.lookupCachedData(gazetteer_index(gaz)._jdf).get()
+    assert _cache_entries(spark) - before == {index}
     eng.append(transcripts_df(spark, 4, seed=21, conv_offset=10), gaz)
-    assert cache.numCachedEntries() == before + 1
+    assert _cache_entries(spark) - before == {index}
     del gaz
     gc.collect()
-    assert cache.numCachedEntries() == before
+    assert _cache_entries(spark) - before == set()
 
 
 def test_concurrent_callers_share_one_gazetteer_index(spark):

@@ -22,6 +22,7 @@ from hbase_rdf_spark.engine import KgEngine
 from hbase_rdf_spark.functions import lineage
 from hbase_rdf_spark.functions.encoding import build_dictionaries, encode_quads
 from hbase_rdf_spark.operators.materialize import INDEXES, SCHEMAS, TripleStore
+from hbase_rdf_spark.session import ENGINE_CONF
 from hbase_rdf_spark.sources.ntriples import parse_lines, quads as nt_quads
 from hbase_rdf_spark.sources.synthetic import build_gazetteer, transcripts_df
 
@@ -29,7 +30,7 @@ BASE_CONVS, APPEND_CONVS = 20, 4
 GRAPH = "http://example.org/doc/g"
 
 # exact Spark jobs per write on this module's store (see the docstring)
-JOBS = {"append": 24, "load": 16, "delete": 26}
+JOBS = {"append": 24, "load": 16, "delete": 24}
 
 
 def _nquads_doc() -> str:
@@ -157,3 +158,11 @@ def test_session_captures_no_dataframe_origin(spark):
     with pytest.raises(AnalysisException) as err:
         spark.range(1).select("no_such_column")
     assert err.value.getCondition() == "UNRESOLVED_COLUMN.WITH_SUGGESTION"
+
+
+def test_session_sizes_the_codegen_cache(spark):
+    """``get_spark`` keeps 2,000 generated classes per JVM, the engine's
+    working set with room to spare (see ``tests/test_codegen_reuse.py``);
+    Spark's default is 100."""
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert spark.conf.get(key) == ENGINE_CONF[key] == "2000"
