@@ -922,8 +922,8 @@ def _q_sparql_graph_var_path(spark, sf):
 def _q_sparql_optional_algebra(spark, sf):
     # FULL group algebra inside OPTIONAL (round 4): the block carries
     # MINUS and FILTER EXISTS alongside its pattern — evaluated as one
-    # GroupGraphPattern (plans/sparql.py _group_bindings) and
-    # left-joined as a unit, so an ?y pruned by MINUS/EXISTS keeps its
+    # GroupGraphPattern (plans/sparql.py _group_bindings, the fold over
+    # the group's elements) and left-joined as a unit, so an ?y pruned by MINUS/EXISTS keeps its
     # outer row with ?o unbound. The reference gets this free from
     # ARQ's algebra; our parser previously raised.
     return _sparql(spark, sf, """
@@ -943,8 +943,8 @@ def _q_sparql_subquery_union(spark, sf):
     # so a ?z reachable via both <merge> and <scan> counts twice —
     # then joins back to the outer pattern on ?y. Previously
     # _execute_subquery raised on any non-BGP algebra in the body; the
-    # body now routes through the full GroupGraphPattern evaluator
-    # (plans/sparql.py _group_bindings).
+    # body now routes through the one GroupGraphPattern evaluator
+    # (plans/sparql.py _group_bindings), like every group.
     return _sparql(spark, sf, """
         SELECT DISTINCT ?y ?n ?l WHERE {
           ?y <toklen> ?l .
@@ -1021,10 +1021,9 @@ def _q_sparql_bind(spark, sf):
 def _q_sparql_bind_join(spark, sf):
     # BIND var CONSUMED by later patterns — SPARQL's in-group
     # evaluation order Join(Extend(G,?m,?n+1), P): the computed length
-    # seeds a pattern object, and the connected <scan> pattern travels
-    # with it into the post-Extend join (plans/sparql.py
-    # _post_bind_split; ids are content-addressed so the join is plain
-    # struct equality)
+    # seeds a pattern object; the two patterns after the BIND are one
+    # BGP joined onto the Extend (plans/sparql.py _group_bindings; ids
+    # are content-addressed so the join is plain struct equality)
     return _sparql(spark, sf, """
         SELECT DISTINCT ?y ?z WHERE {
           <spark> <join> ?y .

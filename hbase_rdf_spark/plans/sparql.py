@@ -18,9 +18,8 @@ compiles it onto the set-oriented BGP executor — SPARQL text in,
 DataFrame out. Where ARQ ran a client-side iterator chain, every clause
 here lowers to DataFrame algebra: BGP → joins (J2), FILTER → column
 predicates pushed by Catalyst (J6/J7), OPTIONAL → group-as-unit left
-join (ARQ OpConditional), UNION → unionByName (multiple independent
-chains distribute over the required patterns), ORDER+LIMIT →
-TakeOrderedAndProject (the reference's TopN transform,
+join (ARQ OpConditional), UNION → unionByName joined onto the group,
+ORDER+LIMIT → TakeOrderedAndProject (the reference's TopN transform,
 reference: nl/vu/jena/sparql/engine/optimizer/HBaseOptimize.java:103-104).
 ORDER BY is type-aware per the spec's total order — sort keys derive
 from the binding structs (unbound < entities/IRIs < literals; numeric
@@ -41,66 +40,54 @@ alternative, and the ``+ * ?`` closures, freely composable with parens
 Blank nodes in queries (``_:b``, ``[]``) act as non-projectable
 variables, per spec.
 
-Solution-set clauses: ``VALUES`` (in-group and the trailing
-ValuesClause after the modifiers, SPARQL 1.1 grammar [28]; inline
-table joined on shared vars
-via SPARQL compatibility — ``UNDEF`` cells and OPTIONAL-null bindings
-match anything and the merge keeps the bound side; new vars extend
-bindings), ``MINUS`` (anti-join on shared vars; block filters over
-outer-scope vars evaluate those vars as UNBOUND, per the spec's
-no-substitution rule — NULL struct columns + three-valued logic),
-``FILTER [NOT] EXISTS`` (semi/anti join; uncorrelated → global
-emptiness test; correlated block filters join-condition-evaluate
-under substitution semantics — numeric/term comparisons AND
-label-space predicates, the latter via per-var id2term label
-attachment on the substituted side), ``FILTER(?x [NOT]
-IN (…))`` (OptimizeIn-style
-equality expansion), ``BIND(expr AS ?v)`` (constant terms, variable
-copies, numeric arithmetic ``+ - * /`` over vars/numbers, and the
-string builtins ``STR/CONCAT/UCASE/LCASE/STRLEN`` — label-space, one
-id2term join per referenced var, producing plain-literal bindings
-with the in-plan hash id + lexical sidecar; a NULL operand or
-division by zero leaves the var unbound, per the SPARQL error→unbound
-rule; FILTERs over BIND vars are deferred until after the
-assignment). A graph pattern AFTER the BIND may CONSUME its var —
-SPARQL's in-group evaluation order Join(Extend(G,v,expr), P): the
-consuming patterns (with their var-connected component and the
-filters they can answer) evaluate as a separate post-BGP and
-compatibility-join back after the Extend (``_post_bind_split``; term
-ids are content-addressed, so the computed term carries exactly its
-dictionary id and the join is plain struct equality). A consuming
-pattern BEFORE the BIND, a collision with an OPTIONAL/UNION/VALUES/
-subquery var, and circular input dependencies raise.
+Group evaluation: each GroupGraphPattern is parsed into ONE ordered
+element list (``Query.where``) and evaluated as the SPARQL 1.1 §18.2.2
+algebra by one left-to-right fold (``_group_bindings``) — the
+reference's "SPARQL text → ARQ Op algebra → reordered BasicPattern"
+path, with join order decided in one place (``execute_bgp``'s
+reorder). Adjacent triple patterns are one BGP; ``OPTIONAL`` is a
+LeftJoin over the elements before it (block filters that read outer
+vars are its join condition); ``MINUS`` is a Minus (anti-join on
+shared vars; block filters over outer-scope vars see them UNBOUND,
+per the spec's no-substitution rule); ``BIND(expr AS ?v)`` is an
+Extend at its position (a NULL operand or an error leaves ?v unbound,
+and later patterns may join the computed term — ids are
+content-addressed, so it carries exactly its dictionary id);
+``VALUES`` (in-group, and the trailing ValuesClause, grammar [28]),
+``SERVICE``, subqueries, UNION chains and other nested groups are
+Joins — SPARQL compatibility where a shared var may be unbound
+(``UNDEF`` cells, OPTIONAL misses: the merge keeps the bound side).
+The group's FILTERs apply to the whole group; ``FILTER [NOT] EXISTS``
+is a semi/anti join (uncorrelated → global emptiness test; correlated
+block filters join-condition-evaluate under substitution semantics),
+and EXISTS inside any expression reads a marker column. Two rewrites
+keep the scans lean: a GRAPH or braced group of triples (plus filters
+over its own vars) merges into the group's BGP, and a FILTER whose
+vars a BGP certainly binds runs inside it, where Catalyst pushes it
+into the scans. A FILTER inside a braced, GRAPH or UNION group sees
+only that group's vars. §18.2.1 rejects a BIND whose var is in scope
+before it.
 
 Subqueries: nested ``{ SELECT … }`` blocks evaluate bottom-up in ID
 SPACE and join the enclosing group on shared variables — the standard
 analytic shape (per-group aggregate joined back to detail rows).
-Surface: the full group algebra in the WHERE body (BGP/FILTER/
-OPTIONAL/UNION/VALUES/BIND/MINUS/EXISTS/nested subqueries)
-+ aggregates (incl. the label-space
-GROUP_CONCAT/SAMPLE, which export kind-1 structs with a lexical
-sidecar; expression arguments ``SUM(?a * ?b)`` desugar to a hidden
-pre-grouping Extend; SUM/AVG honour DISTINCT) with GROUP BY/HAVING
-and DISTINCT, SELECT expressions over the aggregated frame —
+Surface: the full group algebra in the WHERE body + aggregates (incl.
+the label-space GROUP_CONCAT/SAMPLE, which export kind-1 structs with
+a lexical sidecar; expression arguments ``SUM(?a * ?b)`` desugar to a
+hidden pre-grouping Extend; SUM/AVG honour DISTINCT) with GROUP
+BY/HAVING and DISTINCT, SELECT expressions over the aggregated frame —
 ``(?tot / COUNT(?o) AS ?avg)``, inline aggregate calls become hidden
-aggregates — plus ORDER BY …
-LIMIT/OFFSET top-k slices (type-aware sort keys — aggregate aliases
-sort natively, pattern vars on the SPARQL total order with a lexical
-tie-break; Catalyst lowers sort+limit to TakeOrderedAndProject, no
-full sort); subqueries nest one level into
-OPTIONAL/GRAPH/UNION (deeper nesting raises). Property paths work in
-every group position — top level, OPTIONAL, UNION branches, GRAPH
-with a constant, and GRAPH ?var (per-named-graph pair algebra: the
-context id rides the closure as an extra join key, plans/bgp.py
+aggregates — plus ORDER BY … LIMIT/OFFSET top-k slices (type-aware
+sort keys — aggregate aliases sort natively, pattern vars on the
+SPARQL total order with a lexical tie-break; Catalyst lowers
+sort+limit to TakeOrderedAndProject, no full sort). Property paths
+work in every group position — top level, OPTIONAL, UNION branches,
+GRAPH with a constant, and GRAPH ?var (per-named-graph pair algebra:
+the context id rides the closure as an extra join key, plans/bgp.py
 ``_path_step``) — matching ARQ's path flattening in the reference
-(optimizer/HBaseOptimize.java:28-124). Every group position accepts
-the FULL group algebra — VALUES, MINUS, FILTER [NOT] EXISTS,
-subqueries mixed with patterns, and nested UNION chains mixed with
-other content ({ {A} UNION {B} . C } — joins distribute over the
-union): every OPTIONAL body, UNION branch, MINUS body and EXISTS body
-is the ``Query`` parsed inside its braces, evaluated by the one
-GroupGraphPattern evaluator (``_group_bindings``) and combined
-(left-/anti-/semi-joined) as a unit.
+(optimizer/HBaseOptimize.java:28-124). Every nested group — OPTIONAL
+body, UNION branch, MINUS and EXISTS body, subquery body — is the
+``Query`` parsed inside its braces, evaluated by the same fold.
 
 Dataset semantics: with no dataset clause, patterns scan the
 STATEMENT-LEVEL quad view — one solution per containing named graph,
@@ -271,16 +258,35 @@ class ServiceBlock:
 @dataclass
 class BindAssign:
     """``BIND(expr AS ?var)``: var (no '?') ← an expression AST
-    (plans/expr.py)."""
+    (plans/expr.py). In a group's element list it is an Extend at its
+    position."""
 
     var: str
     expr: tuple
-    # pattern count of the enclosing group at the BIND's parse
-    # position: patterns at index >= at may consume the var (they
-    # evaluate AFTER the Extend and join back — _post_bind_split).
-    # None = positionless (projection expressions, which evaluate
-    # after the whole group): consuming patterns stay an error.
-    at: int | None = None
+
+
+@dataclass
+class LeftJoin:
+    """``OPTIONAL { … }``: the group left-joins onto the solutions of
+    the elements before it."""
+
+    group: "Query"
+
+
+@dataclass
+class Minus:
+    """``MINUS { … }``: removes the solutions before it that are
+    compatible with the group's."""
+
+    group: "Query"
+
+
+@dataclass
+class Union:
+    """A braced group, or a ``{ … } UNION { … }`` chain of them (one
+    ``Query`` per branch), joined onto the solutions before it."""
+
+    branches: list["Query"]
 
 
 @dataclass
@@ -288,35 +294,26 @@ class Query:
     variables: list[str]  # projected ?vars ('*' expanded at exec)
     form: str = "select"  # select | ask | describe
     distinct: bool = False
-    patterns: list[Bgp] = field(default_factory=list)
-    # nested groups are Queries too: each OPTIONAL body, UNION branch,
-    # MINUS body and [NOT] EXISTS body is the group parsed inside its
-    # braces, evaluated by the one group evaluator (_group_bindings)
-    optional: list["Query"] = field(default_factory=list)
-    # UNION chains: each chain is a list of branch groups; joins
-    # distribute over unions, so N chains execute as the cross product
-    # of their branches
-    union_blocks: list[list["Query"]] = field(default_factory=list)
+    # the WHERE group as SPARQL 1.1 §18.2.2 sees it: its elements in
+    # written order — Bgp triple patterns (adjacent ones form one BGP),
+    # LeftJoin, Minus, Union, BindAssign, ValuesBlock, ServiceBlock
+    # and subqueries (a Query) — evaluated by _group_bindings as one
+    # left-to-right fold
+    where: list = field(default_factory=list)
+    # the group's FILTERs, FILTER [NOT] EXISTS included: they apply to
+    # the whole group
     filters: list = field(default_factory=list)
-    values: list[ValuesBlock] = field(default_factory=list)
     # trailing VALUES whose vars are aggregate aliases / BIND outputs /
     # non-group-key vars: joined POST-projection on rendered solutions
     # (§18.2.4 joins the ValuesClause after grouping)
     post_values: list[ValuesBlock] = field(default_factory=list)
-    services: list[ServiceBlock] = field(default_factory=list)
-    binds: list[BindAssign] = field(default_factory=list)
-    # nested { SELECT … } blocks: evaluated bottom-up in id space and
-    # joined to the enclosing group on shared variables
-    subqueries: list["Query"] = field(default_factory=list)
-    minus: list["Query"] = field(default_factory=list)
-    # FILTER [NOT] EXISTS { … }: (positive, group) pairs
-    exists: list[tuple[bool, "Query"]] = field(default_factory=list)
     aggregates: list[Aggregate] = field(default_factory=list)
     group_by: list[str] = field(default_factory=list)
-    # SELECT '(expr AS ?v)' expressions, parked here until the whole
-    # query is parsed, then staged by _stage_select_exprs: grouped
-    # query → postagg_binds (Extend over the aggregated frame);
-    # ungrouped → appended to binds (ordinary per-solution Extend)
+    # SELECT '(expr AS ?v)' expressions and ORDER BY expression keys,
+    # parked here until the whole query is parsed, then staged by
+    # _stage_select_exprs: grouped query → postagg_binds (Extend over
+    # the aggregated frame); ungrouped → the end of ``where``
+    # (ordinary per-solution Extends)
     select_exprs: list[BindAssign] = field(default_factory=list)
     # hidden per-solution Extends for aggregate EXPRESSION arguments
     # (SUM(?a * ?b)), applied just before the groupBy at both
@@ -328,7 +325,7 @@ class Query:
     having: tuple | None = None  # expression AST over the aggregated frame
     order_by: list[tuple[str, bool]] = field(default_factory=list)  # (var, asc)
     # ORDER BY expression keys desugar to hidden binds named __ord_e{i}
-    # (routed to binds / postagg_binds); listed here so execution can
+    # (staged with the SELECT expressions); listed here so execution can
     # materialize them as sort sidecars and drop them from the output
     order_hidden: list[str] = field(default_factory=list)
     limit: int | None = None
@@ -339,6 +336,11 @@ class Query:
     # iteration is restricted to named_graphs. Informational here (the
     # restriction is baked into each Bgp's g/g_in at parse time).
     dataset: tuple[tuple, tuple] | None = None
+
+    @property
+    def patterns(self) -> list[Bgp]:
+        """The group's own triple patterns, in written order."""
+        return [e for e in self.where if isinstance(e, Bgp)]
 
 
 #: an IRI with a scheme is absolute — never BASE-resolved (RFC 3986 §3.1)
@@ -658,13 +660,10 @@ class _Parser(ExprGrammar):
                 # after the group parses below
                 q.construct_template = None
             else:
-                self.expect("{")
-                tmpl = Query(variables=[])
-                self._group(tmpl, None)
-                self.expect("}")
-                if tmpl.binds:
+                tmpl = self._braced(None)
+                if not _plain_triples(tmpl):
                     raise SparqlSyntaxError(
-                        "BIND in a CONSTRUCT template is invalid"
+                        "a CONSTRUCT template allows only triples"
                     )
                 _reject_template_paths(tmpl.patterns)
                 q.construct_template = tmpl.patterns
@@ -705,10 +704,7 @@ class _Parser(ExprGrammar):
             # CONSTRUCT WHERE: spec restricts the pattern to a plain
             # triples template — no FILTER/OPTIONAL/UNION/etc., and no
             # property paths (a path is not a triple)
-            if (q.filters or q.optional
-                    or q.union_blocks or q.values or q.services
-                    or q.minus or q.exists
-                    or q.binds or q.subqueries):
+            if not _plain_triples(q):
                 raise SparqlSyntaxError(
                     "CONSTRUCT WHERE allows only a plain triples template"
                 )
@@ -801,15 +797,13 @@ class _Parser(ExprGrammar):
         parsed (GROUP BY and HAVING can introduce grouping after the
         SELECT clause): in a grouped query they are Extends over the
         AGGREGATED frame — group keys and aggregate aliases, SPARQL 1.1
-        §18.2.4.4 — otherwise ordinary BINDs over the group's
-        solutions, applied AFTER any in-group BIND so application
-        order matches scope."""
-        if not q.select_exprs:
-            return
+        §18.2.4.4 — otherwise ordinary BINDs after the group's last
+        element."""
         if q.aggregates or q.group_by:
-            q.postagg_binds = list(q.select_exprs)
+            q.postagg_binds = q.select_exprs
         else:
-            q.binds = q.binds + list(q.select_exprs)
+            for b in q.select_exprs:
+                self._bind(q, b)
         q.select_exprs = []
 
     def _parse_subselect(self, graph) -> "Query":
@@ -839,60 +833,46 @@ class _Parser(ExprGrammar):
         finally:
             stack.pop()
 
+    def _braced(self, graph) -> Query:
+        """``{ … }`` at the cursor → the group parsed inside."""
+        self.expect("{")
+        sub = Query(variables=[])
+        self._group(sub, graph)
+        self.expect("}")
+        return sub
+
     def _group_body(self, q: Query, graph) -> None:
+        """The group's elements, appended to ``q.where`` in written
+        order; its FILTERs go to ``q.filters``."""
         while True:
             tok = self.peek()
             if tok is None or tok == "}":
                 break
             up = tok.upper()
             if up == "GRAPH":
+                # the graph scope rides on every pattern parsed inside
                 self.next()
                 g = self.term()
-                self.expect("{")
-                sub = Query(variables=[])
-                self._subgroup(sub, g)
-                self.expect("}")
-                # everything parsed inside carried g on its patterns —
-                # splice it all into the enclosing group (bind
-                # positions shift by the patterns already parsed)
-                off = len(q.patterns)
-                q.patterns.extend(sub.patterns)
-                q.optional.extend(sub.optional)
-                q.filters.extend(sub.filters)
-                for b in sub.binds:  # BIND is graph-agnostic
-                    if b.at is not None:
-                        b.at += off
-                q.binds.extend(sub.binds)
-                q.union_blocks.extend(sub.union_blocks)
-                q.values.extend(sub.values)
-                q.minus.extend(sub.minus)
-                q.exists.extend(sub.exists)
-                # a subquery inside GRAPH splices too: its patterns were
-                # parsed with graph=g, so the scan scoping is already
-                # carried on each Bgp — nothing graph-specific remains
-                q.subqueries.extend(sub.subqueries)
+                self._join_group(q, [self._braced(g)])
             elif up == "OPTIONAL":
-                # the whole group left-joins as a unit (SPARQL LeftJoin);
-                # a bare SubSelect body parses as the group's subquery
                 self.next()
-                self.expect("{")
-                sub = Query(variables=[])
-                self._subgroup(sub, graph)
-                self.expect("}")
-                q.optional.append(sub)
+                q.where.append(LeftJoin(self._braced(graph)))
+            elif up == "MINUS":
+                self.next()
+                q.where.append(Minus(self._braced(graph)))
             elif up == "SELECT":
                 # bare SubSelect as the group's content
                 # (GroupGraphPattern ::= '{' (SubSelect | …) '}')
-                q.subqueries.append(self._parse_subselect(graph))
+                q.where.append(self._parse_subselect(graph))
             elif up == "FILTER":
                 self.next()
-                self._filter(q, graph)
+                self._filter(q)
             elif up == "VALUES":
                 self.next()
-                q.values.append(self._values_block())
+                q.where.append(self._values_block())
             elif up == "SERVICE":
                 self.next()
-                q.services.append(self._service_block())
+                q.where.append(self._service_block())
             elif up == "BIND":
                 self.next()
                 self.expect("(")
@@ -902,88 +882,74 @@ class _Parser(ExprGrammar):
                 if not v.startswith("?"):
                     raise SparqlSyntaxError("BIND alias must be a variable")
                 self.expect(")")
-                if v[1:] in pattern_vars(q.patterns):
-                    # §18.2.1: the BIND var must be unused in the group
-                    # up to the BIND
-                    raise SparqlSyntaxError(
-                        f"BIND {v} would rebind a variable already used "
-                        "by a graph pattern of the group"
-                    )
-                q.binds.append(
-                    BindAssign(v[1:], expr, at=len(q.patterns))
-                )
-            elif up == "MINUS":
-                self.next()
-                self.expect("{")
-                sub = Query(variables=[])
-                self._subgroup(sub, graph)
-                self.expect("}")
-                q.minus.append(sub)
+                self._bind(q, BindAssign(v[1:], expr))
             elif tok == "{":
                 # braced block: a subquery, or a group / UNION chain
                 self.next()
                 if (self.peek() or "").upper() == "SELECT":
                     sq = self._parse_subselect(graph)
                     self.expect("}")
-                    if (self.peek() or "").upper() == "UNION":
-                        # { SELECT … } UNION { … }: the subquery is the
-                        # first branch of a UNION chain
-                        branches = [Query(variables=[], subqueries=[sq])]
-                        while (self.peek() or "").upper() == "UNION":
-                            self.next()
-                            self.expect("{")
-                            alt = Query(variables=[])
-                            self._subgroup(alt, graph)
-                            self.expect("}")
-                            branches.extend(self._branchify(alt))
-                        q.union_blocks.append(branches)
+                    if (self.peek() or "").upper() != "UNION":
+                        q.where.append(sq)
                         continue
-                    q.subqueries.append(sq)
-                    continue
-                sub = Query(variables=[])
-                self._subgroup(sub, graph)
-                self.expect("}")
-                branches = self._branchify(sub)
-                while self.peek() is not None and self.peek().upper() == "UNION":
-                    self.next()
-                    self.expect("{")
-                    alt = Query(variables=[])
-                    self._subgroup(alt, graph)
-                    self.expect("}")
-                    branches.extend(self._branchify(alt))
-                b = branches[0]
-                if len(branches) == 1 and _splices(b):
-                    # plain group: splice into the enclosing group
-                    # (bind positions shift by the patterns already
-                    # parsed)
-                    off = len(q.patterns)
-                    q.patterns.extend(b.patterns)
-                    q.filters.extend(b.filters)
-                    q.optional.extend(b.optional)
-                    for bd in b.binds:
-                        if bd.at is not None:
-                            bd.at += off
-                    q.binds.extend(b.binds)
+                    first = Query(variables=[], where=[sq])
                 else:
-                    # any other braced group ({ {A} UNION {B} . C }, or
-                    # one carrying VALUES/MINUS/EXISTS/subqueries)
-                    # evaluates as a unit — a 1-branch chain
-                    q.union_blocks.append(branches)
+                    first = Query(variables=[])
+                    self._group(first, graph)
+                    self.expect("}")
+                branches = self._branchify(first)
+                while self.kw("UNION"):
+                    branches += self._branchify(self._braced(graph))
+                self._join_group(q, branches)
             elif tok == ".":
                 self.next()
             else:
-                n_before = len(q.patterns)
+                n_before = len(q.where)
                 s = self._node(q, graph)
                 # '[ p o ] .' — a bare blank-node property list is a
                 # complete triples block; its triples are already emitted
                 bare_bnpl = (
-                    len(q.patterns) > n_before
+                    len(q.where) > n_before
                     and self.peek() in (".", "}", None)
                 )
                 if not bare_bnpl:
                     self._pred_obj_list(q, graph, s)
                 if self.peek() == ".":
                     self.next()
+
+    def _bind(self, q: Query, b: BindAssign) -> None:
+        """§18.2.1: the BIND var must not be in scope of the group's
+        elements before it."""
+        if b.var in _query_scope_vars(q):
+            raise SparqlSyntaxError(
+                f"BIND ?{b.var} would rebind a variable already in "
+                "scope of the group before it"
+            )
+        q.where.append(b)
+
+    def _join_group(self, q: Query, branches: list[Query]) -> None:
+        """A braced or GRAPH group (one branch) or a UNION chain: one
+        element joined at its position. A group that holds only
+        triples, plus filters over its own variables, merges into the
+        group's BGP instead — a Join of BGPs is a BGP."""
+        if len(branches) == 1 and _plain_triples(branches[0], own_filters=True):
+            q.where += branches[0].where
+            q.filters += branches[0].filters
+            return
+        if len(branches) > 1:
+            # a branch may not assign a variable the group binds
+            # before the chain — stricter than §18.2.1, which scopes
+            # each branch on its own
+            before = _query_scope_vars(q)
+            for br in branches:
+                for b in br.where:
+                    if isinstance(b, BindAssign) and b.var in before:
+                        raise SparqlSyntaxError(
+                            f"BIND ?{b.var} inside a UNION branch would "
+                            "rebind a variable already bound by a graph "
+                            "pattern"
+                        )
+        q.where.append(Union(branches))
 
     def _graph_slot(self, graph) -> tuple:
         """Map the threaded graph scope + dataset clause → (g, g_in).
@@ -1009,7 +975,7 @@ class _Parser(ExprGrammar):
 
     def _emit_triple(self, q: Query, graph, s, p, o) -> None:
         g, g_in = self._graph_slot(graph)
-        q.patterns.append(Bgp(s, p, o, g=g, g_in=g_in))
+        q.where.append(Bgp(s, p, o, g=g, g_in=g_in))
 
     def _pred_obj_list(self, q: Query, graph, s) -> None:
         """Turtle-style predicateObjectList: ``p1 o1, o2 ; p2 o3``."""
@@ -1070,12 +1036,9 @@ class _Parser(ExprGrammar):
         a single bare UNION chain splices into the enclosing chain —
         UNION is associative, so '{ {A} UNION {B} } UNION {C}' flattens
         to the 3-branch chain A|B|C."""
-        if len(sub.union_blocks) == 1 and not (
-            sub.patterns or sub.filters or sub.optional or sub.values
-            or sub.services or sub.minus or sub.exists or sub.binds
-            or sub.subqueries
-        ):
-            return list(sub.union_blocks[0])
+        if (len(sub.where) == 1 and isinstance(sub.where[0], Union)
+                and not sub.filters):
+            return list(sub.where[0].branches)
         return [sub]
 
     def _agg_separator(self, func: str) -> str:
@@ -1188,33 +1151,10 @@ class _Parser(ExprGrammar):
             raise SparqlSyntaxError("VALUES data must be constants")
         return t
 
-    def _subgroup(self, sub: "Query", graph) -> None:
-        self._group(sub, graph)
-
     # -- expressions: the grammar is ExprGrammar (plans/expr.py) -------
-    def _filter(self, q: Query, graph=None) -> None:
-        # FILTER [NOT] EXISTS { … } — correlated existence via
-        # semi/anti join on the shared variables
-        tok = self.peek()
-        up = tok.upper() if tok is not None else ""
-        neg = False
-        if up == "NOT":
-            save = self.i
-            self.next()
-            if (self.peek() or "").upper() == "EXISTS":
-                up, neg = "EXISTS", True
-            else:
-                self.i = save
-        if up == "EXISTS":
-            self.next()
-            self.expect("{")
-            sub = Query(variables=[])
-            self._subgroup(sub, graph)
-            self.expect("}")
-            q.exists.append((not neg, sub))
-            return
-        # FILTER(expr), or the bare builtin-call form: FILTER
-        # langMatches(...), FILTER !bound(...)
+    def _filter(self, q: Query) -> None:
+        # FILTER(expr), or the bare builtin-call / [NOT] EXISTS form:
+        # FILTER langMatches(...), FILTER !bound(...), FILTER EXISTS {…}
         e = self._unary()
         # split a top-level conjunction so each conjunct pushes down
         # independently (the reference's filter-placement transform,
@@ -1240,11 +1180,7 @@ class _Parser(ExprGrammar):
         if self.peek() != "{":
             self.i = save  # e.g. a var named ?EXISTS… — not ours
             return None
-        q, graph = ctx
-        self.expect("{")
-        sub = Query(variables=[])
-        self._subgroup(sub, graph)
-        self.expect("}")
+        sub = self._braced(ctx[1])
         self._exm_n = getattr(self, "_exm_n", 0) + 1
         return ExistsExpr(marker=f"__exm{self._exm_n}", block=sub), neg
 
@@ -1288,7 +1224,7 @@ class _Parser(ExprGrammar):
                     name = f"__gk{len(q.group_by)}"
                 else:
                     break
-                q.binds.append(BindAssign(name, expr, at=len(q.patterns)))
+                q.where.append(BindAssign(name, expr))
                 q.group_by.append("?" + name)
             if not q.group_by:
                 raise SparqlSyntaxError("GROUP BY needs at least one key")
@@ -1366,12 +1302,7 @@ class _Parser(ExprGrammar):
                         )
                 name = f"__ord_e{len(q.order_hidden)}"
                 q.order_hidden.append(name)
-                sink = (
-                    q.postagg_binds
-                    if (q.aggregates or q.group_by)
-                    else q.binds
-                )
-                sink.append(BindAssign(name, e))
+                q.select_exprs.append(BindAssign(name, e))
                 q.order_by.append((f"?{name}", asc if asc is not None else True))
         if self.kw("LIMIT"):
             q.limit = int(self.next())
@@ -1387,7 +1318,7 @@ class _Parser(ExprGrammar):
             # post-projection join and is rejected explicitly.
             vb = self._values_block()
             post = {a.alias[1:] for a in q.aggregates} | {
-                b.var for b in q.binds
+                b.var for b in q.where if isinstance(b, BindAssign)
             }
             needs_post = bool(set(vb.vars) & post)
             if (q.aggregates or q.group_by) and not needs_post:
@@ -1402,23 +1333,44 @@ class _Parser(ExprGrammar):
             # round 5: VALUES over aggregate aliases / BIND outputs /
             # non-group-key vars joins POST-projection on the rendered
             # solutions (previously an explicit rejection)
-            (q.post_values if needs_post else q.values).append(vb)
+            (q.post_values if needs_post else q.where).append(vb)
 
 
-def _splices(sub: Query) -> bool:
-    """Whether a nested group joins its enclosing group's BGP: one that
-    holds only patterns, FILTERs, OPTIONALs and BINDs no pattern of it
-    consumes. A braced group like that splices into its parent at parse
-    time, and a UNION branch like that distributes over the group's
-    patterns (one BGP per branch combination). Any other group is
-    evaluated on its own and joined as a unit."""
-    return not (
-        sub.union_blocks or sub.values or sub.services or sub.minus
-        or sub.exists or sub.subqueries
-        or any(exists_leaves(f.ast) for f in sub.filters)
-        or any(exists_leaves(b.expr) for b in sub.binds)
-        or any(b.var in pattern_vars(sub.patterns) for b in sub.binds)
-    )
+def _plain_triples(q: Query, own_filters: bool = False) -> bool:
+    """Whether a group is a plain triples block: triple patterns only,
+    with no FILTER — or, with ``own_filters``, with FILTERs that read
+    only variables its patterns bind (no EXISTS)."""
+    if not all(isinstance(e, Bgp) for e in q.where):
+        return False
+    if not own_filters:
+        return not q.filters
+    pv = pattern_vars(q.where)
+    return all(f.vars() <= pv and not exists_leaves(f.ast) for f in q.filters)
+
+
+def _query_scope_vars(q: Query) -> set[str]:
+    """The variables a group's elements can bind (§18.2.1 in-scope):
+    patterns, BIND targets, VALUES and SERVICE vars, subquery
+    projections, and OPTIONAL bodies and UNION branches recursively.
+    MINUS binds nothing outside itself."""
+    names: set[str] = set()
+    for e in q.where:
+        if isinstance(e, Bgp):
+            names |= pattern_vars([e])
+        elif isinstance(e, BindAssign):
+            names.add(e.var)
+        elif isinstance(e, ValuesBlock):
+            names |= set(e.vars)
+        elif isinstance(e, ServiceBlock):
+            names |= set(e.vars_hint)
+        elif isinstance(e, Query):
+            names |= set(_subquery_out_names(e))
+        elif isinstance(e, LeftJoin):
+            names |= _query_scope_vars(e.group)
+        elif isinstance(e, Union):
+            for br in e.branches:
+                names |= _query_scope_vars(br)
+    return names
 
 
 # kind-1 lexical of a typed literal with a non-xsd:string datatype —
@@ -1729,7 +1681,9 @@ def _values_df(store, vb: ValuesBlock) -> DataFrame:
         # VALUES may introduce terms absent from the store dictionary;
         # carry the lexical form so materialize() can still render them
         cols.append(F.col(f"__{v}_lex").alias(f"__{v}_vlex"))
-    return df.select(*cols)
+    # a handful of inline rows whose size Spark cannot see: every join
+    # with them broadcasts them
+    return F.broadcast(df.select(*cols))
 
 
 _SERVICE_VAR_MAX_ENDPOINTS = 8
@@ -1831,9 +1785,7 @@ def _attach_any_labels(result: DataFrame, store, names: list[str]):
 def _apply_binds(
     result: DataFrame, store, binds: list[BindAssign]
 ) -> DataFrame:
-    """Extend solutions with BIND assignments (applied after the
-    group's patterns — parse-time guards ensure no pattern consumes a
-    BIND var, so this is equivalent to in-place evaluation).
+    """Extend solutions with BIND assignments, in order.
 
     Each expression compiles to a term (plans/expr.py): constants get
     the same in-plan xxhash64 id as pattern constants; terms possibly
@@ -1858,7 +1810,15 @@ def _apply_binds(
             ),
         )
         all_attached.append("__bnsol")
+    filled: list[str] = []
     for b in binds:
+        absent = sorted(expr_vars(b.expr) - set(result.columns))
+        if absent:
+            # a var nothing before the BIND binds is unbound there
+            result = result.select(
+                "*", *[F.lit(None).cast(_UNBOUND).alias(v) for v in absent]
+            )
+            filled += absent
         cx = Cx(result.columns)
         struct, vlex = compile_expr(b.expr, "term", cx)
         # a VALUES/BIND-produced var may be dictionary-absent: its vlex
@@ -1868,9 +1828,8 @@ def _apply_binds(
         result = result.withColumn(b.var, struct)
         if vlex is not None:
             result = result.withColumn(f"__{b.var}_vlex", vlex)
-    if all_attached:
-        result = result.drop(*all_attached)
-    return result
+    targets = {b.var for b in binds}
+    return result.drop(*all_attached, *[v for v in filled if v not in targets])
 
 
 def _agg_scope(aggregates: list, gvars: list) -> Cx:
@@ -1967,23 +1926,6 @@ def _aggregate(result: DataFrame, store, q: Query):
     if not q.postagg_binds:
         return grouped, [], []
     return _apply_postagg(grouped, store, q.postagg_binds, q.aggregates, gvars)
-
-
-def _query_scope_vars(q: Query) -> set[str]:
-    """Every variable a group can bind: its patterns and BIND targets,
-    its OPTIONAL bodies and UNION branches (recursively), VALUES and
-    SERVICE vars, and subquery projections. MINUS and EXISTS bodies
-    bind nothing outside themselves."""
-    names = pattern_vars(q.patterns) | {b.var for b in q.binds}
-    for sub in q.optional + [br for chain in q.union_blocks for br in chain]:
-        names |= _query_scope_vars(sub)
-    for vb in q.values:
-        names |= set(vb.vars)
-    for sb in q.services:
-        names |= set(sb.vars_hint)
-    for sq in q.subqueries:
-        names |= set(_subquery_out_names(sq))
-    return names
 
 
 def _subquery_out_names(sub: Query) -> list[str]:
@@ -2117,165 +2059,35 @@ def _reject_template_paths(patterns: list) -> None:
             )
 
 
-def _bind_scope_check(q: Query) -> None:
-    """Guards that make post-hoc BIND evaluation exact. A spliced UNION
-    branch's BINDs extend the branch combination like the group's own
-    (``_combo_frame``), so they are checked here too."""
-    pat_scope = pattern_vars(q.patterns)
-    # vars bound by anything other than the group's own patterns and
-    # BINDs
-    other = _query_scope_vars(
-        _dc_replace(q, patterns=[], binds=[], union_blocks=[])
-    )
-    branch_binds: list = []
-    for chain in q.union_blocks:
-        for br in chain:
-            if _splices(br):
-                branch_binds += br.binds
-                br = _dc_replace(br, binds=[])
-            other |= _query_scope_vars(br)
-    scope = pat_scope | other
-    # a branch BIND colliding with a var bound by a pattern of the
-    # group or of any branch would overwrite that column; two branches
-    # binding the SAME fresh var is legal (the branch-tagging idiom)
-    for b in branch_binds:
-        if b.var in scope:
-            raise SparqlSyntaxError(
-                f"BIND ?{b.var} inside a UNION branch would rebind a "
-                "variable already bound by a graph pattern"
-            )
-    q_bind_vars = {b.var for b in q.binds}
-    for b in branch_binds:
-        if b.var in q_bind_vars:
-            raise SparqlSyntaxError(
-                f"BIND ?{b.var} is assigned both inside a UNION branch "
-                "and at the group level"
-            )
-    for b in q.binds:
-        if b.var in scope:
-            # a group pattern may CONSUME the var when every consuming
-            # pattern sits after the BIND's parse position — it then
-            # evaluates post-Extend and joins back (_post_bind_split).
-            # Anything else (a pattern before the BIND, an OPTIONAL /
-            # UNION / VALUES / subquery var, even one that ALSO
-            # appears in a later pattern) is a rebinding error.
-            forward_ok = (
-                b.at is not None
-                and b.var in pat_scope
-                and b.var not in other
-                and all(
-                    i >= b.at
-                    for i, p in enumerate(q.patterns)
-                    if b.var in pattern_vars([p])
-                )
-            )
-            if not forward_ok:
-                raise SparqlSyntaxError(
-                    f"BIND ?{b.var} would rebind a variable already in "
-                    "scope (only graph patterns AFTER the BIND may "
-                    "consume its variable)"
-                )
-        used = expr_vars(b.expr)
-        if not used <= scope:
-            missing = ", ".join(f"?{v}" for v in sorted(used - scope))
-            raise SparqlSyntaxError(
-                f"BIND expression uses out-of-scope variable(s) {missing}"
-            )
-        scope.add(b.var)  # later BINDs may chain on earlier ones
-
-
-def _post_bind_split(q: Query) -> tuple[Query, list, list]:
-    """Split out the group patterns that CONSUME a BIND-introduced var
-    — SPARQL's in-group evaluation order, ``Join(Extend(G, v, expr),
-    P)``, the one shape post-hoc BIND evaluation can't express
-    directly.  Returns ``(q', post_patterns, post_filters)``: ``q'``
-    has those patterns (and the filters fully answerable by them)
-    removed; the caller evaluates the post BGP separately and
-    compatibility-joins it back AFTER ``_apply_binds`` (an
-    error→unbound BIND value is compatible with every post solution,
-    per §8.3).
-
-    The join needs no dictionary lookup: term ids are
-    content-addressed (``xxhash64(kind, lexical)``,
-    functions/encoding.py:30), so a BIND-computed term carries exactly
-    the id its dictionary entry would have and the join is plain
-    struct equality.  Patterns var-connected to a consuming pattern
-    move with it, keeping the pre-BGP free of induced cross joins;
-    patterns that bind a BIND input var always stay pre (the Extend
-    must see them)."""
-    bind_vars = {b.var for b in q.binds if b.at is not None}
-    if not bind_vars or not q.patterns:
-        return q, [], []
-    pv = [pattern_vars([p]) for p in q.patterns]
-    post = {i for i, vs in enumerate(pv) if vs & bind_vars}
-    if not post:
-        return q, [], []
-    input_vars = set().union(
-        *[expr_vars(b.expr) for b in q.binds]
-    )
-    changed = True
-    while changed:
-        changed = False
-        post_vars = set().union(*[pv[i] for i in post])
-        for j, vs in enumerate(pv):
-            if j in post or not (vs & post_vars) or (vs & input_vars):
-                continue
-            post.add(j)
-            changed = True
-    pre_vars = pattern_vars(
-        [p for i, p in enumerate(q.patterns) if i not in post]
-    )
-    post_vars = set().union(*[pv[i] for i in post])
-    only_post = post_vars - pre_vars - bind_vars
-    for b in q.binds:
-        circular = expr_vars(b.expr) & only_post
-        if circular:
-            missing = ", ".join(f"?{v}" for v in sorted(circular))
-            raise SparqlSyntaxError(
-                f"BIND ?{b.var} reads {missing}, which is bound only by "
-                "a pattern that consumes a BIND variable (circular "
-                "in-group dependency)"
-            )
-    post_pats = [q.patterns[i] for i in sorted(post)]
-    # filters fully answerable inside the post BGP push into it (a
-    # shared var is equalized by the join, so post-side filtering is
-    # equivalent); filters touching a post-only var but spanning both
-    # sides defer until after the join (caller routes them through the
-    # deferred-filter stage)
-    post_filts = [
-        f for f in q.filters if f.vars() and f.vars() <= post_vars
-    ]
-    q = _dc_replace(
-        q,
-        patterns=[p for i, p in enumerate(q.patterns) if i not in post],
-        filters=[f for f in q.filters if f not in post_filts],
-    )
-    return q, post_pats, post_filts
-
-
-def _nullable_vars(q: Query) -> set:
-    """Which of the group's vars can come back UNBOUND: OPTIONAL
-    misses, VALUES UNDEF cells, SERVICE cells, union branches of
-    differing scope, BIND's error→unbound rule, or a nested group or
+def _nullable(e) -> set:
+    """Which variables a group element can leave UNBOUND: BIND's
+    error→unbound rule, OPTIONAL misses, VALUES UNDEF cells, SERVICE
+    cells, union branches of differing scope, or a nested group or
     subquery projecting such a var. Joins keyed on one of these need
     SPARQL compatibility semantics (``_merge_join``) instead of plain
     column equality; the rest keep the hash fast path."""
-    out = {b.var for b in q.binds}
-    for blk in q.optional:
-        out |= _query_scope_vars(blk)
-    for vb in q.values:
-        out |= set(vb.vars)
-    for sb in q.services:
-        out |= set(sb.vars_hint)
-    for chain in q.union_blocks:
-        scopes = [_query_scope_vars(br) for br in chain]
+    if isinstance(e, BindAssign):
+        return {e.var}
+    if isinstance(e, LeftJoin):
+        return _query_scope_vars(e.group)
+    if isinstance(e, ValuesBlock):
+        return {v for i, v in enumerate(e.vars)
+                if any(r[i] is UNDEF for r in e.rows)}
+    if isinstance(e, ServiceBlock):
+        return set(e.vars_hint)
+    if isinstance(e, Union):
+        scopes = [_query_scope_vars(br) for br in e.branches]
         # a var missing from some branch is NULL in its rows
-        out |= set().union(*scopes) - set.intersection(*scopes)
-        for br in chain:
-            out |= _nullable_vars(br)
-    for sq in q.subqueries:
-        out |= _nullable_vars(sq) & set(_subquery_out_names(sq))
-    return out
+        out = set().union(*scopes) - set.intersection(*scopes)
+        return out.union(*(_nullable_vars(br) for br in e.branches))
+    if isinstance(e, Query):
+        return _nullable_vars(e) & set(_subquery_out_names(e))
+    return set()
+
+
+def _nullable_vars(q: Query) -> set:
+    """The vars a group can leave unbound (``_nullable``)."""
+    return set().union(*(_nullable(e) for e in q.where))
 
 
 #: the binding-struct type of an unbound variable
@@ -2309,11 +2121,16 @@ def _shared(result: DataFrame, step: DataFrame) -> list:
     ]
 
 
-def _join(result: DataFrame, step: DataFrame, how: str, nullable: set) -> DataFrame:
+def _join(
+    result: DataFrame | None, step: DataFrame, how: str, nullable: set
+) -> DataFrame:
     """Join a step's solutions onto the result ("inner" or "left"): a
     cross join with no shared var, the compatibility merge join when a
     shared var may be unbound on either side (or both carry its
-    lexical sidecar), otherwise an equi join."""
+    lexical sidecar), otherwise an equi join. ``None`` is the unit
+    solution, which an inner join leaves as ``step``."""
+    if result is None:
+        return step
     shared = _shared(result, step)
     if not shared:
         if how == "inner":
@@ -2334,10 +2151,10 @@ def _nested_step(store, blk: Query, dedup: bool) -> tuple[DataFrame, list]:
     EXISTS evaluate those filters as part of the join condition, MINUS
     with the outer variables unbound (no substitution)."""
     inner = _query_scope_vars(blk)
-    outer = [f for f in blk.filters if not f.vars() <= inner]
-    if outer:
+    split = [f for f in blk.filters if not f.vars() <= inner]
+    if split:
         blk = _dc_replace(blk, filters=[f for f in blk.filters if f.vars() <= inner])
-    return _group_bindings(store, blk, dedup), outer
+    return _group_bindings(store, blk, dedup), split
 
 
 def _bound_somewhere(filters: list, result: DataFrame, step: DataFrame) -> None:
@@ -2349,33 +2166,6 @@ def _bound_somewhere(filters: list, result: DataFrame, step: DataFrame) -> None:
         raise SparqlSyntaxError(
             f"FILTER references variables bound nowhere: {sorted(missing)}"
         )
-
-
-def _optional_joins(
-    store, result: DataFrame, blocks: list, nullable: set, dedup: bool
-) -> tuple[DataFrame, set]:
-    """SPARQL LeftJoin of each OPTIONAL group in turn: the whole group
-    is evaluated as a unit (so a partial match binds nothing), then
-    left-joined onto the solutions. §8.2 LeftJoin(Ω1, Ω2, expr): a
-    FILTER inside OPTIONAL that reads outer-bound vars is part of the
-    left-join CONDITION, evaluated on the merged solution (the
-    reference gets this from stock ARQ's OpLeftJoin expression;
-    HBaseTransformFilterPlacement.java:359-369). Returns the solutions
-    and the vars now possibly unbound on them."""
-    for blk in blocks:
-        step, outer = _nested_step(store, blk, dedup)
-        step_null = nullable | _nullable_vars(blk)
-        if outer:
-            _bound_somewhere(outer, result, step)
-            shared = _shared(result, step)
-            result = _conditional_left_join(
-                store, result, step, shared, outer,
-                nullable=bool(set(shared) & step_null),
-            )
-        else:
-            result = _join(result, step, "left", step_null)
-        nullable = nullable | _query_scope_vars(blk)
-    return result, nullable
 
 
 def _values_join(result: DataFrame, store, vb: ValuesBlock) -> DataFrame:
@@ -2391,7 +2181,7 @@ def _values_join(result: DataFrame, store, vb: ValuesBlock) -> DataFrame:
     vdf = _values_df(store, vb)
     shared = [v for v in vb.vars if v in result.columns]
     if not shared:
-        return result.crossJoin(F.broadcast(vdf))
+        return result.crossJoin(vdf)
     for v in shared:
         vdf = vdf.withColumnRenamed(v, f"__{v}_vv").withColumnRenamed(
             f"__{v}_vlex", f"__{v}_vvlex"
@@ -2400,7 +2190,7 @@ def _values_join(result: DataFrame, store, vb: ValuesBlock) -> DataFrame:
     for v in shared:
         vv = F.col(f"__{v}_vv")
         cond = cond & (vv.isNull() | F.col(v).isNull() | (F.col(v) == vv))
-    result = result.join(F.broadcast(vdf), cond, "inner")
+    result = result.join(vdf, cond, "inner")
     for v in shared:
         result = result.withColumn(
             v, F.coalesce(F.col(v), F.col(f"__{v}_vv"))
@@ -2416,60 +2206,6 @@ def _values_join(result: DataFrame, store, vb: ValuesBlock) -> DataFrame:
         else:
             result = result.withColumnRenamed(f"__{v}_vvlex", f"__{v}_vlex")
     return result
-
-
-def _combo_frame(
-    store, q: Query, combo: tuple, tables: list, scope: set, dedup: bool
-) -> DataFrame:
-    """One UNION branch combination of a group (the whole group when it
-    has no UNION), before the group's own BINDs: the group's patterns
-    and every spliced branch's in one BGP (UNION distributes over the
-    group's patterns); its OPTIONALs; the other branches' groups, the
-    subqueries and the VALUES/SERVICE tables joined on; the spliced
-    branches' BINDs; the FILTERs the BGP could not answer.
-
-    OPTIONAL left-joins onto the BGP before the other joins, whatever
-    their textual order; a group with no pattern has nothing else to
-    left-join onto, so there the OPTIONALs come last. A FILTER var the
-    combination does not bind is unbound in it (``_apply_scoped``)."""
-    spliced = [br for br in combo if _splices(br)]
-    pats = q.patterns + [p for br in spliced for p in br.patterns]
-    filts = q.filters + [f for br in spliced for f in br.filters]
-    opts = q.optional + [o for br in spliced for o in br.optional]
-    pv = pattern_vars(pats)
-    now = [f for f in filts if pats and f.vars() <= pv]
-    later = [f for f in filts if not (pats and f.vars() <= pv)]
-    result = None
-    nullable: set = set()
-    if pats:
-        result = execute_bgp(store, pats, now, dedup)
-        result, nullable = _optional_joins(store, result, opts, nullable, dedup)
-        opts = []
-    steps = [
-        (_group_bindings(store, br, dedup), _nullable_vars(br))
-        for br in combo if not _splices(br)
-    ] + [
-        (_execute_subquery(store, sq), _nullable_vars(sq) & set(_subquery_out_names(sq)))
-        for sq in q.subqueries
-    ]
-    for step, step_null in steps:
-        result = (
-            step if result is None
-            else _join(result, step, "inner", nullable | step_null)
-        )
-        nullable |= step_null
-    if result is None:
-        # the unit solution — one row, no columns — which the VALUES
-        # tables, OPTIONALs and BINDs below extend
-        result = store.spark.range(1).drop("id")
-    for vb in tables:
-        result = _values_join(result, store, vb)
-        nullable |= set(vb.vars)
-    result, _ = _optional_joins(store, result, opts, nullable, dedup)
-    binds = [b for br in spliced for b in br.binds]
-    if binds:
-        result = _apply_binds(result, store, binds)
-    return _apply_scoped(store, result, later, scope)
 
 
 def _compat_join(
@@ -2542,70 +2278,141 @@ def _nl_compat(
     return result.join(blk, cond, how)
 
 
-def _group_bindings(store, q: Query, dedup: bool) -> DataFrame:
+def _group_bindings(
+    store, q: Query, dedup: bool, nested: bool = False
+) -> DataFrame:
     """Id-space solutions of one GroupGraphPattern — the one group
     evaluator, for the WHERE clause and every nested group (OPTIONAL
-    body, UNION branch, MINUS and EXISTS body, subquery body). Stages:
-    each UNION branch combination's frame (``_combo_frame``: BGP,
-    nested groups, subqueries, VALUES/SERVICE, OPTIONAL), unioned; the
-    group's BINDs and the patterns that consume them; the FILTERs over
-    those; MINUS; FILTER [NOT] EXISTS. Solution modifiers and
-    materialization come after, in ``execute`` /
-    ``_execute_subquery``."""
-    # a spliced branch's FILTER over a var nothing binds is unbound
-    # there (it drops that branch's rows) rather than an error
-    scope = _query_scope_vars(q) | {
-        v for chain in q.union_blocks for br in chain if _splices(br)
-        for f in br.filters for v in f.vars()
-    }
-    nullable = _nullable_vars(q)
-    # filters whose expression tree contains an EXISTS{…} leaf need
-    # marker columns that exist only after every other stage
-    marker_filts = [f for f in q.filters if exists_leaves(f.ast)]
-    if marker_filts:
-        q = _dc_replace(
-            q, filters=[f for f in q.filters if not exists_leaves(f.ast)]
+    body, UNION branch, MINUS and EXISTS body, subquery body). Solution
+    modifiers and materialization come after, in ``execute`` /
+    ``_execute_subquery``.
+
+    A left-to-right fold over ``q.where`` — the SPARQL 1.1 §18.2.2
+    translation: adjacent triple patterns are one BGP run by
+    ``execute_bgp`` (which picks the join order); OPTIONAL is a
+    LeftJoin over the solutions before it, MINUS a Minus, BIND an
+    Extend, and everything else (VALUES, SERVICE, subqueries, nested
+    groups and UNIONs) a Join; the group's FILTERs apply to the whole
+    group. One rewrite: a FILTER whose variables a BGP of the group
+    certainly binds runs inside that BGP, so Catalyst pushes it into
+    the scans.
+
+    A FILTER or BIND variable the group does not bind is unbound in
+    it. In a ``nested`` group (a braced group or UNION branch) that is
+    all; elsewhere it raises, as a variable no pattern of the group
+    can bind is a mistake in the query."""
+    scope = None if nested else _query_scope_vars(q)
+    pending = [f for f in q.filters if not exists_leaves(f.ast)]
+    result: DataFrame | None = None  # None: the unit solution
+    nullable: set = set()
+    for kind, run in itertools.groupby(q.where, type):
+        run = list(run)
+        if kind is Bgp:
+            pv = pattern_vars(run)
+            now = [f for f in pending if f.vars() <= pv]
+            pending = [f for f in pending if not f.vars() <= pv]
+            step = execute_bgp(store, run, now, dedup)
+            result = _join(result, step, "inner", nullable)
+        elif kind is BindAssign:
+            result = _extend(store, q, _unit(store, result), run, nullable, scope)
+            nullable |= {b.var for b in run}
+        else:
+            for e in run:
+                result = _fold_step(store, q, result, e, nullable, dedup)
+                nullable |= _nullable(e)
+    result = _apply_scoped(store, _unit(store, result), pending, scope)
+    for f in q.filters:
+        if exists_leaves(f.ast):
+            result = _exists_filter(store, result, f, nullable, scope)
+    return result
+
+
+def _unit(store, result: DataFrame | None) -> DataFrame:
+    """The solutions so far, with ``None`` as the unit solution — one
+    row, no columns."""
+    return store.spark.range(1).drop("id") if result is None else result
+
+
+def _fold_step(
+    store, q: Query, result: DataFrame | None, e, nullable: set, dedup: bool
+) -> DataFrame:
+    """One non-BGP, non-BIND element of ``_group_bindings``' fold."""
+    if isinstance(e, LeftJoin):
+        # §8.2 LeftJoin(Ω1, Ω2, expr): a FILTER inside OPTIONAL that
+        # reads outer-bound vars is part of the left-join CONDITION,
+        # evaluated on the merged solution (the reference gets this
+        # from stock ARQ's OpLeftJoin expression;
+        # HBaseTransformFilterPlacement.java:359-369)
+        result = _unit(store, result)
+        step, cond = _nested_step(store, e.group, dedup)
+        step_null = nullable | _nullable_vars(e.group)
+        if not cond:
+            return _join(result, step, "left", step_null)
+        _bound_somewhere(cond, result, step)
+        shared = _shared(result, step)
+        return _conditional_left_join(
+            store, result, step, shared, cond,
+            nullable=bool(set(shared) & step_null),
         )
-    post_pats: list = []
-    post_filts: list = []
-    if q.binds or any(
-        br.binds for chain in q.union_blocks for br in chain if _splices(br)
-    ):
-        _bind_scope_check(q)
-    if q.binds:
-        # patterns consuming a BIND var evaluate after the Extend —
-        # pull them (and their filters) out; they join back after
-        # _apply_binds below
-        q, post_pats, post_filts = _post_bind_split(q)
-    # filters over BIND targets and the consuming patterns' vars wait
-    # until those exist
-    late = {b.var for b in q.binds} | pattern_vars(post_pats)
-    deferred = [f for f in q.filters if f.vars() & late]
-    if deferred:
-        q = _dc_replace(q, filters=[f for f in q.filters if not f.vars() & late])
+    if isinstance(e, Minus):
+        # remove solutions compatible with the block on shared vars;
+        # disjoint domains remove nothing (dom(μ)∩dom(μ′) ≠ ∅). MINUS
+        # evaluates its group WITHOUT substitution, so a block filter
+        # var bound only outside the block is UNBOUND inside it.
+        # Compatibility is over commonly BOUND vars (§8.3): a shared
+        # var that can be unbound takes the null-tolerant join
+        result = _unit(store, result)
+        step, cond = _nested_step(store, e.group, True)
+        step = _apply_scoped(store, step, cond, None)
+        shared = _shared(result, step)
+        if not shared:
+            return result
+        if set(shared) & (nullable | _nullable_vars(e.group)):
+            return _compat_join(
+                result, step, shared, "left_anti", require_overlap=True
+            )
+        return result.join(step, on=shared, how="left_anti")
+    if isinstance(e, (ValuesBlock, ServiceBlock)):
+        vb = e if isinstance(e, ValuesBlock) else _service_values_block(
+            e, [v for v in q.where if isinstance(v, ValuesBlock)]
+        )
+        if vb is None:  # a SILENT failure is the unit solution
+            return result
+        if result is None:
+            return _values_df(store, vb)
+        return _values_join(result, store, vb)
+    if isinstance(e, Union):
+        step = _reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [_group_bindings(store, br, dedup, nested=True)
+             for br in e.branches],
+        )
+    else:  # a subquery
+        step = _execute_subquery(store, e)
+    return _join(result, step, "inner", nullable | _nullable(e))
 
-    # SILENT SERVICE failures collapse to the unit solution (None)
-    tables = list(q.values) + [
-        vb
-        for vb in (_service_values_block(sb, q.values) for sb in q.services)
-        if vb is not None
-    ]
-    result = _reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True),
-        [
-            _combo_frame(store, q, combo, tables, scope, dedup)
-            for combo in itertools.product(*q.union_blocks)
-        ],
-    )
 
+def _extend(
+    store, q: Query, result: DataFrame, binds: list, nullable: set,
+    scope: set | None,
+) -> DataFrame:
+    """A run of adjacent BINDs: Extends, applied as one batch. A var
+    outside ``scope`` (None: any var) raises."""
+    reads = set().union(*(expr_vars(b.expr) for b in binds))
+    missing = sorted(reads - scope) if scope is not None else []
+    if missing:
+        raise SparqlSyntaxError(
+            "BIND expression uses out-of-scope variable(s) "
+            + ", ".join(f"?{v}" for v in missing)
+        )
     # EXISTS leaves inside BIND values / IF conditions need their
     # marker columns BEFORE the binds evaluate
-    bind_exm = [l for b in q.binds for l in exists_leaves(b.expr)]
-    targets = {b.var for b in q.binds}
-    for ex in bind_exm:
-        # markers attach BEFORE the bind stage, so a block correlated
-        # through a var that this group's own BINDs produce would see
-        # it unbound — reject rather than mis-evaluate
+    leaves = [x for b in binds for x in exists_leaves(b.expr)]
+    targets = {b.var for b in q.where if isinstance(b, BindAssign)}
+    for ex in leaves:
+        # markers attach before the batch, so a block correlated
+        # through a var this group's BINDs produce would see it
+        # unbound — reject rather than mis-evaluate
         clash = sorted(_query_scope_vars(ex.block) & targets)
         if clash:
             raise SparqlSyntaxError(
@@ -2613,79 +2420,47 @@ def _group_bindings(store, q: Query, dedup: bool) -> DataFrame:
                 f"bound in the same group: {clash}"
             )
         result = _attach_exists_marker(store, result, ex, nullable)
-    if q.binds:
-        result = _apply_binds(result, store, q.binds)
-    if bind_exm:
-        result = result.drop(*[ex.marker for ex in bind_exm])
-    if post_pats:
-        pdf = execute_bgp(store, post_pats, filters=post_filts, dedup=dedup)
-        # compatibility because an error→unbound BIND value matches
-        # every post solution; _merge_join's quadrant decomposition
-        # keeps the all-bound bulk on the hash path
-        result = _merge_join(result, pdf, _shared(result, pdf), "inner")
-    result = _apply_scoped(store, result, deferred, scope)
+    result = _apply_binds(result, store, binds)
+    return result.drop(*[ex.marker for ex in leaves])
 
-    # MINUS: remove solutions compatible with the block on shared vars
-    # (disjoint domains remove nothing, per spec); removal additionally
-    # requires a non-empty bound overlap — dom(μ)∩dom(μ′) ≠ ∅. MINUS
-    # evaluates its group WITHOUT substitution, so a block filter var
-    # bound only outside the block is simply UNBOUND inside it. MINUS /
-    # EXISTS compatibility is defined over commonly BOUND vars (SPARQL
-    # 1.1 §8.3): a plain equality join gets that wrong when a shared
-    # var can be unbound, so those take the null-tolerant join, and
-    # the all-bound case keeps the hash anti/semi join.
-    for blk in q.minus:
-        step, outer = _nested_step(store, blk, True)
-        step = _apply_scoped(store, step, outer, None)
-        shared = _shared(result, step)
-        if not shared:
-            continue
-        if set(shared) & (nullable | _nullable_vars(blk)):
-            result = _compat_join(
-                result, step, shared, "left_anti", require_overlap=True
-            )
-        else:
-            result = result.join(step, on=shared, how="left_anti")
 
-    # FILTER [NOT] EXISTS: correlated existence via semi/anti join;
-    # uncorrelated blocks collapse to a global emptiness test. EXISTS
-    # uses SUBSTITUTION semantics (unlike MINUS): a block filter that
-    # reads outer vars becomes part of the join condition.
-    for positive, blk in q.exists:
-        step, outer = _nested_step(store, blk, True)
+def _exists_filter(
+    store, result: DataFrame, f, nullable: set, scope: set | None
+) -> DataFrame:
+    """A FILTER with EXISTS{…} leaves. A bare ``FILTER [NOT] EXISTS``
+    is a correlated semi/anti join — an uncorrelated block a global
+    emptiness test. EXISTS uses SUBSTITUTION semantics (unlike MINUS):
+    a block filter that reads outer vars becomes part of the join
+    condition. Any other expression reads a marker column per leaf
+    (``_attach_exists_marker``)."""
+    a = f.ast
+    positive = a[0] == "exists"
+    if positive or (a[0] == "not" and a[1][0] == "exists"):
+        blk = (a if positive else a[1])[1].block
+        step, cond = _nested_step(store, blk, True)
         shared = _shared(result, step)
         how = "left_semi" if positive else "left_anti"
         tolerant = bool(set(shared) & (nullable | _nullable_vars(blk)))
-        if outer:
-            _bound_somewhere(outer, result, step)
+        if cond:
+            _bound_somewhere(cond, result, step)
             result, step, cond, lbls = _exists_condition(
-                store, result, step, shared, outer, tolerant
+                store, result, step, shared, cond, tolerant
             )
             # non-equi conjuncts force a nested-loop strategy; the
             # equality conjuncts still hash-partition both sides when
             # shared vars exist, and the block side is dedup'd — the
             # same shape Catalyst gives a correlated SQL EXISTS
-            result = result.join(step, cond, how).drop(*lbls)
-        elif not shared:
-            if positive != (not step.isEmpty()):
-                result = result.limit(0)
-        elif tolerant:
-            result = _compat_join(result, step, shared, how, require_overlap=False)
-        else:
-            result = result.join(step, on=shared, how=how)
-
-    # EXISTS{…} leaves inside boolean FILTER trees: attach each leaf's
-    # marker column, then evaluate the whole expression like any other
-    # deferred filter (filters commute over the group algebra, so
-    # last-position evaluation is exact)
-    for f in marker_filts:
-        leaves = exists_leaves(f.ast)
-        for ex in leaves:
-            result = _attach_exists_marker(store, result, ex, nullable)
-        result = _apply_scoped(store, result, [f], scope)
-        result = result.drop(*[ex.marker for ex in leaves])
-
-    return result
+            return result.join(step, cond, how).drop(*lbls)
+        if not shared:
+            return result if positive != step.isEmpty() else result.limit(0)
+        if tolerant:
+            return _compat_join(result, step, shared, how, require_overlap=False)
+        return result.join(step, on=shared, how=how)
+    leaves = exists_leaves(a)
+    for ex in leaves:
+        result = _attach_exists_marker(store, result, ex, nullable)
+    result = _apply_scoped(store, result, [f], scope)
+    return result.drop(*[ex.marker for ex in leaves])
 
 
 def _exists_condition(
@@ -2843,7 +2618,7 @@ def execute(
     """
     q = parse(query) if isinstance(query, str) else query
 
-    if q.form == "describe" and not q.patterns and not q.union_blocks:
+    if q.form == "describe" and not q.where and not q.filters:
         return _describe(store, q, None, with_kinds=with_kinds)
 
     # set-semantics evaluation is sound exactly when only the solution

@@ -75,6 +75,7 @@ from hbase_rdf_spark.plans.sparql import (
     _construct,
     _group_bindings,
     _Parser,
+    _plain_triples,
     tokenize,
 )
 from hbase_rdf_spark.sources.ntriples import DEFAULT_CONTEXT
@@ -143,12 +144,6 @@ class ClearOp:
 # parsing — a thin subclass of the query parser: terms, groups, GRAPH
 # threading, and prefix expansion are all inherited
 # ---------------------------------------------------------------------------
-
-_ALGEBRA_FIELDS = (
-    "optional", "union_blocks", "filters", "values",
-    "services", "binds", "subqueries", "minus", "exists", "aggregates",
-)
-
 
 class _UpdateParser(_Parser):
     def parse_update(self) -> list:
@@ -303,15 +298,11 @@ class _UpdateParser(_Parser):
 
     def _template_block(self, with_graph) -> list[Bgp]:
         """``{ triples / GRAPH g { triples } }`` → Bgp list (vars OK)."""
-        tmp = Query(variables=[])
-        self.expect("{")
-        self._group(tmp, (with_graph,) if with_graph else None)
-        self.expect("}")
-        for f_name in _ALGEBRA_FIELDS:
-            if getattr(tmp, f_name):
-                raise SparqlSyntaxError(
-                    "update templates allow only triples and GRAPH blocks"
-                )
+        tmp = self._braced((with_graph,) if with_graph else None)
+        if not _plain_triples(tmp):
+            raise SparqlSyntaxError(
+                "update templates allow only triples and GRAPH blocks"
+            )
         for p in tmp.patterns:
             if isinstance(p.p, Path):
                 raise SparqlSyntaxError(

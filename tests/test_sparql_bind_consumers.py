@@ -1,16 +1,16 @@
-"""BIND variables consumed by later graph patterns (round 4): the
-in-group evaluation order ``Join(Extend(G, v, expr), P)``.
+"""BIND variables consumed by later graph patterns: the in-group
+evaluation order ``Join(Extend(G, v, expr), P)``.
 
-The reference gets this for free from ARQ/Sesame sequence evaluation
-(a GroupGraphPattern is an ordered list of elements —
-sail/HBaseSailConnection.java evaluates the parse tree in order); our
-post-hoc BIND application previously raised on any pattern that used
-a BIND var.  ``_post_bind_split`` now pulls the consuming patterns
-(plus their var-connected component) out of the pre-BGP, applies the
-BINDs, and compatibility-joins the post-BGP back.  Because term ids
-are content-addressed (xxhash64(kind, lexical)), a BIND-computed term
-carries exactly its dictionary id, so the join is plain struct
-equality — no dictionary lookup.
+The reference gets this from ARQ/Sesame sequence evaluation (a
+GroupGraphPattern is an ordered list of elements —
+sail/HBaseSailConnection.java evaluates the parse tree in order).
+``_group_bindings`` does the same: it folds the group's elements left
+to right, so a BIND is an Extend at its position and the patterns
+after it join its output. Because term ids are content-addressed
+(xxhash64(kind, lexical)), a BIND-computed term carries exactly its
+dictionary id, so the join is plain struct equality — no dictionary
+lookup. §18.2.1 still rejects a BIND whose variable is in scope of
+the elements before it.
 
 Also covers the RDFterm-equal fix: ``FILTER(?a = ?b)`` compares terms
 (struct equality), not just numeric values.
@@ -251,29 +251,34 @@ def test_consuming_pattern_before_the_bind_raises(store):
         )
 
 
-def test_bind_var_in_optional_still_raises(store):
-    with pytest.raises(SparqlSyntaxError):
-        execute(
-            store,
-            """SELECT ?s WHERE {
-                 ?s <http://ex/name> ?nm .
-                 BIND(UCASE(?nm) AS ?u)
-                 ?d <http://ex/title> ?u .
-                 OPTIONAL { ?x <http://ex/gname> ?u }
-               }""",
-        )
+def test_bind_var_in_later_optional(store):
+    """An OPTIONAL after the BIND left-joins on its var: no ?x has a
+    gname equal to "ALICE"/"BOB", so both solutions stay."""
+    out = execute(
+        store,
+        """SELECT ?s WHERE {
+             ?s <http://ex/name> ?nm .
+             BIND(UCASE(?nm) AS ?u)
+             ?d <http://ex/title> ?u .
+             OPTIONAL { ?x <http://ex/gname> ?u }
+           }""",
+    )
+    assert sorted(r["s"] for r in out.collect()) == [
+        "http://ex/a", "http://ex/b",
+    ]
 
 
-def test_circular_dependency_raises(store):
-    """The only binder of the BIND's input is itself a consumer."""
-    with pytest.raises(SparqlSyntaxError):
-        execute(
-            store,
-            """SELECT ?t WHERE {
-                 BIND(UCASE(?t) AS ?u)
-                 ?u <http://ex/title> ?t .
-               }""",
-        )
+def test_bind_reading_a_later_var_is_unbound(store):
+    """At the BIND, nothing before it binds ?t: UCASE errors, so ?u is
+    unbound and compatible with every title pattern solution."""
+    out = execute(
+        store,
+        """SELECT ?t WHERE {
+             BIND(UCASE(?t) AS ?u)
+             ?u <http://ex/title> ?t .
+           }""",
+    )
+    assert sorted(r["t"] for r in out.collect()) == ["ALICE", "BOB"]
 
 
 def test_consuming_bind_inside_optional_block(store):

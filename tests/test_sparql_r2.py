@@ -891,7 +891,7 @@ def test_subquery_sample(store):
 
 def test_subquery_inside_optional_executes(store):
     # supported since r2d as the block's sole content (braced or bare
-    # SubSelect form — semantics covered in test_sparql_r3.py)
+    # SubSelect form — semantics covered in test_sparql_triples_shorthand.py)
     execute(store, """
     SELECT ?i WHERE {
       ?i <http://ex/item> <http://ex/yes> .

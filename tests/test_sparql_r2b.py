@@ -406,7 +406,7 @@ def test_negated_set_in_sequence(store):
 
 def test_negated_inverse_member_parses(store):
     # inverse members are supported since r2c (SPARQL 1.1 §9.1 split);
-    # behavior is covered in test_sparql_r3.py — here just no-raise
+    # behavior is covered in test_sparql_triples_shorthand.py — here just no-raise
     execute(store, """
         SELECT ?o WHERE { <http://ex/a> !(^<http://ex/likes>) ?o }""").collect()
 

@@ -1,4 +1,5 @@
-"""Round-2c SPARQL surface: Turtle-style triple shorthand.
+"""SPARQL Turtle-style triple shorthand, and the nested groups it
+appears in (GRAPH, OPTIONAL and UNION bodies, subqueries).
 
 Predicate-object lists (``;``), object lists (``,``), blank-node
 property lists (``[ p o ; … ]``), and the empty prefix (``PREFIX :``).
@@ -12,7 +13,7 @@ import pytest
 
 from hbase_rdf_spark.functions.encoding import build_dictionaries, encode_quads
 from hbase_rdf_spark.operators.materialize import TripleStore
-from hbase_rdf_spark.plans.sparql import SparqlSyntaxError, execute, parse
+from hbase_rdf_spark.plans.sparql import SparqlSyntaxError, Union, execute, parse
 from hbase_rdf_spark.sources.ntriples import parse_lines, quads
 
 NQ = [
@@ -178,8 +179,8 @@ def test_nested_union_flattens():
         "PREFIX x: <http://x/> SELECT ?o WHERE "
         "{ { { ?s x:a ?o } UNION { ?s x:b ?o } } UNION { ?s x:c ?o } }"
     )
-    assert len(q.union_blocks) == 1
-    assert len(q.union_blocks[0]) == 3
+    assert len(q.where) == 1 and isinstance(q.where[0], Union)
+    assert len(q.where[0].branches) == 3
 
 
 def test_nested_union_executes(store):
