@@ -553,7 +553,7 @@ def _q_sparql_optional_corr(spark, sf):
     # round-5 correlated OPTIONAL filter (VERDICT r4 #2): a FILTER
     # inside OPTIONAL that reads an outer-bound var is the §8.2
     # LeftJoin(Ω1, Ω2, expr) CONDITION, evaluated on the merged
-    # solution (plans/bgp.py _conditional_left_join) — an extension
+    # solution (plans/sparql.py _conditional_left_join) — an extension
     # failing ?u < ?v * 4 is dropped but the outer row survives
     # null-extended. The reference inherits this from stock ARQ's
     # OpLeftJoin conditionals (HBaseTransformFilterPlacement.java:
@@ -956,10 +956,10 @@ def _q_sparql_subquery_union(spark, sf):
 
 def _q_sparql_exists_label(spark, sf):
     # correlated LABEL-SPACE filter inside EXISTS (round 4): regex over
-    # the OUTER-only var ?n rides the EXISTS join condition after a
-    # one-join id2term label attach on the outer side (substitution
-    # semantics, SPARQL 1.1 §8.1.1). ?n is a numeric literal, so its
-    # str() falls back to the num rendering ("3.0" for toklen 3).
+    # the OUTER-only var ?n filters the merged solutions of the distinct
+    # outer keys and the block (substitution semantics, SPARQL 1.1
+    # §8.1.1). ?n is a numeric literal, so its str() falls back to the
+    # num rendering ("3.0" for toklen 3).
     return _sparql(spark, sf, """
         SELECT DISTINCT ?y ?n WHERE {
           <spark> <join> ?y .

@@ -24,12 +24,10 @@ What carries over semantically:
 - **Late materialization** (reference: binding/BindingMaterializer.java:25-116):
   ids become lexical terms only after all joins, via one id2term join
   per projected variable.
-- **Join primitives for the group algebra**: ``_merge_join`` (SPARQL
-  compatibility join for vars that may be unbound) and
-  ``_conditional_left_join`` (OPTIONAL with a FILTER over outer vars).
-  The group evaluator in plans/sparql.py (``_group_bindings``) drives
-  them; OPTIONAL evaluates the whole optional group as a unit, so a
-  partial match inside the group binds nothing.
+- **One BGP is one join chain**: every var a pattern binds is bound,
+  so its joins are plain equi joins. The group algebra around BGPs —
+  OPTIONAL, MINUS, EXISTS, VALUES, UNION — and its SPARQL
+  compatibility join (``_join``) live in plans/sparql.py.
 - **Property paths** (reference flattens via ARQ,
   optimizer/HBaseOptimize.java:111): an algebra over (a, b) pair sets —
   atom scans, inverse (swap), sequence (pair join), alternative
@@ -43,7 +41,6 @@ entity and numeric-literal bindings join and compare with one code path
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce as _reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -613,153 +610,6 @@ def _attach_filter_labels(store, df: DataFrame, names: list[str]) -> DataFrame:
     return df
 
 
-def _merge_join(
-    result: DataFrame, step: DataFrame, shared: list, how: str
-) -> DataFrame:
-    """SPARQL compatibility join WITH binding merge: two solutions are
-    compatible when every shared var bound on BOTH sides agrees
-    (SPARQL 1.1 §8.3); the merged solution takes the bound side — and
-    so does its ``__{v}_vlex`` lexical sidecar. Needed whenever a
-    shared var can be unbound on either side (an OPTIONAL miss, a
-    VALUES UNDEF cell, union branches of differing scope, a BIND
-    error): the plain column-equality join treats NULL as
-    incompatible, silently dropping (inner) or orphaning (left) rows
-    the spec keeps.
-
-    Decomposed for scale: a join key is NULL only on the (usually
-    tiny or empty) slice of rows where an OPTIONAL missed / a VALUES
-    cell was UNDEF / a BIND errored. Splitting both sides on
-    key-completeness turns the bound×bound quadrant — almost all of
-    the data — into a plain hash/merge EQUI join; only the null-key
-    slices keep the non-equi compatibility condition (inherently a
-    partial cross product: per spec an unbound var matches
-    everything), so the nested-loop legs see slices, never the full
-    inputs. The three quadrant legs partition result×step exactly, so
-    bag multiplicities are preserved; unmatched left rows surface
-    once via an anti-anti residual.
-
-    ``how``: "inner" (SPARQL Join) or "left" (LeftJoin).
-    """
-    if not shared:
-        return result.join(step, F.lit(True), how)
-    r_null = _reduce(
-        lambda a, b: a | b, (F.col(v).isNull() for v in shared)
-    )
-    r_bound, r_nulls = result.filter(~r_null), result.filter(r_null)
-    s_bound, s_nulls = step.filter(~r_null), step.filter(r_null)
-    legs = [
-        # bound × bound: pure equality — Catalyst picks a hash join
-        _compat_pairs(r_bound, s_bound, shared, "inner", equi=True),
-        # bound × null-slice: compatibility, but only over the slice
-        _compat_pairs(r_bound, s_nulls, shared, "inner", equi=False),
-        # null-slice × everything: full compatibility over the slice
-        _compat_pairs(r_nulls, step, shared, how, equi=False),
-    ]
-    if how == "left":
-        # bound rows with no partner in EITHER leg surface once,
-        # null-extended (the r_nulls leg already handles its own)
-        unmatched = r_bound.join(
-            s_bound.select(*shared), on=shared, how="left_anti"
-        )
-        sn = s_nulls.select(
-            *[F.col(v).alias(f"__mj_{v}") for v in shared]
-        )
-        anti_cond = _reduce(
-            lambda a, b: a & b,
-            (
-                F.col(f"__mj_{v}").isNull() | (F.col(v) == F.col(f"__mj_{v}"))
-                for v in shared
-            ),
-        )
-        legs.append(unmatched.join(sn, anti_cond, "left_anti"))
-    return _reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), legs
-    )
-
-
-def _compat_pairs(
-    result: DataFrame, step: DataFrame, shared: list, how: str, equi: bool
-) -> DataFrame:
-    """One quadrant leg of ``_merge_join``: join + binding/sidecar
-    merge, with either plain equality (``equi`` — hash-joinable) or
-    the null-tolerant compatibility condition."""
-    for v in shared:
-        step = step.withColumnRenamed(v, f"__mj_{v}")
-        if f"__{v}_vlex" in step.columns:
-            step = step.withColumnRenamed(f"__{v}_vlex", f"__mj_{v}_vlex")
-    cond = F.lit(True)
-    for v in shared:
-        b = F.col(f"__mj_{v}")
-        if equi:
-            cond = cond & (F.col(v) == b)
-        else:
-            cond = cond & (F.col(v).isNull() | b.isNull() | (F.col(v) == b))
-    out = result.join(step, cond, how)
-    for v in shared:
-        out = out.withColumn(
-            v, F.coalesce(F.col(v), F.col(f"__mj_{v}"))
-        ).drop(f"__mj_{v}")
-        if f"__mj_{v}_vlex" in out.columns:
-            if f"__{v}_vlex" in out.columns:
-                out = out.withColumn(
-                    f"__{v}_vlex",
-                    F.coalesce(
-                        F.col(f"__{v}_vlex"), F.col(f"__mj_{v}_vlex")
-                    ),
-                ).drop(f"__mj_{v}_vlex")
-            else:
-                out = out.withColumnRenamed(f"__mj_{v}_vlex", f"__{v}_vlex")
-    return out
-
-
-def _conditional_left_join(
-    store, result: DataFrame, step: DataFrame, shared: list,
-    filters: list, nullable: bool,
-) -> DataFrame:
-    """SPARQL §8.2 ``LeftJoin(Ω1, Ω2, expr)`` with a correlated
-    ``expr`` — the OPTIONAL-internal FILTER reads outer-bound vars, so
-    it must evaluate on the MERGED solution as part of the join
-    condition (filtering before the join can't see the outer binding;
-    filtering after would drop the null-extension the spec keeps).
-
-    Shape: one compatibility INNER join + the expr as a post-join
-    filter gives the surviving extensions; Ω1 rows with no surviving
-    extension surface once, null-extended, via a whole-row null-safe
-    anti join against the survivors' Ω1 image. Original Ω1 values are
-    carried through the merge in ``__lj_*`` shadow columns because a
-    compatibility merge can coalesce a NULL key from the bound side —
-    the anti probe must match the PRE-merge row. Both joins are plain
-    equi/hash joins over the same keys, so AQE handles them like any
-    BGP join at scale; the reference inherits the equivalent
-    OpLeftJoin conditional evaluation from stock ARQ
-    (HBaseTransformFilterPlacement.java:359-369)."""
-    tagged = result.select(
-        "*", *[F.col(c).alias(f"__lj_{c}") for c in result.columns]
-    )
-    if not shared:
-        merged = tagged.join(step, F.lit(True), "inner")
-    elif nullable:
-        merged = _merge_join(tagged, step, shared, "inner")
-    else:
-        merged = tagged.join(step, on=shared, how="inner")
-    merged = _apply_filters(store, merged, filters)
-    probe = merged.select(
-        *[F.col(f"__lj_{c}") for c in result.columns]
-    ).dropDuplicates()
-    anti = _reduce(
-        lambda a, b: a & b,
-        (F.col(c).eqNullSafe(F.col(f"__lj_{c}")) for c in result.columns),
-    )
-    unmatched = result.join(probe, anti, "left_anti")
-    return merged.drop(
-        *[f"__lj_{c}" for c in result.columns]
-    ).unionByName(unmatched, allowMissingColumns=True)
-
-
-def _apply_filter(store, df: DataFrame, f) -> DataFrame:
-    return _apply_filters(store, df, [f])
-
-
 def _apply_filters(store, df: DataFrame, fs: list) -> DataFrame:
     """Apply a batch of filters with ONE id2term label join per
     variable, shared across every filter in the batch that reads that
@@ -849,7 +699,7 @@ def execute_bgp(
             f for f in pending
             if f.vars() <= set(result.columns) and not f.label_vars()
         ]:
-            result = _apply_filter(store, result, f)
+            result = _apply_filters(store, result, [f])
             pending.remove(f)
     assert result is not None, "empty BGP"
     # label-space filters once the bindings are complete — batched so

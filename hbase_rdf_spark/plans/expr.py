@@ -842,7 +842,7 @@ class ExistsExpr:
     always true/false, never an error, so the marker coalesces NULL (no
     compatible solution) to false."""
 
-    marker: str  # hidden column name, attached by _attach_exists_marker
+    marker: str  # hidden column name, attached by _exists_join
     block: object = None  # the braced group: a parsed sparql.Query
 
     def cond(self):

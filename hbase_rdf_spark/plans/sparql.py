@@ -58,9 +58,11 @@ content-addressed, so it carries exactly its dictionary id);
 Joins — SPARQL compatibility where a shared var may be unbound
 (``UNDEF`` cells, OPTIONAL misses: the merge keeps the bound side).
 The group's FILTERs apply to the whole group; ``FILTER [NOT] EXISTS``
-is a semi/anti join (uncorrelated → global emptiness test; correlated
-block filters join-condition-evaluate under substitution semantics),
-and EXISTS inside any expression reads a marker column. Two rewrites
+is a semi/anti join (uncorrelated → global emptiness test), and EXISTS
+inside any expression, or with block filters over outer vars, reads a
+marker column (those filters run on the merged solutions, under
+substitution semantics). All of these joins are one §8.3 join,
+``_join``. Two rewrites
 keep the scans lean: a GRAPH or braced group of triples (plus filters
 over its own vars) merges into the group's BGP, and a FILTER whose
 vars a BGP certainly binds runs inside it, where Catalyst pushes it
@@ -104,6 +106,7 @@ triples, dedup in the scan — plans/bgp.py ``_scan_pattern``);
 from __future__ import annotations
 
 import itertools
+import json
 import re
 from dataclasses import dataclass, field, replace as _dc_replace
 from functools import reduce as _reduce
@@ -119,8 +122,6 @@ from hbase_rdf_spark.plans.bgp import (
     _apply_filters,
     _attach_filter_labels,
     _binding_struct,
-    _conditional_left_join,
-    _merge_join,
 )
 from hbase_rdf_spark.plans.expr import (  # noqa: F401 — re-exported
     AGG_FUNCS,
@@ -936,19 +937,6 @@ class _Parser(ExprGrammar):
             q.where += branches[0].where
             q.filters += branches[0].filters
             return
-        if len(branches) > 1:
-            # a branch may not assign a variable the group binds
-            # before the chain — stricter than §18.2.1, which scopes
-            # each branch on its own
-            before = _query_scope_vars(q)
-            for br in branches:
-                for b in br.where:
-                    if isinstance(b, BindAssign) and b.var in before:
-                        raise SparqlSyntaxError(
-                            f"BIND ?{b.var} inside a UNION branch would "
-                            "rebind a variable already bound by a graph "
-                            "pattern"
-                        )
         q.where.append(Union(branches))
 
     def _graph_slot(self, graph) -> tuple:
@@ -1645,6 +1633,17 @@ def _construct(
     ).dropDuplicates()
 
 
+def _inline_table(spark, rows: list, cols: list) -> DataFrame:
+    """A small table of driver-side ``rows`` with ``cols`` (name, type)
+    pairs. The rows ride one JSON literal that the JVM unpacks, so no
+    Python worker runs when a plan scans the table, however often."""
+    schema = ",".join(f"c{i}:{t}" for i, (_, t) in enumerate(cols))
+    data = json.dumps([{f"c{i}": x for i, x in enumerate(r)} for r in rows])
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.from_json(F.lit(data), f"array<struct<{schema}>>"))
+    ).toDF(*[n for n, _ in cols])
+
+
 def _values_df(store, vb: ValuesBlock) -> DataFrame:
     """VALUES rows → a DataFrame of binding structs (one col per var).
 
@@ -1664,25 +1663,25 @@ def _values_df(store, vb: ValuesBlock) -> DataFrame:
                 lex, kind = t if isinstance(t, tuple) else (t, 0)
                 flat += [lex, kind, None]
         flat_rows.append(tuple(flat))
-    schema = ", ".join(
-        f"__{v}_lex string, __{v}_kind int, __{v}_num double" for v in vb.vars
-    )
-    df = store.spark.createDataFrame(flat_rows, schema)
+    df = _inline_table(store.spark, flat_rows, [
+        (f"__{v}_{c}", t) for v in vb.vars
+        for c, t in (("lex", "string"), ("kind", "int"), ("num", "double"))
+    ])
+    undef = _nullable(vb)
     cols = []
     for v in vb.vars:
-        k = F.col(f"__{v}_kind")
-        ident = F.when(k != 2, F.xxhash64(k.cast("int"), F.col(f"__{v}_lex")))
+        k, lex = F.col(f"__{v}_kind"), F.col(f"__{v}_lex")
+        ident = F.when(k != 2, F.xxhash64(k.cast("int"), lex))
+        term = _binding_struct(k, ident, F.col(f"__{v}_num"))
         # an UNDEF cell (NULL kind) is an unbound var: the whole struct
-        # is NULL, matching how OPTIONAL leaves vars unbound
-        cols.append(
-            F.when(k.isNotNull(), _binding_struct(k, ident, F.col(f"__{v}_num")))
-            .alias(v)
-        )
+        # is NULL, matching how OPTIONAL leaves vars unbound. A column
+        # with no UNDEF stays non-nullable, so Catalyst prunes the
+        # null-key legs of ``_join``
+        cols.append((F.when(k.isNotNull(), term) if v in undef else term).alias(v))
         # VALUES may introduce terms absent from the store dictionary;
         # carry the lexical form so materialize() can still render them
-        cols.append(F.col(f"__{v}_lex").alias(f"__{v}_vlex"))
-    # a handful of inline rows whose size Spark cannot see: every join
-    # with them broadcasts them
+        cols.append(lex.alias(f"__{v}_vlex"))
+    # a handful of inline rows: every join with them broadcasts them
     return F.broadcast(df.select(*cols))
 
 
@@ -1783,7 +1782,7 @@ def _attach_any_labels(result: DataFrame, store, names: list[str]):
 
 
 def _apply_binds(
-    result: DataFrame, store, binds: list[BindAssign]
+    result: DataFrame, store, binds: list[BindAssign], nullable: set
 ) -> DataFrame:
     """Extend solutions with BIND assignments, in order.
 
@@ -1792,7 +1791,10 @@ def _apply_binds(
     absent from the dictionary carry a ``__{v}_vlex`` sidecar so
     ``materialize`` can render them; computed numbers are kind-2
     structs with a NULL id. An error nulls the whole struct (unbound),
-    matching OPTIONAL's null-extension."""
+    matching OPTIONAL's null-extension. An EXISTS leaf's marker
+    attaches just before its BIND compiles, so the block sees every
+    earlier BIND of the batch (``nullable``: the vars the solutions
+    may leave unbound)."""
     # label columns attached for ANY bind in this batch are dropped
     # once at the end: two BINDs reading the same var's label (e.g.
     # DAY(?t) and HOURS(?t)) share one id2term join
@@ -1812,6 +1814,9 @@ def _apply_binds(
         all_attached.append("__bnsol")
     filled: list[str] = []
     for b in binds:
+        for ex in exists_leaves(b.expr):
+            result = _exists_join(store, result, ex, nullable, "left")
+            all_attached.append(ex.marker)
         absent = sorted(expr_vars(b.expr) - set(result.columns))
         if absent:
             # a var nothing before the BIND binds is unbound there
@@ -1828,6 +1833,7 @@ def _apply_binds(
         result = result.withColumn(b.var, struct)
         if vlex is not None:
             result = result.withColumn(f"__{b.var}_vlex", vlex)
+        nullable = nullable | {b.var, *absent}
     targets = {b.var for b in binds}
     return result.drop(*all_attached, *[v for v in filled if v not in targets])
 
@@ -1896,7 +1902,7 @@ def _aggregate(result: DataFrame, store, q: Query):
     if q.agg_prebinds:
         # aggregate expression arguments (SUM(?a * ?b)): one
         # per-solution Extend just before grouping, §18.4
-        result = _apply_binds(result, store, q.agg_prebinds)
+        result = _apply_binds(result, store, q.agg_prebinds, _nullable_vars(q))
     gvars = [v[1:] for v in q.group_by]
     label_vars = sorted({
         a.var[1:] for a in q.aggregates
@@ -2064,7 +2070,7 @@ def _nullable(e) -> set:
     error→unbound rule, OPTIONAL misses, VALUES UNDEF cells, SERVICE
     cells, union branches of differing scope, or a nested group or
     subquery projecting such a var. Joins keyed on one of these need
-    SPARQL compatibility semantics (``_merge_join``) instead of plain
+    SPARQL compatibility semantics (``_join``) instead of plain
     column equality; the rest keep the hash fast path."""
     if isinstance(e, BindAssign):
         return {e.var}
@@ -2121,35 +2127,123 @@ def _shared(result: DataFrame, step: DataFrame) -> list:
     ]
 
 
+#: the Spark join type of each ``_join`` operator
+_SPARK_HOW = {"inner": "inner", "left": "left", "exists": "left_semi",
+              "not_exists": "left_anti", "minus": "left_anti"}
+
+
 def _join(
     result: DataFrame | None, step: DataFrame, how: str, nullable: set
 ) -> DataFrame:
-    """Join a step's solutions onto the result ("inner" or "left"): a
-    cross join with no shared var, the compatibility merge join when a
-    shared var may be unbound on either side (or both carry its
-    lexical sidecar), otherwise an equi join. ``None`` is the unit
-    solution, which an inner join leaves as ``step``."""
+    """SPARQL 1.1 §18.5 Join ("inner"), LeftJoin ("left"), Minus
+    ("minus") and [NOT] EXISTS ("exists", "not_exists") of two solution
+    frames under §8.3 compatibility: solutions are compatible when
+    every var bound on both sides agrees, and a merged solution takes
+    the bound side of each var and of its ``__{v}_vlex`` sidecar. MINUS
+    also needs a shared var bound on both sides. ``nullable``: the vars
+    either side may leave unbound. ``None`` is the unit solution, which
+    an inner join leaves as ``step``.
+
+    With no shared var this is a cross join, a left join on true,
+    ``result`` (MINUS) or an emptiness test (EXISTS). With no nullable
+    shared var and no sidecar on both sides, compatibility is equality:
+    one equi join. Otherwise both sides split on key completeness:
+    bound × bound — almost all rows — is still an equi join, and only
+    the null-key slices take the §8.3 condition, so the nested-loop
+    legs see slices, never the full inputs. The legs partition
+    ``result`` × ``step`` (semi and anti legs: ``result``), so bag
+    multiplicities hold."""
     if result is None:
         return step
     shared = _shared(result, step)
+    x = _SPARK_HOW[how]
     if not shared:
         if how == "inner":
             return result.crossJoin(step)
-        return result.join(step, F.lit(True), how)
-    if set(shared) & nullable or any(
-        f"__{v}_vlex" in result.columns and f"__{v}_vlex" in step.columns
-        for v in shared
-    ):
-        return _merge_join(result, step, shared, how)
-    return result.join(step, on=shared, how=how)
+        if how == "left":
+            return result.join(step, F.lit(True), "left")
+        if how == "minus":
+            return result
+        return result if (how == "exists") != step.isEmpty() else result.limit(0)
+    semi = x in ("left_semi", "left_anti")
+    sidecars = any(c in result.columns for c in step.columns if c not in shared)
+    if not set(shared) & nullable and (semi or not sidecars):
+        return result.join(step, on=shared, how=x)
+    if semi:  # a semi/anti join reads only the step's distinct keys
+        step = step.select(*shared).dropDuplicates()
+    null = _reduce(lambda a, b: a | b, (F.col(v).isNull() for v in shared))
+    r_b, r_n = result.filter(~null), result.filter(null)
+    s_b, s_n = step.filter(~null), step.filter(null)
+
+    def leg(left: DataFrame, right: DataFrame, h: str, equi=False) -> DataFrame:
+        return _compat_leg(left, right, shared, h, equi, how == "minus")
+
+    legs = [leg(r_n, step, x)]
+    if how in ("inner", "left"):
+        legs += [leg(r_b, s_b, "inner", True), leg(r_b, s_n, "inner")]
+    elif how == "exists":
+        legs.append(leg(r_b, s_b, "left_semi", True))
+    if how != "inner":
+        # bound rows with no equal partner meet the step's null slice
+        # once: the semi leg keeps the legs disjoint, and anti/left keep
+        # what is left unmatched (LeftJoin's residual, null-extended)
+        rest = leg(r_b, s_b, "left_anti", True)
+        legs.append(leg(rest, s_n, "left_semi" if how == "exists" else "left_anti"))
+    return _reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), legs)
+
+
+def _compat_leg(
+    result: DataFrame, step: DataFrame, shared: list, how: str,
+    equi: bool, overlap: bool,
+) -> DataFrame:
+    """One leg of ``_join``: a Spark ``how`` join on the shared vars by
+    plain equality (``equi``: Catalyst takes them as hash keys) or by
+    the §8.3 condition, where an unbound side matches anything; with
+    ``overlap`` (MINUS) some shared var must be bound on both sides. An
+    inner or left leg merges each column both sides carry — a var or
+    its sidecar — into its bound side."""
+    both = [c for c in step.columns if c in result.columns]
+    step = step.select(
+        *[F.col(c).alias(f"__mj_{c}") if c in both else c for c in step.columns]
+    )
+    pairs = [(F.col(v), F.col(f"__mj_{v}")) for v in shared]
+    cond = _reduce(lambda a, b: a & b, (
+        (l == r) if equi else (l.isNull() | r.isNull() | (l == r))
+        for l, r in pairs
+    ))
+    if overlap and not equi:
+        cond = cond & _reduce(
+            lambda a, b: a | b, (l.isNotNull() & r.isNotNull() for l, r in pairs)
+        )
+    out = result.join(step, cond, how)
+    if how in ("left_semi", "left_anti"):
+        return out
+    return out.withColumns(
+        {c: F.coalesce(F.col(c), F.col(f"__mj_{c}")) for c in both}
+    ).drop(*[f"__mj_{c}" for c in both])
+
+
+def _tagged(df: DataFrame) -> DataFrame:
+    """``df`` with a ``__lj_{c}`` copy of each column: the image of the
+    row before a compatibility merge fills its NULL vars."""
+    return df.select("*", *[F.col(c).alias(f"__lj_{c}") for c in df.columns])
+
+
+def _probe(result: DataFrame, hits: DataFrame, cols: list, how: str) -> DataFrame:
+    """Join ``result`` with ``hits`` — distinct ``__lj_{c}`` images of
+    its ``cols`` — null-safely on every column, and drop the images."""
+    cond = _reduce(
+        lambda a, b: a & b, (F.col(c).eqNullSafe(F.col(f"__lj_{c}")) for c in cols)
+    )
+    return result.join(hits, cond, how).drop(*[f"__lj_{c}" for c in cols])
 
 
 def _nested_step(store, blk: Query, dedup: bool) -> tuple[DataFrame, list]:
     """Solutions of a nested OPTIONAL / MINUS / EXISTS group, with its
     top-level FILTERs that read variables the group cannot bind split
     off first. Returns ``(solutions, split filters)``: OPTIONAL and
-    EXISTS evaluate those filters as part of the join condition, MINUS
-    with the outer variables unbound (no substitution)."""
+    EXISTS evaluate those filters on the merged solutions of the join,
+    MINUS with the outer variables unbound (no substitution)."""
     inner = _query_scope_vars(blk)
     split = [f for f in blk.filters if not f.vars() <= inner]
     if split:
@@ -2166,116 +2260,6 @@ def _bound_somewhere(filters: list, result: DataFrame, step: DataFrame) -> None:
         raise SparqlSyntaxError(
             f"FILTER references variables bound nowhere: {sorted(missing)}"
         )
-
-
-def _values_join(result: DataFrame, store, vb: ValuesBlock) -> DataFrame:
-    """VALUES: inline solution table joined on its shared vars (new vars
-    extend the bindings; no shared vars = cartesian, per spec). The
-    join is SPARQL compatibility, not equality: a shared var matches
-    when EITHER side is unbound (UNDEF cell / OPTIONAL null) or both
-    agree, and the merged solution takes the bound side. The VALUES
-    table is a handful of inline rows, so the non-equi condition costs
-    one broadcast nested-loop pass — no scale concern. SERVICE results
-    join the same way: the remote solution sequence IS a values table
-    (capped by the endpoint, fetched once on the driver)."""
-    vdf = _values_df(store, vb)
-    shared = [v for v in vb.vars if v in result.columns]
-    if not shared:
-        return result.crossJoin(vdf)
-    for v in shared:
-        vdf = vdf.withColumnRenamed(v, f"__{v}_vv").withColumnRenamed(
-            f"__{v}_vlex", f"__{v}_vvlex"
-        )
-    cond = F.lit(True)
-    for v in shared:
-        vv = F.col(f"__{v}_vv")
-        cond = cond & (vv.isNull() | F.col(v).isNull() | (F.col(v) == vv))
-    result = result.join(vdf, cond, "inner")
-    for v in shared:
-        result = result.withColumn(
-            v, F.coalesce(F.col(v), F.col(f"__{v}_vv"))
-        ).drop(f"__{v}_vv")
-        # merge the lexical sidecars: after the compatibility filter,
-        # bound sides agree, so a plain coalesce always carries the
-        # winner's lexical form
-        if f"__{v}_vlex" in result.columns:
-            result = result.withColumn(
-                f"__{v}_vlex",
-                F.coalesce(F.col(f"__{v}_vlex"), F.col(f"__{v}_vvlex")),
-            ).drop(f"__{v}_vvlex")
-        else:
-            result = result.withColumnRenamed(f"__{v}_vvlex", f"__{v}_vlex")
-    return result
-
-
-def _compat_join(
-    result: DataFrame,
-    step: DataFrame,
-    shared: list,
-    how: str,
-    require_overlap: bool,
-) -> DataFrame:
-    """Null-tolerant SPARQL-compatibility semi/anti join.
-
-    Two solutions are compatible when every commonly *bound* var agrees
-    (SPARQL 1.1 §8.3) — a NULL (unbound) side never disqualifies. MINUS
-    additionally requires ``require_overlap``: at least one shared var
-    bound on BOTH sides (disjoint domains remove nothing). The block
-    side is projected to the shared vars and deduplicated first, so the
-    nested-loop inner side is bounded by the block's distinct
-    shared-tuple count, not its full width × cardinality.
-    """
-    vars_ = [c for c in shared if not c.startswith("__")]
-    if not vars_:  # only internal sidecars shared — equality is exact
-        return result.join(step, on=shared, how=how)
-    blk = step.select(*vars_).dropDuplicates()
-    # quadrant decomposition (same idea as bgp._merge_join): between
-    # two all-bound sides, compatibility IS equality (and MINUS's
-    # domain-overlap requirement is trivially met), so the bulk takes
-    # a hash semi/anti join; only null-key slices keep the non-equi
-    # condition, bounding the nested-loop legs by the slices instead
-    # of the full outer × distinct-block product.
-    null_of = lambda cols: _reduce(  # noqa: E731
-        lambda a, b: a | b, (F.col(v).isNull() for v in cols)
-    )
-    b_bound = blk.filter(~null_of(vars_))
-    b_nulls = blk.filter(null_of(vars_))
-    r_bound = result.filter(~null_of(vars_))
-    r_nulls = result.filter(null_of(vars_))
-    if how == "left_anti":
-        out_b = r_bound.join(b_bound, on=vars_, how="left_anti")
-        out_b = _nl_compat(out_b, b_nulls, vars_, how, require_overlap)
-        out_n = _nl_compat(r_nulls, blk, vars_, how, require_overlap)
-        return out_b.unionByName(out_n)
-    # left_semi: legs must stay disjoint (a row matching both the
-    # bound and the null-slice quadrant may only surface once)
-    m1 = r_bound.join(b_bound, on=vars_, how="left_semi")
-    rest = r_bound.join(b_bound, on=vars_, how="left_anti")
-    m2 = _nl_compat(rest, b_nulls, vars_, how, require_overlap)
-    m3 = _nl_compat(r_nulls, blk, vars_, how, require_overlap)
-    return m1.unionByName(m2).unionByName(m3)
-
-
-def _nl_compat(
-    result: DataFrame, blk: DataFrame, vars_: list, how: str,
-    require_overlap: bool,
-) -> DataFrame:
-    """One non-equi leg of ``_compat_join``: the §8.3 null-tolerant
-    condition (optionally with MINUS's bound-overlap requirement) as a
-    nested-loop semi/anti join — callers pass SLICES, never both full
-    sides."""
-    for v in vars_:
-        blk = blk.withColumnRenamed(v, f"__mx_{v}")
-    cond = F.lit(True)
-    for v in vars_:
-        b = F.col(f"__mx_{v}")
-        cond = cond & (F.col(v).isNull() | b.isNull() | (F.col(v) == b))
-    if require_overlap:
-        ov = F.lit(False)
-        for v in vars_:
-            ov = ov | (F.col(v).isNotNull() & F.col(f"__mx_{v}").isNotNull())
-        cond = cond & ov
-    return result.join(blk, cond, how)
 
 
 def _group_bindings(
@@ -2314,7 +2298,7 @@ def _group_bindings(
             step = execute_bgp(store, run, now, dedup)
             result = _join(result, step, "inner", nullable)
         elif kind is BindAssign:
-            result = _extend(store, q, _unit(store, result), run, nullable, scope)
+            result = _extend(store, _unit(store, result), run, nullable, scope)
             nullable |= {b.var for b in run}
         else:
             for e in run:
@@ -2338,49 +2322,30 @@ def _fold_step(
 ) -> DataFrame:
     """One non-BGP, non-BIND element of ``_group_bindings``' fold."""
     if isinstance(e, LeftJoin):
-        # §8.2 LeftJoin(Ω1, Ω2, expr): a FILTER inside OPTIONAL that
-        # reads outer-bound vars is part of the left-join CONDITION,
-        # evaluated on the merged solution (the reference gets this
-        # from stock ARQ's OpLeftJoin expression;
-        # HBaseTransformFilterPlacement.java:359-369)
         result = _unit(store, result)
         step, cond = _nested_step(store, e.group, dedup)
         step_null = nullable | _nullable_vars(e.group)
         if not cond:
             return _join(result, step, "left", step_null)
         _bound_somewhere(cond, result, step)
-        shared = _shared(result, step)
-        return _conditional_left_join(
-            store, result, step, shared, cond,
-            nullable=bool(set(shared) & step_null),
-        )
+        return _conditional_left_join(store, result, step, cond, step_null)
     if isinstance(e, Minus):
-        # remove solutions compatible with the block on shared vars;
-        # disjoint domains remove nothing (dom(μ)∩dom(μ′) ≠ ∅). MINUS
-        # evaluates its group WITHOUT substitution, so a block filter
-        # var bound only outside the block is UNBOUND inside it.
-        # Compatibility is over commonly BOUND vars (§8.3): a shared
-        # var that can be unbound takes the null-tolerant join
+        # MINUS evaluates its group WITHOUT substitution, so a block
+        # filter var bound only outside the block is UNBOUND inside it
         result = _unit(store, result)
         step, cond = _nested_step(store, e.group, True)
         step = _apply_scoped(store, step, cond, None)
-        shared = _shared(result, step)
-        if not shared:
-            return result
-        if set(shared) & (nullable | _nullable_vars(e.group)):
-            return _compat_join(
-                result, step, shared, "left_anti", require_overlap=True
-            )
-        return result.join(step, on=shared, how="left_anti")
+        return _join(result, step, "minus", nullable | _nullable_vars(e.group))
     if isinstance(e, (ValuesBlock, ServiceBlock)):
+        # SERVICE results join like VALUES: the remote solution
+        # sequence IS a values table (capped by the endpoint, fetched
+        # once on the driver)
         vb = e if isinstance(e, ValuesBlock) else _service_values_block(
             e, [v for v in q.where if isinstance(v, ValuesBlock)]
         )
         if vb is None:  # a SILENT failure is the unit solution
             return result
-        if result is None:
-            return _values_df(store, vb)
-        return _values_join(result, store, vb)
+        return _join(result, _values_df(store, vb), "inner", nullable | _nullable(vb))
     if isinstance(e, Union):
         step = _reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True),
@@ -2392,9 +2357,29 @@ def _fold_step(
     return _join(result, step, "inner", nullable | _nullable(e))
 
 
+def _conditional_left_join(
+    store, result: DataFrame, step: DataFrame, filters: list, nullable: set
+) -> DataFrame:
+    """§8.2 ``LeftJoin(Ω1, Ω2, expr)`` where a FILTER inside OPTIONAL
+    reads vars bound outside it: ``expr`` is part of the left-join
+    CONDITION (filtering before the join can't see the outer binding;
+    filtering after would drop the null-extension the spec keeps). It
+    filters the merged solutions of the Join, and each Ω1 row that no
+    survivor extends surfaces once, null-extended: a null-safe
+    whole-row anti join against the survivors' pre-merge images. The
+    reference gets this from stock ARQ's OpLeftJoin expression
+    (HBaseTransformFilterPlacement.java:359-369)."""
+    tags = [f"__lj_{c}" for c in result.columns]
+    merged = _apply_filters(
+        store, _join(_tagged(result), step, "inner", nullable), filters
+    )
+    unmatched = _probe(result, merged.select(*tags).dropDuplicates(),
+                       result.columns, "left_anti")
+    return merged.drop(*tags).unionByName(unmatched, allowMissingColumns=True)
+
+
 def _extend(
-    store, q: Query, result: DataFrame, binds: list, nullable: set,
-    scope: set | None,
+    store, result: DataFrame, binds: list, nullable: set, scope: set | None,
 ) -> DataFrame:
     """A run of adjacent BINDs: Extends, applied as one batch. A var
     outside ``scope`` (None: any var) raises."""
@@ -2405,133 +2390,67 @@ def _extend(
             "BIND expression uses out-of-scope variable(s) "
             + ", ".join(f"?{v}" for v in missing)
         )
-    # EXISTS leaves inside BIND values / IF conditions need their
-    # marker columns BEFORE the binds evaluate
-    leaves = [x for b in binds for x in exists_leaves(b.expr)]
-    targets = {b.var for b in q.where if isinstance(b, BindAssign)}
-    for ex in leaves:
-        # markers attach before the batch, so a block correlated
-        # through a var this group's BINDs produce would see it
-        # unbound — reject rather than mis-evaluate
-        clash = sorted(_query_scope_vars(ex.block) & targets)
-        if clash:
-            raise SparqlSyntaxError(
-                "EXISTS inside BIND may not reference variables "
-                f"bound in the same group: {clash}"
-            )
-        result = _attach_exists_marker(store, result, ex, nullable)
-    result = _apply_binds(result, store, binds)
-    return result.drop(*[ex.marker for ex in leaves])
+    return _apply_binds(result, store, binds, nullable)
 
 
 def _exists_filter(
     store, result: DataFrame, f, nullable: set, scope: set | None
 ) -> DataFrame:
     """A FILTER with EXISTS{…} leaves. A bare ``FILTER [NOT] EXISTS``
-    is a correlated semi/anti join — an uncorrelated block a global
-    emptiness test. EXISTS uses SUBSTITUTION semantics (unlike MINUS):
-    a block filter that reads outer vars becomes part of the join
-    condition. Any other expression reads a marker column per leaf
-    (``_attach_exists_marker``)."""
+    is a semi/anti join (``_exists_join``); any other expression reads
+    a marker column per leaf."""
     a = f.ast
-    positive = a[0] == "exists"
-    if positive or (a[0] == "not" and a[1][0] == "exists"):
-        blk = (a if positive else a[1])[1].block
-        step, cond = _nested_step(store, blk, True)
-        shared = _shared(result, step)
-        how = "left_semi" if positive else "left_anti"
-        tolerant = bool(set(shared) & (nullable | _nullable_vars(blk)))
-        if cond:
-            _bound_somewhere(cond, result, step)
-            result, step, cond, lbls = _exists_condition(
-                store, result, step, shared, cond, tolerant
-            )
-            # non-equi conjuncts force a nested-loop strategy; the
-            # equality conjuncts still hash-partition both sides when
-            # shared vars exist, and the block side is dedup'd — the
-            # same shape Catalyst gives a correlated SQL EXISTS
-            return result.join(step, cond, how).drop(*lbls)
-        if not shared:
-            return result if positive != step.isEmpty() else result.limit(0)
-        if tolerant:
-            return _compat_join(result, step, shared, how, require_overlap=False)
-        return result.join(step, on=shared, how=how)
+    bare = a if a[0] == "exists" else a[1] if a[0] == "not" else None
+    if bare is not None and bare[0] == "exists":
+        how = "left_semi" if bare is a else "left_anti"
+        return _exists_join(store, result, bare[1], nullable, how)
     leaves = exists_leaves(a)
     for ex in leaves:
-        result = _attach_exists_marker(store, result, ex, nullable)
+        result = _exists_join(store, result, ex, nullable, "left")
     result = _apply_scoped(store, result, [f], scope)
     return result.drop(*[ex.marker for ex in leaves])
 
 
-def _exists_condition(
-    store, outer: DataFrame, step: DataFrame, shared: list,
-    correlated: list, tolerant: bool,
-):
-    """The join condition of a correlated EXISTS: shared-var equality
-    (null-tolerant when a shared var may be unbound) plus the block
-    filters that read outer vars, evaluated under substitution
-    (SPARQL 1.1 §8.1.1). The block's copies of shared vars are renamed
-    out of the way so each column name resolves to one side.
-    Label-space filters (regex/str()/langMatches/isIRI…) get each
-    referenced var's label on the side that carries it through the
-    join: the outer side for outer and shared vars, the block side for
-    block-only vars. Returns ``(outer, step, cond, outer label
-    columns to drop after the join)``."""
-    lbls: list[str] = []
-    for v in sorted(set().union(*(f.label_vars() for f in correlated))):
-        if v in outer.columns:
-            outer, att = _attach_any_labels(outer, store, [v])
-            lbls += att
-        else:
-            step, _ = _attach_any_labels(step, store, [v])
-    for v in shared:
-        step = step.withColumnRenamed(v, f"__ex_{v}")
-    cond = F.lit(True)
-    for v in shared:
-        eqv = F.col(v) == F.col(f"__ex_{v}")
-        if tolerant:
-            eqv = F.col(v).isNull() | F.col(f"__ex_{v}").isNull() | eqv
-        cond = cond & eqv
-    for f in correlated:
-        cond = cond & f.cond()
-    return outer, step, cond, lbls
-
-
-def _attach_exists_marker(
-    store, result: DataFrame, ex: ExistsExpr, nullable: set
+def _exists_join(
+    store, result: DataFrame, ex: ExistsExpr, nullable: set, how: str
 ) -> DataFrame:
-    """Extend ``result`` with ``ex.marker``: true where a solution of
-    the EXISTS block is compatible with the row, else NULL.
+    """EXISTS ``ex`` over ``result``: a solution of the block is
+    compatible with the row and satisfies the block's filters over
+    outer vars on the merged solution (SPARQL 1.1 §8.1.1 substitution).
+    ``how``: "left_semi" keeps the rows it holds for, "left_anti" the
+    others, and "left" extends every row with ``ex.marker`` (true, else
+    NULL).
 
-    Shape: semi-join the DISTINCT outer key set (shared vars plus any
-    outer vars the block's correlated filters read — typically tiny
-    relative to the solution multiset) against the block, then join
-    the surviving keys back null-safely. The back-join is key-unique
-    by construction, so the marker never multiplies rows — the same
-    guarantee the top-level FILTER EXISTS semi-join gives."""
+    With no such filter, a semi/anti join is ``_join``'s. Otherwise the
+    block joins the DISTINCT outer key set (shared vars plus the outer
+    vars the filters read — typically tiny relative to the solution
+    multiset), and the matched keys join back null-safely. The
+    back-join is key-unique by construction, so rows never multiply."""
     step, correlated = _nested_step(store, ex.block, True)
+    step_null = nullable | _nullable_vars(ex.block)
+    if not correlated and how != "left":
+        return _join(result, step, "exists" if how == "left_semi" else "not_exists",
+                     step_null)
     _bound_somewhere(correlated, result, step)
-    shared = _shared(result, step)
     outer_corr = set().union(*(f.vars() for f in correlated)) & set(result.columns)
-    need = sorted(set(shared) | outer_corr)
+    need = sorted(set(_shared(result, step)) | outer_corr)
     if not need:  # uncorrelated: global emptiness test
         return result.withColumn(ex.marker, F.lit(not step.isEmpty()))
-    keys = result.select(*need).dropDuplicates(need)
-    tolerant = bool(set(shared) & (nullable | _nullable_vars(ex.block)))
-    keys, step, cond, lbls = _exists_condition(
-        store, keys, step, shared, correlated, tolerant
-    )
-    matched = keys.join(step, cond, "left_semi").drop(*lbls)
-    matched = matched.withColumn(ex.marker, F.lit(True))
-    for v in need:
-        matched = matched.withColumnRenamed(v, f"__exk_{v}")
-    back = _reduce(
-        lambda a, b: a & b,
-        (F.col(v).eqNullSafe(F.col(f"__exk_{v}")) for v in need),
-    )
-    return result.join(matched, back, "left").drop(
-        *[f"__exk_{v}" for v in need]
-    )
+    # correlated keys keep their vars' lexical sidecars for label-space
+    # filters; the hits are then distinct on the vars alone
+    side = [f"__{v}_vlex" for v in need
+            if correlated and f"__{v}_vlex" in result.columns]
+    keys = _tagged(result.select(*need, *side).dropDuplicates())
+    tags = [f"__lj_{v}" for v in need]
+    if correlated:
+        hits = _apply_filters(
+            store, _join(keys, step, "inner", step_null), correlated
+        ).select(*tags).dropDuplicates()
+    else:
+        hits = _join(keys, step, "exists", step_null).select(*tags)
+    if how == "left":
+        hits = hits.withColumn(ex.marker, F.lit(True))
+    return _probe(result, hits, need, how)
 
 
 def _apply_post_values(out: DataFrame, vb: ValuesBlock) -> DataFrame:
@@ -2566,10 +2485,10 @@ def _apply_post_values(out: DataFrame, vb: ValuesBlock) -> DataFrame:
             else:
                 flat += [None, str(cell)]
         rows.append(flat)
-    schema = ", ".join(
-        f"__pv_{v}_num double, __pv_{v}_str string" for v in vb.vars
-    )
-    vdf = spark.createDataFrame(rows, schema)
+    vdf = _inline_table(spark, rows, [
+        (f"__pv_{v}_{c}", t) for v in vb.vars
+        for c, t in (("num", "double"), ("str", "string"))
+    ])
     shared = [v for v in vb.vars if v in out.columns]
     new = [v for v in vb.vars if v not in out.columns]
     cond = F.lit(True)

@@ -52,18 +52,28 @@ def _compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def _round(spark, gaz, root: str, doc: str) -> dict:
+def _round(spark, gaz, root: str, doc: str, compiles: dict) -> dict:
+    """One round of every write path and read; ``compiles`` gets the
+    classes each operation compiled."""
+
+    def run(name, op):
+        before = _compiles(spark)
+        out = op()
+        compiles[name] = _compiles(spark) - before
+        return out
+
     eng = KgEngine(spark, root)
-    built = eng.build(transcripts_df(spark, BASE_CONVS, seed=17),
-                      gaz, input_sig="codegen:17")
-    appended = eng.append(
-        transcripts_df(spark, APPEND_CONVS, seed=17, conv_offset=BASE_CONVS), gaz)
-    loaded = eng.update(f"LOAD <file://{doc}>")
-    deleted = eng.update(f"DELETE WHERE {{ GRAPH <{GRAPH}> {{ ?s ?p ?o }} }}")
+    built = run("build", lambda: eng.build(
+        transcripts_df(spark, BASE_CONVS, seed=17), gaz, input_sig="codegen:17"))
+    appended = run("append", lambda: eng.append(
+        transcripts_df(spark, APPEND_CONVS, seed=17, conv_offset=BASE_CONVS), gaz))
+    loaded = run("LOAD", lambda: eng.update(f"LOAD <file://{doc}>"))
+    deleted = run("DELETE WHERE", lambda: eng.update(
+        f"DELETE WHERE {{ GRAPH <{GRAPH}> {{ ?s ?p ?o }} }}"))
     reads = {
-        name: (results_ntriples(eng.sql(q, with_kinds=True))
-               if name == "construct"
-               else results_json(eng.sql(q, with_kinds=True)))
+        name: run(name, lambda q=q, name=name: (
+            results_ntriples(eng.sql(q, with_kinds=True)) if name == "construct"
+            else results_json(eng.sql(q, with_kinds=True))))
         for name, q in READS.items()
     }
     return {"built": built["resolved_triples"],
@@ -81,10 +91,11 @@ def gaz(spark):
 def test_repeated_round_reuses_compiled_classes(spark, gaz, tmp_path):
     doc = tmp_path / "doc.nq"
     doc.write_text(_nquads_doc())
-    first = _round(spark, gaz, str(tmp_path / "kg1"), str(doc))
-    before = _compiles(spark)
-    second = _round(spark, gaz, str(tmp_path / "kg2"), str(doc))
-    assert _compiles(spark) - before == REPEAT_COMPILES
+    first = _round(spark, gaz, str(tmp_path / "kg1"), str(doc), {})
+    before, per_op = _compiles(spark), {}
+    second = _round(spark, gaz, str(tmp_path / "kg2"), str(doc), per_op)
+    total = _compiles(spark) - before
+    assert total == REPEAT_COMPILES, f"compiles per operation: {per_op}"
     assert second == first
     assert first["loaded"] == {"inserted": 8, "deleted": 0}
     assert first["deleted"] == {"inserted": 0, "deleted": 4}

@@ -89,6 +89,41 @@ def test_exists_unbound_compatible(spark, store):
     assert rows(execute(store, q)) == {("http://ex/a",), ("http://ex/b",)}
 
 
+def test_exists_filter_reads_block_binding_of_unbound_shared_var(spark, store):
+    # the block filter also reads the outer-only ?s, so it runs on the
+    # merged solution: for b, ?v is unbound outside, free inside the
+    # block (§8.1.1 substitution), and the block's ?v=30 passes ?v > 20;
+    # reading the outer NULL ?v would drop b
+    q = """
+    SELECT ?s WHERE {
+      ?s <http://ex/tag> ?t .
+      OPTIONAL { ?s <http://ex/age> ?v }
+      FILTER EXISTS { ?t <http://ex/bad> ?v FILTER(?v > 20 || ?s = <http://ex/zz>) }
+    }
+    """
+    assert rows(execute(store, q)) == {("http://ex/a",), ("http://ex/b",)}
+
+
+def test_exists_marker_keeps_one_row_per_solution(spark, store):
+    # both UNION branches yield (a, X), one with ?t's VALUES lexical
+    # sidecar and one without: the EXISTS marker must not repeat either
+    union = """
+      { ?s <http://ex/tag> ?t }
+      UNION { VALUES (?s ?t) { (<http://ex/a> <http://ex/X>) } }"""
+    a, b, c = (("http://ex/a", "http://ex/X"), ("http://ex/b", "http://ex/X"),
+               ("http://ex/c", "http://ex/Y"))
+    got = sorted(tuple(r) for r in execute(store, f"""
+        SELECT ?s ?t WHERE {{ {union}
+          FILTER(EXISTS {{ ?t <http://ex/bad> ?w }} || ?s = <http://ex/zz>) }}
+    """).collect())
+    assert got == [a, a, b]
+    got = sorted(tuple(r) for r in execute(store, f"""
+        SELECT ?s ?t ?e WHERE {{ {union}
+          BIND(EXISTS {{ ?t <http://ex/bad> ?w }} AS ?e) }}
+    """).collect())
+    assert got == [(*a, "1.0"), (*a, "1.0"), (*b, "1.0"), (*c, "0.0")]
+
+
 def test_minus_disjoint_domains_removes_nothing(spark, store):
     # block shares NO vars with the outer group → removes nothing
     q = """
@@ -129,6 +164,16 @@ def test_values_only_two_vars_undef(spark, store):
     """
     got = rows(execute(store, q))
     assert got == {("http://ex/a", "1"), ("http://ex/b", None)}
+
+
+def test_values_cells_keep_any_text(spark, store):
+    # cells absent from the dictionary render from the VALUES table
+    # itself: quotes, backslashes, brackets and non-ASCII survive it
+    q = r"""
+    SELECT ?x WHERE { VALUES ?x { "it's \"q\" \\ [{ü}]" "" } }
+    """
+    assert rows(execute(store, q)) == {("it's \"q\" \\ [{ü}]",), ("",)}
+    assert rows(execute(store, "SELECT ?x WHERE { VALUES ?x { } }")) == set()
 
 
 def test_values_only_with_bind(spark, store):

@@ -1,14 +1,14 @@
 """EXISTS in VALUE positions (§17.4.1.4 completes): BIND(EXISTS{…}
 AS ?v), IF(EXISTS{…}, …) in BIND and FILTER. The boolean result
-inlines onto the numeric 1.0/0.0 xsd:boolean space; markers attach
-before the bind stage evaluates.
+inlines onto the numeric 1.0/0.0 xsd:boolean space; each marker
+attaches just before its BIND evaluates.
 """
 
 import pytest
 
 from hbase_rdf_spark.functions.encoding import build_dictionaries, encode_quads
 from hbase_rdf_spark.operators.materialize import TripleStore
-from hbase_rdf_spark.plans.sparql import SparqlSyntaxError, execute
+from hbase_rdf_spark.plans.sparql import execute
 from hbase_rdf_spark.sources.ntriples import parse_lines, quads
 
 XSD_I = "http://www.w3.org/2001/XMLSchema#integer"
@@ -112,9 +112,29 @@ def test_bind_exists_arithmetic(store):
     ]
 
 
-def test_same_group_bind_target_correlation_rejected(store):
-    with pytest.raises(SparqlSyntaxError):
-        execute(store, """
-            SELECT ?x WHERE { ?s <http://ex/price> ?p .
-              BIND(12 AS ?v)
-              BIND(EXISTS { ?s <http://ex/price> ?v } AS ?x) }""").collect()
+def test_exists_in_bind_sees_earlier_bind(store):
+    # the block is correlated through ?v, which the earlier BIND of the
+    # same group produces: only i1's price is 12
+    got = rows(store, """
+        SELECT ?s ?x WHERE { ?s <http://ex/price> ?p .
+          BIND(12 AS ?v)
+          BIND(EXISTS { ?s <http://ex/price> ?v } AS ?x) }""")
+    assert got == [
+        ("http://ex/i1", "1.0"),
+        ("http://ex/i2", "0.0"),
+        ("http://ex/i3", "0.0"),
+    ]
+
+
+def test_exists_in_bind_before_the_bind_of_its_var(store):
+    # swapped: ?v is not bound yet where the EXISTS evaluates, so it is
+    # free inside the block and every item has some price
+    got = rows(store, """
+        SELECT ?s ?x WHERE { ?s <http://ex/price> ?p .
+          BIND(EXISTS { ?s <http://ex/price> ?v } AS ?x)
+          BIND(12 AS ?v) }""")
+    assert got == [
+        ("http://ex/i1", "1.0"),
+        ("http://ex/i2", "1.0"),
+        ("http://ex/i3", "1.0"),
+    ]

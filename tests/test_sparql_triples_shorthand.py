@@ -477,18 +477,23 @@ def test_subquery_as_second_union_branch_with_outer_pattern(store):
 # -- review-driven hardening (round-2 code review) ---------------------------
 
 
-def test_union_branch_bind_rebind_rejected(store):
-    # a branch BIND var colliding with a pattern-bound var must error,
-    # not silently overwrite the column
-    with pytest.raises(SparqlSyntaxError):
-        execute(store, """
-            PREFIX ex: <http://ex/>
-            SELECT ?x ?n WHERE {
-              ?x ex:name ?n .
-              { ?x ex:likes ?y BIND("tag" AS ?n) }
-              UNION { ?x ex:knows ?y }
-            }""")
-    # ...and a group-level BIND reusing a branch BIND var too
+def test_union_branch_bind_of_group_var_joins(store):
+    # §18.2.1 scopes each UNION branch on its own, so a branch may BIND
+    # a var the group bound before; the branch's ?n then joins the
+    # group's like any shared var ("tag" is no name, so only the knows
+    # branch survives)
+    out = execute(store, """
+        PREFIX ex: <http://ex/>
+        SELECT ?x ?n WHERE {
+          ?x ex:name ?n .
+          { ?x ex:likes ?y BIND("tag" AS ?n) }
+          UNION { ?x ex:knows ?y }
+        }""")
+    assert sorted(tuple(r) for r in out.collect()) == [("http://ex/a", "Alice")]
+
+
+def test_group_bind_after_union_branch_bind_rejected(store):
+    # a group-level BIND reusing a var a branch BIND put in scope
     with pytest.raises(SparqlSyntaxError):
         execute(store, """
             PREFIX ex: <http://ex/>
